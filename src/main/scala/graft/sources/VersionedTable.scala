@@ -5,6 +5,8 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,11 +21,14 @@ import org.apache.spark.sql.functions._
   * - commits are ATOMIC: the manifest is staged to a temp file and
   *   atomically linked into the log — readers see either the old or the
   *   new version, never a partial table;
-  * - concurrent writers race on the version number; the loser's link
-  *   fails and retries against the next version (optimistic concurrency,
-  *   as Delta does). Read-modify-write transactions ([[mergeCommit]])
-  *   additionally re-run against the new latest version when they lose —
-  *   a blind retry would silently discard the concurrent commit;
+  * - concurrent writers race on the version number; every commit goes
+  *   through the one optimistic-concurrency loop (`commitLoop`): the
+  *   loser's link fails and it retries against the next version, as
+  *   Delta does.
+  *   Read-modify-write transactions ([[deleteWhere]], [[mergeCommitDV]],
+  *   [[mergeCommitPruned]], [[compact]]) re-plan against the new latest
+  *   version when they lose — a blind retry would silently discard the
+  *   concurrent commit;
   * - [[writeOnce]] makes an operation tag part of the commit race, so
   *   at-least-once re-deliveries (streaming batch replays) cannot commit
   *   twice even from concurrent writers;
@@ -51,14 +56,91 @@ object VersionedTable {
     try f(s.iterator().asScala) finally s.close()
   }
 
-  /** Versions present in the log, ascending. */
-  def versions(path: String): Seq[Long] = {
+  /** Versions of the log files named `<prefix><8 digits>.json`, ascending. */
+  private def logFiles(path: String, prefix: String): Seq[Long] = {
     val dir = logDir(path)
     if (!Files.exists(dir)) Seq.empty
     else listDir(dir)(_.map(_.getFileName.toString)
-      .collect { case n if n.matches("v\\d{8}\\.json") =>
-        n.stripPrefix("v").stripSuffix(".json").toLong }
+      .collect { case n if n.matches(s"$prefix\\d{8}\\.json") =>
+        n.stripPrefix(prefix).stripSuffix(".json").toLong }
       .toSeq.sorted)
+  }
+
+  /** Versions present in the log, ascending. */
+  def versions(path: String): Seq[Long] = logFiles(path, "v")
+
+  def latestVersion(path: String): Option[Long] = versions(path).lastOption
+
+  private def latestOrFail(path: String): Long = latestVersion(path).getOrElse(
+    throw new IllegalStateException(s"no versions at $path"))
+
+  // ------------------------------------------------- manifest codec
+  //
+  // One JSON record type for the whole log, read and written by one
+  // Jackson parse/render pair. A commit manifest is
+  // `{"version":N,"op":…,"files":[…]}` plus `"dv":[…]` only when the
+  // version has deletion vectors, so DV-free manifests keep the pre-DV
+  // bytes; a checkpoint is `{"version":N,"ops":[[v,op],…]}`. Strings are
+  // JSON-escaped, control characters included. Reading tolerates the raw
+  // control characters older writers left unescaped in op tags.
+
+  /** A log record: a commit manifest, or a checkpoint when `ops` is set. */
+  private[sources] final case class Manifest(version: Long, op: String,
+      files: Seq[String], dv: Seq[String] = Seq.empty,
+      ops: Option[Seq[(Long, String)]] = None)
+
+  private val mapper = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
+
+  private[sources] def parse(s: String): Manifest = {
+    val n = mapper.readTree(s)
+    def strings(field: String): Seq[String] =
+      n.path(field).elements().asScala.map(_.asText).toSeq
+    Manifest(n.path("version").asLong, n.path("op").asText, strings("files"),
+      strings("dv"), Option(n.get("ops")).map(_.elements().asScala
+        .map(e => (e.get(0).asLong, e.get(1).asText)).toSeq))
+  }
+
+  private[sources] def render(m: Manifest): String = {
+    val o = mapper.createObjectNode().put("version", m.version)
+    def strings(field: String, xs: Seq[String]): Unit = {
+      val a = o.putArray(field)
+      xs.foreach(x => a.add(x))
+    }
+    m.ops match {
+      case Some(ops) =>
+        val a = o.putArray("ops")
+        ops.foreach { case (v, op) => a.addArray().add(v).add(op) }
+      case None =>
+        o.put("op", m.op)
+        strings("files", m.files)
+        if (m.dv.nonEmpty) strings("dv", m.dv)
+    }
+    mapper.writeValueAsString(o)
+  }
+
+  private def readManifest(path: String, v: Long): Manifest =
+    parse(Files.readString(manifestPath(path, v)))
+
+  /** Stage `content` beside `target` and link it into place; false if
+    * `target` already exists (lost the race). put-if-absent must FAIL
+    * when the target exists. ATOMIC_MOVE is the wrong primitive (POSIX
+    * rename silently replaces the target, letting a racing writer
+    * overwrite a committed manifest); createLink is atomic AND errors on
+    * an existing target.
+    */
+  private def putIfAbsent(target: Path, content: String): Boolean = {
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling(s".tmp-${UUID.randomUUID()}")
+    Files.writeString(tmp, content)
+    try {
+      Files.createLink(target, tmp)
+      true
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => false
+    } finally {
+      Files.deleteIfExists(tmp); ()
+    }
   }
 
   // ------------------------------------------------- log checkpoints
@@ -81,20 +163,7 @@ object VersionedTable {
   private def checkpointPath(path: String, v: Long): Path =
     logDir(path).resolve(f"chk-v$v%08d.json")
 
-  private def checkpoints(path: String): Seq[Long] = {
-    val dir = logDir(path)
-    if (!Files.exists(dir)) Seq.empty
-    else listDir(dir)(_.map(_.getFileName.toString)
-      .collect { case n if n.matches("chk-v\\d{8}\\.json") =>
-        n.stripPrefix("chk-v").stripSuffix(".json").toLong }
-      .toSeq.sorted)
-  }
-
-  private val cpEntryRe = """\[(\d+),"((?:[^"\\]|\\.)*)"\]""".r
-
-  private def readCheckpoint(path: String, v: Long): Seq[(Long, String)] =
-    cpEntryRe.findAllMatchIn(Files.readString(checkpointPath(path, v)))
-      .map(m => (m.group(1).toLong, unesc(m.group(2)))).toSeq
+  private def checkpoints(path: String): Seq[Long] = logFiles(path, "chk-v")
 
   /** (version, op) pairs committed through `upTo`: the newest
     * checkpoint at or below `upTo`, plus the manifest tail after it —
@@ -102,7 +171,8 @@ object VersionedTable {
     */
   private def opsThrough(path: String, upTo: Long): Seq[(Long, String)] = {
     val cp = checkpoints(path).filter(_ <= upTo).lastOption
-    val base = cp.map(readCheckpoint(path, _)).getOrElse(Seq.empty)
+    val base = cp.flatMap(v =>
+      parse(Files.readString(checkpointPath(path, v))).ops).getOrElse(Seq.empty)
     val from = cp.getOrElse(-1L)
     base ++ versions(path).filter(v => v > from && v <= upTo)
       .map(v => (v, opOf(path, v)))
@@ -111,51 +181,47 @@ object VersionedTable {
   private def maybeCheckpoint(path: String, version: Long): Unit =
     if (version > 0 && version % checkpointInterval == 0 &&
         !Files.exists(checkpointPath(path, version))) {
-      val entries = opsThrough(path, version)
-        .map { case (v, o) => s"""[$v,"${esc(o)}"]""" }.mkString(",")
-      val tmp = logDir(path).resolve(s".tmp-${UUID.randomUUID()}")
-      Files.writeString(tmp, s"""{"version":$version,"ops":[$entries]}""")
-      try { Files.createLink(checkpointPath(path, version), tmp); () }
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally { Files.deleteIfExists(tmp); () }
+      putIfAbsent(checkpointPath(path, version), render(
+        Manifest(version, "", Seq.empty, ops = Some(opsThrough(path, version)))))
+      ()
     }
 
-  def latestVersion(path: String): Option[Long] = versions(path).lastOption
+  // ------------------------------------------------- the commit loop
 
-  private def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
-
-  private def unesc(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-
-  /** Stage + atomically commit manifest for `version`; false if that
-    * version already exists (lost the race). `dv` lists the version's
-    * deletion-vector parquet files (omitted from the JSON when empty, so
-    * pre-DV manifests and DV-free tables are byte-identical to before).
+  /** One commit attempt: the new version's files and deletion vectors,
+    * plus the directories staged for it alone (deleted if it loses).
     */
-  private def tryCommit(path: String, version: Long, files: Seq[String],
-      op: String, dv: Seq[String] = Seq.empty): Boolean = {
-    Files.createDirectories(logDir(path))
-    val dvField =
-      if (dv.isEmpty) ""
-      else s""","dv":[${dv.map(f => "\"" + esc(f) + "\"").mkString(",")}]"""
-    val json =
-      s"""{"version":$version,"op":"${esc(op)}","files":[${
-        files.map(f => "\"" + esc(f) + "\"").mkString(",")}]$dvField}"""
-    val tmp = logDir(path).resolve(s".tmp-${UUID.randomUUID()}")
-    Files.writeString(tmp, json)
-    // put-if-absent must FAIL when the version exists. ATOMIC_MOVE is the
-    // wrong primitive (POSIX rename silently replaces the target, letting
-    // a racing writer overwrite a committed manifest); createLink is
-    // atomic AND errors on an existing target.
-    try {
-      Files.createLink(manifestPath(path, version), tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    } finally {
-      Files.deleteIfExists(tmp); ()
+  private final case class Attempt(files: Seq[String],
+      dv: Seq[String] = Seq.empty, staged: Seq[Path] = Seq.empty)
+
+  /** The optimistic-concurrency loop every commit goes through. Captures
+    * the latest manifest as the base (an empty table is an empty base at
+    * version -1, unless `requireBase`), asks `plan` for the commit and
+    * links it put-if-absent at base+1. Losing the race deletes the
+    * attempt's staged directories and re-plans against the new latest
+    * version, so a read-modify-write commit never lands on a stale
+    * snapshot; blind writes stage nothing per attempt and keep their data
+    * across retries. `plan` returning None ends the loop without a
+    * commit. A landed commit writes the checkpoint when one is due.
+    */
+  private def commitLoop(path: String, op: String, requireBase: Boolean)(
+      plan: Manifest => Option[Attempt]): Option[Long] = {
+    var result: Option[Option[Long]] = None
+    while (result.isEmpty) {
+      val latest = if (requireBase) Some(latestOrFail(path)) else latestVersion(path)
+      val base = latest.fold(Manifest(-1L, "", Seq.empty))(readManifest(path, _))
+      val next = latest.fold(0L)(_ + 1)
+      plan(base) match {
+        case None => result = Some(None)
+        case Some(a) =>
+          if (putIfAbsent(manifestPath(path, next),
+              render(Manifest(next, op, a.files, a.dv)))) {
+            maybeCheckpoint(path, next)
+            result = Some(Some(next))
+          } else a.staged.foreach(discardData)
+      }
     }
+    result.get
   }
 
   /** Write the batch's data files (immutable, never visible until a
@@ -181,6 +247,15 @@ object VersionedTable {
       ()
     }
 
+  /** Blind-write plan: append carries the base's files AND deletion
+    * vectors forward (dropping the DVs would resurrect deleted rows);
+    * overwrite replaces both.
+    */
+  private def blindPlan(mode: SaveMode, newFiles: Seq[String],
+      base: Manifest): Attempt =
+    if (mode == SaveMode.Append) Attempt(base.files ++ newFiles, base.dv)
+    else Attempt(newFiles)
+
   /** Write `df` as a new commit. Append mode unions the previous
     * version's files with the new ones; overwrite replaces them. Returns
     * the committed version.
@@ -188,8 +263,9 @@ object VersionedTable {
     * Blind writes only: append bases itself on whatever the latest
     * version is at commit time, and overwrite is last-writer-wins — both
     * are conflict-free under retry. A write whose CONTENT depends on a
-    * read of the table must go through [[mergeCommit]], which detects
-    * the lost-update race instead of retrying a stale snapshot.
+    * read of the table must go through a read-modify-write commit
+    * ([[mergeCommitDV]], [[mergeCommitPruned]], [[deleteWhere]]), which
+    * re-plans on a lost race instead of retrying a stale snapshot.
     */
   def write(df: DataFrame, path: String, mode: SaveMode): Long =
     write(df, path, mode,
@@ -200,23 +276,8 @@ object VersionedTable {
     */
   def write(df: DataFrame, path: String, mode: SaveMode, op: String): Long = {
     val (_, newFiles) = writeData(df, path)
-    var committed = -1L
-    while (committed < 0) {
-      val prev = latestVersion(path)
-      // append carries BOTH the file list and the deletion vectors
-      // forward — dropping the DVs would resurrect deleted rows
-      val (base, dvBase) = mode match {
-        case SaveMode.Append => (
-          prev.map(files(path, _)).getOrElse(Seq.empty),
-          prev.map(dvFiles(path, _)).getOrElse(Seq.empty))
-        case _ => (Seq.empty, Seq.empty)
-      }
-      val next = prev.getOrElse(-1L) + 1
-      if (tryCommit(path, next, base ++ newFiles, op, dvBase))
-        committed = next
-    }
-    maybeCheckpoint(path, committed)
-    committed
+    commitLoop(path, op, requireBase = false)(base =>
+      Some(blindPlan(mode, newFiles, base))).get
   }
 
   /** Write `df` z-clustered on (`colA`, `colB`) as a new commit — the
@@ -262,22 +323,12 @@ object VersionedTable {
     */
   def writeOnce(df: DataFrame, path: String, mode: SaveMode,
       op: String): Option[Long] = {
-    val start = versions(path)
+    val start = versions(path).toSet
     // checkpointed read: O(interval), not O(versions) — this check runs
     // per micro-batch in the streaming sink
     if (opsThrough(path, Long.MaxValue).exists(_._2 == op)) return None
     val (dataDir, newFiles) = writeData(df, path)
-    val startSet = start.toSet
-    var result: Option[Option[Long]] = None
-    while (result.isEmpty) {
-      val prev = latestVersion(path)
-      val (base, dvBase) = mode match {
-        case SaveMode.Append => (
-          prev.map(files(path, _)).getOrElse(Seq.empty),
-          prev.map(dvFiles(path, _)).getOrElse(Seq.empty))
-        case _ => (Seq.empty, Seq.empty)
-      }
-      val next = prev.getOrElse(-1L) + 1
+    commitLoop(path, op, requireBase = false) { base =>
       // the tag re-check runs BEFORE every attempt, not only after a
       // lost version race: a concurrent replay that committed while
       // THIS replay was still staging parquet (writeData above takes
@@ -285,29 +336,19 @@ object VersionedTable {
       // after-failure-only check never fires and the batch double
       // commits — the DeltaInterop.write discipline (re-check txn
       // inside the loop ahead of each attempt)
-      if (versions(path).exists(v =>
-          !startSet.contains(v) && opOf(path, v) == op)) {
+      if (versions(path).exists(v => !start.contains(v) && opOf(path, v) == op)) {
         // a concurrent replay of this very batch won the race: our data
         // files must not become a duplicate commit
         discardData(dataDir)
-        result = Some(None)
-      }
-      else if (tryCommit(path, next, base ++ newFiles, op, dvBase)) {
-        maybeCheckpoint(path, next)
-        result = Some(Some(next))
-      }
+        None
+      } else Some(blindPlan(mode, newFiles, base))
     }
-    result.get
   }
 
   /** The operation tag of a committed version, parsed straight off the
     * manifest (cheap driver-side read — no Spark job per lookup).
     */
-  def opOf(path: String, version: Long): String = {
-    val json = Files.readString(manifestPath(path, version))
-    val m = """"op":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(json)
-    m.map(g => unesc(g.group(1))).getOrElse("")
-  }
+  def opOf(path: String, version: Long): String = readManifest(path, version).op
 
   /** Operation tags already committed (for idempotent re-delivery).
     * Driver-side file reads bounded by the checkpoint interval — the
@@ -317,20 +358,14 @@ object VersionedTable {
   def committedOps(spark: SparkSession, path: String): Set[String] =
     opsThrough(path, Long.MaxValue).map(_._2).toSet
 
-  /** The live files of `version` (parsed from its manifest via Spark's
-    * JSON reader).
-    */
-  def files(path: String, version: Long): Seq[String] = {
-    val spark = SparkSession.active
-    spark.read.json(manifestPath(path, version).toString)
-      .select(explode(col("files")).as("f"))
-      .collect().map(_.getString(0)).toSeq
-  }
+  /** The live files of `version`, parsed driver-side from its manifest. */
+  def files(path: String, version: Long): Seq[String] =
+    readManifest(path, version).files
 
   // ------------------------------------------------- deletion vectors
   //
-  // DELETE / MERGE at 100 TB must not rewrite 100 TB. Copy-on-write
-  // [[mergeCommit]] rewrites the whole table per merge; Delta's answer is
+  // DELETE / MERGE at 100 TB must not rewrite 100 TB. A full copy-on-write
+  // merge rewrites the whole table per merge; Delta's answer is
   // (a) rewrite only the files a merge touches and (b) deletion vectors —
   // mark deleted ROW POSITIONS in a side file and let readers subtract
   // them, so a delete/merge commit costs O(changed rows), not O(table).
@@ -349,13 +384,8 @@ object VersionedTable {
   private val dvBroadcastBytes: Long = 64L << 20
 
   /** Deletion-vector files of `version` (empty for DV-free manifests). */
-  def dvFiles(path: String, version: Long): Seq[String] = {
-    val json = Files.readString(manifestPath(path, version))
-    """"dv":\[([^\]]*)\]""".r.findFirstMatchIn(json).map { m =>
-      """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1))
-        .map(g => unesc(g.group(1))).toSeq
-    }.getOrElse(Seq.empty)
-  }
+  def dvFiles(path: String, version: Long): Seq[String] =
+    readManifest(path, version).dv
 
   /** Scan `fs` with the file/position metadata columns attached. */
   private def withPos(spark: SparkSession, fs: Seq[String]): DataFrame =
@@ -392,91 +422,68 @@ object VersionedTable {
 
   /** DV-based DELETE: mark rows matching `cond` deleted — data files are
     * untouched, the commit writes only the matched (file, pos) pairs.
-    * Optimistic-concurrency loop as [[mergeCommit]]. Returns the
-    * committed version.
+    * Read-modify-write through the one commit loop: a lost race
+    * recomputes the positions against the new latest version. Returns
+    * the committed version.
     */
-  def deleteWhere(spark: SparkSession, path: String, cond: Column): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val base = latestVersion(path).getOrElse(
-        throw new IllegalStateException(s"no versions at $path"))
-      val fs = files(path, base)
-      val dvs = dvFiles(path, base)
-      val hits = liveWithPos(spark, fs, dvs).filter(cond)
+  def deleteWhere(spark: SparkSession, path: String, cond: Column): Long =
+    commitLoop(path, "delete", requireBase = true) { base =>
+      val hits = liveWithPos(spark, base.files, base.dv).filter(cond)
         .select(col(FileCol).as("file"), col(PosCol).as("pos"))
       val (dvDir, newDv) = writeData(hits, path, "dv")
-      if (tryCommit(path, base + 1, fs, "delete", dvs ++ newDv))
-        committed = base + 1
-      else discardData(dvDir) // concurrent commit won: recompute positions
-    }
-    maybeCheckpoint(path, committed)
-    committed
-  }
+      Some(Attempt(base.files, base.dv ++ newDv, Seq(dvDir)))
+    }.get
 
   /** MERGE via deletion vectors: matched target rows are DV-masked and
     * the source lands as new data files — NO target file is rewritten,
     * so commit cost is O(source + matched positions) regardless of table
-    * size. Result is observably identical to [[mergeCommit]]. Same
+    * size. Result is observably identical to [[mergeCommitPruned]]. Same
     * precondition as [[graft.operators.Merge.upsert]]: one source row
     * per key.
     */
   def mergeCommitDV(spark: SparkSession, path: String, source: DataFrame,
-      keys: Seq[String]): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val base = latestVersion(path).getOrElse(
-        throw new IllegalStateException(s"no versions at $path"))
-      val fs = files(path, base)
-      val dvs = dvFiles(path, base)
-      val matched = liveWithPos(spark, fs, dvs)
+      keys: Seq[String]): Long =
+    commitLoop(path, "merge-dv", requireBase = true) { base =>
+      val matched = liveWithPos(spark, base.files, base.dv)
         .join(source.select(keys.map(col): _*), keys, "left_semi")
         .select(col(FileCol).as("file"), col(PosCol).as("pos"))
       val (dvDir, newDv) = writeData(matched, path, "dv")
       val (dataDir, newFiles) = writeData(source, path)
-      if (tryCommit(path, base + 1, fs ++ newFiles, "merge-dv", dvs ++ newDv))
-        committed = base + 1
-      else { discardData(dvDir); discardData(dataDir) }
-    }
-    maybeCheckpoint(path, committed)
-    committed
-  }
+      Some(Attempt(base.files ++ newFiles, base.dv ++ newDv, Seq(dvDir, dataDir)))
+    }.get
 
   /** MERGE with file pruning: rewrite ONLY the files that contain a
     * matched key; untouched files carry over by reference (Delta's
     * copy-on-write merge). The driver handles a file-name list (metadata
     * scale); the data job reads just the touched files plus the source.
+    * Read-modify-write through the one commit loop: the merge is
+    * computed against a captured base version and committed at exactly
+    * base+1; if another writer commits first, the stale result is
+    * discarded and the merge re-runs against the new latest — the
+    * lost-update behavior Delta's conflict detection prevents.
     * Prefer [[mergeCommitDV]] when updates are sparse and rewrite
     * amplification matters; prefer this when DV accumulation (read-side
     * anti-join growth) matters.
     */
   def mergeCommitPruned(spark: SparkSession, path: String, source: DataFrame,
-      keys: Seq[String]): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val base = latestVersion(path).getOrElse(
-        throw new IllegalStateException(s"no versions at $path"))
-      val fs = files(path, base)
-      val dvs = dvFiles(path, base)
-      val live = liveWithPos(spark, fs, dvs)
+      keys: Seq[String]): Long =
+    commitLoop(path, "merge-pruned", requireBase = true) { base =>
+      val live = liveWithPos(spark, base.files, base.dv)
       // bounded driver traffic: one row per TOUCHED FILE, never per data row
       val touched = live
         .join(source.select(keys.map(col): _*), keys, "left_semi")
         .select(FileCol).distinct()
         .collect().map(r => uriToPath(r.getString(0))).toSet
-      val untouched = fs.filterNot(touched)
+      val untouched = base.files.filterNot(touched)
       val targetSlice =
         if (touched.isEmpty) live.drop(FileCol, PosCol).limit(0)
-        else liveWithPos(spark, fs.filter(touched), dvs).drop(FileCol, PosCol)
+        else liveWithPos(spark, base.files.filter(touched), base.dv)
+          .drop(FileCol, PosCol)
       val merged = graft.operators.Merge.upsert(targetSlice, source, keys)
       val (dataDir, newFiles) = writeData(merged, path)
       // DV entries for rewritten files go inert with the files themselves
-      if (tryCommit(path, base + 1, untouched ++ newFiles, "merge-pruned", dvs))
-        committed = base + 1
-      else discardData(dataDir)
-    }
-    maybeCheckpoint(path, committed)
-    committed
-  }
+      Some(Attempt(untouched ++ newFiles, base.dv, Seq(dataDir)))
+    }.get
 
   // ---------------------------------------------------- change data feed
 
@@ -486,32 +493,29 @@ object VersionedTable {
     * postimage) and `_commit_version`. Exact for commits that only add
     * files and/or DV entries (append, [[writeOnce]], [[deleteWhere]],
     * [[mergeCommitDV]]); `compact` commits are pure layout and yield no
-    * changes; rewrite commits (overwrite, [[mergeCommit]],
-    * [[mergeCommitPruned]]) destroy row identity and raise — a CDF
-    * consumer pins the table to DV-based operations, exactly as Delta
-    * requires CDF to be enabled before it records changes.
+    * changes; rewrite commits (overwrite, [[mergeCommitPruned]]) destroy
+    * row identity and raise — a CDF consumer pins the table to DV-based
+    * operations, exactly as Delta requires CDF to be enabled before it
+    * records changes.
     */
   def changes(spark: SparkSession, path: String, fromVersion: Long,
       toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion, s"bad range ($fromVersion, $toVersion]")
-    val meta = Seq(FileCol, PosCol)
     val deltas = ((fromVersion + 1) to toVersion).flatMap { v =>
-      val op = opOf(path, v)
+      val cur = readManifest(path, v)
       // compact AND optimize-zorder are pure-LAYOUT rewrites (identical
       // row content, different file clustering): both yield no changes.
       // Without the zorder case, CDF over any range spanning an
       // optimize permanently raised on a commit that changed zero rows.
-      if (op == "compact" || op.startsWith("optimize-zorder(")) Seq.empty
+      if (cur.op == "compact" || cur.op.startsWith("optimize-zorder(")) Seq.empty
       else {
-        val prevFiles = files(path, v - 1).toSet
-        val curFiles = files(path, v)
-        val removed = prevFiles -- curFiles.toSet
-        if (removed.nonEmpty)
+        val prev = readManifest(path, v - 1)
+        if (!prev.files.forall(cur.files.toSet))
           throw new UnsupportedOperationException(
-            s"version $v (op=$op) rewrites files; the change feed supports " +
+            s"version $v (op=${cur.op}) rewrites files; the change feed supports " +
               "append/delete/merge-dv commits (and skips compact)")
-        val addedFiles = curFiles.filterNot(prevFiles)
-        val addedDv = dvFiles(path, v).filterNot(dvFiles(path, v - 1).toSet)
+        val addedFiles = cur.files.filterNot(prev.files.toSet)
+        val addedDv = cur.dv.filterNot(prev.dv.toSet)
         val inserts =
           if (addedFiles.isEmpty) Seq.empty
           else Seq(spark.read.option("mergeSchema", "true")
@@ -522,11 +526,11 @@ object VersionedTable {
           if (addedDv.isEmpty) Seq.empty
           else {
             val dv = spark.read.parquet(addedDv: _*).select(col("file"), col("pos"))
-            val scan = withPos(spark, files(path, v - 1))
+            val scan = withPos(spark, prev.files)
             Seq(scan.join(broadcast(dv),
                 scan(FileCol) === dv("file") && scan(PosCol) === dv("pos"),
                 "left_semi")
-              .drop(meta: _*)
+              .drop(FileCol, PosCol)
               .withColumn("_change_type", lit("delete"))
               .withColumn("_commit_version", lit(v)))
           }
@@ -547,14 +551,10 @@ object VersionedTable {
     * (zero overhead).
     */
   def readVersion(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val fs = files(path, version)
-    if (fs.isEmpty)
-      spark.emptyDataFrame
-    else {
-      val dvs = dvFiles(path, version)
-      if (dvs.isEmpty) spark.read.option("mergeSchema", "true").parquet(fs: _*)
-      else liveWithPos(spark, fs, dvs).drop(FileCol, PosCol)
-    }
+    val m = readManifest(path, version)
+    if (m.files.isEmpty) spark.emptyDataFrame
+    else if (m.dv.isEmpty) spark.read.option("mergeSchema", "true").parquet(m.files: _*)
+    else liveWithPos(spark, m.files, m.dv).drop(FileCol, PosCol)
   }
 
   /** RESTORE `version` as a NEW commit: the table's head becomes a
@@ -570,24 +570,14 @@ object VersionedTable {
   def restore(path: String, version: Long): Long = {
     require(Files.exists(manifestPath(path, version)),
       s"cannot restore to version $version: manifest vacuumed or absent")
-    val fs = files(path, version)
-    val dv = dvFiles(path, version)
-    var committed = -1L
-    while (committed < 0) {
-      val next = latestVersion(path).getOrElse(
-        throw new IllegalStateException(s"no versions at $path")) + 1
-      if (tryCommit(path, next, fs, s"restore($version)", dv))
-        committed = next
-    }
-    maybeCheckpoint(path, committed)
-    committed
+    val target = readManifest(path, version)
+    commitLoop(path, s"restore($version)", requireBase = true)(_ =>
+      Some(Attempt(target.files, target.dv))).get
   }
 
   /** Read the latest version. */
   def read(spark: SparkSession, path: String): DataFrame =
-    readVersion(spark, path,
-      latestVersion(path).getOrElse(
-        throw new IllegalStateException(s"no versions at $path")))
+    readVersion(spark, path, latestOrFail(path))
 
   // ---------------------------------------------------- data skipping
   //
@@ -602,6 +592,54 @@ object VersionedTable {
   // deleted range costs one false-positive file read, never a wrong
   // result.
 
+  /** The one sidecar-skipping read under [[readWhere]] and
+    * [[readWhereEquals]]: the live rows of the latest version matching
+    * `cond`, scanning only the files whose sidecar entry under `dir`
+    * satisfies `keep`. One pass over the sidecar collects (file, keep)
+    * for every live file it covers; files it does not cover get entries
+    * from `index` — handed a merged scan of exactly those files and the
+    * live file list, it returns `uri` (`_metadata.file_path`) plus the
+    * sidecar's value columns — in one append, and a second pass then
+    * reads their verdicts. A file still without an entry (lost append
+    * race) is read conservatively. Driver traffic is bounded by the FILE
+    * count (the same order as reading the manifest), never by rows.
+    * Returns (rows, filesRead, filesTotal).
+    */
+  private def skippingRead(spark: SparkSession, path: String, dir: Path,
+      index: (DataFrame, Seq[String]) => DataFrame, keep: Column,
+      cond: Column): (DataFrame, Long, Long) = {
+    val head = readManifest(path, latestOrFail(path))
+    val fs = head.files
+    if (fs.isEmpty) return (spark.emptyDataFrame, 0L, 0L)
+    def verdicts(): Seq[(String, Boolean)] =
+      if (!Files.exists(dir)) Seq.empty
+      else spark.read.parquet(dir.toString)
+        .filter(col("file").isInCollection(fs))
+        .select(col("file"), coalesce(keep, lit(false)))
+        .collect().map(r => (r.getString(0), r.getBoolean(1))).toSeq
+    val first = verdicts()
+    val missing = fs.filterNot(first.map(_._1).toSet)
+    val entries =
+      if (missing.isEmpty) first
+      else {
+        index(spark.read.option("mergeSchema", "true").parquet(missing: _*), fs)
+          // manifests store plain paths; `file_path` is a file: URI on the
+          // local FS — strip the scheme so sidecar keys match manifests
+          .withColumn("uri", regexp_replace(col("uri"), "^file:(//)?", ""))
+          .withColumnRenamed("uri", "file")
+          .coalesce(1)
+          .write.mode(SaveMode.Append).parquet(dir.toString)
+        verdicts()
+      }
+    val indexed = entries.map(_._1).toSet
+    val toRead = entries.collect { case (f, true) => f }.distinct ++
+      fs.filterNot(indexed)
+    val out =
+      if (toRead.isEmpty) read(spark, path).filter(cond).limit(0)
+      else liveWithPos(spark, toRead, head.dv).drop(FileCol, PosCol).filter(cond)
+    (out, toRead.size.toLong, fs.size.toLong)
+  }
+
   private def statsDir(path: String, column: String): Path =
     Paths.get(path, "_graft_stats", column)
 
@@ -615,30 +653,15 @@ object VersionedTable {
     * those files (grouped by `_metadata.file_path` — the shuffle is
     * file-count wide); later calls prune from the sidecar alone. All
     * range comparisons run in the engine with its own type coercion —
-    * no driver-side value comparisons. Driver traffic is bounded by
-    * the FILE count (the same order as reading the manifest), never by
-    * rows. All-null files (mn = mx = NULL) are skipped: the range
-    * filter excludes null rows regardless.
+    * no driver-side value comparisons. All-null files (mn = mx = NULL)
+    * are skipped: the range filter excludes null rows regardless.
     */
   def readWhere(spark: SparkSession, path: String, column: String,
       lo: Any, hi: Any): (DataFrame, Long, Long) = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalStateException(s"no versions at $path"))
-    val fs = files(path, v)
-    if (fs.isEmpty) return (spark.emptyDataFrame, 0L, 0L)
     val dir = statsDir(path, column)
-    val have: Set[String] =
-      if (Files.exists(dir))
-        spark.read.parquet(dir.toString)
-          .select("file").collect().map(_.getString(0)).toSet
-      else Set.empty
-    val missing = fs.filterNot(have)
-    if (missing.nonEmpty) {
-      val src = spark.read.option("mergeSchema", "true").parquet(missing: _*)
-      val agged =
-        if (src.columns.contains(column))
-          src.groupBy(col("_metadata.file_path").as("uri"))
-            .agg(min(col(column)).as("mn"), max(col(column)).as("mx"))
+    def index(src: DataFrame, fs: Seq[String]): DataFrame = {
+      val v =
+        if (src.columns.contains(column)) col(column)
         else {
           // EVERY unindexed file predates the schema-evolved column
           // (e.g. an old-schema writer appended after the column was
@@ -656,32 +679,14 @@ object VersionedTable {
               .schema.find(_.name == column).map(_.dataType)
               .getOrElse(throw new IllegalArgumentException(
                 s"data-skipping column '$column' exists in no file of $path"))
-          src.groupBy(col("_metadata.file_path").as("uri"))
-            .agg(min(lit(null).cast(dt)).as("mn"),
-              max(lit(null).cast(dt)).as("mx"))
+          lit(null).cast(dt)
         }
-      agged
-        // manifests store plain paths; `file_path` is a file: URI on the
-        // local FS — strip the scheme so sidecar keys match manifests
-        .select(regexp_replace(col("uri"), "^file:(//)?", "").as("file"),
-          col("mn"), col("mx"))
-        .coalesce(1)
-        .write.mode(SaveMode.Append).parquet(dir.toString)
+      src.groupBy(col("_metadata.file_path").as("uri"))
+        .agg(min(v).as("mn"), max(v).as("mx"))
     }
-    val stats = spark.read.parquet(dir.toString)
-      .filter(col("file").isInCollection(fs))
-    val kept = stats
-      .filter(col("mx") >= lit(lo) && col("mn") <= lit(hi))
-      .select("file").collect().map(_.getString(0)).distinct.toSeq
-    // a file with no stats row (lost append race) is read conservatively
-    val haveNow = stats.select("file").collect().map(_.getString(0)).toSet
-    val toRead = kept ++ fs.filterNot(haveNow)
-    val cond = col(column) >= lit(lo) && col(column) <= lit(hi)
-    val out =
-      if (toRead.isEmpty) read(spark, path).filter(cond).limit(0)
-      else liveWithPos(spark, toRead, dvFiles(path, v))
-        .drop(FileCol, PosCol).filter(cond)
-    (out, toRead.size.toLong, fs.size.toLong)
+    skippingRead(spark, path, dir, index,
+      keep = col("mx") >= lit(lo) && col("mn") <= lit(hi),
+      cond = col(column) >= lit(lo) && col(column) <= lit(hi))
   }
 
   // ---------------------------------------------------------- bloom skip
@@ -725,68 +730,39 @@ object VersionedTable {
     */
   def readWhereEquals(spark: SparkSession, path: String, column: String,
       value: Any): (DataFrame, Long, Long) = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalStateException(s"no versions at $path"))
-    val fs = files(path, v)
-    if (fs.isEmpty) return (spark.emptyDataFrame, 0L, 0L)
-    val dir = bloomDir(path, column)
-    val have: Set[String] =
-      if (Files.exists(dir))
-        spark.read.parquet(dir.toString)
-          .select("file").collect().map(_.getString(0)).toSet
-      else Set.empty
-    val missing = fs.filterNot(have)
-    if (missing.nonEmpty) {
-      val src = spark.read.option("mergeSchema", "true").parquet(missing: _*)
+    def index(src: DataFrame, fs: Seq[String]): DataFrame = {
       val fileList = src.select(col("_metadata.file_path").as("uri")).distinct()
-      val sets =
-        if (src.columns.contains(column)) {
-          val posExprs = (0 until BloomK).map { i =>
-            (graft.expressions.Md5Prefix.md5Prefix(
-              concat(lit(s"bloom-v1|$i|"), col("v")), 12) % BloomBits)
-              .cast("int")
-          }
-          src
-            .select(col("_metadata.file_path").as("uri"),
-              col(column).cast("string").as("v"))
-            .filter(col("v").isNotNull)
-            .select(col("uri"), explode(array(posExprs: _*)).as("pos"))
-            .groupBy("uri")
-            .agg(sort_array(collect_set(col("pos"))).as("pos_set"))
-        } else fileList.limit(0)
-          .select(col("uri"), array().cast("array<int>").as("pos_set"))
+      val none = array().cast("array<int>")
       // every scanned file gets an entry: a file whose values are all
       // NULL for the column (old-schema file under mergeSchema, or a
       // genuinely all-null file) contributes no position rows, and its
       // sound entry is the EMPTY set — an equality probe excludes null
-      val entries = fileList.join(sets, Seq("uri"), "left")
-        .select(col("uri"),
-          coalesce(col("pos_set"), array().cast("array<int>")).as("pos_set"))
-      entries
-        .select(regexp_replace(col("uri"), "^file:(//)?", "").as("file"),
-          col("pos_set"))
-        .coalesce(1)
-        .write.mode(SaveMode.Append).parquet(dir.toString)
+      if (!src.columns.contains(column)) fileList.select(col("uri"), none.as("pos_set"))
+      else {
+        val posExprs = (0 until BloomK).map { i =>
+          (graft.expressions.Md5Prefix.md5Prefix(
+            concat(lit(s"bloom-v1|$i|"), col("v")), 12) % BloomBits)
+            .cast("int")
+        }
+        val sets = src
+          .select(col("_metadata.file_path").as("uri"),
+            col(column).cast("string").as("v"))
+          .filter(col("v").isNotNull)
+          .select(col("uri"), explode(array(posExprs: _*)).as("pos"))
+          .groupBy("uri")
+          .agg(sort_array(collect_set(col("pos"))).as("pos_set"))
+        fileList.join(sets, Seq("uri"), "left")
+          .select(col("uri"), coalesce(col("pos_set"), none).as("pos_set"))
+      }
     }
     val probe: Seq[Int] = (0 until BloomK).map { i =>
       (java.lang.Long.parseLong(
         bloomHashHex(i, String.valueOf(value)).substring(0, 12), 16)
         % BloomBits).toInt
     }
-    val side = spark.read.parquet(dir.toString)
-      .filter(col("file").isInCollection(fs))
-    val kept = side
-      .filter(probe.distinct.map(p => array_contains(col("pos_set"), p))
-        .reduce(_ && _))
-      .select("file").collect().map(_.getString(0)).distinct.toSeq
-    val haveNow = side.select("file").collect().map(_.getString(0)).toSet
-    val toRead = kept ++ fs.filterNot(haveNow)
-    val cond = col(column) === lit(value)
-    val out =
-      if (toRead.isEmpty) read(spark, path).filter(cond).limit(0)
-      else liveWithPos(spark, toRead, dvFiles(path, v))
-        .drop(FileCol, PosCol).filter(cond)
-    (out, toRead.size.toLong, fs.size.toLong)
+    skippingRead(spark, path, bloomDir(path, column), index,
+      keep = probe.distinct.map(p => array_contains(col("pos_set"), p)).reduce(_ && _),
+      cond = col(column) === lit(value))
   }
 
   /** Drop data-skipping sidecar rows whose file is referenced by NO
@@ -836,11 +812,16 @@ object VersionedTable {
     dropped
   }
 
-  /** Commit history as a DataFrame (version, op, n_files). */
-  def history(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(s"${logDir(path)}/v*.json")
-      .select(col("version"), col("op"), size(col("files")).as("n_files"))
-      .orderBy("version")
+  /** Commit history as a DataFrame (version, op, n_files), ascending,
+    * built driver-side from the manifests.
+    */
+  def history(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    versions(path).map { v =>
+      val m = readManifest(path, v)
+      (v, m.op, m.files.size)
+    }.toDF("version", "op", "n_files")
+  }
 
   /** Retention cleanup — the reference's "table retention policies to
     * auto-delete old files" (/root/reference/bronze_silver_gold/
@@ -870,8 +851,10 @@ object VersionedTable {
     val retained = vs.takeRight(retainLast)
     // deletion-vector files are table state like data files: live while
     // any retained manifest lists them, swept from their own root after
-    val live = retained.flatMap(v =>
-      files(path, v) ++ dvFiles(path, v)).toSet
+    val live = retained.flatMap { v =>
+      val m = readManifest(path, v)
+      m.files ++ m.dv
+    }.toSet
     vs.dropRight(retainLast).foreach { v =>
       Files.deleteIfExists(manifestPath(path, v)); ()
     }
@@ -923,7 +906,7 @@ object VersionedTable {
     * schema with NULLs — exactly what merge-on-read surfaces, so reads
     * are unchanged.
     *
-    * Optimistic concurrency as [[mergeCommit]]: the plan is computed
+    * Read-modify-write through the one commit loop: the plan is computed
     * against a captured base and committed at base+1; losing the race
     * discards the rewrite and re-plans, so a concurrent append's files
     * are never dropped from the manifest.
@@ -932,58 +915,21 @@ object VersionedTable {
     * below target (nothing to compact).
     */
   def compact(spark: SparkSession, path: String,
-      targetBytes: Long = 128L << 20): Option[Long] = {
-    var result: Option[Option[Long]] = None
-    while (result.isEmpty) {
-      val base = latestVersion(path).getOrElse(
-        throw new IllegalStateException(s"no versions at $path"))
-      val all = files(path, base)
-      val small = all.filter(f => Files.size(Paths.get(f)) < targetBytes)
-      if (small.size < 2) result = Some(None)
+      targetBytes: Long = 128L << 20): Option[Long] =
+    commitLoop(path, "compact", requireBase = true) { base =>
+      val small = base.files.filter(f => Files.size(Paths.get(f)) < targetBytes)
+      if (small.size < 2) None
       else {
-        val keep = all.filterNot(small.toSet)
-        val dvs = dvFiles(path, base)
         val total = small.map(f => Files.size(Paths.get(f))).sum
         val nOut = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
         // DV-masked rows must NOT resurrect in the rewrite: compact the
         // LIVE rows of the small files (their DV entries then go inert);
         // kept files retain their DV subtraction through the carried list
-        val compacted = liveWithPos(spark, small, dvs)
+        val compacted = liveWithPos(spark, small, base.dv)
           .drop(FileCol, PosCol).repartition(nOut)
         val (dataDir, newFiles) = writeData(compacted, path)
-        if (tryCommit(path, base + 1, keep ++ newFiles, "compact", dvs)) {
-          maybeCheckpoint(path, base + 1)
-          result = Some(Some(base + 1))
-        } else discardData(dataDir) // concurrent commit won: re-plan
+        Some(Attempt(base.files.filterNot(small.toSet) ++ newFiles, base.dv,
+          Seq(dataDir)))
       }
     }
-    result.get
-  }
-
-  /** MERGE as a transaction: upsert `source` into the latest version on
-    * `keys`, committed as a single new overwrite version (readers never
-    * observe the intermediate state).
-    *
-    * Read-modify-write under optimistic concurrency: the merge is
-    * computed against a CAPTURED base version and committed at exactly
-    * base+1. If another writer commits first, the stale merge result is
-    * DISCARDED and the merge re-runs against the new latest — the
-    * lost-update behavior Delta's conflict detection prevents, prevented
-    * the same way (detect, then re-execute rather than abort).
-    */
-  def mergeCommit(spark: SparkSession, path: String, source: DataFrame,
-      keys: Seq[String]): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val base = latestVersion(path).getOrElse(
-        throw new IllegalStateException(s"no versions at $path"))
-      val merged = graft.operators.Merge.upsert(
-        readVersion(spark, path, base), source, keys)
-      val (dataDir, newFiles) = writeData(merged, path)
-      if (tryCommit(path, base + 1, newFiles, "merge")) committed = base + 1
-      else discardData(dataDir) // conflicting commit won: re-read, re-merge
-    }
-    maybeCheckpoint(path, committed)
-    committed
-  }
 }

@@ -16,7 +16,7 @@ class VersionedTableSpec extends SparkSpec {
       path, SaveMode.Overwrite)
     val v1 = VersionedTable.write(
       Seq((3L, "C", 30.0)).toDF("k", "status", "amt"), path, SaveMode.Append)
-    val v2 = VersionedTable.mergeCommit(spark, path,
+    val v2 = VersionedTable.mergeCommitPruned(spark, path,
       Seq((2L, "B2", 99.0), (4L, "D", 40.0)).toDF("k", "status", "amt"), Seq("k"))
     assert(Seq(v0, v1, v2) == Seq(0L, 1L, 2L))
 
@@ -32,7 +32,7 @@ class VersionedTableSpec extends SparkSpec {
 
     val hist = VersionedTable.history(spark, path)
       .select("version", "op").as[(Long, String)].collect().toSeq
-    assert(hist == Seq((0L, "overwrite"), (1L, "append"), (2L, "merge")))
+    assert(hist == Seq((0L, "overwrite"), (1L, "append"), (2L, "merge-pruned")))
   }
 
   test("vacuum retains the newest versions, deletes unreferenced files") {
@@ -113,25 +113,44 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.read(spark, path).filter($"i" === 8L).count() == 1)
   }
 
-  test("mergeCommit re-runs on conflict: concurrent merges both land (no lost update)") {
-    val path = Files.createTempDirectory("vt5").resolve("t").toString
-    VersionedTable.write(Seq((1L, "base")).toDF("k", "v"), path, SaveMode.Overwrite)
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = (2 to 5).map { k =>
-      new Thread(() =>
-        try {
-          VersionedTable.mergeCommit(spark, path,
-            Seq((k.toLong, s"m$k")).toDF("k", "v"), Seq("k"))
-          ()
-        } catch { case t: Throwable => errors.add(t); () })
+  // Each read-modify-write path under 4 concurrent writers: a retry on a
+  // stale snapshot would drop a concurrent commit's rows, so every
+  // thread's upsert or delete must be visible in the final table.
+  private val rmwBase = (1L to 7L).map(k => (k, "base")).toMap
+  private val rmwUpserts = rmwBase ++
+    (2 to 5).flatMap(k => Seq((k.toLong, s"m$k"), (10L + k, s"i$k")))
+  private val concurrentRmw: Seq[(String, String => Int => Unit, Map[Long, String])] = Seq(
+    ("mergeCommitDV", path => k => VersionedTable.mergeCommitDV(spark, path,
+      Seq((k.toLong, s"m$k"), (10L + k, s"i$k")).toDF("k", "v"), Seq("k")), rmwUpserts),
+    ("mergeCommitPruned", path => k => VersionedTable.mergeCommitPruned(spark, path,
+      Seq((k.toLong, s"m$k"), (10L + k, s"i$k")).toDF("k", "v"), Seq("k")), rmwUpserts),
+    ("deleteWhere", path => k =>
+      VersionedTable.deleteWhere(spark, path, $"k" === k.toLong), rmwBase -- (2L to 5L)),
+    // compactors interleave their own appends: a compaction committed
+    // from a stale plan would drop a concurrent append or duplicate rows
+    ("compact", path => k => (1 to 3).foreach { i =>
+      VersionedTable.write(Seq((10L * i + k, s"i$k")).toDF("k", "v"), path,
+        SaveMode.Append)
+      VersionedTable.compact(spark, path)
+    }, rmwBase ++ (for (i <- 1 to 3; k <- 2 to 5) yield (10L * i + k, s"i$k"))))
+
+  concurrentRmw.foreach { case (name, commit, want) =>
+    test(s"$name re-runs on conflict: 4 concurrent commits all land (no lost update)") {
+      val path = Files.createTempDirectory("vt5").resolve("t").toString
+      // two commits, so compaction always has small files to merge
+      VersionedTable.write((rmwBase - 7L).toSeq.toDF("k", "v"), path, SaveMode.Overwrite)
+      VersionedTable.write(Seq((7L, "base")).toDF("k", "v"), path, SaveMode.Append)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = (2 to 5).map { k =>
+        new Thread(() =>
+          try commit(path)(k)
+          catch { case t: Throwable => errors.add(t); () })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join())
+      assert(errors.isEmpty, s"$name thread failed: ${Option(errors.peek())}")
+      val got = VersionedTable.read(spark, path).as[(Long, String)].collect().toSeq
+      assert(got.sorted == want.toSeq.sorted, s"lost update: $got")
     }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    assert(errors.isEmpty, s"merge thread failed: ${Option(errors.peek())}")
-    // a stale-snapshot retry would drop a concurrent merge's rows; the
-    // re-run-on-conflict loop must preserve every upsert plus the base
-    val keys = VersionedTable.read(spark, path).select("k").as[Long]
-      .collect().toSeq.sorted
-    assert(keys == Seq(1L, 2L, 3L, 4L, 5L), s"lost update: $keys")
   }
 
   test("schema evolution: a widened append reads back merged with NULLs") {
@@ -322,7 +341,7 @@ class VersionedTableSpec extends SparkSpec {
     assert((v0 -- deleted) ++ inserted ==
       VersionedTable.read(spark, path).as[(Long, String)].collect().toSet)
     // a rewrite commit in range raises — CDF demands DV-based ops
-    VersionedTable.mergeCommit(spark, path, Seq((5L, "e")).toDF("k", "v"), Seq("k"))
+    VersionedTable.mergeCommitPruned(spark, path, Seq((3L, "C"), (5L, "e")).toDF("k", "v"), Seq("k"))
     intercept[UnsupportedOperationException] {
       VersionedTable.changes(spark, path, 3L, 4L).collect()
     }
@@ -416,5 +435,92 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.vacuum(path, retainLast = 2)
     assert(VersionedTable.read(spark, path)
       .select("k").as[Long].collect().toSeq == Seq(9L))
+  }
+
+  test("op tags with control characters round-trip through manifests and checkpoints") {
+    val path = Files.createTempDirectory("vt_esc").resolve("t").toString
+    val op = "a\tb\n\"c\\d"
+    val n = 12 // crosses the v10 checkpoint
+    (0 until n).foreach { i =>
+      VersionedTable.write(Seq((i.toLong, s"r$i")).toDF("k", "v"), path,
+        SaveMode.Append, op)
+    }
+    val logDir = java.nio.file.Paths.get(path, "_graft_log")
+    val chk = logDir.resolve("chk-v00000010.json")
+    assert(Files.exists(chk))
+    // escaped on disk: every log file stays one valid JSON line
+    assert(!Files.readString(chk).exists(_ < ' '))
+    assert(VersionedTable.versions(path).forall(v => VersionedTable.opOf(path, v) == op))
+    assert(VersionedTable.files(path, n - 1L).distinct.size >= n)
+    assert(VersionedTable.read(spark, path).count() == n)
+    assert(VersionedTable.history(spark, path).as[(Long, String, Int)].collect()
+      .map(h => (h._1, h._2)).toSeq == (0 until n).map(v => (v.toLong, op)))
+    assert(VersionedTable.committedOps(spark, path) == Set(op))
+    // ops of the versions the checkpoint covers come from the checkpoint
+    (0L to 9L).foreach(v => Files.delete(logDir.resolve(f"v$v%08d.json")))
+    assert(VersionedTable.committedOps(spark, path) == Set(op))
+    assert(VersionedTable.writeOnce(Seq((99L, "x")).toDF("k", "v"), path,
+      SaveMode.Append, op).isEmpty)
+  }
+
+  test("manifest codec: the log format reads back and renders byte-identical") {
+    val withDv = """{"version":3,"op":"merge \"q\" \\ x","files":""" +
+      """["/t/data/a/p0.parquet","/t/data/b/p1.parquet"],"dv":["/t/dv/c/p0.parquet"]}"""
+    val m = VersionedTable.parse(withDv)
+    assert(m == VersionedTable.Manifest(3L, "merge \"q\" \\ x",
+      Seq("/t/data/a/p0.parquet", "/t/data/b/p1.parquet"), Seq("/t/dv/c/p0.parquet")))
+    assert(VersionedTable.render(m) == withDv)
+    val dvFree = """{"version":0,"op":"overwrite","files":[]}"""
+    assert(VersionedTable.render(VersionedTable.parse(dvFree)) == dvFree)
+    val checkpoint = """{"version":10,"ops":[[0,"batch-0"],[1,"say \"hi\""]]}"""
+    assert(VersionedTable.parse(checkpoint).ops.contains(Seq((0L, "batch-0"), (1L, "say \"hi\""))))
+    assert(VersionedTable.render(VersionedTable.parse(checkpoint)) == checkpoint)
+    // a manifest committed by an older writer is served unchanged
+    val path = Files.createTempDirectory("vt_codec").resolve("t").toString
+    VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), path, SaveMode.Overwrite)
+    val logDir = java.nio.file.Paths.get(path, "_graft_log")
+    Files.writeString(logDir.resolve("v00000001.json"), withDv.replace("\"version\":3", "\"version\":1"))
+    assert(VersionedTable.files(path, 1L) == m.files)
+    assert(VersionedTable.dvFiles(path, 1L) == m.dv)
+    assert(VersionedTable.opOf(path, 1L) == m.op)
+  }
+
+  test("metadata-only calls start no Spark job") {
+    val path = Files.createTempDirectory("vt_meta").resolve("t").toString
+    VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, SaveMode.Overwrite)
+    VersionedTable.write(Seq((3L, "c")).toDF("k", "v"), path, SaveMode.Append)
+    VersionedTable.deleteWhere(spark, path, $"k" === 1L)
+    // count only the jobs this thread starts: other suites may share the session
+    val probe = s"vt-meta-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("vt.meta.probe")) match {
+          case Some(`probe`) => jobs.incrementAndGet(); ()
+          case Some(p) if p == probe + "-end" => sentinel.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("vt.meta.probe", probe)
+      val latest = VersionedTable.latestVersion(path).get
+      VersionedTable.files(path, latest)
+      VersionedTable.dvFiles(path, latest)
+      VersionedTable.opOf(path, latest)
+      VersionedTable.committedOps(spark, path)
+      val rv = VersionedTable.restore(path, 0L)
+      assert(VersionedTable.files(path, rv) == VersionedTable.files(path, 0L))
+      // the listener bus is ordered: once this job is seen, every earlier one was
+      sc.setLocalProperty("vt.meta.probe", probe + "-end")
+      spark.range(1).count()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty("vt.meta.probe", null)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0, s"${jobs.get} Spark jobs from metadata-only calls")
   }
 }
