@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.{Bronze, Gold, Merge, Silver}
 import graft.sources.LayerIO
@@ -16,9 +15,14 @@ import graft.sources.LayerIO
   * Each run is INCREMENTAL and IDEMPOTENT: Bronze appends with lineage,
   * Silver consumes only rows above its watermark and merges by business
   * key, Gold rebuilds dims (SCD1 full refresh, as the reference does)
-  * and merge-upserts the fact. Re-running with no new data changes
-  * nothing — the "Idempotent Processing" contract the reference docs
-  * declare (bronze_silver_gold/readme.md:68-70).
+  * and rebuilds the fact from the full Silver table. Re-running with no
+  * new data changes nothing — the "Idempotent Processing" contract the
+  * reference docs declare (bronze_silver_gold/readme.md:68-70).
+  *
+  * Each layer evaluates each piece of its work once per batch: every
+  * Spark job here carries fixed planning/scheduling cost whatever the
+  * batch size, so a repeated scan or a schema-inference read costs as
+  * much as the work itself on an incremental batch.
   */
 object Pipeline {
 
@@ -38,12 +42,11 @@ object Pipeline {
     * date (B3 fix). `asOf` stamps the batch deterministically.
     */
   def runBronze(spark: SparkSession, raw: DataFrame, paths: LayerPaths,
-      loadId: String, asOf: String): DataFrame = {
+      loadId: String, asOf: String): Unit = {
     val stamped = Bronze.stampLineage(raw, "tpch_feed", loadId,
       ingestionTs = lit(asOf).cast("timestamp"),
       sourceFile = lit(s"$loadId.parquet"))
     LayerIO.appendOrCreate(stamped, spark, paths.bronze, "ingestion_date")
-    LayerIO.readLayer(spark, paths.bronze)
   }
 
   private def readWatermarks(spark: SparkSession, paths: LayerPaths): DataFrame =
@@ -57,43 +60,60 @@ object Pipeline {
 
   /** Silver: watermark-incremental read of Bronze → cleanse → DQ gate
     * (FAIL rows appended to the quarantine table) → business-key dedup →
-    * merge into Silver → watermark commit. Returns rows processed.
+    * merge into Silver → watermark commit. Returns Silver's row count
+    * after the merge, or 0 when Bronze holds nothing above the watermark
+    * (nothing is written then).
+    *
+    * The mark is a literal in the Bronze scan's pushed filters, and one
+    * aggregate over the persisted DQ-tagged batch yields its row count,
+    * its FAIL count and its new high-water mark, so the batch is read
+    * from Bronze once.
     */
   def runSilver(spark: SparkSession, paths: LayerPaths): Long = {
-    val bronze = LayerIO.readLayer(spark, paths.bronze)
-    val incr = Silver.incrementalAfter(bronze, readWatermarks(spark, paths),
-      "silver_claims", "ingestion_timestamp")
-    if (incr.isEmpty) return 0L
-    val tagged = Silver.applyDqRules(Silver.cleanseLineitem(incr))
-      .persist()
-    val (pass, fail) = Silver.quarantineSplit(tagged)
-    if (!fail.isEmpty)
-      LayerIO.appendLayer(fail.withColumn("dq_failure_reasons",
-        col("dq_reasons_csv")).drop("dq_reasons_csv"), paths.quarantine)
-    val deduped = Silver.dedupLatest(pass.drop("dq_status", "dq_failure_reasons", "dq_reasons_csv"),
-      Seq("l_orderkey", "l_linenumber"),
-      Seq(col("ingestion_timestamp").desc, col("ship_date").desc,
-        col("l_extendedprice").desc))
-    val merged =
-      if (LayerIO.layerExists(spark, paths.silver))
-        Merge.upsert(LayerIO.readLayer(spark, paths.silver), deduped,
-          Seq("l_orderkey", "l_linenumber"))
-      else deduped
-    // staging + swap: the merge plan READS paths.silver, so an in-place
-    // overwrite (even behind cache+count) recomputes from deleted files
-    // if partitions evict mid-write — the staged write keeps the source
-    // table live until the new one is complete
-    LayerIO.overwriteViaStaging(spark, merged, paths.silver)
-    val n = LayerIO.readLayer(spark, paths.silver).count()
-    val wm = Silver.watermarkCommit(incr, "silver_claims", "ingestion_timestamp")
-    wm.write.mode(SaveMode.Append).parquet(paths.watermarks)
-    tagged.unpersist()
-    n
+    val incr = Silver.incrementalAfterLiteral(LayerIO.readLayer(spark, paths.bronze),
+      readWatermarks(spark, paths), "silver_claims", "ingestion_timestamp")
+    val tagged = Silver.applyDqRules(Silver.cleanseLineitem(incr)).persist()
+    try {
+      val stats = tagged.agg(count(lit(1)),
+        count(when(col("dq_status") === "FAIL", 1)),
+        max(col("ingestion_timestamp"))).head()
+      if (stats.getLong(0) == 0L) 0L
+      else {
+        val (pass, fail) = Silver.quarantineSplit(tagged)
+        if (stats.getLong(1) > 0L)
+          LayerIO.appendLayer(fail.withColumn("dq_failure_reasons",
+            col("dq_reasons_csv")).drop("dq_reasons_csv"), paths.quarantine)
+        val deduped = Silver.dedupLatest(
+          pass.drop("dq_status", "dq_failure_reasons", "dq_reasons_csv"),
+          Seq("l_orderkey", "l_linenumber"),
+          Seq(col("ingestion_timestamp").desc, col("ship_date").desc,
+            col("l_extendedprice").desc))
+        val merged =
+          if (LayerIO.layerExists(spark, paths.silver))
+            Merge.upsert(LayerIO.readLayer(spark, paths.silver), deduped,
+              Seq("l_orderkey", "l_linenumber"))
+          else deduped
+        // staging + swap: the merge plan READS paths.silver, so an in-place
+        // overwrite (even behind cache+count) recomputes from deleted files
+        // if partitions evict mid-write — the staged write keeps the source
+        // table live until the new one is complete
+        LayerIO.overwriteViaStaging(spark, merged, paths.silver)
+        val n = LayerIO.readLayer(spark, paths.silver, merged.schema).count()
+        spark.range(1).select(lit("silver_claims").as("table_name"),
+            lit(stats.get(2)).cast("timestamp").as("last_processed_timestamp"))
+          .write.mode(SaveMode.Append).parquet(paths.watermarks)
+        n
+      }
+    } finally tagged.unpersist()
   }
 
-  /** Gold: SCD1 dims full refresh + date dim, fact rebuild with
-    * surrogate-key resolution, merge-upsert on the composite key,
-    * monthly rollup refresh.
+  /** Gold: SCD1 dims full refresh + date dim, then the fact rebuilt from
+    * the full Silver table with surrogate-key resolution, then the
+    * monthly rollup refresh. The fact is written as built, not merged
+    * into the previous fact: its keys are Silver's keys, and Silver never
+    * drops a key, so a merge-upsert against the old fact could add no
+    * row. Tables this call has just written are read back with the
+    * schema it wrote.
     */
   def runGold(spark: SparkSession, paths: LayerPaths, fixturesDir: String): Unit = {
     val silver = LayerIO.readLayer(spark, paths.silver)
@@ -105,17 +125,12 @@ object Pipeline {
     dimProvider.write.mode(SaveMode.Overwrite).parquet(paths.dimProvider)
     dimDate.write.mode(SaveMode.Overwrite).parquet(paths.dimDate)
     val fact = Gold.factLines(silver, Tables.orders(spark, fixturesDir),
-      LayerIO.readLayer(spark, paths.dimMember),
-      LayerIO.readLayer(spark, paths.dimProvider),
-      LayerIO.readLayer(spark, paths.dimDate))
-    val merged =
-      if (LayerIO.layerExists(spark, paths.fact))
-        Merge.upsert(LayerIO.readLayer(spark, paths.fact), fact,
-          Seq("claim_id", "claim_line_number"))
-      else fact
-    // same staging + swap discipline: the merge plan reads paths.fact
-    LayerIO.overwriteViaStaging(spark, merged, paths.fact)
-    Gold.monthlyRollup(LayerIO.readLayer(spark, paths.fact))
+      LayerIO.readLayer(spark, paths.dimMember, dimMember.schema),
+      LayerIO.readLayer(spark, paths.dimProvider, dimProvider.schema),
+      LayerIO.readLayer(spark, paths.dimDate, dimDate.schema))
+    // staged so the previous fact stays readable until the new one is whole
+    LayerIO.overwriteViaStaging(spark, fact, paths.fact)
+    Gold.monthlyRollup(LayerIO.readLayer(spark, paths.fact, fact.schema))
       .write.mode(SaveMode.Overwrite).parquet(paths.rollup)
   }
 }

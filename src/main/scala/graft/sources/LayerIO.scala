@@ -55,6 +55,13 @@ object LayerIO {
   def readLayer(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
+  /** S2 with the schema known, for reading back a table the caller has
+    * just written: no footer read to infer the schema, which [[readLayer]]
+    * runs as a one-task Spark job before any query starts.
+    */
+  def readLayer(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
+
   /** JSON-lines ingest with the same PERMISSIVE/corrupt-capture contract
     * as [[readCsv]] — the landing format of most event feeds. Schema
     * declared, never inferred: inference costs a full extra pass and can
