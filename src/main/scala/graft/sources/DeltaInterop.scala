@@ -1,11 +1,18 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.databind.util.RawValue
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types._
 
 /** Interop with the Delta Lake transaction-log wire format — the on-disk
   * layout the reference's loaders write with `format("delta")`
@@ -31,7 +38,8 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *   - v2: name-mode column mapping — data files carry physical column
   *     names from `delta.columnMapping.physicalName` field metadata;
   *     reads rename physical → logical, and partition values are keyed
-  *     by physical name per the protocol. (id-mode is refused.)
+  *     by physical name per the protocol. id-mode tables resolve the
+  *     same way (the protocol requires physical names in both modes).
   *   - v3 feature tables: `columnMapping`, `deletionVectors` (file-based
   *     "u" and inline "i" storage; the RoaringBitmapArray portable
   *     format with the protocol's version-byte/size/CRC32 framing),
@@ -45,16 +53,22 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * its remove byte-for-byte, and decoding happens only when resolving a
   * file for a data read.
   *
-  * Scale shape: the log is file-count-bounded (one row per action), so
-  * snapshot resolution collects only file metadata to the driver — the
-  * same order of driver traffic as listing the directory. Data reads
-  * group adds by partition tuple and scan each group with the declared
-  * schema, so partition values become literal columns (no re-inference
-  * from dir names, which the protocol does not guarantee). DV masks are
-  * applied as one broadcast anti-join on (file, row-position) over the
-  * scan's `_metadata.row_index` — never a per-file driver loop over
-  * data rows; driver traffic is bounded by DV cardinality (the same
-  * bytes any Delta reader must materialize to apply the mask).
+  * Scale shape: the log is file-count-bounded (one action per line), so
+  * snapshot resolution reads it on the driver through one Jackson action
+  * codec — a JSON-only log replays with no Spark job; only checkpoint
+  * parquet goes through Spark, read back with `toJSON` into the same
+  * parser. Every commit goes through one optimistic loop: it replays the
+  * log, plans, and links `<version>.json` put-if-absent (staged beside
+  * the log, then `createLink` — the [[VersionedTable]] primitive), so a
+  * version file appears whole or not at all, and a lost race re-plans
+  * against the new snapshot. Data reads group adds by partition tuple
+  * and scan each group with the declared schema, so partition values
+  * become literal columns (no re-inference from dir names, which the
+  * protocol does not guarantee). DV masks are applied as one broadcast
+  * anti-join on (file, row-position) over the scan's
+  * `_metadata.row_index` — never a per-file driver loop over data rows;
+  * driver traffic is bounded by DV cardinality (the same bytes any Delta
+  * reader must materialize to apply the mask).
   */
 object DeltaInterop {
 
@@ -88,270 +102,218 @@ object DeltaInterop {
 
   private val CommitName = """(\d{20})\.json""".r
   private val PhysicalNameKey = "delta.columnMapping.physicalName"
+  private val ColumnIdKey = "delta.columnMapping.id"
 
-  /** `Files.list`/`Files.walk` return streams backed by an open
-    * directory handle — consume within the callback and CLOSE, or a
-    * long-lived driver (snapshot per query, commit retry loops) leaks
+  /** `Files.walk` returns a stream backed by open directory handles —
+    * consume within the callback and CLOSE, or a long-lived driver leaks
     * handles until "too many open files".
     */
-  private def withList[A](dir: Path)(f: Iterator[Path] => A): A = {
-    val s = Files.list(dir)
-    try f(s.iterator().asScala) finally s.close()
-  }
   private def withWalk[A](dir: Path)(f: Iterator[Path] => A): A = {
     val s = Files.walk(dir)
     try f(s.iterator().asScala) finally s.close()
   }
 
+  // ------------------------------------------------------- action codec
+  //
+  // Every `_delta_log` action — JSON commits, v2 checkpoint manifests,
+  // and checkpoint parquet rows read back through `toJSON` — is parsed
+  // and rendered by one Jackson pair. Action kinds this engine does not
+  // use (commitInfo, domainMetadata, …) parse to nothing; a non-blank
+  // line that is not one JSON object is refused, naming its source.
+
+  private sealed trait Action
+  private final case class Add(file: DeltaFile, size: Long = 0L,
+      modificationTime: Long = 0L, dataChange: Boolean = true) extends Action
+  private final case class Remove(path: String, dv: Option[DvDescriptor],
+      dataChange: Boolean = true) extends Action
+  private final case class Cdc(path: String,
+      partitionValues: Map[String, String]) extends Action
+  private final case class Meta(id: String, schemaString: String,
+      partitionColumns: Seq[String], configuration: Map[String, String],
+      createdTime: Long) extends Action
+  private final case class Protocol(minReader: Int, minWriter: Int,
+      readerFeatures: Option[Seq[String]] = None,
+      writerFeatures: Option[Seq[String]] = None) extends Action
+  private final case class Txn(appId: String, version: Long,
+      lastUpdated: Long = 0L) extends Action
+  private final case class Sidecar(path: String, sizeInBytes: Long) extends Action
+  private final case class CheckpointMetadata(version: Long) extends Action
+
+  private val mapper = JsonMapper.builder()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS).build()
+
+  private def parse(line: String, source: => String): Seq[Action] = {
+    val n = try mapper.readTree(line) catch {
+      case e: com.fasterxml.jackson.core.JacksonException =>
+        throw new IllegalStateException(
+          s"malformed action in $source: ${e.getOriginalMessage}", e)
+    }
+    if (n == null || !n.isObject)
+      throw new IllegalStateException(s"malformed action in $source: not a JSON object")
+    def text(o: JsonNode, f: String): String =
+      Option(o.get(f)).filterNot(_.isNull).map(_.asText).orNull
+    def strMap(o: JsonNode): Map[String, String] =
+      o.properties().asScala.map(e => e.getKey -> text(o, e.getKey)).toMap
+    def strs(o: JsonNode): Option[Seq[String]] =
+      Option(o).filter(_.isArray).map(_.elements().asScala.map(_.asText).toSeq)
+    def dv(o: JsonNode): Option[DvDescriptor] =
+      Option(o.get("deletionVector")).filter(_.isObject).map(d => DvDescriptor(
+        text(d, "storageType"), text(d, "pathOrInlineDv"),
+        Option(d.get("offset")).filterNot(_.isNull).map(_.asLong),
+        d.path("sizeInBytes").asLong, d.path("cardinality").asLong))
+    n.properties().asScala.toSeq.flatMap { e =>
+      val a = e.getValue
+      if (!a.isObject) None
+      else e.getKey match {
+        case "add" => Some(Add(DeltaFile(text(a, "path"),
+            strMap(a.path("partitionValues")), dv(a), Option(text(a, "stats"))),
+          a.path("size").asLong, a.path("modificationTime").asLong,
+          a.path("dataChange").asBoolean(true)))
+        case "remove" =>
+          Some(Remove(text(a, "path"), dv(a), a.path("dataChange").asBoolean(true)))
+        case "cdc" => Some(Cdc(text(a, "path"), strMap(a.path("partitionValues"))))
+        case "metaData" => Some(Meta(text(a, "id"), text(a, "schemaString"),
+          strs(a.get("partitionColumns")).getOrElse(Nil),
+          strMap(a.path("configuration")), a.path("createdTime").asLong))
+        case "protocol" => Some(Protocol(a.path("minReaderVersion").asInt(1),
+          a.path("minWriterVersion").asInt(2), strs(a.get("readerFeatures")),
+          strs(a.get("writerFeatures"))))
+        case "txn" => Some(Txn(text(a, "appId"), a.path("version").asLong,
+          a.path("lastUpdated").asLong))
+        case "sidecar" => Some(Sidecar(text(a, "path"), a.path("sizeInBytes").asLong))
+        case _ => None
+      }
+    }
+  }
+
+  private def render(a: Action): String = {
+    val root = mapper.createObjectNode()
+    def strMap(o: ObjectNode, field: String, m: Map[String, String]): Unit = {
+      val n = o.putObject(field)
+      m.toSeq.sortBy(_._1).foreach { case (k, v) => n.put(k, v) }
+    }
+    def strs(o: ObjectNode, field: String, xs: Seq[String]): Unit = {
+      val n = o.putArray(field)
+      xs.foreach(x => n.add(x))
+    }
+    def dv(o: ObjectNode, d: Option[DvDescriptor]): Unit = d.foreach { d =>
+      val n = o.putObject("deletionVector").put("storageType", d.storageType)
+        .put("pathOrInlineDv", d.pathOrInlineDv)
+      d.offset.foreach(n.put("offset", _))
+      n.put("sizeInBytes", d.sizeInBytes).put("cardinality", d.cardinality)
+    }
+    a match {
+      case Add(f, size, mtime, dataChange) =>
+        val o = root.putObject("add").put("path", f.path)
+        strMap(o, "partitionValues", f.partitionValues)
+        o.put("size", size).put("modificationTime", mtime).put("dataChange", dataChange)
+        f.stats.foreach(o.put("stats", _))
+        dv(o, f.dv)
+      case Remove(path, d, dataChange) =>
+        dv(root.putObject("remove").put("path", path)
+          .put("deletionTimestamp", System.currentTimeMillis())
+          .put("dataChange", dataChange), d)
+      case Cdc(path, pv) =>
+        val o = root.putObject("cdc").put("path", path)
+        strMap(o, "partitionValues", pv)
+        o.put("size", 0L).put("dataChange", false)
+      case Meta(id, schemaString, partCols, conf, created) =>
+        val o = root.putObject("metaData").put("id", id)
+        o.putObject("format").put("provider", "parquet").putObject("options")
+        o.put("schemaString", schemaString)
+        strs(o, "partitionColumns", partCols)
+        strMap(o, "configuration", conf)
+        o.put("createdTime", created)
+      case Protocol(reader, writer, rf, wf) =>
+        val o = root.putObject("protocol").put("minReaderVersion", reader)
+          .put("minWriterVersion", writer)
+        rf.foreach(strs(o, "readerFeatures", _))
+        wf.foreach(strs(o, "writerFeatures", _))
+      case Txn(app, v, t) =>
+        root.putObject("txn").put("appId", app).put("version", v).put("lastUpdated", t)
+      case Sidecar(p, size) => root.putObject("sidecar").put("path", p)
+        .put("sizeInBytes", size).put("modificationTime", 0L)
+      case CheckpointMetadata(v) => root.putObject("checkpointMetadata").put("version", v)
+    }
+    mapper.writeValueAsString(root)
+  }
+
+  /** The actions of one JSON log file; only blank lines are skipped. */
+  private def readActions(file: Path, source: String): Seq[Action] =
+    new String(Files.readAllBytes(file), UTF_8).split('\n').toSeq
+      .filterNot(_.trim.isEmpty).flatMap(parse(_, source))
+
+  /** Checkpoint parquet rows, through the same parser as JSON commits. */
+  private def readParquetActions(spark: SparkSession, files: Seq[Path],
+      source: String): Seq[Action] =
+    spark.read.parquet(files.map(_.toString): _*).toJSON.collect().toSeq
+      .flatMap(parse(_, source))
+
+  // ------------------------------------------------------------ replay
+
+  /** A snapshot plus the metaData and protocol actions in force at it. */
+  private final case class Replayed(snap: DeltaSnapshot, meta: Meta, protocol: Protocol)
+
+  private val SupportedReaderFeatures =
+    Set("columnMapping", "deletionVectors", "timestampNtz", "v2Checkpoint")
+
   /** Resolve the live snapshot at `asOf` (default: latest) by replaying
     * the checkpoint (if usable) plus the JSON commits.
     */
   def snapshot(spark: SparkSession, path: String,
-      asOf: Option[Long] = None): DeltaSnapshot = {
+      asOf: Option[Long] = None): DeltaSnapshot = replay(spark, path, asOf).snap
+
+  private def replay(spark: SparkSession, path: String, asOf: Option[Long]): Replayed = {
     val logDir = Paths.get(path, "_delta_log")
     require(Files.isDirectory(logDir), s"not a Delta table: no _delta_log under $path")
-
-    val commitVersions: Seq[(Long, Path)] =
-      withList(logDir)(_.flatMap { p =>
-        p.getFileName.toString match {
-          case CommitName(v) => Some(v.toLong -> p)
-          case _ => None
-        }
-      }.toSeq).sortBy(_._1)
-
+    val names = VersionedTable.listDir(logDir)(_.map(_.getFileName.toString).toSeq)
+    val commits = names.collect { case CommitName(v) => v.toLong }.sorted
     // a checkpointed table may have ZERO json commits after log cleanup
-    val cpVersionRaw: Option[Long] = {
-      val lc = logDir.resolve("_last_checkpoint")
-      if (!Files.exists(lc)) None
-      else
-        // tiny single-object JSON ({"version":N,"size":M,...})
-        """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(Files.readString(lc))
-          .map(_.group(1).toLong)
-    }
-    val latestKnown = (commitVersions.map(_._1) ++ cpVersionRaw.toSeq)
-      .maxOption.getOrElse(
-        throw new IllegalArgumentException(s"empty _delta_log at $path"))
-    val upTo = asOf.getOrElse(latestKnown)
+    val lastCp = Some(logDir.resolve("_last_checkpoint")).filter(Files.exists(_))
+      .flatMap(p => scala.util.Try(mapper.readTree(Files.readString(p))).toOption)
+      .filter(n => n != null && n.has("version"))
+    val latest = (commits ++ lastCp.map(_.get("version").asLong)).maxOption
+      .getOrElse(throw new IllegalArgumentException(s"empty _delta_log at $path"))
+    val upTo = asOf.getOrElse(latest)
     // bootstrap from the checkpoint only when it does not overshoot asOf
-    val cpVersion = cpVersionRaw.filter(_ <= upTo)
-    val replay = commitVersions
-      .filter { case (v, _) => v <= upTo && cpVersion.forall(v > _) }
-    require(commitVersions.exists(_._1 == upTo) || cpVersion.contains(upTo),
+    val cp = lastCp.filter(_.get("version").asLong <= upTo)
+    val cpVersion = cp.map(_.get("version").asLong)
+    val tail = commits.filter(v => v <= upTo && cpVersion.forall(v > _))
+    require(commits.contains(upTo) || cpVersion.contains(upTo),
       s"version $upTo not present in _delta_log at $path")
     // the replayed chain must be GAPLESS from its base to upTo: a
     // missing middle commit (torn external log cleanup, manual delete)
     // would silently skip that version's removes and RESURRECT deleted
     // files as phantom rows — delta-spark validates the same invariant
-    locally {
-      val base = cpVersion.map(_ + 1).getOrElse(0L)
-      val expected = (base to upTo).toSeq
-      val got = replay.map(_._1)
-      require(got == expected,
-        s"_delta_log at $path has a gap: need commits $base..$upTo, " +
-          s"found ${got.mkString("[", ",", "]")} — a missing middle " +
-          "commit would silently resurrect removed files")
-    }
+    val base = cpVersion.fold(0L)(_ + 1)
+    require(tail == (base to upTo),
+      s"_delta_log at $path has a gap: need commits $base..$upTo, " +
+        s"found ${tail.mkString("[", ",", "]")} — a missing middle " +
+        "commit would silently resurrect removed files")
 
-    // one struct-per-action-type row set, from checkpoint parquet and/or
-    // JSON commits; `v` orders adds against removes across sources
-    final case class Act(v: Long, kind: String, filePath: String,
-        pv: Map[String, String], dv: Option[DvDescriptor], schemaString: String,
-        partitionColumns: Seq[String], configuration: Map[String, String],
-        minReader: Long, readerFeatures: Option[Seq[String]],
-        txnApp: String = null, txnVer: Long = 0L,
-        stats: Option[String] = None)
-    def acts(df: DataFrame, versionCol: Column): Seq[Act] = {
-      val cols = df.columns.toSet
-      def structOf(name: String): Option[StructType] =
-        if (cols.contains(name)) df.schema(name).dataType match {
-          case s: StructType => Some(s)
-          case _ => None
-        } else None
-      def sub(name: String, field: String): Column =
-        structOf(name).filter(_.fieldNames.contains(field))
-          .map(_ => col(s"$name.$field")).getOrElse(lit(null))
-      // spark.read.json infers string-keyed maps (partitionValues,
-      // configuration) as STRUCTs (keys become fields); checkpoint
-      // parquet written by Delta stores a MAP — fold both to a map so
-      // the collect below is shape-independent
-      def asMap(name: String, field: String): Column =
-        structOf(name).filter(_.fieldNames.contains(field)).map { t =>
-          t(field).dataType match {
-            case _: org.apache.spark.sql.types.MapType => col(s"$name.$field")
-            case s: StructType if s.nonEmpty =>
-              // keys may contain dots (delta.columnMapping.mode) —
-              // backtick the leaf so it is not parsed as a nested path
-              map(s.fields.flatMap(f => Seq(lit(f.name),
-                col(s"$name.$field.`${f.name}`").cast("string"))).toSeq: _*)
-            case _ => lit(null)
-          }
-        }.getOrElse(lit(null))
-      def dvSubOf(action: String, field: String): Column =
-        structOf(action).map(_.fieldNames.contains("deletionVector")).getOrElse(false) match {
-          case true =>
-            df.schema(action).dataType.asInstanceOf[StructType]("deletionVector")
-              .dataType match {
-                case s: StructType if s.fieldNames.contains(field) =>
-                  col(s"$action.deletionVector.$field")
-                case _ => lit(null)
-              }
-          case false => lit(null)
-        }
-      def dvSub(field: String): Column = dvSubOf("add", field)
-      df.select(
-          versionCol.as("v"),
-          sub("add", "path").as("add_path"),
-          asMap("add", "partitionValues").as("add_pv"),
-          sub("remove", "path").as("remove_path"),
-          sub("metaData", "schemaString").as("schema_string"),
-          sub("metaData", "partitionColumns").as("part_cols"),
-          asMap("metaData", "configuration").as("conf"),
-          sub("protocol", "minReaderVersion").cast("long").as("min_reader"),
-          sub("protocol", "readerFeatures").as("reader_features"),
-          dvSub("storageType").as("dv_st"),
-          dvSub("pathOrInlineDv").as("dv_path"),
-          dvSub("offset").cast("long").as("dv_off"),
-          dvSub("sizeInBytes").cast("long").as("dv_size"),
-          dvSub("cardinality").cast("long").as("dv_card"),
-          sub("txn", "appId").as("txn_app"),
-          sub("txn", "version").cast("long").as("txn_ver"),
-          sub("add", "stats").as("add_stats"),
-          dvSubOf("remove", "storageType").as("rdv_st"),
-          dvSubOf("remove", "pathOrInlineDv").as("rdv_path"),
-          dvSubOf("remove", "offset").cast("long").as("rdv_off"),
-          dvSubOf("remove", "sizeInBytes").cast("long").as("rdv_size"),
-          dvSubOf("remove", "cardinality").cast("long").as("rdv_card"))
-        .collect().toSeq.flatMap { r =>
-          val v = r.getLong(0)
-          val out = scala.collection.mutable.ArrayBuffer.empty[Act]
-          if (!r.isNullAt(1)) {
-            val dv = if (r.isNullAt(9)) None else Some(DvDescriptor(
-              r.getString(9), r.getString(10),
-              if (r.isNullAt(11)) None else Some(r.getLong(11)),
-              r.getLong(12), r.getLong(13)))
-            out += Act(v, "add", r.getString(1),
-              Option(r.getMap[String, String](2)).map(_.toMap).getOrElse(Map.empty),
-              dv, null, Nil, Map.empty, 0L, None,
-              stats = if (r.isNullAt(16)) None else Some(r.getString(16)))
-          }
-          if (!r.isNullAt(3)) {
-            // a remove may carry the DV descriptor of the add it
-            // tombstones — the protocol reconciles by (path, dvId)
-            val rdv = if (r.isNullAt(17)) None else Some(DvDescriptor(
-              r.getString(17), r.getString(18),
-              if (r.isNullAt(19)) None else Some(r.getLong(19)),
-              r.getLong(20), r.getLong(21)))
-            out += Act(v, "remove", r.getString(3), Map.empty,
-              rdv, null, Nil, Map.empty, 0L, None)
-          }
-          if (!r.isNullAt(4)) out += Act(v, "meta", null, Map.empty, None,
-            r.getString(4),
-            Option(r.getSeq[String](5)).map(_.toSeq).getOrElse(Nil),
-            Option(r.getMap[String, String](6)).map(_.toMap).getOrElse(Map.empty),
-            0L, None)
-          if (!r.isNullAt(7)) out += Act(v, "protocol", null, Map.empty, None,
-            null, Nil, Map.empty, r.getLong(7),
-            Option(r.getSeq[String](8)).map(_.toSeq))
-          if (!r.isNullAt(14)) out += Act(v, "txn", null, Map.empty, None,
-            null, Nil, Map.empty, 0L, None,
-            txnApp = r.getString(14), txnVer = r.getLong(15))
-          out.toSeq
-        }
-    }
+    // (version, action) in log order: the checkpoint's, then each commit's
+    val actions: Seq[(Long, Action)] =
+      cp.toSeq.flatMap(n => readCheckpoint(spark, logDir, names, n).map(cpVersion.get -> _)) ++
+        tail.flatMap(v => readActions(logDir.resolve(f"$v%020d.json"),
+          s"commit $v of $path").map(v -> _))
 
-    val cpActs: Seq[Act] = cpVersion.toSeq.flatMap { v =>
-      val single = logDir.resolve(f"$v%020d.checkpoint.parquet")
-      lazy val multiParts: Seq[(Int, Int, Path)] = {
-        // multi-part classic checkpoint (the protocol's
-        // <version>.checkpoint.<part>.<total>.parquet layout, emitted
-        // by production writers when one part would be too large)
-        val MultiPart =
-          (f"$v%020d" + """\.checkpoint\.(\d{10})\.(\d{10})\.parquet""").r
-        withList(logDir)(_.flatMap { p =>
-          p.getFileName.toString match {
-            case MultiPart(i, n) => Some((i.toInt, n.toInt, p))
-            case _ => None
-          }
-        }.toSeq).sortBy(_._1)
-      }
-      if (Files.exists(single))
-        acts(spark.read.parquet(single.toString), lit(v))
-      else if (multiParts.nonEmpty) {
-        // every declared part must be present — a partial set is a
-        // torn checkpoint, not a smaller one
-        val total = multiParts.head._2
-        require(multiParts.map(_._2).forall(_ == total) &&
-            multiParts.map(_._1) == (1 to total),
-          s"torn multi-part checkpoint at version $v: found parts " +
-            s"${multiParts.map(t => s"${t._1}/${t._2}").mkString(",")}")
-        // _last_checkpoint's parts field, when present, must agree
-        val declared = """"parts"\s*:\s*(\d+)""".r
-          .findFirstMatchIn(Files.readString(logDir.resolve("_last_checkpoint")))
-          .map(_.group(1).toInt)
-        require(declared.forall(_ == total),
-          s"_last_checkpoint declares parts=${declared.get}, found $total")
-        acts(spark.read.parquet(multiParts.map(_._3.toString): _*), lit(v))
-      } else {
-        // v2 checkpoint (the `v2Checkpoint` table feature): a UUID-named
-        // manifest — json or parquet — holding protocol/metaData plus
-        // `sidecar` actions that point at add/remove shards under
-        // _delta_log/_sidecars/. Several manifests may coexist (any is
-        // complete by construction); take the lexically first for
-        // determinism.
-        val V2Name =
-          (f"$v%020d" + """\.checkpoint\.[0-9a-fA-F-]{36}\.(?:json|parquet)""").r
-        val manifests = withList(logDir)(_.filter(p =>
-            V2Name.pattern.matcher(p.getFileName.toString).matches())
-          .toSeq).sortBy(_.getFileName.toString)
-        require(manifests.nonEmpty,
-          s"_last_checkpoint points at version $v but no classic, " +
-            "multi-part, or v2 checkpoint file exists")
-        val mPath = manifests.head
-        val mDf =
-          if (mPath.getFileName.toString.endsWith(".json"))
-            spark.read.json(mPath.toString)
-          else spark.read.parquet(mPath.toString)
-        val sidecars: Seq[String] =
-          if (mDf.columns.contains("sidecar"))
-            mDf.select(col("sidecar.path")).na.drop()
-              .collect().map(_.getString(0)).toSeq
-          else Nil
-        val sideActs =
-          if (sidecars.isEmpty) Nil
-          else acts(spark.read.parquet(sidecars.map(p =>
-            logDir.resolve("_sidecars").resolve(p).toString): _*), lit(v))
-        acts(mDf, lit(v)) ++ sideActs
-      }
-    }
-    val jsonActs: Seq[Act] =
-      if (replay.isEmpty) Nil
-      else acts(
-        spark.read.json(replay.map(_._2.toString): _*),
-        regexp_extract(col("_metadata.file_path"), """(\d{20})\.json""", 1).cast("long"))
-    val all = cpActs ++ jsonActs
-
-    val meta = all.filter(_.kind == "meta").maxByOption(_.v).getOrElse(
+    val meta = actions.collect { case (_, m: Meta) => m }.lastOption.getOrElse(
       throw new IllegalStateException(s"no metaData action in _delta_log at $path"))
     val schema = DataType.fromJson(meta.schemaString).asInstanceOf[StructType]
-    val mappingMode = meta.configuration.getOrElse("delta.columnMapping.mode", "none")
-
     // the protocol in force at this version is the LATEST protocol
     // action replayed — not the max across history, which would let a
     // later downgrade (full Overwrite by a v1 writer) poison time travel
-    val proto = all.filter(_.kind == "protocol").maxByOption(_.v)
-    val minReader = proto.map(_.minReader).getOrElse(1L)
-    minReader match {
-      case 1L | 2L => () // v2 = column mapping, validated via mode below
-      case 3L =>
-        val features = proto.flatMap(_.readerFeatures)
-        require(features.isDefined,
+    val protocol = actions.collect { case (_, p: Protocol) => p }.lastOption
+      .getOrElse(Protocol(1, 2))
+    protocol.minReader match {
+      case 1 | 2 => () // v2 = column mapping, validated via mode below
+      case 3 =>
+        require(protocol.readerFeatures.isDefined,
           s"malformed protocol: minReaderVersion 3 requires readerFeatures")
-        val supported = Set("columnMapping", "deletionVectors", "timestampNtz",
-          "v2Checkpoint")
-        val unsupported = features.get.toSet -- supported
+        val unsupported = protocol.readerFeatures.get.toSet -- SupportedReaderFeatures
         require(unsupported.isEmpty,
           s"Delta reader protocol features ${unsupported.mkString(", ")} " +
-            "unsupported (supported: " + supported.mkString(", ") + ")")
+            "unsupported (supported: " + SupportedReaderFeatures.mkString(", ") + ")")
       case v =>
         throw new IllegalArgumentException(s"Delta reader protocol $v unsupported")
     }
@@ -361,43 +323,88 @@ object DeltaInterop {
     // physical name — so physical-name resolution reads id-mode tables;
     // the field ids additionally ride the staged parquet footers on the
     // write side for readers that match by id.
-    require(mappingMode == "none" || mappingMode == "name" ||
-        mappingMode == "id",
+    val mappingMode = meta.configuration.getOrElse("delta.columnMapping.mode", "none")
+    require(Set("none", "name", "id").contains(mappingMode),
       s"column mapping mode '$mappingMode' unsupported (none/name/id)")
 
     // live = (path, dvId) whose newest action is an add (same-version
-    // tie → add wins). The protocol reconciles file actions by
-    // (path, dvId) — a remove carrying a DV descriptor tombstones ONLY
-    // the matching add, so remove(path, dvOld) + add(path, dvNew) in
-    // one commit resolves without relying on the tie-break. A remove
-    // WITHOUT a descriptor tombstones every dv-variant of its path
-    // (writers that emit bare-path removes over DV-bearing adds exist;
-    // the conservative match keeps their tables readable). Keys are the
-    // RAW percent-encoded path strings, matching how writers emit
-    // removes.
-    def dvId(d: Option[DvDescriptor]): Option[(String, String, Option[Long])] =
-      d.map(x => (x.storageType, x.pathOrInlineDv, x.offset))
-    val lastAdd = all.filter(_.kind == "add")
-      .groupBy(a => (a.filePath, dvId(a.dv)))
-      .view.mapValues(as => as.maxBy(_.v)).toMap
-    val removes = all.filter(_.kind == "remove")
-    val dvRemove = removes.filter(_.dv.nonEmpty)
-      .groupBy(a => (a.filePath, dvId(a.dv)))
-      .view.mapValues(_.map(_.v).max).toMap
-    val bareRemove = removes.filter(_.dv.isEmpty).groupBy(_.filePath)
-      .view.mapValues(_.map(_.v).max).toMap
-    val live = lastAdd.values.toSeq
-      .filter(a => dvRemove.get((a.filePath, dvId(a.dv))).forall(_ <= a.v) &&
-        bareRemove.get(a.filePath).forall(_ <= a.v))
-      .sortBy(a => (a.filePath, dvId(a.dv).map(_.toString).getOrElse("")))
-      .map(a => DeltaFile(a.filePath, a.pv, a.dv, a.stats))
+    // tie → add wins, hence removes sort ahead of adds within a
+    // version). The protocol reconciles file actions by (path, dvId) —
+    // a remove carrying a DV descriptor tombstones ONLY the matching
+    // add, so remove(path, dvOld) + add(path, dvNew) in one commit
+    // resolves without relying on the tie-break. A remove WITHOUT a
+    // descriptor tombstones every dv-variant of its path (writers that
+    // emit bare-path removes over DV-bearing adds exist; the
+    // conservative match keeps their tables readable). Keys are the RAW
+    // percent-encoded path strings, matching how writers emit removes.
+    def dvId(d: Option[DvDescriptor]) = d.map(x => (x.storageType, x.pathOrInlineDv, x.offset))
+    val live = actions.sortBy { case (v, a) => (v, a.isInstanceOf[Add]) }
+      .foldLeft(Map.empty[String, Map[Option[(String, String, Option[Long])], DeltaFile]]) {
+        case (m, (_, Add(f, _, _, _))) =>
+          m.updated(f.path, m.getOrElse(f.path, Map.empty).updated(dvId(f.dv), f))
+        case (m, (_, Remove(p, None, _))) => m - p
+        case (m, (_, Remove(p, d, _))) =>
+          m.updatedWith(p)(_.map(_ - dvId(d)).filter(_.nonEmpty))
+        case (m, _) => m
+      }
+    val files = live.values.flatMap(_.values).toSeq
+      .sortBy(f => (f.path, dvId(f.dv).map(_.toString).getOrElse("")))
     // latest SetTransaction per appId: highest commit version wins (the
     // protocol's idempotent-writer rule); checkpoint entries carry the
     // checkpoint's version and lose to any later JSON commit
-    val txns = all.filter(_.kind == "txn").groupBy(_.txnApp)
-      .view.mapValues(as => as.maxBy(a => (a.v, a.txnVer)).txnVer).toMap
-    DeltaSnapshot(upTo, schema, meta.partitionColumns, meta.configuration,
-      live, txns)
+    val txns = actions.collect { case (v, t: Txn) => (t.appId, (v, t.version)) }
+      .groupMapReduce(_._1)(_._2)(Ordering[(Long, Long)].max)
+      .map { case (app, (_, ver)) => app -> ver }
+    Replayed(DeltaSnapshot(upTo, schema, meta.partitionColumns, meta.configuration,
+      files, txns), meta, protocol)
+  }
+
+  /** The actions of the checkpoint `_last_checkpoint` (`lastCp`) names:
+    * classic single-file, multi-part, or v2 (UUID manifest + sidecars).
+    */
+  private def readCheckpoint(spark: SparkSession, logDir: Path, names: Seq[String],
+      lastCp: JsonNode): Seq[Action] = {
+    val v = lastCp.get("version").asLong
+    val source = s"checkpoint $v at $logDir"
+    def parquet(files: Seq[String]) =
+      readParquetActions(spark, files.map(f => logDir.resolve(f)), source)
+    // multi-part classic checkpoint (the protocol's
+    // <version>.checkpoint.<part>.<total>.parquet layout, emitted by
+    // production writers when one part would be too large)
+    val MultiPart = (f"$v%020d" + """\.checkpoint\.(\d{10})\.(\d{10})\.parquet""").r
+    val parts = names.collect { case n @ MultiPart(i, t) => (i.toInt, t.toInt, n) }
+      .sortBy(_._1)
+    if (names.contains(f"$v%020d.checkpoint.parquet"))
+      parquet(Seq(f"$v%020d.checkpoint.parquet"))
+    else if (parts.nonEmpty) {
+      // every declared part must be present — a partial set is a torn
+      // checkpoint, not a smaller one
+      val total = parts.head._2
+      require(parts.forall(_._2 == total) && parts.map(_._1) == (1 to total),
+        s"torn multi-part checkpoint at version $v: found parts " +
+          s"${parts.map(t => s"${t._1}/${t._2}").mkString(",")}")
+      // _last_checkpoint's parts field, when present, must agree
+      val declared = Option(lastCp.get("parts")).map(_.asInt)
+      require(declared.forall(_ == total),
+        s"_last_checkpoint declares parts=${declared.get}, found $total")
+      parquet(parts.map(_._3))
+    } else {
+      // v2 checkpoint (the `v2Checkpoint` table feature): a UUID-named
+      // manifest — json or parquet — holding protocol/metaData plus
+      // `sidecar` actions that point at add/remove shards under
+      // _delta_log/_sidecars/. Several manifests may coexist (any is
+      // complete by construction); take the lexically first for
+      // determinism.
+      val V2Name = (f"$v%020d" + """\.checkpoint\.[0-9a-fA-F-]{36}\.(?:json|parquet)""").r
+      val manifest = names.filter(V2Name.matches).sorted.headOption.getOrElse(
+        throw new IllegalArgumentException(s"_last_checkpoint points at version $v " +
+          "but no classic, multi-part, or v2 checkpoint file exists"))
+      val acts =
+        if (manifest.endsWith(".json")) readActions(logDir.resolve(manifest), source)
+        else parquet(Seq(manifest))
+      val sidecars = acts.collect { case Sidecar(p, _) => s"_sidecars/$p" }
+      acts ++ (if (sidecars.isEmpty) Nil else parquet(sidecars))
+    }
   }
 
   /** add.path is a percent-encoded relative URI per the protocol —
@@ -417,6 +424,17 @@ object DeltaInterop {
     */
   private def encodePath(p: String): String =
     new java.net.URI(null, null, p, null).toASCIIString
+
+  /** Where a raw add path (or a remove's) lives under the table root. */
+  private def resolve(root: Path, raw: String): Path = root.resolve(decodePath(raw))
+
+  /** The value [[readFiles]]' `__dv_file` column takes for a file: the
+    * URI-encoded absolute path Spark reports as `_metadata.file_path`
+    * (Hadoop's encoding — a space or a literal `%` in a partition
+    * directory is percent-encoded there, so a plain path would miss).
+    */
+  private def scanKey(root: Path, raw: String): String =
+    new org.apache.hadoop.fs.Path(resolve(root, raw).toAbsolutePath.toString).toUri.getRawPath
 
   /** Physical column name under name-mode column mapping (falls back to
     * the logical name when the field carries no mapping metadata).
@@ -526,33 +544,29 @@ object DeltaInterop {
     buf.array()
   }
 
+  /** The file a DV lives in: "p" is an absolute path; "u" is
+    * `<optional random prefix><20-char Z85 uuid>`, stored at
+    * `<root>/<prefix>/deletion_vector_<uuid>.bin`. Inline ("i") DVs have
+    * no file.
+    */
+  private def dvFile(root: Path, dv: DvDescriptor): Option[Path] = dv.storageType match {
+    case "p" => Some(Paths.get(dv.pathOrInlineDv))
+    case "u" =>
+      val enc = dv.pathOrInlineDv
+      require(enc.length >= 20, s"malformed DV path spec '$enc'")
+      val (prefix, uuidPart) = enc.splitAt(enc.length - 20)
+      val bb = java.nio.ByteBuffer.wrap(z85Decode(uuidPart))
+      Some(root.resolve(prefix).resolve(s"deletion_vector_${new UUID(bb.getLong, bb.getLong)}.bin"))
+    case _ => None
+  }
+
   /** Resolve a DV descriptor to the deleted row indexes of its file.
     * Driver-side and bounded by the DV's serialized size — the same
     * bytes any Delta reader materializes to apply the mask.
     */
-  private def dvRowIndexes(tableRoot: Path, dv: DvDescriptor): Seq[Long] = {
-    val rows = dv.storageType match {
-      case "i" =>
-        // inline payloads are zero-padded to the Z85 block size;
-        // sizeInBytes is the true serialized length
-        decodeBitmapArray(
-          z85Decode(dv.pathOrInlineDv).take(dv.sizeInBytes.toInt))
-      case "u" | "p" =>
-        val dvPath = dv.storageType match {
-          case "p" => Paths.get(dv.pathOrInlineDv)
-          case _ =>
-            // pathOrInlineDv = <optional random prefix><20-char Z85 uuid>;
-            // the file lives at <root>/<prefix>/deletion_vector_<uuid>.bin
-            val enc = dv.pathOrInlineDv
-            require(enc.length >= 20, s"malformed DV path spec '$enc'")
-            val (prefix, uuidPart) = enc.splitAt(enc.length - 20)
-            val bytes = z85Decode(uuidPart)
-            val bb = java.nio.ByteBuffer.wrap(bytes)
-            val uuid = new java.util.UUID(bb.getLong, bb.getLong)
-            val name = s"deletion_vector_$uuid.bin"
-            if (prefix.isEmpty) tableRoot.resolve(name)
-            else tableRoot.resolve(prefix).resolve(name)
-        }
+  private def dvRowIndexes(root: Path, dv: DvDescriptor): Seq[Long] = {
+    val rows = dvFile(root, dv) match {
+      case Some(dvPath) =>
         val bytes = Files.readAllBytes(dvPath)
         require(bytes.nonEmpty && bytes(0) == 1,
           s"unsupported deletion-vector file format version at $dvPath")
@@ -567,352 +581,16 @@ object DeltaInterop {
         val expected = be.getInt(off + 4 + dataSize) & 0xFFFFFFFFL
         require(crc.getValue == expected, s"DV checksum mismatch at $dvPath")
         decodeBitmapArray(data)
-      case other =>
-        throw new IllegalArgumentException(s"DV storage type '$other' unsupported")
+      case None if dv.storageType == "i" =>
+        // inline payloads are zero-padded to the Z85 block size;
+        // sizeInBytes is the true serialized length
+        decodeBitmapArray(z85Decode(dv.pathOrInlineDv).take(dv.sizeInBytes.toInt))
+      case None =>
+        throw new IllegalArgumentException(s"DV storage type '${dv.storageType}' unsupported")
     }
     require(rows.length.toLong == dv.cardinality,
       s"DV cardinality mismatch: ${rows.length} decoded vs ${dv.cardinality} declared")
     rows
-  }
-
-  // ------------------------------------------------------------- write
-
-  /** Minimal JSON string escape for action fields (schemaString is
-    * itself JSON and needs its quotes escaped when embedded).
-    */
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  private def dvJson(dv: DvDescriptor): String =
-    s""","deletionVector":{"storageType":${jstr(dv.storageType)},"pathOrInlineDv":${jstr(dv.pathOrInlineDv)}${dv.offset.map(o => s""","offset":$o""").getOrElse("")},"sizeInBytes":${dv.sizeInBytes},"cardinality":${dv.cardinality}}"""
-
-  /** Write `df` as a Delta commit (protocol 1) that any Delta reader
-    * consumes — the outbound half of the interop. Overwrite creates or
-    * replaces the table (metaData + protocol + adds + removes of the
-    * previous live set); Append adds files, emitting an updated
-    * metaData action when the schema widened (mergeSchema semantics —
-    * new columns appended to the declared schema). Data files are
-    * staged with Spark's own parquet writer (hive-style partition dirs,
-    * which Delta also uses) and registered with their partition values
-    * in the add actions, per the protocol. Commits are put-if-absent on
-    * the 20-digit version file — the protocol's optimistic-concurrency
-    * rule — and on collision the loop re-derives EVERYTHING from a
-    * fresh log listing, including whether the table exists at all (a
-    * concurrent writer may have created version 0 after this call's
-    * entry probe; a stale `exists` would re-derive version 0 forever).
-    * An Append to an existing partitioned table inherits and re-emits
-    * the table's declared partition columns — passing a different
-    * `partitionBy` is an error, not a silent metadata rewrite. Returns
-    * the committed version.
-    *
-    * `txn = Some((appId, version))` makes the write IDEMPOTENT per the
-    * protocol's SetTransaction rule: the commit carries a `txn` action,
-    * and a write whose (appId, version) is already at or below the
-    * table's recorded high-water mark returns without committing — the
-    * contract streaming sinks need to turn at-least-once foreachBatch
-    * delivery into exactly-once table commits.
-    *
-    * Scale: driver traffic is file-count bounded (staged-file listing +
-    * log replay); the data itself moves file-by-file with no re-read.
-    */
-  /** Data types whose per-file min/max are serialized into add.stats:
-    * numerics render as bare JSON numbers; strings and dates as JSON
-    * strings (ISO dates compare correctly as strings, the same
-    * convention Delta uses); booleans as true/false. Timestamps,
-    * binary, and nested types are skipped — they still get numRecords
-    * and nullCount coverage via the columns that ARE tracked.
-    */
-  private def statsTrackable(dt: DataType): Boolean = dt match {
-    case _: org.apache.spark.sql.types.NumericType => true
-    case org.apache.spark.sql.types.StringType => true
-    case org.apache.spark.sql.types.DateType => true
-    case org.apache.spark.sql.types.BooleanType => true
-    case _ => false
-  }
-
-  /** One aggregation over the freshly-staged files, grouped by
-    * `input_file_name`, producing each file's protocol-shaped stats
-    * JSON: `{"numRecords":N,"minValues":{..},"maxValues":{..},
-    * "nullCount":{..}}` keyed by staged-relative path. Driver traffic is
-    * one row per staged FILE (never per data row); all-null columns are
-    * omitted from minValues/maxValues, matching the protocol's "may
-    * omit" rule.
-    */
-  private def collectStagedStats(spark: SparkSession, dir: Path,
-      schema: StructType, partCols: Seq[String]): Map[String, String] = {
-    val tracked = schema.fields.toSeq
-      .filterNot(f => partCols.contains(f.name))
-      .filter(f => statsTrackable(f.dataType))
-    val isNum = tracked.map(f => f.name -> (f.dataType match {
-      case _: org.apache.spark.sql.types.NumericType => true
-      case org.apache.spark.sql.types.BooleanType => true
-      case _ => false
-    })).toMap
-    val aggs = count(lit(1)).as("__n") +: tracked.flatMap(f => Seq(
-      min(col(s"`${f.name}`")).cast("string").as(s"mn_${f.name}"),
-      max(col(s"`${f.name}`")).cast("string").as(s"mx_${f.name}"),
-      sum(when(col(s"`${f.name}`").isNull, 1L).otherwise(0L))
-        .as(s"nc_${f.name}")))
-    spark.read.parquet(dir.toString)
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().map { r =>
-        val rel = dir.relativize(
-          Paths.get(new java.net.URI(r.getString(0)))).toString
-        def j(name: String, v: String): String =
-          if (isNum(name)) v else jstr(v)
-        def at(prefix: String, f: StructField): Int =
-          r.fieldIndex(s"$prefix${f.name}")
-        // NaN/Infinity are not legal bare JSON tokens: a double column
-        // containing NaN makes min/max stringify to "NaN", and emitting
-        // it unquoted would corrupt add.stats for every later reader
-        // (om.readTree throws). Delta stats are per-column OPTIONAL —
-        // omit the non-finite entry instead.
-        def finite(name: String, v: String): Boolean =
-          !isNum(name) ||
-            !(v == "NaN" || v == "Infinity" || v == "-Infinity")
-        val mins = tracked.collect {
-          case f if !r.isNullAt(at("mn_", f)) &&
-              finite(f.name, r.getString(at("mn_", f))) =>
-            s"${jstr(f.name)}:${j(f.name, r.getString(at("mn_", f)))}" }
-        val maxs = tracked.collect {
-          case f if !r.isNullAt(at("mx_", f)) &&
-              finite(f.name, r.getString(at("mx_", f))) =>
-            s"${jstr(f.name)}:${j(f.name, r.getString(at("mx_", f)))}" }
-        val ncs = tracked.map(f =>
-          s"${jstr(f.name)}:${r.getLong(at("nc_", f))}")
-        rel -> (s"""{"numRecords":${r.getLong(r.fieldIndex("__n"))},""" +
-          s""""minValues":${mins.mkString("{", ",", "}")},""" +
-          s""""maxValues":${maxs.mkString("{", ",", "}")},""" +
-          s""""nullCount":${ncs.mkString("{", ",", "}")}}""")
-      }.toMap
-  }
-
-  /** Deterministic physical name for name-mode column mapping: real
-    * writers draw random UUIDs; keying the UUID on (table, logical
-    * name) keeps re-creates byte-reproducible without violating the
-    * protocol (any unique string is a valid physical name).
-    */
-  private def mappedPhysicalName(path: String, logical: String): String =
-    "col-" + java.util.UUID.nameUUIDFromBytes(
-      s"cmap|$path|$logical".getBytes("UTF-8")).toString
-
-  /** The logical schema annotated with the field metadata name-mode
-    * column mapping requires (`delta.columnMapping.id` +
-    * `delta.columnMapping.physicalName`), per the public protocol.
-    */
-  private def mappedSchema(path: String, schema: StructType): StructType =
-    StructType(schema.fields.zipWithIndex.map { case (f, i) =>
-      f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata)
-        .putLong("delta.columnMapping.id", i + 1L)
-        .putString(PhysicalNameKey, mappedPhysicalName(path, f.name))
-        .build())
-    })
-
-  def write(df: DataFrame, path: String,
-      mode: org.apache.spark.sql.SaveMode = org.apache.spark.sql.SaveMode.ErrorIfExists,
-      partitionBy: Seq[String] = Nil,
-      txn: Option[(String, Long)] = None,
-      columnMapping: Boolean = false,
-      mappingMode: String = "name"): Long = {
-    require(mappingMode == "name" || mappingMode == "id",
-      s"columnMapping mode '$mappingMode' unsupported (name/id)")
-    import org.apache.spark.sql.SaveMode
-    val spark = df.sparkSession
-    val root = Paths.get(path)
-    val logDir = root.resolve("_delta_log")
-    Files.createDirectories(logDir)
-    // a table exists if the log holds any commit OR a checkpoint pointer
-    // (cleanup can leave a checkpoint with zero json commits)
-    def tableExists(): Boolean = withList(logDir)(
-      _.exists(p => CommitName.findFirstIn(p.getFileName.toString).isDefined ||
-        p.getFileName.toString == "_last_checkpoint"))
-    val exists0 = tableExists()
-    require(mode != SaveMode.ErrorIfExists || !exists0,
-      s"delta table already exists at $path")
-    if (mode == SaveMode.Ignore && exists0) return snapshot(spark, path).version
-    // idempotent-writer pre-check: a (appId, version) already recorded by
-    // a SetTransaction means this batch committed before (streaming
-    // replay after restart) — skip before staging any data. The same
-    // check runs INSIDE the commit loop against a fresh snapshot, so a
-    // concurrent replay that wins the race is also caught (its staged
-    // files are left unreferenced — VACUUM's job, like any lost writer).
-    txn.foreach { case (app, ver) =>
-      if (exists0 && snapshot(spark, path).transactions.get(app).exists(_ >= ver))
-        return snapshot(spark, path).version
-    }
-
-    // an Append inherits the existing table's layout: its declared
-    // partition columns drive the staged directory structure, and a
-    // caller-passed partitionBy must agree (ADVICE r6: a widened append
-    // with default partitionBy silently rewrote the table metadata to
-    // unpartitioned). Column-mapped APPENDS stage under the table's
-    // existing physical names (no evolution); enabling mapping is only
-    // valid on a table-creating write.
-    val snap0 = if (exists0 && mode != SaveMode.Overwrite)
-      Some(snapshot(spark, path)) else None
-    val appendMapped =
-      snap0.exists(s => s.columnMappingMode == "name" ||
-        s.columnMappingMode == "id")
-    snap0.foreach { s =>
-      require(partitionBy.isEmpty || partitionBy == s.partitionColumns,
-        s"append partitionBy ${partitionBy.mkString(",")} does not match table " +
-          s"partition columns ${s.partitionColumns.mkString(",")}")
-      if (appendMapped) {
-        require(df.schema.fieldNames.sorted.sameElements(
-            s.schema.fieldNames.sorted),
-          "append to a column-mapped table must match its logical schema " +
-            s"exactly (table: ${s.schema.fieldNames.mkString(",")})")
-        require(s.partitionColumns.isEmpty,
-          "append to a PARTITIONED column-mapped table unsupported")
-      }
-    }
-    require(!columnMapping || (!exists0 || mode == SaveMode.Overwrite),
-      "columnMapping can only be enabled by a table-creating write")
-    require(!columnMapping || partitionBy.isEmpty,
-      "columnMapping with partitioned writes unsupported")
-    val createMapped = columnMapping && (!exists0 || mode == SaveMode.Overwrite)
-    val effPartitionBy = snap0.map(_.partitionColumns).getOrElse(partitionBy)
-
-    // under column mapping the parquet files carry PHYSICAL names: the
-    // staged frame is the logical frame renamed (deterministic names on
-    // create; the table's declared names on append)
-    // field ids ride the parquet footers (parquet.field.id metadata +
-    // Spark's field-id write path, on by default) so id-mode readers
-    // that match by id — not physical name — resolve our files too
-    def fidMeta(id: Long): org.apache.spark.sql.types.Metadata =
-      new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong("parquet.field.id", id).build()
-    val stageDf =
-      if (createMapped)
-        df.select(df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-          col(s"`${f.name}`").as(mappedPhysicalName(path, f.name),
-            fidMeta(i + 1L))
-        }: _*)
-      else if (appendMapped) {
-        val s = snap0.get
-        df.select(s.schema.fields.toSeq.map { f =>
-          val phys = col(s"`${f.name}`")
-          if (f.metadata.contains("delta.columnMapping.id"))
-            phys.as(physicalName(f, s.columnMappingMode),
-              fidMeta(f.metadata.getLong("delta.columnMapping.id")))
-          else phys.as(physicalName(f, s.columnMappingMode))
-        }: _*)
-      } else df
-
-    // stage data files with Spark's writer, then move under the root
-    val tmp = Files.createTempDirectory("delta_stage")
-    val w0 = stageDf.write.mode(SaveMode.Overwrite)
-    (if (effPartitionBy.nonEmpty) w0.partitionBy(effPartitionBy: _*) else w0)
-      .parquet(tmp.toString)
-    val staged = withWalk(tmp)(
-      _.filter(p => p.getFileName.toString.endsWith(".parquet")).toSeq)
-      .sortBy(_.toString)
-    // per-file stats BEFORE the move (one aggregation over the staged
-    // data, grouped by file — the write-amplification Delta writers pay
-    // for data skipping, here a re-read of just-written local files).
-    // Under mapping the staged schema IS the physical one, so stats are
-    // keyed by physical names — exactly what the reader resolves.
-    val statsByRel = collectStagedStats(spark, tmp, stageDf.schema, effPartitionBy)
-    val adds = staged.map { p =>
-      val rel = tmp.relativize(p)
-      val target = root.resolve(rel)
-      Files.createDirectories(target.getParent)
-      Files.move(p, target)
-      val pv = rel.iterator().asScala.toSeq.dropRight(1).map(_.toString)
-        .filter(_.contains("=")).map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          // directory segments are hive-ESCAPED by Spark's writer
-          // (":" → "%3A", "/" → "%2F", …); the protocol stores the REAL
-          // value in partitionValues — recording the escaped segment
-          // verbatim surfaced "a%3Ab" as column data on read and broke
-          // pruning against externally-written tables
-          k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
-            else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(v))
-        }
-      val pvJson = pv.map { case (k, v) =>
-        s"${jstr(k)}:${if (v == null) "null" else jstr(v)}" }
-        .mkString("{", ",", "}")
-      val size = Files.size(target)
-      val statsPart = statsByRel.get(rel.toString)
-        .map(sj => s""","stats":${jstr(sj)}""").getOrElse("")
-      s"""{"add":{"path":${jstr(encodePath(rel.toString))},"partitionValues":$pvJson,"size":$size,"modificationTime":${Files.getLastModifiedTime(target).toMillis},"dataChange":true$statsPart}}"""
-    }
-
-    val configJson =
-      if (createMapped)
-        s"""{"delta.columnMapping.mode":${jstr(mappingMode)},"delta.columnMapping.maxColumnId":${jstr(df.schema.length.toString)}}"""
-      else "{}"
-    val metaAction = (schema: StructType, pcols: Seq[String]) => {
-      val declared = if (createMapped) mappedSchema(path, schema) else schema
-      s"""{"metaData":{"id":${jstr(java.util.UUID.nameUUIDFromBytes(path.getBytes("UTF-8")).toString)},"format":{"provider":"parquet","options":{}},"schemaString":${jstr(declared.json)},"partitionColumns":${pcols.map(jstr).mkString("[", ",", "]")},"configuration":$configJson,"createdTime":${System.currentTimeMillis()}}}"""
-    }
-    val protocolAction =
-      if (createMapped)
-        // column mapping (either mode) is a reader-2/writer-5 feature in
-        // the pre-table-features protocol numbering (the public spec's
-        // compatibility table); our own reader accepts reader 2
-        """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}"""
-      else """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
-
-    val txnAction = txn.map { case (app, ver) =>
-      s"""{"txn":{"appId":${jstr(app)},"version":$ver,"lastUpdated":${System.currentTimeMillis()}}}"""
-    }.toSeq
-
-    // optimistic commit loop: derive the state FRESH each attempt, try
-    // CREATE_NEW, retry on a concurrent writer's collision
-    while (true) {
-      val existsNow = tableExists()
-      txn.foreach { case (app, ver) =>
-        if (existsNow &&
-            snapshot(spark, path).transactions.get(app).exists(_ >= ver))
-          return snapshot(spark, path).version
-      }
-      val (version, head) =
-        if (!existsNow || mode == SaveMode.Overwrite) {
-          val snapNow = if (existsNow) Some(snapshot(spark, path)) else None
-          val removes = snapNow.toSeq.flatMap(_.files.map { f =>
-            // raw path: an encoded add must be removed byte-for-byte —
-            // and with its DV descriptor: spec readers reconcile file
-            // actions by (path, dvId), so a bare-path remove would never
-            // tombstone a DV-bearing add
-            s"""{"remove":{"path":${jstr(f.path)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true${f.dv.map(dvJson).getOrElse("")}}}"""
-          })
-          val v = snapNow.map(_.version + 1).getOrElse(0L)
-          (v, Seq(protocolAction, metaAction(df.schema, partitionBy)) ++ removes)
-        } else {
-          val snapNow = snapshot(spark, path)
-          // the staged directory layout must match the table we are
-          // appending to — a concurrent creator with different
-          // partitioning makes this append unsound, so fail loudly
-          require(snapNow.partitionColumns == effPartitionBy,
-            s"table partitioning changed concurrently: staged ${effPartitionBy.mkString(",")} " +
-              s"vs table ${snapNow.partitionColumns.mkString(",")}")
-          val merged = StructType(snapNow.schema.fields ++
-            df.schema.fields.filterNot(f => snapNow.schema.fieldNames.contains(f.name)))
-          val meta =
-            if (merged.fieldNames.sameElements(snapNow.schema.fieldNames)) Nil
-            else Seq(metaAction(merged, snapNow.partitionColumns))
-          (snapNow.version + 1, meta)
-        }
-      try {
-        Files.write(logDir.resolve(f"$version%020d.json"),
-          (head ++ txnAction ++ adds).mkString("", "\n", "\n").getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        return version
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => () // lost the race: re-derive
-      }
-    }
-    -1L // unreachable
   }
 
   /** Write one commit's deletion vectors PACKED into a single
@@ -924,7 +602,7 @@ object DeltaInterop {
     * row-set, all sharing the file's UUID with distinct offsets.
     */
   private def writeDvFile(root: Path, rowSets: Seq[Seq[Long]]): Seq[DvDescriptor] = {
-    val uuid = java.util.UUID.randomUUID()
+    val uuid = UUID.randomUUID()
     val ub = java.nio.ByteBuffer.allocate(16)
     ub.putLong(uuid.getMostSignificantBits).putLong(uuid.getLeastSignificantBits)
     val pathSpec = z85Encode(ub.array())
@@ -945,6 +623,304 @@ object DeltaInterop {
     descriptors
   }
 
+  // ------------------------------------------------------------- commit
+
+  /** A table exists if the log holds any commit OR a checkpoint pointer
+    * (cleanup can leave a checkpoint with zero json commits).
+    */
+  private def tableExists(logDir: Path): Boolean =
+    Files.isDirectory(logDir) && VersionedTable.listDir(logDir)(_.map(_.getFileName.toString)
+      .exists(n => CommitName.matches(n) || n == "_last_checkpoint"))
+
+  /** The optimistic commit loop every log write goes through. Each
+    * attempt replays the log afresh (`None` when no table exists yet,
+    * allowed only with `mayCreate`), asks `plan` for the next version's
+    * actions and links them put-if-absent as `<version>.json`: the file
+    * appears whole or not at all, and losing the race re-plans against
+    * the new latest version, so no commit lands on a stale snapshot.
+    * `plan` returning None ends the loop without a commit.
+    */
+  @annotation.tailrec
+  private def commitLoop(spark: SparkSession, path: String, mayCreate: Boolean = false)(
+      plan: Option[Replayed] => Option[Seq[Action]]): Option[Long] = {
+    val logDir = Paths.get(path, "_delta_log")
+    val cur = if (mayCreate && !tableExists(logDir)) None else Some(replay(spark, path, None))
+    plan(cur) match {
+      case None => None
+      case Some(actions) =>
+        val v = cur.fold(0L)(_.snap.version + 1)
+        if (VersionedTable.putIfAbsent(logDir.resolve(f"$v%020d.json"),
+            actions.map(render).mkString("", "\n", "\n"))) Some(v)
+        else commitLoop(spark, path, mayCreate)(plan)
+    }
+  }
+
+  /** Run `f` over a fresh staging directory under `java.io.tmpdir` and
+    * delete it afterwards, whether `f` commits, loses or throws.
+    */
+  private def withStaging[A](prefix: String)(f: Path => A): A = {
+    val tmp = Files.createTempDirectory(prefix)
+    try f(tmp)
+    finally if (Files.exists(tmp)) withWalk(tmp)(_.toSeq).reverse.foreach(Files.deleteIfExists)
+  }
+
+  /** Replace `target` by a rename: readers see the old bytes or the new. */
+  private def replaceAtomically(target: Path, content: String): Unit = {
+    val tmp = target.resolveSibling(s".tmp-${UUID.randomUUID()}")
+    Files.writeString(tmp, content)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    ()
+  }
+
+  /** Data types whose per-file min/max are serialized into add.stats:
+    * numerics render as bare JSON numbers; strings and dates as JSON
+    * strings (ISO dates compare correctly as strings, the same
+    * convention Delta uses); booleans as true/false. Timestamps,
+    * binary, and nested types are skipped — they still get numRecords
+    * and nullCount coverage via the columns that ARE tracked.
+    */
+  private def statsTrackable(dt: DataType): Boolean = dt match {
+    case _: NumericType | StringType | DateType | BooleanType => true
+    case _ => false
+  }
+
+  /** One aggregation over the freshly-staged files, grouped by
+    * `input_file_name`, producing each file's protocol-shaped stats
+    * JSON: `{"numRecords":N,"minValues":{..},"maxValues":{..},
+    * "nullCount":{..}}` keyed by staged-relative path. Driver traffic is
+    * one row per staged FILE (never per data row); all-null columns are
+    * omitted from minValues/maxValues, matching the protocol's "may
+    * omit" rule.
+    */
+  private def collectStagedStats(spark: SparkSession, dir: Path,
+      schema: StructType, partCols: Seq[String]): Map[String, String] = {
+    val tracked = schema.fields.toSeq
+      .filterNot(f => partCols.contains(f.name))
+      .filter(f => statsTrackable(f.dataType))
+    def bare(f: StructField) = f.dataType.isInstanceOf[NumericType] || f.dataType == BooleanType
+    val aggs = count(lit(1)).as("__n") +: tracked.flatMap(f => Seq(
+      min(col(s"`${f.name}`")).cast("string").as(s"mn_${f.name}"),
+      max(col(s"`${f.name}`")).cast("string").as(s"mx_${f.name}"),
+      sum(when(col(s"`${f.name}`").isNull, 1L).otherwise(0L))
+        .as(s"nc_${f.name}")))
+    spark.read.schema(schema).parquet(dir.toString)
+      .groupBy(input_file_name().as("__f"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect().map { r =>
+        val rel = dir.relativize(Paths.get(new java.net.URI(r.getString(0)))).toString
+        val stats = mapper.createObjectNode().put("numRecords", r.getLong(r.fieldIndex("__n")))
+        Seq("minValues" -> "mn_", "maxValues" -> "mx_").foreach { case (field, prefix) =>
+          val o = stats.putObject(field)
+          tracked.foreach { f =>
+            val i = r.fieldIndex(prefix + f.name)
+            // NaN/Infinity are not legal bare JSON tokens: a double
+            // column containing NaN makes min/max stringify to "NaN", and
+            // emitting it unquoted would corrupt add.stats for every
+            // later reader. Delta stats are per-column OPTIONAL — omit
+            // the non-finite entry instead.
+            if (!r.isNullAt(i)) r.getString(i) match {
+              case v if !bare(f) => o.put(f.name, v)
+              case "NaN" | "Infinity" | "-Infinity" => ()
+              case v => o.putRawValue(f.name, new RawValue(v))
+            }
+          }
+        }
+        val nc = stats.putObject("nullCount")
+        tracked.foreach(f => nc.put(f.name, r.getLong(r.fieldIndex(s"nc_${f.name}"))))
+        rel -> mapper.writeValueAsString(stats)
+      }.toMap
+  }
+
+  /** Stage `df` with Spark's parquet writer under `tmp` (hive-style
+    * partition dirs, which Delta also uses), take per-file stats from
+    * one aggregation over the staged files (the write amplification
+    * Delta writers pay for data skipping), move the files under the
+    * table root, and return their add actions. Under column mapping the
+    * staged schema IS the physical one, so stats are keyed by physical
+    * names — exactly what the reader resolves.
+    */
+  private def stageAdds(df: DataFrame, root: Path, tmp: Path,
+      partitionBy: Seq[String], dataChange: Boolean = true): Seq[Add] = {
+    val w = df.write.mode(SaveMode.Overwrite)
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmp.toString)
+    val stats = collectStagedStats(df.sparkSession, tmp, df.schema, partitionBy)
+    withWalk(tmp)(_.filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
+      .sortBy(_.toString).map { p =>
+        val rel = tmp.relativize(p)
+        val target = root.resolve(rel)
+        Files.createDirectories(target.getParent)
+        Files.move(p, target)
+        val pv = rel.iterator().asScala.toSeq.dropRight(1).map(_.toString)
+          .filter(_.contains("=")).map { seg =>
+            val Array(k, v) = seg.split("=", 2)
+            // directory segments are hive-ESCAPED by Spark's writer
+            // (":" → "%3A", "/" → "%2F", …); the protocol stores the REAL
+            // value in partitionValues — recording the escaped segment
+            // verbatim surfaced "a%3Ab" as column data on read and broke
+            // pruning against externally-written tables
+            k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
+              else ExternalCatalogUtils.unescapePathName(v))
+          }.toMap
+        Add(DeltaFile(encodePath(rel.toString), pv, None, stats.get(rel.toString)),
+          Files.size(target), Files.getLastModifiedTime(target).toMillis, dataChange)
+      }
+  }
+
+  /** Deterministic physical name for name-mode column mapping: real
+    * writers draw random UUIDs; keying the UUID on (table, logical
+    * name) keeps re-creates byte-reproducible without violating the
+    * protocol (any unique string is a valid physical name).
+    */
+  private def mappedPhysicalName(path: String, logical: String): String =
+    "col-" + UUID.nameUUIDFromBytes(s"cmap|$path|$logical".getBytes(UTF_8)).toString
+
+  /** The logical schema annotated with the field metadata column
+    * mapping requires (`delta.columnMapping.id` +
+    * `delta.columnMapping.physicalName`), per the public protocol.
+    */
+  private def mappedSchema(path: String, schema: StructType): StructType =
+    StructType(schema.fields.zipWithIndex.map { case (f, i) =>
+      f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
+        .putLong(ColumnIdKey, i + 1L)
+        .putString(PhysicalNameKey, mappedPhysicalName(path, f.name))
+        .build())
+    })
+
+  /** Write `df` as a Delta commit (protocol 1) that any Delta reader
+    * consumes — the outbound half of the interop. Overwrite creates or
+    * replaces the table (metaData + protocol + adds + removes of the
+    * previous live set); Append adds files, emitting an updated
+    * metaData action when the schema widened (mergeSchema semantics —
+    * new columns appended to the declared schema). Data files are
+    * staged with Spark's own parquet writer (hive-style partition dirs,
+    * which Delta also uses) and registered with their partition values
+    * in the add actions, per the protocol. Commits are put-if-absent on
+    * the 20-digit version file — the protocol's optimistic-concurrency
+    * rule — and on collision the loop re-derives EVERYTHING from a
+    * fresh log replay, including whether the table exists at all (a
+    * concurrent writer may have created version 0 after this call's
+    * entry probe; a stale `exists` would re-derive version 0 forever).
+    * An Append to an existing partitioned table inherits and re-emits
+    * the table's declared partition columns — passing a different
+    * `partitionBy` is an error, not a silent metadata rewrite. Returns
+    * the committed version.
+    *
+    * `txn = Some((appId, version))` makes the write IDEMPOTENT per the
+    * protocol's SetTransaction rule: the commit carries a `txn` action,
+    * and a write whose (appId, version) is already at or below the
+    * table's recorded high-water mark returns without committing — the
+    * contract streaming sinks need to turn at-least-once foreachBatch
+    * delivery into exactly-once table commits.
+    *
+    * Scale: driver traffic is file-count bounded (staged-file listing +
+    * log replay); the data itself moves file-by-file with no re-read.
+    */
+  def write(df: DataFrame, path: String,
+      mode: SaveMode = SaveMode.ErrorIfExists,
+      partitionBy: Seq[String] = Nil,
+      txn: Option[(String, Long)] = None,
+      columnMapping: Boolean = false,
+      mappingMode: String = "name"): Long = {
+    require(mappingMode == "name" || mappingMode == "id",
+      s"columnMapping mode '$mappingMode' unsupported (name/id)")
+    val spark = df.sparkSession
+    val root = Paths.get(path)
+    val logDir = root.resolve("_delta_log")
+    Files.createDirectories(logDir)
+    val cur0 = if (tableExists(logDir)) Some(replay(spark, path, None)) else None
+    require(mode != SaveMode.ErrorIfExists || cur0.isEmpty,
+      s"delta table already exists at $path")
+    // idempotent-writer check: a (appId, version) already recorded by a
+    // SetTransaction means this batch committed before (streaming replay
+    // after restart) — skip before staging any data. The commit loop
+    // re-checks against every fresh snapshot, so a concurrent replay that
+    // wins the race is also caught (its staged files are left
+    // unreferenced — VACUUM's job, like any lost writer).
+    def committed(r: Replayed): Boolean = txn.exists { case (app, ver) =>
+      r.snap.transactions.get(app).exists(_ >= ver)
+    }
+    if (cur0.exists(r => mode == SaveMode.Ignore || committed(r)))
+      return cur0.get.snap.version
+
+    // an Append inherits the existing table's layout: its declared
+    // partition columns drive the staged directory structure, and a
+    // caller-passed partitionBy must agree (a widened append with
+    // default partitionBy once silently rewrote the table metadata to
+    // unpartitioned). Column-mapped APPENDS stage under the table's
+    // existing physical names (no evolution); enabling mapping is only
+    // valid on a table-creating write.
+    val table = cur0.filter(_ => mode != SaveMode.Overwrite).map(_.snap)
+    val appendMapped = table.filter(_.columnMappingMode != "none")
+    table.foreach { s =>
+      require(partitionBy.isEmpty || partitionBy == s.partitionColumns,
+        s"append partitionBy ${partitionBy.mkString(",")} does not match table " +
+          s"partition columns ${s.partitionColumns.mkString(",")}")
+      if (appendMapped.nonEmpty) {
+        require(df.schema.fieldNames.sorted.sameElements(s.schema.fieldNames.sorted),
+          "append to a column-mapped table must match its logical schema " +
+            s"exactly (table: ${s.schema.fieldNames.mkString(",")})")
+        require(s.partitionColumns.isEmpty,
+          "append to a PARTITIONED column-mapped table unsupported")
+      }
+    }
+    require(!columnMapping || table.isEmpty,
+      "columnMapping can only be enabled by a table-creating write")
+    require(!columnMapping || partitionBy.isEmpty,
+      "columnMapping with partitioned writes unsupported")
+    val effPartitionBy = table.map(_.partitionColumns).getOrElse(partitionBy)
+
+    // under column mapping the parquet files carry PHYSICAL names: the
+    // staged frame is the logical frame renamed (deterministic names on
+    // create; the table's declared names on append). Field ids ride the
+    // parquet footers (parquet.field.id metadata + Spark's field-id
+    // write path, on by default) so id-mode readers that match by id —
+    // not physical name — resolve our files too
+    val declared =
+      if (columnMapping) Some(mappedSchema(path, df.schema)) else appendMapped.map(_.schema)
+    val stageDf = declared.fold(df)(s => df.select(s.fields.toSeq.map { f =>
+      val c = col(s"`${f.name}`")
+      val phys = physicalName(f, "name")
+      if (!f.metadata.contains(ColumnIdKey)) c.as(phys)
+      else c.as(phys, new MetadataBuilder()
+        .putLong("parquet.field.id", f.metadata.getLong(ColumnIdKey)).build())
+    }: _*))
+    // column mapping (either mode) is a reader-2/writer-5 feature in the
+    // pre-table-features protocol numbering (the public spec's
+    // compatibility table); our own reader accepts reader 2
+    val create: Seq[Action] = Seq(
+      if (columnMapping) Protocol(2, 5) else Protocol(1, 2),
+      Meta(UUID.nameUUIDFromBytes(path.getBytes(UTF_8)).toString,
+        declared.filter(_ => columnMapping).getOrElse(df.schema).json, partitionBy,
+        if (!columnMapping) Map.empty
+        else Map("delta.columnMapping.mode" -> mappingMode,
+          "delta.columnMapping.maxColumnId" -> df.schema.length.toString),
+        System.currentTimeMillis()))
+
+    withStaging("delta_stage") { tmp =>
+      val adds = stageAdds(stageDf, root, tmp, effPartitionBy)
+      commitLoop(spark, path, mayCreate = true) { cur =>
+        if (cur.exists(committed)) None
+        else Some(cur.filter(_ => mode != SaveMode.Overwrite).fold(
+          // create / overwrite: raw-path removes carrying their DV
+          // descriptors — spec readers reconcile by (path, dvId), so a
+          // bare-path remove would never tombstone a DV-bearing add
+          create ++ cur.toSeq.flatMap(_.snap.files.map(f => Remove(f.path, f.dv)))) { r =>
+          // the staged directory layout must match the table we are
+          // appending to — a concurrent creator with different
+          // partitioning makes this append unsound, so fail loudly
+          val s = r.snap
+          require(s.partitionColumns == effPartitionBy,
+            s"table partitioning changed concurrently: staged ${effPartitionBy.mkString(",")} " +
+              s"vs table ${s.partitionColumns.mkString(",")}")
+          val merged = StructType(s.schema.fields ++
+            df.schema.fields.filterNot(f => s.schema.fieldNames.contains(f.name)))
+          if (merged.length == s.schema.length) Nil
+          else Seq(r.meta.copy(schemaString = merged.json))
+        } ++ txn.map { case (app, ver) => Txn(app, ver, System.currentTimeMillis()) } ++ adds)
+      }.getOrElse(snapshot(spark, path).version)
+    }
+  }
+
   /** Row-level DELETE via deletion vectors — the write half of the DV
     * interop: rows matching `cond` are masked by a new DV per touched
     * file (merged with the file's existing DV), committed as the
@@ -962,72 +938,31 @@ object DeltaInterop {
   def deleteWhere(spark: SparkSession, path: String,
       cond: Column): Option[Long] = {
     val root = Paths.get(path)
-    val logDir = root.resolve("_delta_log")
-    while (true) {
-      val snap = snapshot(spark, path)
+    commitLoop(spark, path) { cur =>
+      val Replayed(snap, _, protocol) = cur.get
       require(snap.columnMappingMode == "none",
         "deleteWhere on a column-mapped table unsupported")
-      val partSet = snap.partitionColumns.toSet
-      val dataSchema = StructType(snap.schema.filterNot(f => partSet.contains(f.name)))
       // live rows only: a row already masked by an existing DV must not
-      // be re-deleted (and must not resurrect) — scan with positions and
-      // subtract current DVs before applying the predicate
-      val victims: Map[String, Seq[Long]] = snap.files
-        .groupBy(_.partitionValues).toSeq.flatMap { case (pv, fs) =>
-          val base = spark.read.schema(dataSchema)
-            .parquet(fs.map(f => s"$path/${decodePath(f.path)}"): _*)
-          val withPv = snap.partitionColumns.foldLeft(base) { (df, pc) =>
-            df.withColumn(pc, lit(pv.getOrElse(pc, null)).cast(snap.schema(pc).dataType))
-          }
-          val dead = fs.flatMap(f => f.dv.toSeq.flatMap(d =>
-            dvRowIndexes(root, d).map(
-              root.resolve(decodePath(f.path)).toAbsolutePath.toString -> _)))
-          import spark.implicits._
-          val scan = withPv
-            .withColumn("__dv_file",
-              regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
-            .withColumn("__dv_pos", col("_metadata.row_index"))
-          val live =
-            if (dead.isEmpty) scan
-            else scan.join(broadcast(dead.toDF("__dv_file", "__dv_pos")),
-              Seq("__dv_file", "__dv_pos"), "left_anti")
-          live.filter(cond)
-            .select(col("__dv_file"), col("__dv_pos"))
-            .as[(String, Long)].collect().toSeq
-        }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      if (victims.isEmpty) return None
-
-      val byAbs = snap.files.map(f =>
-        root.resolve(decodePath(f.path)).toAbsolutePath.toString -> f).toMap
-      val touched = victims.toSeq.sortBy(_._1).map { case (abs, rows) =>
-        val f = byAbs(abs)
-        val existing = f.dv.toSeq.flatMap(d => dvRowIndexes(root, d))
-        (f, (existing ++ rows).distinct.sorted)
-      }
-      // one packed DV file for the whole commit (the real-writer layout)
-      val dvs = writeDvFile(root, touched.map(_._2))
-      val actions = touched.zip(dvs).flatMap { case ((f, _), dv) =>
-        val pvJson = f.partitionValues.toSeq.sortBy(_._1).map { case (k, v) =>
-          s"${jstr(k)}:${if (v == null) "null" else jstr(v)}" }
-          .mkString("{", ",", "}")
-        Seq(
-          s"""{"remove":{"path":${jstr(f.path)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true${f.dv.map(dvJson).getOrElse("")}}}""",
-          // stats stay valid over the undeleted subset (a DV only
-          // removes rows), so carry them — skipping keeps working
-          s"""{"add":{"path":${jstr(f.path)},"partitionValues":$pvJson,"size":0,"modificationTime":0,"dataChange":true${f.stats.map(sj => s""","stats":${jstr(sj)}""").getOrElse("")}${dvJson(dv)}}}""")
-      }
-      val upgrade =
-        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}"""
-      try {
-        Files.write(logDir.resolve(f"${snap.version + 1}%020d.json"),
-          (upgrade +: actions).mkString("", "\n", "\n").getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        return Some(snap.version + 1)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => () // re-derive from the new snapshot
+      // be re-deleted (and must not resurrect)
+      val victims = readFiles(spark, path, snap, snap.files, positions = true)
+        .filter(cond).select("__dv_file", "__dv_pos")
+        .as[(String, Long)](Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+        .collect().toSeq.groupMap(_._1)(_._2)
+      val touched = snap.files.flatMap(f => victims.get(scanKey(root, f.path)).map(rows =>
+        f -> (f.dv.toSeq.flatMap(dvRowIndexes(root, _)) ++ rows).distinct.sorted))
+      if (touched.isEmpty) None
+      else {
+        // one packed DV file for the whole commit (the real-writer layout)
+        val dvs = writeDvFile(root, touched.map(_._2))
+        def withDv(fs: Option[Seq[String]]) = Some((fs.getOrElse(Nil) :+ "deletionVectors").distinct)
+        Some(Protocol(3, 7, withDv(protocol.readerFeatures), withDv(protocol.writerFeatures)) +:
+          touched.zip(dvs).flatMap { case ((f, _), dv) =>
+            // stats stay valid over the undeleted subset (a DV only
+            // removes rows), so carry them — skipping keeps working
+            Seq(Remove(f.path, f.dv), Add(f.copy(dv = Some(dv))))
+          })
       }
     }
-    None // unreachable
   }
 
   /** OPTIMIZE-style compaction: every partition group holding more than
@@ -1042,76 +977,30 @@ object DeltaInterop {
     * is nothing to compact.
     *
     * Concurrency: the optimistic loop re-derives the snapshot on a
-    * commit collision and re-checks its victims are still live; staged
-    * files from a lost race become unreferenced orphans (vacuum's job,
-    * like any lost writer).
+    * commit collision and re-plans its victims; staged files from a lost
+    * race become unreferenced orphans (vacuum's job, like any lost
+    * writer).
     */
   def compact(spark: SparkSession, path: String): Option[Long] = {
     val root = Paths.get(path)
-    val logDir = root.resolve("_delta_log")
-    while (true) {
-      val snap = snapshot(spark, path)
-      require(snap.columnMappingMode == "none",
-        "compact on a column-mapped table unsupported")
-      val partSet = snap.partitionColumns.toSet
-      val dataSchema = StructType(
-        snap.schema.filterNot(f => partSet.contains(f.name)))
-      val groups = snap.files.groupBy(_.partitionValues).toSeq
-        .filter { case (_, fs) => fs.size > 1 || fs.exists(_.dv.isDefined) }
-        .sortBy(_._1.toSeq.sortBy(_._1).mkString(","))
-      if (groups.isEmpty) return None
-
-      val tmp = Files.createTempDirectory("delta_opt")
-      val rewritten = groups.zipWithIndex.map { case ((pv, fs), gi) =>
-        val base = spark.read.schema(dataSchema)
-          .parquet(fs.map(f => s"$path/${decodePath(f.path)}"): _*)
-        val dead = fs.flatMap(f => f.dv.toSeq.flatMap(d =>
-          dvRowIndexes(root, d).map(
-            root.resolve(decodePath(f.path)).toAbsolutePath.toString -> _)))
-        import spark.implicits._
-        val live =
-          if (dead.isEmpty) base
-          else base
-            .withColumn("__dv_file",
-              regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
-            .withColumn("__dv_pos", col("_metadata.row_index"))
-            .join(broadcast(dead.toDF("__dv_file", "__dv_pos")),
-              Seq("__dv_file", "__dv_pos"), "left_anti")
-            .drop("__dv_file", "__dv_pos")
-        val groupDir = tmp.resolve(s"g$gi")
-        live.coalesce(1).write.parquet(groupDir.toString)
-        val staged = withWalk(groupDir)(
-          _.filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
-        require(staged.size == 1, s"coalesce(1) staged ${staged.size} files")
-        val stats = collectStagedStats(spark, groupDir, dataSchema, Nil)
-          .values.headOption
-        (pv, fs, staged.head, stats)
-      }
-      val actions = rewritten.flatMap { case (pv, fs, staged, stats) =>
-        val pvDirs = snap.partitionColumns.flatMap(pc => pv.get(pc).map(v =>
-          s"$pc=${if (v == null) "__HIVE_DEFAULT_PARTITION__" else v}"))
-        val rel = (pvDirs :+
-          s"part-opt-${java.util.UUID.randomUUID()}.parquet").mkString("/")
-        val target = root.resolve(rel)
-        Files.createDirectories(target.getParent)
-        Files.move(staged, target)
-        val pvJson = pv.toSeq.sortBy(_._1).map { case (k, v) =>
-          s"${jstr(k)}:${if (v == null) "null" else jstr(v)}" }
-          .mkString("{", ",", "}")
-        fs.map(f =>
-          s"""{"remove":{"path":${jstr(f.path)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":false${f.dv.map(dvJson).getOrElse("")}}}""") :+
-          s"""{"add":{"path":${jstr(rel)},"partitionValues":$pvJson,"size":${Files.size(target)},"modificationTime":${Files.getLastModifiedTime(target).toMillis},"dataChange":false${stats.map(sj => s""","stats":${jstr(sj)}""").getOrElse("")}}}"""
-      }
-      try {
-        Files.write(logDir.resolve(f"${snap.version + 1}%020d.json"),
-          actions.mkString("", "\n", "\n").getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        return Some(snap.version + 1)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => () // lost the race: re-derive
+    withStaging("delta_opt") { tmp =>
+      commitLoop(spark, path) { cur =>
+        val snap = cur.get.snap
+        require(snap.columnMappingMode == "none",
+          "compact on a column-mapped table unsupported")
+        val victims = snap.files.groupBy(_.partitionValues).values
+          .filter(fs => fs.size > 1 || fs.exists(_.dv.isDefined)).flatten.toSeq
+        if (victims.isEmpty) None
+        else {
+          // one scan of every victim, one file per partition group
+          val pcs = snap.partitionColumns
+          val live = readFiles(spark, path, snap, victims)
+          val grouped = if (pcs.isEmpty) live.coalesce(1) else live.repartition(pcs.map(col): _*)
+          Some(victims.map(f => Remove(f.path, f.dv, dataChange = false)) ++
+            stageAdds(grouped, root, tmp, pcs, dataChange = false))
+        }
       }
     }
-    None // unreachable
   }
 
   /** `RESTORE TABLE … TO VERSION AS OF` over the Delta wire format: one
@@ -1127,41 +1016,24 @@ object DeltaInterop {
     */
   def restore(spark: SparkSession, path: String, toVersion: Long): Long = {
     val root = Paths.get(path)
-    val logDir = root.resolve("_delta_log")
     val tgt = snapshot(spark, path, Some(toVersion))
-    while (true) {
-      val cur = snapshot(spark, path)
-      if (cur.version == toVersion) return cur.version
-      require(cur.schema == tgt.schema,
-        s"restore across a schema change unsupported: v${cur.version} vs v$toVersion")
-      def key(f: DeltaFile) = (f.path, f.dv)
-      val curKeys = cur.files.map(key).toSet
-      val tgtKeys = tgt.files.map(key).toSet
-      val removes = cur.files.filterNot(f => tgtKeys.contains(key(f)))
-      val adds = tgt.files.filterNot(f => curKeys.contains(key(f)))
-      val now = System.currentTimeMillis()
-      val actions =
-        removes.map(f =>
-          s"""{"remove":{"path":${jstr(f.path)},"deletionTimestamp":$now,"dataChange":true${f.dv.map(dvJson).getOrElse("")}}}""") ++
-        adds.map { f =>
-          val target = root.resolve(decodePath(f.path))
-          require(Files.exists(target),
-            s"restore target file vacuumed: ${f.path}")
-          val pvJson = f.partitionValues.toSeq.sortBy(_._1).map { case (k, v) =>
-            s"${jstr(k)}:${if (v == null) "null" else jstr(v)}" }
-            .mkString("{", ",", "}")
-          s"""{"add":{"path":${jstr(f.path)},"partitionValues":$pvJson,"size":${Files.size(target)},"modificationTime":${Files.getLastModifiedTime(target).toMillis},"dataChange":true${f.dv.map(dvJson).getOrElse("")}${f.stats.map(sj => s""","stats":${jstr(sj)}""").getOrElse("")}}}"""
-        }
-      try {
-        Files.write(logDir.resolve(f"${cur.version + 1}%020d.json"),
-          actions.mkString("", "\n", "\n").getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        return cur.version + 1
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => () // race: re-derive
+    commitLoop(spark, path) { cur =>
+      val now = cur.get.snap
+      if (now.version == toVersion) None
+      else {
+        require(now.schema == tgt.schema,
+          s"restore across a schema change unsupported: v${now.version} vs v$toVersion")
+        def key(f: DeltaFile) = (f.path, f.dv)
+        val nowKeys = now.files.map(key).toSet
+        val tgtKeys = tgt.files.map(key).toSet
+        Some(now.files.filterNot(f => tgtKeys.contains(key(f))).map(f => Remove(f.path, f.dv)) ++
+          tgt.files.filterNot(f => nowKeys.contains(key(f))).map { f =>
+            val target = resolve(root, f.path)
+            require(Files.exists(target), s"restore target file vacuumed: ${f.path}")
+            Add(f, Files.size(target), Files.getLastModifiedTime(target).toMillis)
+          })
       }
-    }
-    -1L // unreachable
+    }.getOrElse(toVersion)
   }
 
   /** Migrate a [[VersionedTable]]'s CURRENT contents (deletion vectors
@@ -1172,7 +1044,7 @@ object DeltaInterop {
   def fromVersioned(spark: SparkSession, versionedPath: String,
       deltaPath: String, partitionBy: Seq[String] = Nil): Long =
     write(VersionedTable.read(spark, versionedPath), deltaPath,
-      org.apache.spark.sql.SaveMode.Overwrite, partitionBy)
+      SaveMode.Overwrite, partitionBy)
 
   /** Migrate a Delta table's latest snapshot (DVs applied, column
     * mapping resolved) into a [[VersionedTable]] — the import half.
@@ -1180,8 +1052,7 @@ object DeltaInterop {
     */
   def toVersioned(spark: SparkSession, deltaPath: String,
       versionedPath: String): Long =
-    VersionedTable.write(read(spark, deltaPath), versionedPath,
-      org.apache.spark.sql.SaveMode.Overwrite)
+    VersionedTable.write(read(spark, deltaPath), versionedPath, SaveMode.Overwrite)
 
   /** VACUUM: delete data and deletion-vector files under the table root
     * that the CURRENT snapshot does not reference and whose modification
@@ -1207,23 +1078,11 @@ object DeltaInterop {
       retainMs: Long = 24L * 60 * 60 * 1000): Long = {
     val root = Paths.get(path)
     val snap = snapshot(spark, path)
-    val liveData = snap.files.map(f =>
-      root.resolve(decodePath(f.path)).toAbsolutePath.normalize.toString).toSet
-    // DV files referenced by the live snapshot ("u" storage only — the
-    // others have no table-root file)
-    val liveDv = snap.files.flatMap(_.dv).filter(_.storageType == "u").map { d =>
-      val enc = d.pathOrInlineDv
-      val (prefix, uuidPart) = enc.splitAt(enc.length - 20)
-      val bytes = z85Decode(uuidPart)
-      val bb = java.nio.ByteBuffer.wrap(bytes)
-      val uuid = new java.util.UUID(bb.getLong, bb.getLong)
-      val name = s"deletion_vector_$uuid.bin"
-      (if (prefix.isEmpty) root.resolve(name) else root.resolve(prefix).resolve(name))
-        .toAbsolutePath.normalize.toString
-    }.toSet
+    val live = (snap.files.map(f => resolve(root, f.path)) ++
+      snap.files.flatMap(_.dv).flatMap(dvFile(root, _)))
+      .map(_.toAbsolutePath.normalize).toSet
     val cutoff = System.currentTimeMillis() - retainMs
-    var deleted = 0L
-    withWalk(root) { it =>
+    val doomed = withWalk(root) { it =>
       it.filter(Files.isRegularFile(_))
         .filter(p => !p.startsWith(root.resolve("_delta_log")))
         .filter { p =>
@@ -1231,14 +1090,56 @@ object DeltaInterop {
           n.endsWith(".parquet") || n.startsWith("deletion_vector_")
         }
         .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
-        .filter { p =>
-          val abs = p.toAbsolutePath.normalize.toString
-          !liveData.contains(abs) && !liveDv.contains(abs)
-        }
+        .filterNot(p => live.contains(p.toAbsolutePath.normalize))
         .toSeq // materialize before deleting (the walk holds the dir handle)
-    }.foreach { p => Files.delete(p); deleted += 1 }
-    deleted
+    }
+    doomed.foreach(Files.delete)
+    doomed.size.toLong
   }
+
+  // -------------------------------------------------------- checkpoints
+
+  /** The protocol's checkpoint schema for the actions written here:
+    * string maps as MAP<STRING,STRING>, the shape external readers
+    * bootstrapping from `_last_checkpoint` expect.
+    */
+  private lazy val CheckpointSchema = StructType.fromDDL(
+    "txn STRUCT<appId: STRING, version: BIGINT, lastUpdated: BIGINT>, " +
+      "add STRUCT<path: STRING, partitionValues: MAP<STRING, STRING>, size: BIGINT, " +
+      "modificationTime: BIGINT, dataChange: BOOLEAN, stats: STRING, " +
+      "deletionVector: STRUCT<storageType: STRING, pathOrInlineDv: STRING, " +
+      "offset: BIGINT, sizeInBytes: BIGINT, cardinality: BIGINT>>, " +
+      "metaData STRUCT<id: STRING, format: STRUCT<provider: STRING, " +
+      "options: MAP<STRING, STRING>>, schemaString: STRING, " +
+      "partitionColumns: ARRAY<STRING>, configuration: MAP<STRING, STRING>, " +
+      "createdTime: BIGINT>, " +
+      "protocol STRUCT<minReaderVersion: INT, minWriterVersion: INT, " +
+      "readerFeatures: ARRAY<STRING>, writerFeatures: ARRAY<STRING>>")
+
+  /** Write `actions` as ONE checkpoint parquet file at `target`. */
+  private def writeCheckpointParquet(spark: SparkSession, actions: Seq[Action],
+      tmp: Path, target: Path): Unit = {
+    val dir = tmp.resolve(UUID.randomUUID().toString)
+    spark.read.schema(CheckpointSchema)
+      .json(spark.createDataset(actions.map(render))(Encoders.STRING))
+      .coalesce(1).write.parquet(dir.toString)
+    val part = VersionedTable.listDir(dir)(_.find(_.getFileName.toString.endsWith(".parquet"))).get
+    Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+    ()
+  }
+
+  private def writeLastCheckpoint(logDir: Path, version: Long, size: Int,
+      parts: Option[Int]): Unit = {
+    val o = mapper.createObjectNode().put("version", version).put("size", size)
+    parts.foreach(o.put("parts", _))
+    replaceAtomically(logDir.resolve("_last_checkpoint"), mapper.writeValueAsString(o))
+  }
+
+  /** The latest SetTransaction per appId — carried into checkpoints, or
+    * log cleanup would reset every idempotent writer's high-water mark.
+    */
+  private def txnActions(snap: DeltaSnapshot): Seq[Txn] =
+    snap.transactions.toSeq.sorted.map { case (app, v) => Txn(app, v) }
 
   /** Write a parquet checkpoint of the current snapshot plus the
     * `_last_checkpoint` pointer, allowing pre-checkpoint JSON commits to
@@ -1255,128 +1156,32 @@ object DeltaInterop {
     * (`<version>.checkpoint.<part>.<total>.parquet`, 10-digit fields,
     * `"parts"` declared in `_last_checkpoint`) — what production
     * writers emit when one part would be too large. Every part is
-    * written with ONE schema inferred over the whole action set, so a
-    * reader unioning the parts sees every column in every file; the
-    * actual part count is capped at the action count (no empty parts).
+    * written with the ONE protocol checkpoint schema, so a reader
+    * unioning the parts sees every column in every file; the actual
+    * part count is capped at the action count (no empty parts). The
+    * protocol and metaData actions are those of the replayed snapshot,
+    * so a log whose early commits were already cleaned up checkpoints
+    * again from its previous checkpoint.
     */
-  /** Shared checkpoint action assembly: (protocol+metaData+txn lines,
-    * add lines) for `snap` — the latest metaData/protocol carried
-    * forward from the commit files (replayed in version order), the
-    * latest SetTransaction per appId (or log cleanup would reset every
-    * idempotent writer's high-water mark), and every live add with its
-    * raw path, stats, and deletion vector.
-    */
-  private def checkpointActions(spark: SparkSession, path: String,
-      snap: DeltaSnapshot): (Seq[String], Seq[String]) = {
-    val logDir = Paths.get(path, "_delta_log")
-    val commitLines = withList(logDir)(_.flatMap { p =>
-        p.getFileName.toString match {
-          case CommitName(v) => Some(v.toLong -> p)
-          case _ => None
-        }
-      }.toSeq).sortBy(_._1)
-      .flatMap { case (_, p) => Files.readAllLines(p).asScala }
-    val lastMeta = commitLines.filter(_.contains("\"metaData\""))
-      .lastOption.getOrElse(
-        throw new IllegalStateException("no metaData action to checkpoint"))
-    val lastProtocol = commitLines.filter(_.contains("\"protocol\""))
-      .lastOption.getOrElse("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
-    val txnJson = snap.transactions.toSeq.sortBy(_._1).map { case (app, ver) =>
-      s"""{"txn":{"appId":${jstr(app)},"version":$ver,"lastUpdated":0}}"""
-    }
-    val addJson = snap.files.map { f =>
-      val pvJson = f.partitionValues.toSeq.sortBy(_._1).map { case (k, v) =>
-        s"${jstr(k)}:${if (v == null) "null" else jstr(v)}" }
-        .mkString("{", ",", "}")
-      val statsPart = f.stats.map(sj => s""","stats":${jstr(sj)}""").getOrElse("")
-      s"""{"add":{"path":${jstr(f.path)},"partitionValues":$pvJson,"size":0,"modificationTime":0,"dataChange":false$statsPart${f.dv.map(dvJson).getOrElse("")}}}"""
-    }
-    (Seq(lastProtocol, lastMeta) ++ txnJson, addJson)
-  }
-
-  /** Re-type the JSON-inferred STRUCT forms of the protocol's
-    * string-map fields (`add.partitionValues`, `metaData.configuration`)
-    * into real MAP<STRING,STRING> columns before checkpoint parquet is
-    * written. `spark.read.json` infers string-keyed maps as structs
-    * (keys become fields), but the checkpoint protocol stores MAPs — an
-    * external reader bootstrapping from `_last_checkpoint` reads the
-    * parquet with the protocol schema and fails on the struct/map
-    * physical mismatch (our own reader folds both shapes, which is why
-    * the round-trip specs never caught it). A missing field (every row
-    * had `{}`) is added back as an EMPTY map: the protocol requires
-    * `partitionValues` to be present.
-    */
-  private def protocolMaps(df: DataFrame): DataFrame = {
-    def emptyMap: Column = map_from_arrays(
-      lit(Array.empty[String]), lit(Array.empty[String]))
-    def retyped(struct: String, field: String): Option[Column] =
-      if (!df.columns.contains(struct)) None
-      else df.schema(struct).dataType match {
-        case s: StructType if s.fieldNames.contains(field) =>
-          s(field).dataType match {
-            case inner: StructType =>
-              val keys = inner.fieldNames.toSeq
-              val m =
-                if (keys.isEmpty) emptyMap
-                else map_from_arrays(
-                  array(keys.map(lit(_)): _*),
-                  array(keys.map(k =>
-                    col(s"$struct.$field.`$k`").cast("string")): _*))
-              Some(when(col(struct).isNotNull,
-                col(struct).withField(field, m)))
-            case _ => None // already a map — leave it
-          }
-        case _: StructType =>
-          Some(when(col(struct).isNotNull,
-            col(struct).withField(field, emptyMap)))
-        case _ => None
-      }
-    // a null struct row stays null: `when` without `otherwise` yields
-    // NULL for the non-matching rows, which is the shape we want
-    val a = retyped("add", "partitionValues")
-      .map(c => df.withColumn("add", c)).getOrElse(df)
-    retyped("metaData", "configuration")
-      .map(c => a.withColumn("metaData", c)).getOrElse(a)
-  }
-
   def checkpoint(spark: SparkSession, path: String, parts: Int): Long = {
-    import spark.implicits._
+    val r = replay(spark, path, None)
+    val v = r.snap.version
     val logDir = Paths.get(path, "_delta_log")
-    val snap = snapshot(spark, path)
-    val (metaSrc, addJson) = checkpointActions(spark, path, snap)
-    val actions = metaSrc ++ addJson
-    def writeParquet(lines: Seq[String],
-        schema: Option[StructType], target: Path): Unit = {
-      val tmp = Files.createTempDirectory("delta_cp")
-      val r0 = spark.read
-      protocolMaps(
-        schema.fold(r0.json(lines.toDS))(sc => r0.schema(sc).json(lines.toDS)))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = withList(tmp)(
-        _.find(_.getFileName.toString.endsWith(".parquet"))).get
-      Files.move(part, target,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    if (parts <= 1) {
-      writeParquet(actions, None,
-        logDir.resolve(f"${snap.version}%020d.checkpoint.parquet"))
-      Files.writeString(logDir.resolve("_last_checkpoint"),
-        s"""{"version":${snap.version},"size":${actions.size}}""")
-    } else {
-      val total = math.min(parts, actions.size)
-      // ONE schema over the full set — parquet readers union the parts
-      // without mergeSchema, so every part must carry every column
-      val schema = spark.read.json(actions.toDS).schema
-      val chunks = actions.grouped(
-        math.ceil(actions.size.toDouble / total).toInt).toSeq
+    val actions = Seq(r.protocol, r.meta) ++ txnActions(r.snap) ++
+      r.snap.files.map(Add(_, dataChange = false))
+    val chunks =
+      if (parts <= 1) Seq(actions)
+      else actions.grouped(math.ceil(actions.size.toDouble /
+        math.min(parts, actions.size)).toInt).toSeq
+    withStaging("delta_cp") { tmp =>
       chunks.zipWithIndex.foreach { case (c, i) =>
-        writeParquet(c, Some(schema), logDir.resolve(
-          f"${snap.version}%020d.checkpoint.${i + 1}%010d.${chunks.size}%010d.parquet"))
+        writeCheckpointParquet(spark, c, tmp, logDir.resolve(
+          if (parts <= 1) f"$v%020d.checkpoint.parquet"
+          else f"$v%020d.checkpoint.${i + 1}%010d.${chunks.size}%010d.parquet"))
       }
-      Files.writeString(logDir.resolve("_last_checkpoint"),
-        s"""{"version":${snap.version},"size":${actions.size},"parts":${chunks.size}}""")
     }
-    snap.version
+    writeLastCheckpoint(logDir, v, actions.size, Some(chunks.size).filter(_ => parts > 1))
+    v
   }
 
   /** Write a V2 (UUID-named) checkpoint: a JSON manifest
@@ -1385,51 +1190,37 @@ object DeltaInterop {
     * sharded into `_delta_log/_sidecars/<uuid>.parquet` — the
     * `v2Checkpoint` table-feature layout the reader already bootstraps
     * from. The manifest's protocol action is upgraded to reader 3 /
-    * writer 7 declaring `v2Checkpoint` (plus `columnMapping` /
-    * `deletionVectors` when the table uses them), per the feature's
-    * protocol requirement. UUIDs derive deterministically from
-    * (path, version) so re-checkpoints are byte-reproducible.
+    * writer 7 declaring `v2Checkpoint` (plus the table's own features,
+    * `columnMapping` / `deletionVectors` when the table uses them), per
+    * the feature's protocol requirement. UUIDs derive deterministically
+    * from (path, version) so re-checkpoints are byte-reproducible.
     */
   def checkpointV2(spark: SparkSession, path: String): Long = {
-    import spark.implicits._
+    val r = replay(spark, path, None)
+    val snap = r.snap
     val logDir = Paths.get(path, "_delta_log")
-    val snap = snapshot(spark, path)
-    val (metaSrc0, addJson) = checkpointActions(spark, path, snap)
-    // metaSrc0 head is the carried-forward protocol; replace it with the
-    // v2Checkpoint feature protocol the layout requires
-    val features = (Seq("v2Checkpoint") ++
+    val features = (Seq("v2Checkpoint") ++ r.protocol.readerFeatures.getOrElse(Nil) ++
       (if (snap.columnMappingMode != "none") Seq("columnMapping") else Nil) ++
-      (if (snap.files.exists(_.dv.isDefined)) Seq("deletionVectors") else Nil))
-      .map(jstr).mkString("[", ",", "]")
-    val protocol =
-      s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":$features,"writerFeatures":$features}}"""
-    val uuid = java.util.UUID.nameUUIDFromBytes(
-      s"cpv2|$path|${snap.version}".getBytes("UTF-8")).toString
-    val sidecarAct =
-      if (addJson.isEmpty) Nil
-      else {
-        val sideDir = logDir.resolve("_sidecars")
-        Files.createDirectories(sideDir)
-        val tmp = Files.createTempDirectory("delta_cp_side")
-        protocolMaps(spark.read.json(addJson.toDS)).coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val part = withList(tmp)(
-          _.find(_.getFileName.toString.endsWith(".parquet"))).get
-        val target = sideDir.resolve(s"$uuid.parquet")
-        Files.move(part, target,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        Seq(s"""{"sidecar":{"path":${jstr(s"$uuid.parquet")},"sizeInBytes":${Files.size(target)},"modificationTime":0}}""")
+      (if (snap.files.exists(_.dv.isDefined)) Seq("deletionVectors") else Nil)).distinct
+    val uuid = UUID.nameUUIDFromBytes(s"cpv2|$path|${snap.version}".getBytes(UTF_8)).toString
+    val adds = snap.files.map(Add(_, dataChange = false))
+    val sidecar =
+      if (adds.isEmpty) Nil
+      else withStaging("delta_cp") { tmp =>
+        val target = logDir.resolve("_sidecars").resolve(s"$uuid.parquet")
+        Files.createDirectories(target.getParent)
+        writeCheckpointParquet(spark, adds, tmp, target)
+        Seq(Sidecar(s"$uuid.parquet", Files.size(target)))
       }
-    val manifest = (protocol +: metaSrc0.tail) ++
-      Seq(s"""{"checkpointMetadata":{"version":${snap.version}}}""") ++
-      sidecarAct
-    Files.write(
-      logDir.resolve(f"${snap.version}%020d.checkpoint.$uuid%s.json"),
-      manifest.mkString("", "\n", "\n").getBytes("UTF-8"))
-    Files.writeString(logDir.resolve("_last_checkpoint"),
-      s"""{"version":${snap.version},"size":${manifest.size + addJson.size}}""")
+    val manifest = Seq(Protocol(3, 7, Some(features), Some(features)), r.meta) ++
+      txnActions(snap) ++ Seq(CheckpointMetadata(snap.version)) ++ sidecar
+    replaceAtomically(logDir.resolve(f"${snap.version}%020d.checkpoint.$uuid%s.json"),
+      manifest.map(render).mkString("", "\n", "\n"))
+    writeLastCheckpoint(logDir, snap.version, manifest.size + adds.size, None)
     snap.version
   }
+
+  // -------------------------------------------------------------- reads
 
   /** Read a Delta table's latest (or `asOf`) version as a DataFrame with
     * the log-declared (logical) schema: partition values restored from
@@ -1442,62 +1233,57 @@ object DeltaInterop {
     readFiles(spark, path, snap, snap.files)
   }
 
-  /** The shared scan over an explicit live-file subset (full reads pass
-    * `snap.files`; stats-pruned reads pass the surviving files). DV
-    * masks are restricted to the files actually scanned.
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  /** The one scan under every read: `files` (a subset of the live set,
+    * or a change feed's added/removed/cdc files) read with `snap`'s
+    * declared schema, physical names renamed to logical, partition
+    * values restored as literals per partition tuple, and DV-masked rows
+    * dropped. DV masks are restricted to the files actually scanned.
+    * With `positions`, the output keeps each row's file (`__dv_file`,
+    * see [[scanKey]]) and row index (`__dv_pos`).
     */
-  private def readFiles(spark: SparkSession, path: String,
-      snap: DeltaSnapshot, files: Seq[DeltaFile]): DataFrame = {
+  private def readFiles(spark: SparkSession, path: String, snap: DeltaSnapshot,
+      files: Seq[DeltaFile], positions: Boolean = false): DataFrame = {
+    val root = Paths.get(path)
     val mapping = snap.columnMappingMode
     val partSet = snap.partitionColumns.toSet
     val dataFields = snap.schema.filterNot(f => partSet.contains(f.name))
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
+    val posFields = Seq(StructField("__dv_file", StringType), StructField("__dv_pos", LongType))
+    val out = StructType(snap.schema.fields ++ (if (positions) posFields else Nil))
+    if (files.isEmpty) return emptyFrame(spark, out)
     // the parquet files carry PHYSICAL names; read with those, rename to
     // logical on the way out
     val physDataSchema = StructType(dataFields.map(f =>
       StructField(physicalName(f, mapping), f.dataType, f.nullable)))
-    val hasDv = files.exists(_.dv.isDefined)
-    val root = Paths.get(path)
-
-    val byPv = files.groupBy(_.partitionValues)
-    val unioned = byPv.map { case (pv, fs) =>
-      val base0 = spark.read.schema(physDataSchema)
-        .parquet(fs.map(f => s"$path/${decodePath(f.path)}"): _*)
-      val dataCols = dataFields.map(f =>
-        col(s"`${physicalName(f, mapping)}`").as(f.name))
-      // partitionValues are keyed by PHYSICAL name under column mapping
+    val masked = files.exists(_.dv.isDefined)
+    val scanned = files.groupBy(_.partitionValues).map { case (pv, fs) =>
+      val dataCols = dataFields.map(f => col(s"`${physicalName(f, mapping)}`").as(f.name))
+      // partitionValues are keyed by PHYSICAL name under column mapping;
+      // a null partition value serializes as JSON null / absent
       val partCols = snap.partitionColumns.map { pc =>
         val f = snap.schema(pc)
-        // protocol: null partition value serializes as JSON null / absent
         lit(pv.getOrElse(physicalName(f, mapping), null)).cast(f.dataType).as(pc)
       }
       val posCols =
-        if (!hasDv) Nil
-        else Seq(
-          // normalize file:///x vs file:/x so the anti-join key is exact
-          regexp_replace(col("_metadata.file_path"), "^file:/+", "/").as("__dv_file"),
+        if (!positions && !masked) Nil
+        else Seq(regexp_replace(col("_metadata.file_path"), "^file:/+", "/").as("__dv_file"),
           col("_metadata.row_index").as("__dv_pos"))
-      base0.select(dataCols ++ partCols ++ posCols: _*)
+      spark.read.schema(physDataSchema).parquet(fs.map(f => resolve(root, f.path).toString): _*)
+        .select(dataCols ++ partCols ++ posCols: _*)
     }.reduce(_.unionByName(_))
-
-    if (!hasDv) unioned.select(snap.schema.fieldNames.map(col).toSeq: _*)
-    else {
-      // deleted (file, position) pairs: bounded by total DV cardinality,
-      // broadcast so the mask never shuffles the data side
-      val deleted = files.flatMap { f =>
-        f.dv.toSeq.flatMap { d =>
-          val abs = root.resolve(decodePath(f.path)).toAbsolutePath.toString
-          dvRowIndexes(root, d).map(abs -> _)
-        }
+    val live =
+      if (!masked) scanned
+      else {
+        // deleted (file, position) pairs: bounded by total DV cardinality,
+        // broadcast so the mask never shuffles the data side
+        val dead = files.flatMap(f => f.dv.toSeq.flatMap(d =>
+          dvRowIndexes(root, d).map(i => Row(scanKey(root, f.path), i))))
+        scanned.join(broadcast(spark.createDataFrame(dead.asJava, StructType(posFields))),
+          posFields.map(_.name), "left_anti")
       }
-      import spark.implicits._
-      val deletedDf = deleted.toDF("__dv_file", "__dv_pos")
-      unioned.join(broadcast(deletedDf), Seq("__dv_file", "__dv_pos"), "left_anti")
-        .drop("__dv_file", "__dv_pos")
-        .select(snap.schema.fieldNames.map(col).toSeq: _*)
-    }
+    live.select(out.fieldNames.toSeq.map(col): _*)
   }
 
   /** Files that can contain a row with `column` in [lo, hi], decided
@@ -1526,46 +1312,39 @@ object DeltaInterop {
     // numeric here: their stats serialize as bare true/false, which
     // BigDecimal rejects — and "false" < "true" lexically, matching
     // the boolean order, so the string branch is already correct
-    val numeric = field.dataType match {
-      case _: org.apache.spark.sql.types.NumericType => true
-      case _ => false
-    }
+    val numeric = field.dataType.isInstanceOf[NumericType]
     def cmp(a: String, b: String): Int =
       if (numeric) BigDecimal(a).compare(BigDecimal(b)) else a.compareTo(b)
     val (loS, hiS) = (String.valueOf(lo), String.valueOf(hi))
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val kept =
-      if (snap.partitionColumns.contains(column)) {
-        val phys = physicalName(field, snap.columnMappingMode)
-        snap.files.filter { f =>
-          f.partitionValues.get(phys) match {
-            case Some(v) if v != null => cmp(v, loS) >= 0 && cmp(v, hiS) <= 0
-            case _ => false // null partition value never matches a range
-          }
-        }
-      } else {
-        // stats are keyed by PHYSICAL names when column mapping is on
-        // (the protocol's rule — our writer and real writers agree)
-        val statKey = physicalName(field, snap.columnMappingMode)
-        snap.files.filter { f =>
-          f.stats match {
-            case None => true // no stats: cannot exclude
-            case Some(sj) =>
-              val node = om.readTree(sj)
-              val mn = node.path("minValues").path(statKey)
-              val mx = node.path("maxValues").path(statKey)
-              if (mn.isMissingNode || mx.isMissingNode) {
-                // column untracked or all-null; all-null is provable from
-                // nullCount == numRecords and excludes the file
-                val nc = node.path("nullCount").path(statKey)
-                val nr = node.path("numRecords")
-                !(nc.isNumber && nr.isNumber && nc.asLong == nr.asLong)
-              } else
-                cmp(mx.asText, loS) >= 0 && cmp(mn.asText, hiS) <= 0
-          }
+    // stats and partition values are keyed by PHYSICAL names when column
+    // mapping is on (the protocol's rule — our writer and real writers
+    // agree)
+    val key = physicalName(field, snap.columnMappingMode)
+    if (snap.partitionColumns.contains(column))
+      snap.files.filter { f =>
+        f.partitionValues.get(key) match {
+          case Some(v) if v != null => cmp(v, loS) >= 0 && cmp(v, hiS) <= 0
+          case _ => false // null partition value never matches a range
         }
       }
-    kept
+    else
+      snap.files.filter { f =>
+        f.stats match {
+          case None => true // no stats: cannot exclude
+          case Some(sj) =>
+            val node = mapper.readTree(sj)
+            val mn = node.path("minValues").path(key)
+            val mx = node.path("maxValues").path(key)
+            if (mn.isMissingNode || mx.isMissingNode) {
+              // column untracked or all-null; all-null is provable from
+              // nullCount == numRecords and excludes the file
+              val nc = node.path("nullCount").path(key)
+              val nr = node.path("numRecords")
+              !(nc.isNumber && nr.isNumber && nc.asLong == nr.asLong)
+            } else
+              cmp(mx.asText, loS) >= 0 && cmp(mn.asText, hiS) <= 0
+        }
+      }
   }
 
   /** Range read with Delta-native data skipping: prune live files via
@@ -1595,9 +1374,10 @@ object DeltaInterop {
     * not changes); a commit without cdc actions yields `insert` rows
     * from its dataChange adds and `delete` rows from its dataChange
     * removes (their content read from the still-present files, with
-    * partition values restored from the pre-state snapshot). A
-    * DV-carrying add without cdc actions is refused — its deleted-row
-    * delta is not representable from the log alone.
+    * partition values and deletion vectors restored from the pre-state
+    * snapshot, so rows an earlier DV already deleted are not deleted
+    * twice). A DV-carrying add without cdc actions is refused — its
+    * deleted-row delta is not representable from the log alone.
     *
     * Scale: driver traffic is action-count bounded; file contents move
     * through ordinary parquet scans unioned per partition-value group.
@@ -1606,108 +1386,37 @@ object DeltaInterop {
       fromVersion: Long, toVersion: Long): DataFrame = {
     require(0 <= fromVersion && fromVersion <= toVersion,
       s"bad CDF range [$fromVersion, $toVersion]")
-    val root = Paths.get(path)
-    val logDir = root.resolve("_delta_log")
+    val logDir = Paths.get(path, "_delta_log")
     val snap = snapshot(spark, path, Some(toVersion))
     require(snap.columnMappingMode == "none",
       "CDF read of a column-mapped table unsupported")
-    val partSet = snap.partitionColumns.toSet
-    val dataFields = snap.schema.filterNot(f => partSet.contains(f.name))
-    val outCols = snap.schema.fieldNames.toSeq ++
-      Seq("_change_type", "_commit_version")
-
-    // read a file group (shared pv) with partition columns restored and
-    // the change-type either literal or taken from the file itself
-    def readGroup(files: Seq[String], pv: Map[String, String],
-        withChangeCol: Boolean, changeType: String, v: Long,
-        extraField: Boolean): DataFrame = {
-      val base = StructType(dataFields)
-      val schema = if (extraField)
-        StructType(base.fields :+ StructField("_change_type", org.apache.spark.sql.types.StringType))
-      else base
-      val df0 = spark.read.schema(schema)
-        .parquet(files.map(f => s"$path/${decodePath(f)}"): _*)
-      val partCols = snap.partitionColumns.map { pc =>
-        lit(pv.getOrElse(pc, null)).cast(snap.schema(pc).dataType).as(pc)
-      }
-      val chg = if (withChangeCol) col("_change_type")
-        else lit(changeType).as("_change_type")
-      df0.select(dataFields.map(f => col(f.name)) ++ partCols ++
-        Seq(chg, lit(v).as("_commit_version")): _*)
-    }
-
+    val changeType = StructField("_change_type", StringType)
     val parts: Seq[DataFrame] = (fromVersion to toVersion).flatMap { v =>
       val p = logDir.resolve(f"$v%020d.json")
       require(Files.exists(p),
         s"commit $v missing from _delta_log — CDF needs every JSON commit in range")
-      val df = spark.read.json(p.toString)
-      val cols = df.columns.toSet
-      def structOf(name: String): Option[StructType] =
-        if (cols.contains(name)) df.schema(name).dataType match {
-          case s: StructType => Some(s)
-          case _ => None
-        } else None
-      def sub(name: String, field: String): Column =
-        structOf(name).filter(_.fieldNames.contains(field))
-          .map(_ => col(s"$name.$field")).getOrElse(lit(null))
-      def pvMap(name: String): Column =
-        structOf(name).filter(_.fieldNames.contains("partitionValues")).map { t =>
-          t("partitionValues").dataType match {
-            case s: StructType if s.nonEmpty =>
-              map(s.fields.flatMap(f => Seq(lit(f.name),
-                col(s"$name.partitionValues.`${f.name}`").cast("string"))).toSeq: _*)
-            case _ => lit(null)
+      val acts = readActions(p, s"commit $v of $path")
+      val cdcs = acts.collect { case Cdc(cp, pv) => DeltaFile(cp, pv, None) }
+      val frames =
+        if (cdcs.nonEmpty)
+          Seq(readFiles(spark, path, snap.copy(schema = StructType(snap.schema :+ changeType)), cdcs))
+        else {
+          val adds = acts.collect { case a: Add => a }
+          require(!adds.exists(_.file.dv.nonEmpty),
+            s"commit $v adds a deletion vector without cdc actions — " +
+              "its row delta is not representable from the log alone")
+          val inserts = adds.filter(_.dataChange).map(_.file)
+          val removes = acts.collect { case r: Remove if r.dataChange => r }
+          // removes carry no partition values — restore from the pre-state
+          lazy val pre = snapshot(spark, path, Some(v - 1)).files.map(f => f.path -> f).toMap
+          val deletes = removes.map(r => pre.getOrElse(r.path, DeltaFile(r.path, Map.empty, r.dv)))
+          Seq(inserts -> "insert", deletes -> "delete").collect { case (fs, t) if fs.nonEmpty =>
+            readFiles(spark, path, snap, fs).withColumn("_change_type", lit(t))
           }
-        }.getOrElse(lit(null))
-      val rows = df.select(
-          sub("add", "path").as("ap"), pvMap("add").as("apv"),
-          sub("add", "dataChange").cast("boolean").as("adc"),
-          sub("add", "deletionVector").isNotNull.as("adv"),
-          sub("remove", "path").as("rp"),
-          sub("remove", "dataChange").cast("boolean").as("rdc"),
-          sub("cdc", "path").as("cp"), pvMap("cdc").as("cpv"))
-        .collect()
-      def toPv(r: org.apache.spark.sql.Row, i: Int): Map[String, String] =
-        Option(r.getMap[String, String](i)).map(_.toMap).getOrElse(Map.empty)
-      val cdcs = rows.filter(!_.isNullAt(6))
-        .map(r => (r.getString(6), toPv(r, 7))).toSeq
-      if (cdcs.nonEmpty) {
-        cdcs.groupBy(_._2).map { case (pv, fs) =>
-          readGroup(fs.map(_._1), pv, withChangeCol = true, changeType = null,
-            v, extraField = true)
-        }.toSeq
-      } else {
-        val adds = rows.filter(!_.isNullAt(0))
-        require(!adds.exists(r => !r.isNullAt(3) && r.getBoolean(3)),
-          s"commit $v adds a deletion vector without cdc actions — " +
-            "its row delta is not representable from the log alone")
-        val inserts = adds.filter(r => r.isNullAt(2) || r.getBoolean(2))
-          .map(r => (r.getString(0), toPv(r, 1))).toSeq
-        val removes = rows
-          .filter(r => !r.isNullAt(4) && (r.isNullAt(5) || r.getBoolean(5)))
-          .map(_.getString(4)).toSeq
-        // removes carry no partition values — restore from the pre-state
-        lazy val prePv: Map[String, Map[String, String]] =
-          snapshot(spark, path, Some(v - 1)).files
-            .map(f => f.path -> f.partitionValues).toMap
-        val ins = inserts.groupBy(_._2).map { case (pv, fs) =>
-          readGroup(fs.map(_._1), pv, withChangeCol = false, "insert", v,
-            extraField = false)
-        }.toSeq
-        val del = removes.groupBy(p => prePv.getOrElse(p, Map.empty))
-          .map { case (pv, fs) =>
-            readGroup(fs, pv, withChangeCol = false, "delete", v,
-              extraField = false)
-          }.toSeq
-        ins ++ del
-      }
+        }
+      frames.map(_.withColumn("_commit_version", lit(v)))
     }
-    if (parts.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(snap.schema.fields ++ Seq(
-          StructField("_change_type", org.apache.spark.sql.types.StringType),
-          StructField("_commit_version", org.apache.spark.sql.types.LongType))))
-    else parts.reduce(_.unionByName(_)).select(outCols.map(col): _*)
+    parts.reduceOption(_.unionByName(_)).getOrElse(emptyFrame(spark,
+      StructType(snap.schema :+ changeType :+ StructField("_commit_version", LongType))))
   }
 }

@@ -49,9 +49,10 @@ object VersionedTable {
 
   /** Run `f` over a directory listing, closing the stream afterwards
     * (Files.list leaks an open fd until closed; versions() runs per
-    * commit retry and per micro-batch, so leaks accumulate fast).
+    * commit retry and per micro-batch, so leaks accumulate fast). Shared
+    * with [[DeltaInterop]].
     */
-  private def listDir[A](dir: Path)(f: Iterator[Path] => A): A = {
+  private[sources] def listDir[A](dir: Path)(f: Iterator[Path] => A): A = {
     val s = Files.list(dir)
     try f(s.iterator().asScala) finally s.close()
   }
@@ -127,9 +128,9 @@ object VersionedTable {
     * when the target exists. ATOMIC_MOVE is the wrong primitive (POSIX
     * rename silently replaces the target, letting a racing writer
     * overwrite a committed manifest); createLink is atomic AND errors on
-    * an existing target.
+    * an existing target. [[DeltaInterop]] commits through it too.
     */
-  private def putIfAbsent(target: Path, content: String): Boolean = {
+  private[sources] def putIfAbsent(target: Path, content: String): Boolean = {
     Files.createDirectories(target.getParent)
     val tmp = target.resolveSibling(s".tmp-${UUID.randomUUID()}")
     Files.writeString(tmp, content)

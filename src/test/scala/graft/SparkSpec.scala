@@ -7,6 +7,38 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs that `body` starts on the calling thread: jobs are tagged
+    * with a thread-local property, so other suites sharing the session
+    * are not counted.
+    */
+  def jobsStartedBy(body: => Unit): Int = {
+    val probe = s"job-probe-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.job.probe")) match {
+          case Some(`probe`) => jobs.incrementAndGet(); ()
+          case Some(p) if p == probe + "-end" => sentinel.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.job.probe", probe)
+      body
+      // the listener bus is ordered: once this job is seen, every earlier one was
+      sc.setLocalProperty("graft.job.probe", probe + "-end")
+      spark.range(1).count()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty("graft.job.probe", null)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
 }
 
 object SparkSpec {

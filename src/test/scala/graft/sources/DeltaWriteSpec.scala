@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SaveMode
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import graft.SparkSpec
 
 /** The write half of the Delta interop: commits emitted by
@@ -360,7 +360,7 @@ class DeltaWriteSpec extends SparkSpec {
   }
 
   test("deleteWhere writes protocol-3 deletion vectors; reads + time travel agree") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
     val path = tmpTable()
     DeltaInterop.write((1L to 10L).map(i => (i, s"r$i")).toDF("k", "v"),
       path, SaveMode.Overwrite)
@@ -389,7 +389,7 @@ class DeltaWriteSpec extends SparkSpec {
   }
 
   test("one delete across many files packs every DV into a single file at offsets") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
     val path = tmpTable()
     // partitioned table → several data files; one predicate touches all
     DeltaInterop.write(
@@ -408,7 +408,7 @@ class DeltaWriteSpec extends SparkSpec {
   }
 
   test("format bridge: VersionedTable -> Delta -> VersionedTable round trip, DVs applied") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
     val vt1 = tmpTable(); val dl = tmpTable(); val vt2 = tmpTable()
     VersionedTable.write((1L to 8L).map(i => (i, s"r$i")).toDF("k", "v"),
       vt1, SaveMode.Overwrite)
@@ -426,7 +426,7 @@ class DeltaWriteSpec extends SparkSpec {
   }
 
   test("vacuum reclaims unreferenced data and DV files; live reads intact") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
     val path = tmpTable()
     DeltaInterop.write((1L to 6L).map(i => (i, s"r$i")).toDF("k", "v"),
       path, SaveMode.Overwrite)
@@ -481,5 +481,207 @@ class DeltaWriteSpec extends SparkSpec {
       .select("k").as[Long].collect().toSeq == Seq(9L))
     // restoring to the current head is a no-op, not a new commit
     assert(DeltaInterop.restore(spark, path, 5L) == 5L)
+  }
+
+  // ------------------------------------------------ log-cleanup checkpoints
+
+  private def cleanLog(path: String, upTo: Long): Unit =
+    (0L to upTo).foreach(v =>
+      Files.deleteIfExists(Paths.get(path, "_delta_log", f"$v%020d.json")))
+
+  test("re-checkpoint after log cleanup takes metaData and protocol from the replay") {
+    // the JSON commits left after cleanup hold no metaData action
+    val plain = tmpTable()
+    DeltaInterop.write(Seq((1L, "a")).toDF("k", "v"), plain, SaveMode.Overwrite)
+    DeltaInterop.checkpoint(spark, plain)
+    cleanLog(plain, 0L)
+    DeltaInterop.write(Seq((2L, "b")).toDF("k", "v"), plain, SaveMode.Append)
+    assert(DeltaInterop.checkpoint(spark, plain) == 1L)
+    cleanLog(plain, 1L)
+    assert(DeltaInterop.read(spark, plain).as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "a"), (2L, "b")))
+    // ... nor the DV commit's protocol: the second checkpoint must still
+    // declare deletionVectors, or a reader bootstrapping from it skips the masks
+    val dv = tmpTable()
+    DeltaInterop.write((1L to 4L).map(i => (i, s"r$i")).toDF("k", "v"), dv, SaveMode.Overwrite)
+    DeltaInterop.deleteWhere(spark, dv, col("k") === 2L)                   // v1
+    DeltaInterop.checkpoint(spark, dv)
+    cleanLog(dv, 1L)
+    DeltaInterop.write(Seq((5L, "r5", 0.5)).toDF("k", "v", "s"), dv,
+      SaveMode.Append)                                                     // v2, widens
+    assert(DeltaInterop.checkpoint(spark, dv) == 2L)
+    val protocol = spark.read
+      .parquet(Paths.get(dv, "_delta_log", f"${2L}%020d.checkpoint.parquet").toString)
+      .filter(col("protocol").isNotNull)
+      .select(col("protocol.minReaderVersion").cast("int"), col("protocol.readerFeatures"))
+      .as[(Int, Seq[String])].collect().toSeq
+    assert(protocol == Seq((3, Seq("deletionVectors"))), s"checkpoint protocol: $protocol")
+    cleanLog(dv, 2L)
+    assert(DeltaInterop.read(spark, dv).select("k").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 3L, 4L, 5L))
+  }
+
+  // ------------------------------------------------------ commit integrity
+
+  test("a torn commit is refused with its version; blank lines are skipped") {
+    val path = tmpTable()
+    DeltaInterop.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v").repartition(2), path,
+      SaveMode.Overwrite)
+    DeltaInterop.write(Seq((9L, "z")).toDF("k", "v"), path, SaveMode.Overwrite)
+    val v1 = Paths.get(path, "_delta_log", f"${1L}%020d.json")
+    val text = Files.readString(v1)
+    Files.writeString(v1, text + "\n\n")
+    assert(DeltaInterop.read(spark, path).as[(Long, String)].collect().toSeq == Seq((9L, "z")))
+    // cut the overwrite off inside its first remove line: replaying the
+    // rest would silently serve version 0's rows as version 1
+    Files.writeString(v1, text.take(text.indexOf("\"remove\"") + 20))
+    val e = intercept[IllegalStateException](DeltaInterop.read(spark, path))
+    assert(e.getMessage.contains("commit 1"), e.getMessage)
+  }
+
+  test("write, compact and checkpoints leave no staging directory behind") {
+    val path = tmpTable()
+    val tmpDir = Paths.get(System.getProperty("java.io.tmpdir"))
+    def staging(): Set[String] = {
+      val s = Files.list(tmpDir)
+      try s.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("delta_")).toSet
+      finally s.close()
+    }
+    val before = staging()
+    DeltaInterop.write(Seq((1L, "a", "x")).toDF("k", "v", "ds"), path,
+      SaveMode.Overwrite, partitionBy = Seq("ds"))
+    DeltaInterop.write(Seq((2L, "b", "x")).toDF("k", "v", "ds"), path, SaveMode.Append)
+    // a write whose staging job fails
+    intercept[Exception] {
+      DeltaInterop.write(Seq((3L, "c", "x")).toDF("k", "v", "ds")
+        .withColumn("v", when(col("k") > 0, raise_error(lit("boom"))).otherwise(col("v"))),
+        path, SaveMode.Append)
+    }
+    assert(DeltaInterop.compact(spark, path).isDefined)
+    DeltaInterop.checkpoint(spark, path)
+    DeltaInterop.checkpoint(spark, path, parts = 2)
+    DeltaInterop.checkpointV2(spark, path)
+    assert(staging() -- before == Set.empty[String])
+    assert(DeltaInterop.read(spark, path).count() == 2)
+  }
+
+  test("deleteWhere masks rows in partition dirs whose names need URI encoding") {
+    val path = tmpTable()
+    DeltaInterop.write(Seq((1L, "a:b"), (2L, "x y"), (3L, "x y"), (4L, "p%q")).toDF("k", "ds"),
+      path, SaveMode.Overwrite, partitionBy = Seq("ds"))
+    assert(DeltaInterop.deleteWhere(spark, path, col("k") =!= 3L).isDefined)
+    assert(DeltaInterop.read(spark, path).as[(Long, String)].collect().toSeq == Seq((3L, "x y")))
+  }
+
+  test("CDF read: rows a DV already deleted are not deleted again by a later remove") {
+    val path = tmpTable()
+    DeltaInterop.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1),
+      path, SaveMode.Overwrite)
+    DeltaInterop.deleteWhere(spark, path, col("k") === 1L)
+    DeltaInterop.write(Seq((9L, "z")).toDF("k", "v"), path, SaveMode.Overwrite)
+    assert(DeltaInterop.readChanges(spark, path, 2L, 2L)
+      .as[(Long, String, String, Long)].collect().toSet ==
+      Set((2L, "b", "delete", 2L), (3L, "c", "delete", 2L), (9L, "z", "insert", 2L)))
+  }
+
+  test("metadata-only calls start no Spark job: JSON-log snapshot, restore, skipped replay") {
+    val path = tmpTable()
+    DeltaInterop.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, SaveMode.Overwrite)
+    val appendJobs = jobsStartedBy {
+      DeltaInterop.write(Seq((3L, "c")).toDF("k", "v"), path, SaveMode.Append,
+        txn = Some(("app", 1L)))
+      ()
+    }
+    info(s"Spark jobs per append: $appendJobs")
+    DeltaInterop.deleteWhere(spark, path, col("k") === 1L)
+    assert(jobsStartedBy { DeltaInterop.snapshot(spark, path); () } == 0)
+    assert(jobsStartedBy { DeltaInterop.restore(spark, path, 0L); () } == 0)
+    assert(jobsStartedBy {
+      DeltaInterop.write(Seq((3L, "c")).toDF("k", "v"), path, SaveMode.Append,
+        txn = Some(("app", 1L)))
+      ()
+    } == 0)
+    assert(DeltaInterop.read(spark, path).select("k").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+  }
+
+  // -------------------------------------------------------- lost updates
+  //
+  // Every read-modify-write path under 4 concurrent writers: a retry of a
+  // plan made on a stale snapshot would drop or duplicate a concurrent
+  // commit's rows, so each thread's effect must show in the result.
+
+  /** Run `body(k)` for k = 2..5 on four threads at once. */
+  private def race(body: Int => Unit): Unit = {
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (2 to 5).map(k => new Thread(() =>
+      try body(k) catch { case t: Throwable => errors.add(t); () }))
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errors.isEmpty, s"writer thread failed: ${Option(errors.peek())}")
+  }
+
+  /** Keys 1..6 in one file (v0) plus key 7 in a second (v1). */
+  private def raceTable(): String = {
+    val path = tmpTable()
+    DeltaInterop.write((1L to 6L).map(k => (k, "base")).toDF("k", "v").coalesce(1), path,
+      SaveMode.Overwrite)
+    DeltaInterop.write(Seq((7L, "base")).toDF("k", "v"), path, SaveMode.Append)
+    path
+  }
+
+  private def rowsOf(path: String, asOf: Option[Long] = None): Seq[(Long, String)] =
+    DeltaInterop.read(spark, path, asOf).as[(Long, String)].collect().toSeq.sorted
+
+  test("deleteWhere re-plans on conflict: 4 concurrent deletes of one file all land") {
+    val path = raceTable()
+    race(k => DeltaInterop.deleteWhere(spark, path, col("k") === k.toLong))
+    assert(rowsOf(path) == Seq(1L, 6L, 7L).map(_ -> "base"))
+  }
+
+  test("compact re-plans on conflict: concurrent appends and compactions lose no row") {
+    val path = raceTable()
+    race(k => (1 to 3).foreach { i =>
+      DeltaInterop.write(Seq((10L * i + k, s"i$k")).toDF("k", "v"), path, SaveMode.Append)
+      DeltaInterop.compact(spark, path)
+    })
+    assert(rowsOf(path) == ((1L to 7L).map(_ -> "base") ++
+      (for (i <- 1 to 3; k <- 2 to 5) yield (10L * i + k, s"i$k"))).sorted)
+  }
+
+  test("restore re-plans on conflict: every restore commit equals its target version") {
+    val path = raceTable()                                                 // v0, v1
+    DeltaInterop.write(Seq((9L, "z")).toDF("k", "v"), path, SaveMode.Overwrite)  // v2
+    DeltaInterop.write(Seq((10L, "y")).toDF("k", "v"), path, SaveMode.Append)    // v3
+    val landed = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    // thread k restores to version k - 2: four different targets at once
+    race(k => (1 to 3).foreach { _ =>
+      landed.add(DeltaInterop.restore(spark, path, k - 2L) -> (k - 2L))
+    })
+    landed.asScala.foreach { case (v, target) =>
+      assert(rowsOf(path, Some(v)) == rowsOf(path, Some(target)), s"restore commit $v")
+    }
+  }
+
+  test("write(txn) replays race: exactly one commit per transaction version") {
+    // on a JSON-only log, and on a checkpointed one: replaying a checkpoint
+    // is a Spark job, which keeps each commit attempt open long enough for
+    // the four replays to overlap
+    Seq(false, true).foreach { checkpointed =>
+      val path = raceTable()
+      if (checkpointed) DeltaInterop.checkpoint(spark, path)
+      val base = DeltaInterop.snapshot(spark, path).version
+      // all four replays of a batch start together, so they reach the commit together
+      val barrier = new java.util.concurrent.CyclicBarrier(4)
+      race(_ => (0L until 4L).foreach { b =>
+        barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        DeltaInterop.write(Seq((100L + b, s"b$b")).toDF("k", "v"), path, SaveMode.Append,
+          txn = Some(("replayed", b)))
+      })
+      val snap = DeltaInterop.snapshot(spark, path)
+      assert(snap.version == base + 4 && snap.transactions == Map("replayed" -> 3L),
+        s"checkpointed=$checkpointed: version ${snap.version}, base $base")
+      assert(rowsOf(path) == ((1L to 7L).map(_ -> "base") ++
+        (0L until 4L).map(b => (100L + b, s"b$b"))).sorted)
+    }
   }
 }

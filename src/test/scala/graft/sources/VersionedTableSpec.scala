@@ -490,22 +490,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, SaveMode.Overwrite)
     VersionedTable.write(Seq((3L, "c")).toDF("k", "v"), path, SaveMode.Append)
     VersionedTable.deleteWhere(spark, path, $"k" === 1L)
-    // count only the jobs this thread starts: other suites may share the session
-    val probe = s"vt-meta-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("vt.meta.probe")) match {
-          case Some(`probe`) => jobs.incrementAndGet(); ()
-          case Some(p) if p == probe + "-end" => sentinel.countDown()
-          case _ => ()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("vt.meta.probe", probe)
+    val jobs = jobsStartedBy {
       val latest = VersionedTable.latestVersion(path).get
       VersionedTable.files(path, latest)
       VersionedTable.dvFiles(path, latest)
@@ -513,14 +498,7 @@ class VersionedTableSpec extends SparkSpec {
       VersionedTable.committedOps(spark, path)
       val rv = VersionedTable.restore(path, 0L)
       assert(VersionedTable.files(path, rv) == VersionedTable.files(path, 0L))
-      // the listener bus is ordered: once this job is seen, every earlier one was
-      sc.setLocalProperty("vt.meta.probe", probe + "-end")
-      spark.range(1).count()
-      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.setLocalProperty("vt.meta.probe", null)
-      sc.removeSparkListener(listener)
     }
-    assert(jobs.get == 0, s"${jobs.get} Spark jobs from metadata-only calls")
+    assert(jobs == 0, s"$jobs Spark jobs from metadata-only calls")
   }
 }
