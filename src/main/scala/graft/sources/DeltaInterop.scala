@@ -81,10 +81,12 @@ object DeltaInterop {
     * optional deletion vector masking its dead rows, and the add
     * action's per-file statistics (`stats` — a JSON STRING per the
     * protocol, carrying numRecords/minValues/maxValues/nullCount) when
-    * the writer emitted them.
+    * the writer emitted them, and the add's byte `size` and
+    * `modificationTime`, which every re-emitted add carries.
     */
   final case class DeltaFile(path: String, partitionValues: Map[String, String],
-      dv: Option[DvDescriptor], stats: Option[String] = None)
+      dv: Option[DvDescriptor], stats: Option[String] = None,
+      size: Long = 0L, modificationTime: Long = 0L)
 
   /** A resolved table state: live files, declared (logical) schema,
     * partition columns, table configuration, and the latest
@@ -122,8 +124,7 @@ object DeltaInterop {
   // line that is not one JSON object is refused, naming its source.
 
   private sealed trait Action
-  private final case class Add(file: DeltaFile, size: Long = 0L,
-      modificationTime: Long = 0L, dataChange: Boolean = true) extends Action
+  private final case class Add(file: DeltaFile, dataChange: Boolean = true) extends Action
   private final case class Remove(path: String, dv: Option[DvDescriptor],
       dataChange: Boolean = true) extends Action
   private final case class Cdc(path: String,
@@ -166,8 +167,8 @@ object DeltaInterop {
       if (!a.isObject) None
       else e.getKey match {
         case "add" => Some(Add(DeltaFile(text(a, "path"),
-            strMap(a.path("partitionValues")), dv(a), Option(text(a, "stats"))),
-          a.path("size").asLong, a.path("modificationTime").asLong,
+            strMap(a.path("partitionValues")), dv(a), Option(text(a, "stats")),
+            a.path("size").asLong, a.path("modificationTime").asLong),
           a.path("dataChange").asBoolean(true)))
         case "remove" =>
           Some(Remove(text(a, "path"), dv(a), a.path("dataChange").asBoolean(true)))
@@ -203,10 +204,11 @@ object DeltaInterop {
       n.put("sizeInBytes", d.sizeInBytes).put("cardinality", d.cardinality)
     }
     a match {
-      case Add(f, size, mtime, dataChange) =>
+      case Add(f, dataChange) =>
         val o = root.putObject("add").put("path", f.path)
         strMap(o, "partitionValues", f.partitionValues)
-        o.put("size", size).put("modificationTime", mtime).put("dataChange", dataChange)
+        o.put("size", f.size).put("modificationTime", f.modificationTime)
+          .put("dataChange", dataChange)
         f.stats.foreach(o.put("stats", _))
         dv(o, f.dv)
       case Remove(path, d, dataChange) =>
@@ -340,7 +342,7 @@ object DeltaInterop {
     def dvId(d: Option[DvDescriptor]) = d.map(x => (x.storageType, x.pathOrInlineDv, x.offset))
     val live = actions.sortBy { case (v, a) => (v, a.isInstanceOf[Add]) }
       .foldLeft(Map.empty[String, Map[Option[(String, String, Option[Long])], DeltaFile]]) {
-        case (m, (_, Add(f, _, _, _))) =>
+        case (m, (_, Add(f, _))) =>
           m.updated(f.path, m.getOrElse(f.path, Map.empty).updated(dvId(f.dv), f))
         case (m, (_, Remove(p, None, _))) => m - p
         case (m, (_, Remove(p, d, _))) =>
@@ -761,8 +763,8 @@ object DeltaInterop {
             k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
               else ExternalCatalogUtils.unescapePathName(v))
           }.toMap
-        Add(DeltaFile(encodePath(rel.toString), pv, None, stats.get(rel.toString)),
-          Files.size(target), Files.getLastModifiedTime(target).toMillis, dataChange)
+        Add(DeltaFile(encodePath(rel.toString), pv, None, stats.get(rel.toString),
+          Files.size(target), Files.getLastModifiedTime(target).toMillis), dataChange)
       }
   }
 
@@ -1030,7 +1032,8 @@ object DeltaInterop {
           tgt.files.filterNot(f => nowKeys.contains(key(f))).map { f =>
             val target = resolve(root, f.path)
             require(Files.exists(target), s"restore target file vacuumed: ${f.path}")
-            Add(f, Files.size(target), Files.getLastModifiedTime(target).toMillis)
+            Add(f.copy(size = Files.size(target),
+              modificationTime = Files.getLastModifiedTime(target).toMillis))
           })
       }
     }.getOrElse(toVersion)

@@ -7,8 +7,10 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.databind.json.JsonMapper
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.mergeSchemas
+import org.apache.spark.sql.types._
 
 /** Minimal versioned table format — the Delta-style transaction-log
   * semantics the reference leans on (ACID commits, versioning, time
@@ -32,10 +34,15 @@ import org.apache.spark.sql.functions._
   * - [[writeOnce]] makes an operation tag part of the commit race, so
   *   at-least-once re-deliveries (streaming batch replays) cannot commit
   *   twice even from concurrent writers;
+  * - each manifest records the table schema (Delta's `schemaString`),
+  *   and every scan declares it, so reads and commits start no
+  *   schema-discovery job. A widening append merges its schema into the
+  *   table's at commit time (the Parquet `mergeSchema` rule; a type
+  *   conflict fails the commit), and older files surface NULL for the
+  *   new columns. A manifest from before schemas were recorded costs one
+  *   footer inference; the next commit records the schema;
   * - `readVersion` time-travels by reading an old manifest — old data
-  *   files are never mutated. Reads union file schemas (merge-on-read),
-  *   so a commit may WIDEN the schema and older files surface NULL for
-  *   the new columns — the mergeSchema evolution story.
+  *   files are never mutated.
   *
   * Local-filesystem link is atomic here; on an object store the same
   * protocol runs against a log store with put-if-absent.
@@ -80,14 +87,17 @@ object VersionedTable {
   // One JSON record type for the whole log, read and written by one
   // Jackson parse/render pair. A commit manifest is
   // `{"version":N,"op":…,"files":[…]}` plus `"dv":[…]` only when the
-  // version has deletion vectors, so DV-free manifests keep the pre-DV
-  // bytes; a checkpoint is `{"version":N,"ops":[[v,op],…]}`. Strings are
-  // JSON-escaped, control characters included. Reading tolerates the raw
-  // control characters older writers left unescaped in op tags.
+  // version has deletion vectors and `"schema":"…"` (the table schema as
+  // Spark's DataType JSON) only when one was recorded, so older manifests
+  // keep their bytes; a checkpoint is `{"version":N,"ops":[[v,op],…]}`.
+  // Strings are JSON-escaped, control characters included. Reading
+  // tolerates the raw control characters older writers left unescaped in
+  // op tags.
 
   /** A log record: a commit manifest, or a checkpoint when `ops` is set. */
   private[sources] final case class Manifest(version: Long, op: String,
       files: Seq[String], dv: Seq[String] = Seq.empty,
+      schema: Option[StructType] = None,
       ops: Option[Seq[(Long, String)]] = None)
 
   private val mapper = JsonMapper.builder()
@@ -98,7 +108,9 @@ object VersionedTable {
     def strings(field: String): Seq[String] =
       n.path(field).elements().asScala.map(_.asText).toSeq
     Manifest(n.path("version").asLong, n.path("op").asText, strings("files"),
-      strings("dv"), Option(n.get("ops")).map(_.elements().asScala
+      strings("dv"),
+      Option(n.get("schema")).map(s => DataType.fromJson(s.asText).asInstanceOf[StructType]),
+      Option(n.get("ops")).map(_.elements().asScala
         .map(e => (e.get(0).asLong, e.get(1).asText)).toSeq))
   }
 
@@ -116,12 +128,22 @@ object VersionedTable {
         o.put("op", m.op)
         strings("files", m.files)
         if (m.dv.nonEmpty) strings("dv", m.dv)
+        m.schema.foreach(s => o.put("schema", s.json))
     }
     mapper.writeValueAsString(o)
   }
 
   private def readManifest(path: String, v: Long): Manifest =
     parse(Files.readString(manifestPath(path, v)))
+
+  /** The table schema of version `m`: the recorded one, or — for a
+    * manifest written before schemas were recorded — one `mergeSchema`
+    * inference over its files' footers (a Spark job).
+    */
+  private def schemaOf(spark: SparkSession, m: Manifest): StructType =
+    m.schema.getOrElse(
+      if (m.files.isEmpty) new StructType()
+      else spark.read.option("mergeSchema", "true").parquet(m.files: _*).schema)
 
   /** Stage `content` beside `target` and link it into place; false if
     * `target` already exists (lost the race). put-if-absent must FAIL
@@ -189,10 +211,11 @@ object VersionedTable {
 
   // ------------------------------------------------- the commit loop
 
-  /** One commit attempt: the new version's files and deletion vectors,
-    * plus the directories staged for it alone (deleted if it loses).
+  /** One commit attempt: the new version's files, schema and deletion
+    * vectors, plus the directories staged for it alone (deleted if it
+    * loses).
     */
-  private final case class Attempt(files: Seq[String],
+  private final case class Attempt(files: Seq[String], schema: Option[StructType],
       dv: Seq[String] = Seq.empty, staged: Seq[Path] = Seq.empty)
 
   /** The optimistic-concurrency loop every commit goes through. Captures
@@ -216,7 +239,7 @@ object VersionedTable {
         case None => result = Some(None)
         case Some(a) =>
           if (putIfAbsent(manifestPath(path, next),
-              render(Manifest(next, op, a.files, a.dv)))) {
+              render(Manifest(next, op, a.files, a.dv, a.schema)))) {
             maybeCheckpoint(path, next)
             result = Some(Some(next))
           } else a.staged.foreach(discardData)
@@ -248,14 +271,17 @@ object VersionedTable {
       ()
     }
 
-  /** Blind-write plan: append carries the base's files AND deletion
-    * vectors forward (dropping the DVs would resurrect deleted rows);
-    * overwrite replaces both.
+  /** Blind-write plan for `df`, already written as `newFiles`: append
+    * carries the base's files AND deletion vectors forward (dropping the
+    * DVs would resurrect deleted rows) and merges `df`'s schema into the
+    * base's, failing on a type conflict; overwrite replaces all three.
     */
-  private def blindPlan(mode: SaveMode, newFiles: Seq[String],
+  private def blindPlan(mode: SaveMode, df: DataFrame, newFiles: Seq[String],
       base: Manifest): Attempt =
-    if (mode == SaveMode.Append) Attempt(base.files ++ newFiles, base.dv)
-    else Attempt(newFiles)
+    if (mode == SaveMode.Append)
+      Attempt(base.files ++ newFiles,
+        Some(mergeSchemas(schemaOf(df.sparkSession, base), df.schema)), base.dv)
+    else Attempt(newFiles, Some(mergeSchemas(new StructType(), df.schema)))
 
   /** Write `df` as a new commit. Append mode unions the previous
     * version's files with the new ones; overwrite replaces them. Returns
@@ -278,7 +304,7 @@ object VersionedTable {
   def write(df: DataFrame, path: String, mode: SaveMode, op: String): Long = {
     val (_, newFiles) = writeData(df, path)
     commitLoop(path, op, requireBase = false)(base =>
-      Some(blindPlan(mode, newFiles, base))).get
+      Some(blindPlan(mode, df, newFiles, base))).get
   }
 
   /** Write `df` z-clustered on (`colA`, `colB`) as a new commit — the
@@ -342,7 +368,7 @@ object VersionedTable {
         // files must not become a duplicate commit
         discardData(dataDir)
         None
-      } else Some(blindPlan(mode, newFiles, base))
+      } else Some(blindPlan(mode, df, newFiles, base))
     }
   }
 
@@ -388,9 +414,18 @@ object VersionedTable {
   def dvFiles(path: String, version: Long): Seq[String] =
     readManifest(path, version).dv
 
-  /** Scan `fs` with the file/position metadata columns attached. */
-  private def withPos(spark: SparkSession, fs: Seq[String]): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(fs: _*)
+  /** A DV file's rows: the data file's `_metadata.file_path` and the
+    * deleted row's `_metadata.row_index`.
+    */
+  private val DvSchema = new StructType().add("file", StringType).add("pos", LongType)
+
+  /** Scan `fs` under the table `schema` with the file/position metadata
+    * columns attached (no footer inference; a file lacking a column reads
+    * it as NULL).
+    */
+  private def withPos(spark: SparkSession, schema: StructType,
+      fs: Seq[String]): DataFrame =
+    spark.read.schema(schema).parquet(fs: _*)
       .withColumn(FileCol, col("_metadata.file_path"))
       .withColumn(PosCol, col("_metadata.row_index"))
 
@@ -401,7 +436,7 @@ object VersionedTable {
       dvs: Seq[String]): DataFrame =
     if (dvs.isEmpty) scan
     else {
-      val dv = spark.read.parquet(dvs: _*).select(col("file"), col("pos"))
+      val dv = spark.read.schema(DvSchema).parquet(dvs: _*)
       val bytes = dvs.map(f => Files.size(Paths.get(f))).sum
       val probe = if (bytes <= dvBroadcastBytes) broadcast(dv) else dv
       scan.join(probe,
@@ -409,12 +444,12 @@ object VersionedTable {
         "left_anti")
     }
 
-  /** The live rows of a version, position columns attached (the common
-    * read under every DV-aware operation).
+  /** The live rows of `fs` under `schema` and `dvs`, position columns
+    * attached (the common read under every DV-aware operation).
     */
-  private def liveWithPos(spark: SparkSession, fs: Seq[String],
-      dvs: Seq[String]): DataFrame =
-    subtractDv(spark, withPos(spark, fs), dvs)
+  private def liveWithPos(spark: SparkSession, schema: StructType,
+      fs: Seq[String], dvs: Seq[String]): DataFrame =
+    subtractDv(spark, withPos(spark, schema, fs), dvs)
 
   /** `_metadata.file_path` is a URI (`file:///…`); manifests store plain
     * paths. Driver-side mapping for pruned-merge's touched-file list.
@@ -429,10 +464,11 @@ object VersionedTable {
     */
   def deleteWhere(spark: SparkSession, path: String, cond: Column): Long =
     commitLoop(path, "delete", requireBase = true) { base =>
-      val hits = liveWithPos(spark, base.files, base.dv).filter(cond)
+      val schema = schemaOf(spark, base)
+      val hits = liveWithPos(spark, schema, base.files, base.dv).filter(cond)
         .select(col(FileCol).as("file"), col(PosCol).as("pos"))
       val (dvDir, newDv) = writeData(hits, path, "dv")
-      Some(Attempt(base.files, base.dv ++ newDv, Seq(dvDir)))
+      Some(Attempt(base.files, Some(schema), base.dv ++ newDv, Seq(dvDir)))
     }.get
 
   /** MERGE via deletion vectors: matched target rows are DV-masked and
@@ -445,12 +481,15 @@ object VersionedTable {
   def mergeCommitDV(spark: SparkSession, path: String, source: DataFrame,
       keys: Seq[String]): Long =
     commitLoop(path, "merge-dv", requireBase = true) { base =>
-      val matched = liveWithPos(spark, base.files, base.dv)
+      val schema = schemaOf(spark, base)
+      val widened = mergeSchemas(schema, source.schema)
+      val matched = liveWithPos(spark, schema, base.files, base.dv)
         .join(source.select(keys.map(col): _*), keys, "left_semi")
         .select(col(FileCol).as("file"), col(PosCol).as("pos"))
       val (dvDir, newDv) = writeData(matched, path, "dv")
       val (dataDir, newFiles) = writeData(source, path)
-      Some(Attempt(base.files ++ newFiles, base.dv ++ newDv, Seq(dvDir, dataDir)))
+      Some(Attempt(base.files ++ newFiles, Some(widened), base.dv ++ newDv,
+        Seq(dvDir, dataDir)))
     }.get
 
   /** MERGE with file pruning: rewrite ONLY the files that contain a
@@ -469,7 +508,8 @@ object VersionedTable {
   def mergeCommitPruned(spark: SparkSession, path: String, source: DataFrame,
       keys: Seq[String]): Long =
     commitLoop(path, "merge-pruned", requireBase = true) { base =>
-      val live = liveWithPos(spark, base.files, base.dv)
+      val schema = schemaOf(spark, base)
+      val live = liveWithPos(spark, schema, base.files, base.dv)
       // bounded driver traffic: one row per TOUCHED FILE, never per data row
       val touched = live
         .join(source.select(keys.map(col): _*), keys, "left_semi")
@@ -478,12 +518,13 @@ object VersionedTable {
       val untouched = base.files.filterNot(touched)
       val targetSlice =
         if (touched.isEmpty) live.drop(FileCol, PosCol).limit(0)
-        else liveWithPos(spark, base.files.filter(touched), base.dv)
+        else liveWithPos(spark, schema, base.files.filter(touched), base.dv)
           .drop(FileCol, PosCol)
       val merged = graft.operators.Merge.upsert(targetSlice, source, keys)
       val (dataDir, newFiles) = writeData(merged, path)
       // DV entries for rewritten files go inert with the files themselves
-      Some(Attempt(untouched ++ newFiles, base.dv, Seq(dataDir)))
+      Some(Attempt(untouched ++ newFiles, Some(mergeSchemas(schema, merged.schema)),
+        base.dv, Seq(dataDir)))
     }.get
 
   // ---------------------------------------------------- change data feed
@@ -519,15 +560,14 @@ object VersionedTable {
         val addedDv = cur.dv.filterNot(prev.dv.toSet)
         val inserts =
           if (addedFiles.isEmpty) Seq.empty
-          else Seq(spark.read.option("mergeSchema", "true")
-            .parquet(addedFiles: _*)
+          else Seq(spark.read.schema(schemaOf(spark, cur)).parquet(addedFiles: _*)
             .withColumn("_change_type", lit("insert"))
             .withColumn("_commit_version", lit(v)))
         val deletes =
           if (addedDv.isEmpty) Seq.empty
           else {
-            val dv = spark.read.parquet(addedDv: _*).select(col("file"), col("pos"))
-            val scan = withPos(spark, prev.files)
+            val dv = spark.read.schema(DvSchema).parquet(addedDv: _*)
+            val scan = withPos(spark, schemaOf(spark, prev), prev.files)
             Seq(scan.join(broadcast(dv),
                 scan(FileCol) === dv("file") && scan(PosCol) === dv("pos"),
                 "left_semi")
@@ -544,18 +584,18 @@ object VersionedTable {
     deltas.foldLeft(empty)(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Read the table as of `version` (time travel). Schemas are unioned
-    * across files (merge-on-read), so versions written after a widening
+  /** Read the table as of `version` (time travel). The scan declares the
+    * schema the manifest records, so versions written after a widening
     * append surface the full evolved schema with NULLs where a file
-    * predates a column. Deletion vectors, when present, are subtracted
-    * by a size-gated anti-join; DV-free versions keep the plain scan
-    * (zero overhead).
+    * predates a column, and the read starts no discovery job. Deletion
+    * vectors, when present, are subtracted by a size-gated anti-join;
+    * DV-free versions keep the plain scan (zero overhead).
     */
   def readVersion(spark: SparkSession, path: String, version: Long): DataFrame = {
     val m = readManifest(path, version)
     if (m.files.isEmpty) spark.emptyDataFrame
-    else if (m.dv.isEmpty) spark.read.option("mergeSchema", "true").parquet(m.files: _*)
-    else liveWithPos(spark, m.files, m.dv).drop(FileCol, PosCol)
+    else if (m.dv.isEmpty) spark.read.schema(schemaOf(spark, m)).parquet(m.files: _*)
+    else liveWithPos(spark, schemaOf(spark, m), m.files, m.dv).drop(FileCol, PosCol)
   }
 
   /** RESTORE `version` as a NEW commit: the table's head becomes a
@@ -564,7 +604,8 @@ object VersionedTable {
     * time travel made durable while preserving history; a later restore
     * can roll the restore itself back). Metadata-only: no data file is
     * read, moved, or rewritten, so restoring a 100 TB table costs one
-    * manifest write. Retries on version races like any blind commit;
+    * manifest write (the target's recorded schema is copied as is).
+    * Retries on version races like any blind commit;
     * requires the target version's manifest to still exist (VACUUM with
     * a retention window shorter than the restore target forfeits it).
     */
@@ -573,7 +614,7 @@ object VersionedTable {
       s"cannot restore to version $version: manifest vacuumed or absent")
     val target = readManifest(path, version)
     commitLoop(path, s"restore($version)", requireBase = true)(_ =>
-      Some(Attempt(target.files, target.dv))).get
+      Some(Attempt(target.files, target.schema, target.dv))).get
   }
 
   /** Read the latest version. */
@@ -596,10 +637,11 @@ object VersionedTable {
   /** The one sidecar-skipping read under [[readWhere]] and
     * [[readWhereEquals]]: the live rows of the latest version matching
     * `cond`, scanning only the files whose sidecar entry under `dir`
-    * satisfies `keep`. One pass over the sidecar collects (file, keep)
+    * satisfies `keep`. `sidecar` gives the sidecar's schema for the
+    * table schema. One pass over the sidecar collects (file, keep)
     * for every live file it covers; files it does not cover get entries
-    * from `index` — handed a merged scan of exactly those files and the
-    * live file list, it returns `uri` (`_metadata.file_path`) plus the
+    * from `index` — handed a scan of exactly those files under the table
+    * schema, it returns `uri` (`_metadata.file_path`) plus the
     * sidecar's value columns — in one append, and a second pass then
     * reads their verdicts. A file still without an entry (lost append
     * race) is read conservatively. Driver traffic is bounded by the FILE
@@ -607,14 +649,16 @@ object VersionedTable {
     * Returns (rows, filesRead, filesTotal).
     */
   private def skippingRead(spark: SparkSession, path: String, dir: Path,
-      index: (DataFrame, Seq[String]) => DataFrame, keep: Column,
-      cond: Column): (DataFrame, Long, Long) = {
+      sidecar: StructType => StructType, index: DataFrame => DataFrame,
+      keep: Column, cond: Column): (DataFrame, Long, Long) = {
     val head = readManifest(path, latestOrFail(path))
     val fs = head.files
     if (fs.isEmpty) return (spark.emptyDataFrame, 0L, 0L)
+    val schema = schemaOf(spark, head)
+    val sidecarSchema = sidecar(schema)
     def verdicts(): Seq[(String, Boolean)] =
       if (!Files.exists(dir)) Seq.empty
-      else spark.read.parquet(dir.toString)
+      else spark.read.schema(sidecarSchema).parquet(dir.toString)
         .filter(col("file").isInCollection(fs))
         .select(col("file"), coalesce(keep, lit(false)))
         .collect().map(r => (r.getString(0), r.getBoolean(1))).toSeq
@@ -623,7 +667,7 @@ object VersionedTable {
     val entries =
       if (missing.isEmpty) first
       else {
-        index(spark.read.option("mergeSchema", "true").parquet(missing: _*), fs)
+        index(spark.read.schema(schema).parquet(missing: _*))
           // manifests store plain paths; `file_path` is a file: URI on the
           // local FS — strip the scheme so sidecar keys match manifests
           .withColumn("uri", regexp_replace(col("uri"), "^file:(//)?", ""))
@@ -636,13 +680,19 @@ object VersionedTable {
     val toRead = entries.collect { case (f, true) => f }.distinct ++
       fs.filterNot(indexed)
     val out =
-      if (toRead.isEmpty) read(spark, path).filter(cond).limit(0)
-      else liveWithPos(spark, toRead, head.dv).drop(FileCol, PosCol).filter(cond)
+      if (toRead.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema).filter(cond)
+      else liveWithPos(spark, schema, toRead, head.dv).drop(FileCol, PosCol).filter(cond)
     (out, toRead.size.toLong, fs.size.toLong)
   }
 
   private def statsDir(path: String, column: String): Path =
     Paths.get(path, "_graft_stats", column)
+
+  /** A stats sidecar row: a data file and its min/max of a column of
+    * type `t`.
+    */
+  private def statsSchema(t: DataType): StructType =
+    new StructType().add("file", StringType).add("mn", t).add("mx", t)
 
   /** Range read with file skipping: the rows of the latest version
     * satisfying `lo <= column <= hi`, scanning only files whose
@@ -655,37 +705,19 @@ object VersionedTable {
     * file-count wide); later calls prune from the sidecar alone. All
     * range comparisons run in the engine with its own type coercion —
     * no driver-side value comparisons. All-null files (mn = mx = NULL)
-    * are skipped: the range filter excludes null rows regardless.
+    * are skipped: the range filter excludes null rows regardless — files
+    * that predate the column read it as NULL under the declared schema.
     */
   def readWhere(spark: SparkSession, path: String, column: String,
       lo: Any, hi: Any): (DataFrame, Long, Long) = {
-    val dir = statsDir(path, column)
-    def index(src: DataFrame, fs: Seq[String]): DataFrame = {
-      val v =
-        if (src.columns.contains(column)) col(column)
-        else {
-          // EVERY unindexed file predates the schema-evolved column
-          // (e.g. an old-schema writer appended after the column was
-          // indexed) — col(column) would not resolve against their
-          // merged schema. Those files read back NULL for the column,
-          // which any range filter excludes, so the sound stats entry
-          // is the all-null row (the existing skip-with-null
-          // semantics). Type the nulls from the sidecar, or from the
-          // table's full merged schema on a first-ever stats pass, so
-          // the sidecar parquet stays schema-stable across appends.
-          val dt =
-            if (Files.exists(dir))
-              spark.read.parquet(dir.toString).schema("mn").dataType
-            else spark.read.option("mergeSchema", "true").parquet(fs: _*)
-              .schema.find(_.name == column).map(_.dataType)
-              .getOrElse(throw new IllegalArgumentException(
-                s"data-skipping column '$column' exists in no file of $path"))
-          lit(null).cast(dt)
-        }
+    def sidecar(schema: StructType): StructType =
+      statsSchema(schema.find(_.name == column).map(_.dataType).getOrElse(
+        throw new IllegalArgumentException(
+          s"data-skipping column '$column' is not in the schema of $path")))
+    def index(src: DataFrame): DataFrame =
       src.groupBy(col("_metadata.file_path").as("uri"))
-        .agg(min(v).as("mn"), max(v).as("mx"))
-    }
-    skippingRead(spark, path, dir, index,
+        .agg(min(col(column)).as("mn"), max(col(column)).as("mx"))
+    skippingRead(spark, path, statsDir(path, column), sidecar, index,
       keep = col("mx") >= lit(lo) && col("mn") <= lit(hi),
       cond = col(column) >= lit(lo) && col(column) <= lit(hi))
   }
@@ -709,6 +741,10 @@ object VersionedTable {
   private val BloomBits = 4096
   private val BloomK = 5
 
+  /** A Bloom sidecar row: a data file and its sorted position set. */
+  private val BloomSchema =
+    new StructType().add("file", StringType).add("pos_set", ArrayType(IntegerType))
+
   private def bloomHashHex(i: Int, v: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     md.digest(s"bloom-v1|$i|$v".getBytes("UTF-8"))
@@ -731,37 +767,34 @@ object VersionedTable {
     */
   def readWhereEquals(spark: SparkSession, path: String, column: String,
       value: Any): (DataFrame, Long, Long) = {
-    def index(src: DataFrame, fs: Seq[String]): DataFrame = {
+    def index(src: DataFrame): DataFrame = {
       val fileList = src.select(col("_metadata.file_path").as("uri")).distinct()
       val none = array().cast("array<int>")
       // every scanned file gets an entry: a file whose values are all
-      // NULL for the column (old-schema file under mergeSchema, or a
+      // NULL for the column (a file that predates the column, or a
       // genuinely all-null file) contributes no position rows, and its
       // sound entry is the EMPTY set — an equality probe excludes null
-      if (!src.columns.contains(column)) fileList.select(col("uri"), none.as("pos_set"))
-      else {
-        val posExprs = (0 until BloomK).map { i =>
-          (graft.expressions.Md5Prefix.md5Prefix(
-            concat(lit(s"bloom-v1|$i|"), col("v")), 12) % BloomBits)
-            .cast("int")
-        }
-        val sets = src
-          .select(col("_metadata.file_path").as("uri"),
-            col(column).cast("string").as("v"))
-          .filter(col("v").isNotNull)
-          .select(col("uri"), explode(array(posExprs: _*)).as("pos"))
-          .groupBy("uri")
-          .agg(sort_array(collect_set(col("pos"))).as("pos_set"))
-        fileList.join(sets, Seq("uri"), "left")
-          .select(col("uri"), coalesce(col("pos_set"), none).as("pos_set"))
+      val posExprs = (0 until BloomK).map { i =>
+        (graft.expressions.Md5Prefix.md5Prefix(
+          concat(lit(s"bloom-v1|$i|"), col("v")), 12) % BloomBits)
+          .cast("int")
       }
+      val sets = src
+        .select(col("_metadata.file_path").as("uri"),
+          col(column).cast("string").as("v"))
+        .filter(col("v").isNotNull)
+        .select(col("uri"), explode(array(posExprs: _*)).as("pos"))
+        .groupBy("uri")
+        .agg(sort_array(collect_set(col("pos"))).as("pos_set"))
+      fileList.join(sets, Seq("uri"), "left")
+        .select(col("uri"), coalesce(col("pos_set"), none).as("pos_set"))
     }
     val probe: Seq[Int] = (0 until BloomK).map { i =>
       (java.lang.Long.parseLong(
         bloomHashHex(i, String.valueOf(value)).substring(0, 12), 16)
         % BloomBits).toInt
     }
-    skippingRead(spark, path, bloomDir(path, column), index,
+    skippingRead(spark, path, bloomDir(path, column), _ => BloomSchema, index,
       keep = probe.distinct.map(p => array_contains(col("pos_set"), p)).reduce(_ && _),
       cond = col(column) === lit(value))
   }
@@ -790,10 +823,18 @@ object VersionedTable {
       versions(path).flatMap(v => files(path, v)).toSet
     import spark.implicits._
     val liveDf = live.toSeq.sorted.toDF("file")
+    // the sidecars' declared schemas; a stats sidecar of a column the
+    // table no longer has is read by footer inference
+    val table = schemaOf(spark, readManifest(path, latestOrFail(path)))
+    def sidecar(colDir: Path): Option[StructType] =
+      if (colDir.getParent.getFileName.toString == "_graft_bloom") Some(BloomSchema)
+      else table.find(_.name == colDir.getFileName.toString)
+        .map(f => statsSchema(f.dataType))
     var dropped = 0L
     roots.flatMap(r => listDir(r)(_.toSeq)).filter(Files.isDirectory(_))
       .foreach { colDir =>
-      val df = spark.read.parquet(colDir.toString)
+      val df = sidecar(colDir).fold(spark.read)(s => spark.read.schema(s))
+        .parquet(colDir.toString)
       val total = df.count()
       val kept = df.join(broadcast(liveDf), Seq("file"), "left_semi")
       val keptN = kept.count()
@@ -903,9 +944,9 @@ object VersionedTable {
     * Scale shape: the driver touches only file METADATA (one size stat
     * per live file — what Delta reads from its log); the data move is a
     * distributed scan + repartition of just the small files, never the
-    * whole table. Rewriting mixed-schema files materializes the unioned
-    * schema with NULLs — exactly what merge-on-read surfaces, so reads
-    * are unchanged.
+    * whole table. Rewriting mixed-schema files materializes the table
+    * schema with NULLs — exactly what the declared-schema read surfaces,
+    * so reads are unchanged.
     *
     * Read-modify-write through the one commit loop: the plan is computed
     * against a captured base and committed at base+1; losing the race
@@ -918,6 +959,7 @@ object VersionedTable {
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L << 20): Option[Long] =
     commitLoop(path, "compact", requireBase = true) { base =>
+      val schema = schemaOf(spark, base)
       val small = base.files.filter(f => Files.size(Paths.get(f)) < targetBytes)
       if (small.size < 2) None
       else {
@@ -926,11 +968,11 @@ object VersionedTable {
         // DV-masked rows must NOT resurrect in the rewrite: compact the
         // LIVE rows of the small files (their DV entries then go inert);
         // kept files retain their DV subtraction through the carried list
-        val compacted = liveWithPos(spark, small, base.dv)
+        val compacted = liveWithPos(spark, schema, small, base.dv)
           .drop(FileCol, PosCol).repartition(nOut)
         val (dataDir, newFiles) = writeData(compacted, path)
-        Some(Attempt(base.files.filterNot(small.toSet) ++ newFiles, base.dv,
-          Seq(dataDir)))
+        Some(Attempt(base.files.filterNot(small.toSet) ++ newFiles, Some(schema),
+          base.dv, Seq(dataDir)))
       }
     }
 }

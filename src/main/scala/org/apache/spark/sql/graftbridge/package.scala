@@ -3,6 +3,8 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge. Spark 4 made the classic converters
   * `private[sql]`, so third-party Catalyst expressions need this minimal
@@ -13,6 +15,15 @@ import org.apache.spark.sql.execution.LogicalRDD
 package object graftbridge {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** The schema union Parquet `mergeSchema` applies to file footers:
+    * `a`'s fields in order, then `b`'s new ones; shared fields must have
+    * compatible types (else it throws), under the session's case
+    * sensitivity. Every field comes out nullable, as Spark writes and
+    * infers file-source columns.
+    */
+  def mergeSchemas(a: StructType, b: StructType): StructType =
+    a.asNullable.merge(b.asNullable, SQLConf.get.caseSensitiveAnalysis)
 
   /** Rebuild a checkpoint-backed DataFrame's scan with
     * `UnknownPartitioning`, working around a Spark canonicalization gap

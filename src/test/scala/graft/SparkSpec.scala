@@ -1,12 +1,36 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared one-session-per-suite base (spark_guide.md ScalaTest pattern). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh directory under `java.io.tmpdir` named `prefix…`, deleted
+    * with everything in it once the suite has run.
+    */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach { dir =>
+      if (Files.exists(dir)) {
+        val walk = Files.walk(dir)
+        try walk.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+        finally walk.close()
+      }
+    } finally super.afterAll()
 
   /** Spark jobs that `body` starts on the calling thread: jobs are tagged
     * with a thread-local property, so other suites sharing the session

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -19,7 +17,7 @@ class BloomSkipSpec extends SparkSpec {
     * min/max on `user` prunes nothing ranges can't, the Bloom set does.
     */
   private def userTable(): String = {
-    val path = Files.createTempDirectory("vt_bloom").resolve("t").toString
+    val path = tempDir("vt_bloom").resolve("t").toString
     (0 until 4).foreach { c =>
       val df = (0L until 50L)
         .map(i => (i * 7 % 100, s"u${c}_${i % 25}", c.toLong))
@@ -79,7 +77,7 @@ class BloomSkipSpec extends SparkSpec {
   }
 
   test("files predating a schema-evolved column are skipped, not crashed") {
-    val path = Files.createTempDirectory("vt_bloom_ev").resolve("t").toString
+    val path = tempDir("vt_bloom_ev").resolve("t").toString
     VersionedTable.write((0L until 20L).map(i => Tuple1(i)).toDF("k")
       .coalesce(1), path, SaveMode.Overwrite)
     VersionedTable.write((0L until 20L).map(i => (i, s"tag$i"))

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -13,7 +11,7 @@ class DataSkippingSpec extends SparkSpec {
     * a narrow [min,max], so a range probe should touch one commit.
     */
   private def clusteredTable(): String = {
-    val path = Files.createTempDirectory("vt_skip").resolve("t").toString
+    val path = tempDir("vt_skip").resolve("t").toString
     VersionedTable.write((0L until 100L).map(i => (i, s"r$i"))
       .toDF("k", "v").coalesce(1), path, SaveMode.Overwrite)
     VersionedTable.write((100L until 200L).map(i => (i, s"r$i"))
@@ -76,9 +74,9 @@ class DataSkippingSpec extends SparkSpec {
           .cast("bigint").as("day"))
     val n = 16
     // z-clustered versioned table vs the usual time-sorted layout
-    val zPath = Files.createTempDirectory("vt_z").resolve("t").toString
+    val zPath = tempDir("vt_z").resolve("t").toString
     VersionedTable.writeClustered(orders, zPath, "day", "ck", n)
-    val linPath = Files.createTempDirectory("vt_lin").resolve("t").toString
+    val linPath = tempDir("vt_lin").resolve("t").toString
     VersionedTable.write(
       orders.repartitionByRange(n, $"day").sortWithinPartitions("day"),
       linPath, SaveMode.Overwrite)
@@ -119,7 +117,7 @@ class DataSkippingSpec extends SparkSpec {
       .select($"o_orderkey".as("okey"), $"o_custkey".as("ck"),
         datediff($"o_orderdate".cast("date"), lit("1970-01-01").cast("date"))
           .cast("bigint").as("day"))
-    val path = Files.createTempDirectory("vt_opt").resolve("t").toString
+    val path = tempDir("vt_opt").resolve("t").toString
     // start from a time-sorted layout with a DV delete on top
     VersionedTable.write(
       orders.repartitionByRange(8, $"day").sortWithinPartitions("day"),
@@ -169,7 +167,7 @@ class DataSkippingSpec extends SparkSpec {
   }
 
   test("schema evolution on append: merged read, time travel keeps old shape") {
-    val path = Files.createTempDirectory("vt_evo").resolve("t").toString
+    val path = tempDir("vt_evo").resolve("t").toString
     VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1),
       path, SaveMode.Overwrite)
     // widened batch appends (the mergeSchema shape): new column arrives
@@ -191,7 +189,7 @@ class DataSkippingSpec extends SparkSpec {
   }
 
   test("old-schema file appended after indexing an evolved column is skipped, not an error") {
-    val path = Files.createTempDirectory("vt_evo2").resolve("t").toString
+    val path = tempDir("vt_evo2").resolve("t").toString
     VersionedTable.write(Seq((1L, "a", 10.0), (2L, "b", 20.0))
       .toDF("k", "v", "score").coalesce(1), path, SaveMode.Overwrite)
     // index the evolved column

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -15,7 +13,7 @@ class DeltaCompactSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpTable(): String =
-    Files.createTempDirectory("delta_c").resolve("t").toString
+    tempDir("delta_c").resolve("t").toString
 
   test("compact merges a partition's small files; data + time travel intact") {
     val path = tmpTable()

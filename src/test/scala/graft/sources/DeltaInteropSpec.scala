@@ -39,7 +39,7 @@ class DeltaInteropSpec extends SparkSpec {
     * single parquet FILE at tableRoot/relPath, Delta-layout style.
     */
   private def writeDataFile(root: Path, relPath: String, df: DataFrame): Unit = {
-    val tmp = Files.createTempDirectory("delta_part")
+    val tmp = tempDir("delta_part")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = Files.list(tmp).iterator().asScala
       .find(_.getFileName.toString.endsWith(".parquet")).get
@@ -59,7 +59,7 @@ class DeltaInteropSpec extends SparkSpec {
     * v2: remove file1, add file3(ds=01).
     */
   private def fixture(): Path = {
-    val root = Files.createTempDirectory("delta_tbl").resolve("t")
+    val root = tempDir("delta_tbl").resolve("t")
     Files.createDirectories(root)
     writeDataFile(root, "ds=2024-01-01/part-0000.parquet",
       Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
@@ -217,7 +217,7 @@ class DeltaInteropSpec extends SparkSpec {
   }
 
   test("unsupported reader protocol is refused, not misread") {
-    val root = Files.createTempDirectory("delta_v3").resolve("t")
+    val root = tempDir("delta_v3").resolve("t")
     Files.createDirectories(root)
     writeDataFile(root, "part-0000.parquet", Seq((1L, "a")).toDF("k", "v"))
     writeCommit(root, 0L, Seq(protocolAction(reader = 3), metaAction,
@@ -229,7 +229,7 @@ class DeltaInteropSpec extends SparkSpec {
   }
 
   test("a non-delta directory is rejected up front") {
-    val root = Files.createTempDirectory("not_delta")
+    val root = tempDir("not_delta")
     intercept[IllegalArgumentException] {
       DeltaInterop.snapshot(spark, root.toString)
     }
@@ -287,7 +287,7 @@ class DeltaInteropSpec extends SparkSpec {
     * DELETE emits.
     */
   private def dvFixture(): Path = {
-    val root = Files.createTempDirectory("delta_dv").resolve("t")
+    val root = tempDir("delta_dv").resolve("t")
     Files.createDirectories(root)
     writeDataFile(root, "ds=2024-01-01/part-0000.parquet",
       Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("k", "v"))
@@ -312,7 +312,7 @@ class DeltaInteropSpec extends SparkSpec {
   }
 
   test("deletion vectors: inline (Z85) DV masks rows") {
-    val root = Files.createTempDirectory("delta_dvi").resolve("t")
+    val root = tempDir("delta_dvi").resolve("t")
     Files.createDirectories(root)
     writeDataFile(root, "ds=2024-01-01/part-0000.parquet",
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"))
@@ -360,7 +360,7 @@ class DeltaInteropSpec extends SparkSpec {
           .putString("delta.columnMapping.physicalName", "col-33333333").putLong("delta.columnMapping.id", 3L).build())))
     val meta =
       s"""{"metaData":{"id":"aaaabbbb-2222-3333-4444-555555555555","format":{"provider":"parquet","options":{}},"schemaString":"${esc(mappedSchema.json)}","partitionColumns":["ds"],"configuration":{"delta.columnMapping.mode":"name","delta.columnMapping.maxColumnId":"3"},"createdTime":1700000000000}}"""
-    val root = Files.createTempDirectory("delta_cm").resolve("t")
+    val root = tempDir("delta_cm").resolve("t")
     Files.createDirectories(root)
     // data files carry PHYSICAL column names
     writeDataFile(root, "part-0000.parquet",
@@ -375,7 +375,7 @@ class DeltaInteropSpec extends SparkSpec {
   }
 
   test("protocol v3 with an unsupported reader feature is refused by name") {
-    val root = Files.createTempDirectory("delta_v3f").resolve("t")
+    val root = tempDir("delta_v3f").resolve("t")
     Files.createDirectories(root)
     writeDataFile(root, "part-0000.parquet", Seq((1L, "a")).toDF("k", "v"))
     writeCommit(root, 0L, Seq(protocolV3("deletionVectors", "typeWidening"),
@@ -388,7 +388,7 @@ class DeltaInteropSpec extends SparkSpec {
   }
 
   test("replay keys on the RAW percent-encoded path: overwrite removes an encoded add") {
-    val root = Files.createTempDirectory("delta_enc").resolve("t")
+    val root = tempDir("delta_enc").resolve("t")
     Files.createDirectories(root)
     // a data file whose name needs percent-encoding in the action
     writeDataFile(root, "part 0000.parquet", Seq((1L, "a")).toDF("k", "v"))

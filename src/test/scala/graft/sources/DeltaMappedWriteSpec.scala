@@ -16,7 +16,7 @@ class DeltaMappedWriteSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("delta_cmap").resolve("t").toString
+    tempDir("delta_cmap").resolve("t").toString
 
   test("mapped create: physical names on disk, logical round trip") {
     val path = tmp()
@@ -166,7 +166,7 @@ class DeltaMappedWriteSpec extends SparkSpec {
   test("hand-built id-mode fixture (external-writer shape) reads logically") {
     // a log authored the way delta-spark lays out an id-mode table:
     // physical p-names (NOT our col- UUID convention), ids in metadata
-    val root = Files.createTempDirectory("delta_idfix")
+    val root = tempDir("delta_idfix")
     val logDir = root.resolve("_delta_log")
     Files.createDirectories(logDir)
     spark.range(7).select($"id".as("p1"),
@@ -194,7 +194,7 @@ class DeltaMappedWriteSpec extends SparkSpec {
   }
 
   test("genuinely unknown mapping modes are still refused") {
-    val root = Files.createTempDirectory("delta_badmode")
+    val root = tempDir("delta_badmode")
     val logDir = root.resolve("_delta_log")
     Files.createDirectories(logDir)
     val commit = Seq(

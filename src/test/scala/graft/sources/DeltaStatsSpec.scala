@@ -17,7 +17,7 @@ class DeltaStatsSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpTable(): String =
-    Files.createTempDirectory("delta_s").resolve("t").toString
+    tempDir("delta_s").resolve("t").toString
 
   /** 0..99 range-clustered into 4 files so [min,max] boxes are tight. */
   private def clustered(path: String): Unit =

@@ -16,7 +16,7 @@ class DeltaWriteSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpTable(): String =
-    Files.createTempDirectory("delta_w").resolve("t").toString
+    tempDir("delta_w").resolve("t").toString
 
   test("create + read round trip, partitioned, with protocol/meta in v0") {
     val path = tmpTable()
@@ -318,7 +318,7 @@ class DeltaWriteSpec extends SparkSpec {
     val root = Paths.get(path)
     val cdDir = root.resolve("_change_data")
     Files.createDirectories(cdDir)
-    val tmp = Files.createTempDirectory("cdc_stage")
+    val tmp = tempDir("cdc_stage")
     Seq((2L, "b", "update_preimage"), (2L, "B2", "update_postimage"))
       .toDF("k", "v", "_change_type")
       .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -683,5 +683,37 @@ class DeltaWriteSpec extends SparkSpec {
       assert(rowsOf(path) == ((1L to 7L).map(_ -> "base") ++
         (0L until 4L).map(b => (100L + b, s"b$b"))).sorted)
     }
+  }
+
+  test("after a DV delete and every checkpoint kind, each add carries its file's byte size") {
+    val path = tmpTable()
+    DeltaInterop.write((0L until 20L).map(i => (i, s"r$i", if (i % 2 == 0) "x" else "y"))
+      .toDF("k", "v", "ds"), path, SaveMode.Overwrite, partitionBy = Seq("ds"))
+    DeltaInterop.write(Seq((20L, "r20", "x")).toDF("k", "v", "ds"), path, SaveMode.Append,
+      partitionBy = Seq("ds"))
+    val v = DeltaInterop.deleteWhere(spark, path, col("k") % 4 === 0L).get
+    DeltaInterop.checkpoint(spark, path)
+    DeltaInterop.checkpoint(spark, path, parts = 2)
+    DeltaInterop.checkpointV2(spark, path)
+    val logDir = Paths.get(path, "_delta_log")
+    def logFiles(pattern: String): Seq[String] =
+      Files.list(logDir).iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches(pattern)).map(n => logDir.resolve(n).toString).toSeq
+    def assertSizes(source: String, actions: org.apache.spark.sql.DataFrame): Unit = {
+      val adds = actions.where(col("add").isNotNull)
+        .select(col("add.path"), col("add.size")).as[(String, Long)].collect().toSeq
+      assert(adds.nonEmpty, s"no add actions in $source")
+      adds.foreach { case (p, size) =>
+        val file = Paths.get(path).resolve(new java.net.URI(p).getPath)
+        assert(size == Files.size(file), s"$source: add $p has size $size")
+      }
+    }
+    assertSizes("the delete commit", spark.read.json(logDir.resolve(f"$v%020d.json").toString))
+    assertSizes("the checkpoint", spark.read.parquet(logFiles("""\d{20}\.checkpoint\.parquet"""): _*))
+    val parts = logFiles("""\d{20}\.checkpoint\.\d{10}\.\d{10}\.parquet""")
+    assert(parts.size == 2)
+    assertSizes("the multi-part checkpoint", spark.read.parquet(parts: _*))
+    assertSizes("the v2 checkpoint sidecar",
+      spark.read.parquet(logDir.resolve("_sidecars").toString))
   }
 }

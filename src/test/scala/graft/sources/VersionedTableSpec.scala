@@ -4,13 +4,14 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.SparkSpec
 
 class VersionedTableSpec extends SparkSpec {
   import spark.implicits._
 
   test("commit / append / merge versions with time travel and history") {
-    val path = Files.createTempDirectory("vt").resolve("orders").toString
+    val path = tempDir("vt").resolve("orders").toString
     val v0 = VersionedTable.write(
       Seq((1L, "A", 10.0), (2L, "B", 20.0)).toDF("k", "status", "amt"),
       path, SaveMode.Overwrite)
@@ -36,7 +37,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("vacuum retains the newest versions, deletes unreferenced files") {
-    val path = Files.createTempDirectory("vt_vac").resolve("t").toString
+    val path = tempDir("vt_vac").resolve("t").toString
     VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), path, SaveMode.Overwrite) // v0
     VersionedTable.write(Seq((2L, "b")).toDF("k", "v"), path, SaveMode.Overwrite) // v1: v0's files now orphaned
     VersionedTable.write(Seq((3L, "c")).toDF("k", "v"), path, SaveMode.Append)    // v2: shares v1's files
@@ -71,7 +72,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("parallel appenders: every commit lands, no version lost or duplicated") {
-    val path = Files.createTempDirectory("vt3").resolve("t").toString
+    val path = tempDir("vt3").resolve("t").toString
     VersionedTable.write(Seq((0L, -1L)).toDF("writer", "i"), path, SaveMode.Overwrite)
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (1 to 4).map { w =>
@@ -90,7 +91,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("writeOnce: same tag commits exactly once, even from concurrent writers") {
-    val path = Files.createTempDirectory("vt4").resolve("t").toString
+    val path = tempDir("vt4").resolve("t").toString
     VersionedTable.write(Seq((0L, 0L)).toDF("w", "i"), path, SaveMode.Overwrite)
     // serial re-delivery: second call is a no-op
     assert(VersionedTable.writeOnce(Seq((1L, 1L)).toDF("w", "i"), path,
@@ -136,7 +137,7 @@ class VersionedTableSpec extends SparkSpec {
 
   concurrentRmw.foreach { case (name, commit, want) =>
     test(s"$name re-runs on conflict: 4 concurrent commits all land (no lost update)") {
-      val path = Files.createTempDirectory("vt5").resolve("t").toString
+      val path = tempDir("vt5").resolve("t").toString
       // two commits, so compaction always has small files to merge
       VersionedTable.write((rmwBase - 7L).toSeq.toDF("k", "v"), path, SaveMode.Overwrite)
       VersionedTable.write(Seq((7L, "base")).toDF("k", "v"), path, SaveMode.Append)
@@ -154,7 +155,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("schema evolution: a widened append reads back merged with NULLs") {
-    val path = Files.createTempDirectory("vt6").resolve("t").toString
+    val path = tempDir("vt6").resolve("t").toString
     VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), path, SaveMode.Overwrite)
     VersionedTable.write(Seq((2L, "b", 9.5)).toDF("k", "v", "score"), path,
       SaveMode.Append)
@@ -169,7 +170,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("log checkpoints: committedOps reads checkpoint + tail, survives manifest loss") {
-    val path = Files.createTempDirectory("vt7").resolve("t").toString
+    val path = tempDir("vt7").resolve("t").toString
     val n = 23 // crosses two checkpoint boundaries (v10, v20)
     (0 until n).foreach { i =>
       VersionedTable.writeOnce(Seq((i.toLong, i.toLong)).toDF("k", "v"), path,
@@ -203,7 +204,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("compact: bin-packs small files, content identical, old files vacuumable") {
-    val path = Files.createTempDirectory("vt8").resolve("t").toString
+    val path = tempDir("vt8").resolve("t").toString
     // 8 append commits of one tiny file each → 8 live files
     VersionedTable.write(Seq((0L, "r0")).toDF("k", "v"), path, SaveMode.Overwrite)
     (1 to 7).foreach { i =>
@@ -236,7 +237,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("compact: mixed-schema files rewrite to the merge-on-read result") {
-    val path = Files.createTempDirectory("vt9").resolve("t").toString
+    val path = tempDir("vt9").resolve("t").toString
     VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), path, SaveMode.Overwrite)
     VersionedTable.write(Seq((2L, "b", 9.5)).toDF("k", "v", "score"), path,
       SaveMode.Append) // widened
@@ -250,7 +251,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("deleteWhere: DV masks rows, data files untouched, time travel intact") {
-    val path = Files.createTempDirectory("vt_dv1").resolve("t").toString
+    val path = tempDir("vt_dv1").resolve("t").toString
     VersionedTable.write(
       (1L to 10L).map(i => (i, s"r$i")).toDF("k", "v"), path, SaveMode.Overwrite)
     val filesBefore = VersionedTable.files(path, 0L)
@@ -270,7 +271,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("mergeCommitDV: upsert semantics with zero target-file rewrites") {
-    val path = Files.createTempDirectory("vt_dv2").resolve("t").toString
+    val path = tempDir("vt_dv2").resolve("t").toString
     VersionedTable.write(
       Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)).toDF("k", "v", "x"),
       path, SaveMode.Overwrite)
@@ -290,7 +291,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("mergeCommitPruned: untouched files carry over, touched files rewrite") {
-    val path = Files.createTempDirectory("vt_dv3").resolve("t").toString
+    val path = tempDir("vt_dv3").resolve("t").toString
     // three commits → three file sets with disjoint key ranges
     VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, SaveMode.Overwrite)
     VersionedTable.write(Seq((10L, "j"), (11L, "k")).toDF("k", "v"), path, SaveMode.Append)
@@ -318,7 +319,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("change data feed: exact row-level inserts and deletes across versions") {
-    val path = Files.createTempDirectory("vt_cdf").resolve("t").toString
+    val path = tempDir("vt_cdf").resolve("t").toString
     VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, SaveMode.Overwrite)
     VersionedTable.write(Seq((3L, "c")).toDF("k", "v"), path, SaveMode.Append) // v1
     VersionedTable.deleteWhere(spark, path, $"k" === 1L)                       // v2
@@ -348,7 +349,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("compact + vacuum respect deletion vectors: no resurrection, DVs survive") {
-    val path = Files.createTempDirectory("vt_dv4").resolve("t").toString
+    val path = tempDir("vt_dv4").resolve("t").toString
     VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), path, SaveMode.Overwrite)
     (2 to 6).foreach { i =>
       VersionedTable.write(Seq((i.toLong, s"r$i")).toDF("k", "v"), path, SaveMode.Append)
@@ -369,7 +370,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("optimistic concurrency: a stolen version number is retried, nothing lost") {
-    val path = Files.createTempDirectory("vt2").resolve("t").toString
+    val path = tempDir("vt2").resolve("t").toString
     VersionedTable.write(Seq((1L, "x")).toDF("k", "v"), path, SaveMode.Overwrite)
     // another writer steals version 1 before our append commits
     val logDir = java.nio.file.Paths.get(path, "_graft_log")
@@ -389,7 +390,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("change feed skips optimize-zorder commits like compact (pure layout)") {
-    val path = Files.createTempDirectory("vtz").resolve("t").toString
+    val path = tempDir("vtz").resolve("t").toString
     VersionedTable.write(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"),
       path, SaveMode.Overwrite)                                     // v0
     VersionedTable.write(Seq((3L, 30L)).toDF("k", "v"),
@@ -407,7 +408,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("restore: head becomes an old version, metadata-only, history preserved") {
-    val path = Files.createTempDirectory("vt").resolve("t").toString
+    val path = tempDir("vt").resolve("t").toString
     VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
       path, SaveMode.Overwrite)                                    // v0
     VersionedTable.write(Seq((3L, "c")).toDF("k", "v"),
@@ -438,7 +439,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("op tags with control characters round-trip through manifests and checkpoints") {
-    val path = Files.createTempDirectory("vt_esc").resolve("t").toString
+    val path = tempDir("vt_esc").resolve("t").toString
     val op = "a\tb\n\"c\\d"
     val n = 12 // crosses the v10 checkpoint
     (0 until n).foreach { i =>
@@ -476,7 +477,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.parse(checkpoint).ops.contains(Seq((0L, "batch-0"), (1L, "say \"hi\""))))
     assert(VersionedTable.render(VersionedTable.parse(checkpoint)) == checkpoint)
     // a manifest committed by an older writer is served unchanged
-    val path = Files.createTempDirectory("vt_codec").resolve("t").toString
+    val path = tempDir("vt_codec").resolve("t").toString
     VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), path, SaveMode.Overwrite)
     val logDir = java.nio.file.Paths.get(path, "_graft_log")
     Files.writeString(logDir.resolve("v00000001.json"), withDv.replace("\"version\":3", "\"version\":1"))
@@ -486,7 +487,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("metadata-only calls start no Spark job") {
-    val path = Files.createTempDirectory("vt_meta").resolve("t").toString
+    val path = tempDir("vt_meta").resolve("t").toString
     VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, SaveMode.Overwrite)
     VersionedTable.write(Seq((3L, "c")).toDF("k", "v"), path, SaveMode.Append)
     VersionedTable.deleteWhere(spark, path, $"k" === 1L)
@@ -500,5 +501,100 @@ class VersionedTableSpec extends SparkSpec {
       assert(VersionedTable.files(path, rv) == VersionedTable.files(path, 0L))
     }
     assert(jobs == 0, s"$jobs Spark jobs from metadata-only calls")
+  }
+
+  /** v0: 40 rows in two files; v1: a widening append; v2: a DV delete —
+    * then a range and an equality read, so both sidecars cover every file.
+    */
+  private def evolvedTable(name: String): String = {
+    val path = tempDir(name).resolve("t").toString
+    VersionedTable.write((1L to 40L).map(i => (i, s"r$i")).toDF("k", "v").repartition(2),
+      path, SaveMode.Overwrite)
+    VersionedTable.write((41L to 60L).map(i => (i, s"r$i", i * 0.5)).toDF("k", "v", "score"),
+      path, SaveMode.Append)
+    VersionedTable.deleteWhere(spark, path, $"k" % 7 === 0L)
+    VersionedTable.readWhere(spark, path, "k", 0L, 100L)
+    VersionedTable.readWhereEquals(spark, path, "k", 5L)
+    path
+  }
+
+  test("an append that retypes a column fails before it commits; the table stays readable") {
+    val path = tempDir("vt_retype").resolve("t").toString
+    VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), path, SaveMode.Overwrite)
+    val e = intercept[Exception] {
+      VersionedTable.write(Seq(("x", "b")).toDF("k", "v"), path, SaveMode.Append)
+    }
+    assert(e.getMessage.contains("CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE"), e.getMessage)
+    assert(VersionedTable.latestVersion(path).contains(0L))
+    assert(VersionedTable.read(spark, path).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+  }
+
+  test("manifest codec: a recorded schema round-trips byte-identical") {
+    val line = """{"version":2,"op":"append","files":["/t/data/a/p0.parquet"],""" +
+      """"dv":["/t/dv/c/p0.parquet"],"schema":"{\"type\":\"struct\",\"fields\":[""" +
+      """{\"name\":\"k\",\"type\":\"long\",\"nullable\":true,\"metadata\":{}},""" +
+      """{\"name\":\"v\",\"type\":\"string\",\"nullable\":true,\"metadata\":{}}]}"}"""
+    val m = VersionedTable.parse(line)
+    assert(m.schema.contains(new StructType().add("k", LongType).add("v", StringType)))
+    assert(VersionedTable.render(m) == line)
+    // manifests without the field parse to no schema and keep their bytes
+    val old = """{"version":0,"op":"overwrite","files":["/t/data/a/p0.parquet"]}"""
+    assert(VersionedTable.parse(old).schema.isEmpty)
+    assert(VersionedTable.render(VersionedTable.parse(old)) == old)
+    // every commit records the schema its reads declare
+    val path = evolvedTable("vt_codec2")
+    assert(VersionedTable.versions(path).forall(v =>
+      VersionedTable.readVersion(spark, path, v).schema ==
+        VersionedTable.parse(Files.readString(java.nio.file.Paths.get(path, "_graft_log",
+          f"v$v%08d.json"))).schema.get))
+  }
+
+  test("manifests without a schema read back identically; the next append records it") {
+    val path = evolvedTable("vt_compat")
+    def rows(df: org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) =
+      (df.columns.toSeq, df.collect().map(_.toString).toSeq.sorted)
+    def reads(): Seq[(Seq[String], Seq[String])] =
+      VersionedTable.versions(path).map(v => rows(VersionedTable.readVersion(spark, path, v))) ++
+        Seq(rows(VersionedTable.read(spark, path)),
+          rows(VersionedTable.readWhere(spark, path, "k", 10L, 50L)._1),
+          rows(VersionedTable.readWhere(spark, path, "score", 21.0, 25.0)._1),
+          rows(VersionedTable.readWhereEquals(spark, path, "k", 12L)._1),
+          rows(VersionedTable.changes(spark, path, 0L, 2L)))
+    val before = reads()
+    // rewrite every manifest as the format wrote it before it recorded schemas
+    val logDir = java.nio.file.Paths.get(path, "_graft_log")
+    VersionedTable.versions(path).foreach { v =>
+      val f = logDir.resolve(f"v$v%08d.json")
+      Files.writeString(f, VersionedTable.render(
+        VersionedTable.parse(Files.readString(f)).copy(schema = None)))
+    }
+    assert(reads() == before)
+    // such a version costs one footer-inference job on top of the query
+    assert(jobsStartedBy(VersionedTable.readVersion(spark, path, 2L)) == 1)
+    val v3 = VersionedTable.write(Seq((61L, "r61", 1.5)).toDF("k", "v", "score"), path,
+      SaveMode.Append)
+    val recorded = VersionedTable.parse(Files.readString(logDir.resolve(f"v$v3%08d.json"))).schema
+    val inferred = spark.read.option("mergeSchema", "true")
+      .parquet(VersionedTable.files(path, v3): _*).schema
+    assert(recorded.contains(inferred))
+  }
+
+  // Jobs per call on `evolvedTable`, local[4]. Before manifests recorded
+  // the schema, every scan inferred it with footer jobs: one per data
+  // scan and one per DV or sidecar read. Those counts were readVersion 4,
+  // readWhere 6, readWhereEquals 6, changes 7 and deleteWhere 4; each
+  // budget below is that count minus its discovery jobs.
+  test("job budget: reads, the change feed and a delete start only their query's jobs") {
+    val path = evolvedTable("vt_jobs")
+    // data scan + DV broadcast
+    assert(jobsStartedBy(VersionedTable.readVersion(spark, path, 2L).collect()) == 2)
+    // sidecar verdicts + data scan + DV broadcast
+    assert(jobsStartedBy(VersionedTable.readWhere(spark, path, "k", 10L, 20L)._1.collect()) == 3)
+    assert(jobsStartedBy(
+      VersionedTable.readWhereEquals(spark, path, "k", 12L)._1.collect()) == 3)
+    // the union of inserts and DV-matched deletes + the DV broadcast
+    assert(jobsStartedBy(VersionedTable.changes(spark, path, 0L, 2L).collect()) == 2)
+    // DV broadcast + the DV write
+    assert(jobsStartedBy(VersionedTable.deleteWhere(spark, path, $"k" === 3L)) == 2)
   }
 }
