@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * Delta dependency: interleave the bits of the (rank-normalized)
   * clustering columns into a Z-value, range-partition + sort the write by
   * it. Files then cover small rectangles of the (c1 × c2) space, so
-  * min/max stats prune on EITHER column (see StatsIndex), not just the
-  * leading sort key.
+  * min/max stats prune on EITHER column (see VersionedTable.readWhere),
+  * not just the leading sort key.
   */
 object Clustering {
 

@@ -686,86 +686,85 @@ object DeltaInterop {
     case _ => false
   }
 
-  /** One aggregation over the freshly-staged files, grouped by
-    * `input_file_name`, producing each file's protocol-shaped stats
-    * JSON: `{"numRecords":N,"minValues":{..},"maxValues":{..},
-    * "nullCount":{..}}` keyed by staged-relative path. Driver traffic is
-    * one row per staged FILE (never per data row); all-null columns are
+  /** Each staged file's protocol-shaped stats JSON:
+    * `{"numRecords":N,"minValues":{..},"maxValues":{..},"nullCount":{..}}`
+    * keyed by staged-relative path, read from the files' parquet footers
+    * on the driver (no Spark job). Min/max render through the engine's
+    * cast to string, evaluated over a local DataFrame of the footer
+    * values. A column the footer gives no bounds for (all-null, a float
+    * column holding NaN, a string past parquet's stats size limit) is
     * omitted from minValues/maxValues, matching the protocol's "may
     * omit" rule.
     */
-  private def collectStagedStats(spark: SparkSession, dir: Path,
+  private def stagedStats(spark: SparkSession, dir: Path, files: Seq[Path],
       schema: StructType, partCols: Seq[String]): Map[String, String] = {
     val tracked = schema.fields.toSeq
       .filterNot(f => partCols.contains(f.name))
       .filter(f => statsTrackable(f.dataType))
     def bare(f: StructField) = f.dataType.isInstanceOf[NumericType] || f.dataType == BooleanType
-    val aggs = count(lit(1)).as("__n") +: tracked.flatMap(f => Seq(
-      min(col(s"`${f.name}`")).cast("string").as(s"mn_${f.name}"),
-      max(col(s"`${f.name}`")).cast("string").as(s"mx_${f.name}"),
-      sum(when(col(s"`${f.name}`").isNull, 1L).otherwise(0L))
-        .as(s"nc_${f.name}")))
-    spark.read.schema(schema).parquet(dir.toString)
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().map { r =>
-        val rel = dir.relativize(Paths.get(new java.net.URI(r.getString(0)))).toString
-        val stats = mapper.createObjectNode().put("numRecords", r.getLong(r.fieldIndex("__n")))
-        Seq("minValues" -> "mn_", "maxValues" -> "mx_").foreach { case (field, prefix) =>
-          val o = stats.putObject(field)
-          tracked.foreach { f =>
-            val i = r.fieldIndex(prefix + f.name)
-            // NaN/Infinity are not legal bare JSON tokens: a double
-            // column containing NaN makes min/max stringify to "NaN", and
-            // emitting it unquoted would corrupt add.stats for every
-            // later reader. Delta stats are per-column OPTIONAL — omit
-            // the non-finite entry instead.
-            if (!r.isNullAt(i)) r.getString(i) match {
-              case v if !bare(f) => o.put(f.name, v)
-              case "NaN" | "Infinity" | "-Infinity" => ()
-              case v => o.putRawValue(f.name, new RawValue(v))
-            }
+    val stats = files.map(p => FileStats.read(p.toString, StructType(tracked)))
+    // columns c0 (min) and c1 (max) of each tracked field, in field order
+    val cells = StructType(tracked.zipWithIndex.flatMap { case (f, i) =>
+      Seq(StructField(s"c${2 * i}", f.dataType), StructField(s"c${2 * i + 1}", f.dataType)) })
+    val rendered = spark.createDataFrame(stats.map(s => Row.fromSeq(tracked.flatMap(f =>
+        Seq(s.minValues.get(f.name).orNull, s.maxValues.get(f.name).orNull)))).asJava, cells)
+      .select(cells.fieldNames.toSeq.map(col(_).cast("string")): _*)
+      .collect()
+    files.zip(stats).zip(rendered).map { case ((p, st), r) =>
+      val o = mapper.createObjectNode().put("numRecords", st.numRecords)
+      Seq("minValues" -> 0, "maxValues" -> 1).foreach { case (field, offset) =>
+        val m = o.putObject(field)
+        tracked.zipWithIndex.foreach { case (f, i) =>
+          val j = 2 * i + offset
+          // NaN/Infinity are not legal bare JSON tokens: emitting one
+          // unquoted would corrupt add.stats for every later reader.
+          // Delta stats are per-column OPTIONAL — omit the entry instead.
+          if (!r.isNullAt(j)) r.getString(j) match {
+            case v if !bare(f) => m.put(f.name, v)
+            case "NaN" | "Infinity" | "-Infinity" => ()
+            case v => m.putRawValue(f.name, new RawValue(v))
           }
         }
-        val nc = stats.putObject("nullCount")
-        tracked.foreach(f => nc.put(f.name, r.getLong(r.fieldIndex(s"nc_${f.name}"))))
-        rel -> mapper.writeValueAsString(stats)
-      }.toMap
+      }
+      val nc = o.putObject("nullCount")
+      tracked.foreach(f => st.nullCount.get(f.name).foreach(nc.put(f.name, _)))
+      dir.relativize(p).toString -> mapper.writeValueAsString(o)
+    }.toMap
   }
 
   /** Stage `df` with Spark's parquet writer under `tmp` (hive-style
     * partition dirs, which Delta also uses), take per-file stats from
-    * one aggregation over the staged files (the write amplification
-    * Delta writers pay for data skipping), move the files under the
-    * table root, and return their add actions. Under column mapping the
-    * staged schema IS the physical one, so stats are keyed by physical
-    * names — exactly what the reader resolves.
+    * the staged files' footers, move the files under the table root, and
+    * return their add actions. Under column mapping the staged schema IS
+    * the physical one, so stats are keyed by physical names — exactly
+    * what the reader resolves.
     */
   private def stageAdds(df: DataFrame, root: Path, tmp: Path,
       partitionBy: Seq[String], dataChange: Boolean = true): Seq[Add] = {
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmp.toString)
-    val stats = collectStagedStats(df.sparkSession, tmp, df.schema, partitionBy)
-    withWalk(tmp)(_.filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
-      .sortBy(_.toString).map { p =>
-        val rel = tmp.relativize(p)
-        val target = root.resolve(rel)
-        Files.createDirectories(target.getParent)
-        Files.move(p, target)
-        val pv = rel.iterator().asScala.toSeq.dropRight(1).map(_.toString)
-          .filter(_.contains("=")).map { seg =>
-            val Array(k, v) = seg.split("=", 2)
-            // directory segments are hive-ESCAPED by Spark's writer
-            // (":" → "%3A", "/" → "%2F", …); the protocol stores the REAL
-            // value in partitionValues — recording the escaped segment
-            // verbatim surfaced "a%3Ab" as column data on read and broke
-            // pruning against externally-written tables
-            k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
-              else ExternalCatalogUtils.unescapePathName(v))
-          }.toMap
-        Add(DeltaFile(encodePath(rel.toString), pv, None, stats.get(rel.toString),
-          Files.size(target), Files.getLastModifiedTime(target).toMillis), dataChange)
-      }
+    val staged = withWalk(tmp)(_.filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
+      .sortBy(_.toString)
+    val stats = stagedStats(df.sparkSession, tmp, staged, df.schema, partitionBy)
+    staged.map { p =>
+      val rel = tmp.relativize(p)
+      val target = root.resolve(rel)
+      Files.createDirectories(target.getParent)
+      Files.move(p, target)
+      val pv = rel.iterator().asScala.toSeq.dropRight(1).map(_.toString)
+        .filter(_.contains("=")).map { seg =>
+          val Array(k, v) = seg.split("=", 2)
+          // directory segments are hive-ESCAPED by Spark's writer
+          // (":" → "%3A", "/" → "%2F", …); the protocol stores the REAL
+          // value in partitionValues — recording the escaped segment
+          // verbatim surfaced "a%3Ab" as column data on read and broke
+          // pruning against externally-written tables
+          k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
+            else ExternalCatalogUtils.unescapePathName(v))
+        }.toMap
+      Add(DeltaFile(encodePath(rel.toString), pv, None, stats.get(rel.toString),
+        Files.size(target), Files.getLastModifiedTime(target).toMillis), dataChange)
+    }
   }
 
   /** Deterministic physical name for name-mode column mapping: real

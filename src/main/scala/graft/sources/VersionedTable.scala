@@ -41,6 +41,13 @@ import org.apache.spark.sql.types._
   *   conflict fails the commit), and older files surface NULL for the
   *   new columns. A manifest from before schemas were recorded costs one
   *   footer inference; the next commit records the schema;
+  * - each manifest also records every live file's size, row count and
+  *   per-column min/max/null count (Delta's `add.stats`), read at commit
+  *   time from the parquet footers just written, so [[readWhere]] and
+  *   [[readWhereEquals]] prune files on the driver from the log alone and
+  *   [[compact]] plans from the recorded sizes. A manifest from before
+  *   stats were recorded gets them from a driver-side footer read; the
+  *   next commit records them;
   * - `readVersion` time-travels by reading an old manifest — old data
   *   files are never mutated.
   *
@@ -87,17 +94,19 @@ object VersionedTable {
   // One JSON record type for the whole log, read and written by one
   // Jackson parse/render pair. A commit manifest is
   // `{"version":N,"op":…,"files":[…]}` plus `"dv":[…]` only when the
-  // version has deletion vectors and `"schema":"…"` (the table schema as
-  // Spark's DataType JSON) only when one was recorded, so older manifests
-  // keep their bytes; a checkpoint is `{"version":N,"ops":[[v,op],…]}`.
-  // Strings are JSON-escaped, control characters included. Reading
-  // tolerates the raw control characters older writers left unescaped in
-  // op tags.
+  // version has deletion vectors, `"schema":"…"` (the table schema as
+  // Spark's DataType JSON) only when one was recorded and `"stats":{…}`
+  // (each live file's [[FileStats]], keyed by path, in `files` order)
+  // only when stats were recorded, so older manifests keep their bytes;
+  // a checkpoint is `{"version":N,"ops":[[v,op],…]}`. Strings are
+  // JSON-escaped, control characters included. Reading tolerates the raw
+  // control characters older writers left unescaped in op tags.
 
   /** A log record: a commit manifest, or a checkpoint when `ops` is set. */
   private[sources] final case class Manifest(version: Long, op: String,
       files: Seq[String], dv: Seq[String] = Seq.empty,
       schema: Option[StructType] = None,
+      stats: Map[String, FileStats] = Map.empty,
       ops: Option[Seq[(Long, String)]] = None)
 
   private val mapper = JsonMapper.builder()
@@ -107,9 +116,12 @@ object VersionedTable {
     val n = mapper.readTree(s)
     def strings(field: String): Seq[String] =
       n.path(field).elements().asScala.map(_.asText).toSeq
+    val schema =
+      Option(n.get("schema")).map(s => DataType.fromJson(s.asText).asInstanceOf[StructType])
     Manifest(n.path("version").asLong, n.path("op").asText, strings("files"),
-      strings("dv"),
-      Option(n.get("schema")).map(s => DataType.fromJson(s.asText).asInstanceOf[StructType]),
+      strings("dv"), schema,
+      n.path("stats").properties().asScala.map(e =>
+        e.getKey -> FileStats.fromJson(e.getValue, schema.getOrElse(new StructType()))).toMap,
       Option(n.get("ops")).map(_.elements().asScala
         .map(e => (e.get(0).asLong, e.get(1).asText)).toSeq))
   }
@@ -129,6 +141,10 @@ object VersionedTable {
         strings("files", m.files)
         if (m.dv.nonEmpty) strings("dv", m.dv)
         m.schema.foreach(s => o.put("schema", s.json))
+        if (m.stats.nonEmpty) {
+          val st = o.putObject("stats")
+          m.files.foreach(f => m.stats.get(f).foreach(_.toJson(st.putObject(f))))
+        }
     }
     mapper.writeValueAsString(o)
   }
@@ -144,6 +160,13 @@ object VersionedTable {
     m.schema.getOrElse(
       if (m.files.isEmpty) new StructType()
       else spark.read.option("mergeSchema", "true").parquet(m.files: _*).schema)
+
+  /** Every live file's stats in version `m` under its table `schema`:
+    * the recorded ones, or — for a manifest written before stats were
+    * recorded — a driver-side footer read. The next commit records them.
+    */
+  private def statsOf(m: Manifest, schema: StructType): Map[String, FileStats] =
+    m.files.map(f => f -> m.stats.getOrElse(f, FileStats.read(f, schema))).toMap
 
   /** Stage `content` beside `target` and link it into place; false if
     * `target` already exists (lost the race). put-if-absent must FAIL
@@ -213,19 +236,37 @@ object VersionedTable {
 
   /** One commit attempt: the new version's files, schema and deletion
     * vectors, plus the directories staged for it alone (deleted if it
-    * loses).
+    * loses) and any file stats it already knows.
     */
   private final case class Attempt(files: Seq[String], schema: Option[StructType],
-      dv: Seq[String] = Seq.empty, staged: Seq[Path] = Seq.empty)
+      dv: Seq[String] = Seq.empty, staged: Seq[Path] = Seq.empty,
+      stats: Map[String, FileStats] = Map.empty)
+
+  /** The file stats a commit of `a` on `base` records: the attempt's
+    * own, else the base's (with every column the commit adds to the
+    * schema recorded all-null, since those files predate it), else read
+    * from the file's footer on the driver — new files, and files of a
+    * base that recorded none. Stats describe the columns of a recorded
+    * schema, so a commit without one records none.
+    */
+  private def statsFor(base: Manifest, a: Attempt): Map[String, FileStats] =
+    a.schema.fold(Map.empty[String, FileStats]) { schema =>
+      val carried = base.schema.fold(Map.empty[String, FileStats]) { b =>
+        val added = schema.fieldNames.toSeq.filterNot(b.fieldNames.toSet)
+        base.stats.map { case (f, st) => f -> st.withAbsent(added) }
+      }
+      a.files.map(f => f -> a.stats.get(f).orElse(carried.get(f))
+        .getOrElse(FileStats.read(f, schema))).toMap
+    }
 
   /** The optimistic-concurrency loop every commit goes through. Captures
     * the latest manifest as the base (an empty table is an empty base at
     * version -1, unless `requireBase`), asks `plan` for the commit and
-    * links it put-if-absent at base+1. Losing the race deletes the
-    * attempt's staged directories and re-plans against the new latest
-    * version, so a read-modify-write commit never lands on a stale
-    * snapshot; blind writes stage nothing per attempt and keep their data
-    * across retries. `plan` returning None ends the loop without a
+    * links it, with its files' stats, put-if-absent at base+1. Losing
+    * the race deletes the attempt's staged directories and re-plans
+    * against the new latest version, so a read-modify-write commit never
+    * lands on a stale snapshot; blind writes stage nothing per attempt
+    * and keep their data across retries. `plan` returning None ends the loop without a
     * commit. A landed commit writes the checkpoint when one is due.
     */
   private def commitLoop(path: String, op: String, requireBase: Boolean)(
@@ -239,7 +280,7 @@ object VersionedTable {
         case None => result = Some(None)
         case Some(a) =>
           if (putIfAbsent(manifestPath(path, next),
-              render(Manifest(next, op, a.files, a.dv, a.schema)))) {
+              render(Manifest(next, op, a.files, a.dv, a.schema, statsFor(base, a))))) {
             maybeCheckpoint(path, next)
             result = Some(Some(next))
           } else a.staged.foreach(discardData)
@@ -315,9 +356,9 @@ object VersionedTable {
     * overflow-safe min-max normalization + bit interleave and ONE range
     * shuffle into `numFiles` z-contiguous partitions — before the
     * ordinary commit protocol, so each committed file owns a tight
-    * min/max box in BOTH dimensions. No separate read path exists:
-    * [[readWhere]]'s lazily-built stats sidecar sees those boxes and
-    * prunes to ~√files for a narrow predicate on EITHER column, where a
+    * min/max box in BOTH dimensions. No separate read path exists: the
+    * commit records those boxes in the log and [[readWhere]] prunes on
+    * them to ~√files for a narrow predicate on EITHER column, where a
     * single-column sort layout prunes on one and scans everything on
     * the other. DV-sound like every read: deletion vectors only shrink
     * a file's live rows, so the clustered boxes stay valid bounds.
@@ -451,6 +492,14 @@ object VersionedTable {
       fs: Seq[String], dvs: Seq[String]): DataFrame =
     subtractDv(spark, withPos(spark, schema, fs), dvs)
 
+  /** The live rows of `fs` under `schema` and `dvs`: the plain scan when
+    * there are no deletion vectors (zero overhead).
+    */
+  private def liveRows(spark: SparkSession, schema: StructType, fs: Seq[String],
+      dvs: Seq[String]): DataFrame =
+    if (dvs.isEmpty) spark.read.schema(schema).parquet(fs: _*)
+    else liveWithPos(spark, schema, fs, dvs).drop(FileCol, PosCol)
+
   /** `_metadata.file_path` is a URI (`file:///…`); manifests store plain
     * paths. Driver-side mapping for pruned-merge's touched-file list.
     */
@@ -518,8 +567,7 @@ object VersionedTable {
       val untouched = base.files.filterNot(touched)
       val targetSlice =
         if (touched.isEmpty) live.drop(FileCol, PosCol).limit(0)
-        else liveWithPos(spark, schema, base.files.filter(touched), base.dv)
-          .drop(FileCol, PosCol)
+        else liveRows(spark, schema, base.files.filter(touched), base.dv)
       val merged = graft.operators.Merge.upsert(targetSlice, source, keys)
       val (dataDir, newFiles) = writeData(merged, path)
       // DV entries for rewritten files go inert with the files themselves
@@ -594,8 +642,7 @@ object VersionedTable {
   def readVersion(spark: SparkSession, path: String, version: Long): DataFrame = {
     val m = readManifest(path, version)
     if (m.files.isEmpty) spark.emptyDataFrame
-    else if (m.dv.isEmpty) spark.read.schema(schemaOf(spark, m)).parquet(m.files: _*)
-    else liveWithPos(spark, schemaOf(spark, m), m.files, m.dv).drop(FileCol, PosCol)
+    else liveRows(spark, schemaOf(spark, m), m.files, m.dv)
   }
 
   /** RESTORE `version` as a NEW commit: the table's head becomes a
@@ -604,7 +651,8 @@ object VersionedTable {
     * time travel made durable while preserving history; a later restore
     * can roll the restore itself back). Metadata-only: no data file is
     * read, moved, or rewritten, so restoring a 100 TB table costs one
-    * manifest write (the target's recorded schema is copied as is).
+    * manifest write (the target's recorded schema and stats are copied
+    * as they are).
     * Retries on version races like any blind commit;
     * requires the target version's manifest to still exist (VACUUM with
     * a retention window shorter than the restore target forfeits it).
@@ -614,7 +662,7 @@ object VersionedTable {
       s"cannot restore to version $version: manifest vacuumed or absent")
     val target = readManifest(path, version)
     commitLoop(path, s"restore($version)", requireBase = true)(_ =>
-      Some(Attempt(target.files, target.schema, target.dv))).get
+      Some(Attempt(target.files, target.schema, target.dv, stats = target.stats))).get
   }
 
   /** Read the latest version. */
@@ -623,117 +671,90 @@ object VersionedTable {
 
   // ---------------------------------------------------- data skipping
   //
-  // Delta stores per-file column min/max in its log and prunes files
-  // before the scan. Here the stats live in a sidecar parquet per
-  // indexed column (`_graft_stats/<col>/`), keyed by data-file path.
-  // Data files are IMMUTABLE, so a file's stats never change: the
-  // sidecar is append-only, missing entries are computed lazily (one
-  // aggregation over just the unindexed files), and entries for
-  // vacuumed files are inert. Deletion vectors only shrink a file's
-  // live rows, so manifest-file stats stay sound bounds — a fully
-  // deleted range costs one false-positive file read, never a wrong
-  // result.
+  // Delta keeps each file's row count and per-column min/max/null count
+  // on its `add` action and prunes files before the scan. Same here: every
+  // commit records its files' [[FileStats]] in the manifest, read on the
+  // driver from the parquet footers Spark has just written, so a skipping
+  // read decides which files to scan from the log alone, with no Spark
+  // job. The decision filters a local DataFrame of the stats, so the
+  // engine's own type coercion runs every comparison — no driver-side
+  // value comparisons. Data files are immutable, so a file's stats never
+  // change. Deletion vectors only shrink a file's live rows, so the
+  // recorded stats stay sound bounds — a fully deleted range costs one
+  // false-positive file read, never a wrong result.
 
-  /** The one sidecar-skipping read under [[readWhere]] and
-    * [[readWhereEquals]]: the live rows of the latest version matching
-    * `cond`, scanning only the files whose sidecar entry under `dir`
-    * satisfies `keep`. `sidecar` gives the sidecar's schema for the
-    * table schema. One pass over the sidecar collects (file, keep)
-    * for every live file it covers; files it does not cover get entries
-    * from `index` — handed a scan of exactly those files under the table
-    * schema, it returns `uri` (`_metadata.file_path`) plus the
-    * sidecar's value columns — in one append, and a second pass then
-    * reads their verdicts. A file still without an entry (lost append
-    * race) is read conservatively. Driver traffic is bounded by the FILE
-    * count (the same order as reading the manifest), never by rows.
-    * Returns (rows, filesRead, filesTotal).
-    */
-  private def skippingRead(spark: SparkSession, path: String, dir: Path,
-      sidecar: StructType => StructType, index: DataFrame => DataFrame,
-      keep: Column, cond: Column): (DataFrame, Long, Long) = {
-    val head = readManifest(path, latestOrFail(path))
-    val fs = head.files
-    if (fs.isEmpty) return (spark.emptyDataFrame, 0L, 0L)
-    val schema = schemaOf(spark, head)
-    val sidecarSchema = sidecar(schema)
-    def verdicts(): Seq[(String, Boolean)] =
-      if (!Files.exists(dir)) Seq.empty
-      else spark.read.schema(sidecarSchema).parquet(dir.toString)
-        .filter(col("file").isInCollection(fs))
-        .select(col("file"), coalesce(keep, lit(false)))
-        .collect().map(r => (r.getString(0), r.getBoolean(1))).toSeq
-    val first = verdicts()
-    val missing = fs.filterNot(first.map(_._1).toSet)
-    val entries =
-      if (missing.isEmpty) first
-      else {
-        index(spark.read.schema(schema).parquet(missing: _*))
-          // manifests store plain paths; `file_path` is a file: URI on the
-          // local FS — strip the scheme so sidecar keys match manifests
-          .withColumn("uri", regexp_replace(col("uri"), "^file:(//)?", ""))
-          .withColumnRenamed("uri", "file")
-          .coalesce(1)
-          .write.mode(SaveMode.Append).parquet(dir.toString)
-        verdicts()
-      }
-    val indexed = entries.map(_._1).toSet
-    val toRead = entries.collect { case (f, true) => f }.distinct ++
-      fs.filterNot(indexed)
-    val out =
-      if (toRead.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema).filter(cond)
-      else liveWithPos(spark, schema, toRead, head.dv).drop(FileCol, PosCol).filter(cond)
-    (out, toRead.size.toLong, fs.size.toLong)
-  }
-
-  private def statsDir(path: String, column: String): Path =
-    Paths.get(path, "_graft_stats", column)
-
-  /** A stats sidecar row: a data file and its min/max of a column of
-    * type `t`.
+  /** The schema of a min/max stats row: a data file and its min/max of a
+    * column of type `t`.
     */
   private def statsSchema(t: DataType): StructType =
     new StructType().add("file", StringType).add("mn", t).add("mx", t)
 
+  /** The latest manifest with its table schema, after checking that
+    * `column` is in it.
+    */
+  private def head(spark: SparkSession, path: String,
+      column: String): (Manifest, StructType) = {
+    val m = readManifest(path, latestOrFail(path))
+    val schema = schemaOf(spark, m)
+    if (m.files.nonEmpty && !schema.fieldNames.contains(column))
+      throw new IllegalArgumentException(
+        s"data-skipping column '$column' is not in the schema of $path")
+    (m, schema)
+  }
+
+  /** The files of `m` whose stats allow a `column` value in [lo, hi]: the
+    * stats of those with bounds go through a local DataFrame filter
+    * (no Spark job); files whose `column` is all NULL (written before
+    * the column existed, or genuinely all-null) are skipped, since a
+    * range excludes NULL; files without usable stats are kept.
+    */
+  private def minMaxCandidates(spark: SparkSession, m: Manifest, schema: StructType,
+      column: String, lo: Any, hi: Any): Seq[String] = {
+    val stats = statsOf(m, schema)
+    val bounded = m.files.flatMap(f => stats(f).bounds(column).map { case (mn, mx) =>
+      Row(f, mn, mx) })
+    val kept = spark.createDataFrame(bounded.asJava, statsSchema(schema(column).dataType))
+      .filter(coalesce(col("mx") >= lit(lo) && col("mn") <= lit(hi), lit(false)))
+      .select("file").collect().map(_.getString(0)).toSet
+    m.files.filter(f => kept(f) || stats(f).bounds(column).isEmpty)
+  }
+
+  /** The live rows of `fs` (files of `m`) matching `cond`. */
+  private def scan(spark: SparkSession, m: Manifest, schema: StructType,
+      fs: Seq[String], cond: Column): DataFrame =
+    if (fs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema).filter(cond)
+    else liveRows(spark, schema, fs, m.dv).filter(cond)
+
   /** Range read with file skipping: the rows of the latest version
-    * satisfying `lo <= column <= hi`, scanning only files whose
+    * satisfying `lo <= column <= hi`, scanning only files whose recorded
     * [min,max] intersects the range. Result is identical to
     * `read(...).filter(...)`; only the files touched differ. Returns
     * (rows, filesRead, filesTotal).
     *
-    * First call over new files pays one stats aggregation for exactly
-    * those files (grouped by `_metadata.file_path` — the shuffle is
-    * file-count wide); later calls prune from the sidecar alone. All
-    * range comparisons run in the engine with its own type coercion —
-    * no driver-side value comparisons. All-null files (mn = mx = NULL)
-    * are skipped: the range filter excludes null rows regardless — files
-    * that predate the column read it as NULL under the declared schema.
+    * The pruning reads only the log (footers too, for files of a
+    * manifest written before stats were recorded), so the read starts
+    * just the scan's jobs.
     */
   def readWhere(spark: SparkSession, path: String, column: String,
       lo: Any, hi: Any): (DataFrame, Long, Long) = {
-    def sidecar(schema: StructType): StructType =
-      statsSchema(schema.find(_.name == column).map(_.dataType).getOrElse(
-        throw new IllegalArgumentException(
-          s"data-skipping column '$column' is not in the schema of $path")))
-    def index(src: DataFrame): DataFrame =
-      src.groupBy(col("_metadata.file_path").as("uri"))
-        .agg(min(col(column)).as("mn"), max(col(column)).as("mx"))
-    skippingRead(spark, path, statsDir(path, column), sidecar, index,
-      keep = col("mx") >= lit(lo) && col("mn") <= lit(hi),
-      cond = col(column) >= lit(lo) && col(column) <= lit(hi))
+    val (m, schema) = head(spark, path, column)
+    if (m.files.isEmpty) return (spark.emptyDataFrame, 0L, 0L)
+    val fs = minMaxCandidates(spark, m, schema, column, lo, hi)
+    (scan(spark, m, schema, fs, col(column) >= lit(lo) && col(column) <= lit(hi)),
+      fs.size.toLong, m.files.size.toLong)
   }
 
   // ---------------------------------------------------------- bloom skip
-  // Min/max stats prune RANGE predicates; a point lookup on a column the
-  // table is not clustered by (every file's [min,max] spans the probe)
-  // skips nothing. The Bloom sidecar fixes exactly that: per file, the
-  // SET of k md5-derived bit positions its values touch — equality
-  // probes read only files whose set covers all k probe positions.
-  // Same lifecycle discipline as the stats sidecar: data files are
-  // immutable so entries never change, missing entries are computed
-  // lazily for exactly the unindexed files, DVs only shrink live rows
-  // (a fully-deleted value costs one false-positive file read, never a
-  // wrong result), and [[vacuumStats]]-style cleanup is inherited by
-  // keying on the same file paths.
+  // Min/max stats prune a point lookup only where the table is clustered
+  // by the column; elsewhere every file's [min,max] spans the probe. The
+  // Bloom sidecar (`_graft_bloom/<col>/`, keyed by data-file path) is the
+  // second stage for exactly those files: per file, the SET of k
+  // md5-derived bit positions its values touch — equality probes read
+  // only files whose set covers all k probe positions. Data files are
+  // immutable, so entries never change; missing entries are computed
+  // lazily for exactly the unindexed candidates; DVs only shrink live
+  // rows (a fully-deleted value costs one false-positive file read, never
+  // a wrong result); [[vacuumStats]] drops the entries of dead files.
 
   private def bloomDir(path: String, column: String): Path =
     Paths.get(path, "_graft_bloom", column)
@@ -751,15 +772,70 @@ object VersionedTable {
       .map("%02x".format(_)).mkString
   }
 
-  /** Equality read with Bloom file skipping: the live rows of the latest
-    * version where `column = value`, scanning only files whose Bloom
-    * side entry covers the probe. Result is identical to
-    * `read(...).filter(col === value)`; only files touched differ.
-    * Returns (rows, filesRead, filesTotal).
+  /** The Bloom entries of `fs` for `column` of a table of `schema`: each
+    * file's sorted position set, from one aggregation collected to the
+    * driver (one row per file). A file whose values are all NULL for the
+    * column contributes no position rows, and its sound entry is the
+    * EMPTY set — an equality probe excludes null.
+    */
+  private def bloomIndex(spark: SparkSession, schema: StructType, fs: Seq[String],
+      column: String): Map[String, Seq[Int]] = {
+    val posExprs = (0 until BloomK).map { i =>
+      (graft.expressions.Md5Prefix.md5Prefix(
+        concat(lit(s"bloom-v1|$i|"), col("v")), 12) % BloomBits)
+        .cast("int")
+    }
+    val sets = spark.read.schema(schema).parquet(fs: _*)
+      .select(col("_metadata.file_path").as("uri"),
+        col(column).cast("string").as("v"))
+      .filter(col("v").isNotNull)
+      .select(col("uri"), explode(array(posExprs: _*)).as("pos"))
+      .groupBy("uri")
+      .agg(sort_array(collect_set(col("pos"))).as("pos_set"))
+      .collect().map(r => uriToPath(r.getString(0)) -> r.getSeq[Int](1)).toMap
+    fs.map(f => f -> sets.getOrElse(f, Seq.empty)).toMap
+  }
+
+  /** The files of `fs` whose Bloom entry for `column` may hold `value`.
+    * One read of the sidecar collects the entries it has for `fs`; the
+    * files it lacks are indexed and their entries appended in one write.
+    * The probe's membership test runs on the driver over the collected
+    * position sets (exact integers). Driver traffic is bounded by the
+    * file count, never by rows.
+    */
+  private def bloomCandidates(spark: SparkSession, path: String, schema: StructType,
+      fs: Seq[String], column: String, value: Any): Seq[String] = {
+    val dir = bloomDir(path, column)
+    val probe: Seq[Int] = (0 until BloomK).map { i =>
+      (java.lang.Long.parseLong(
+        bloomHashHex(i, String.valueOf(value)).substring(0, 12), 16)
+        % BloomBits).toInt
+    }
+    val known: Map[String, Seq[Int]] =
+      if (!Files.exists(dir)) Map.empty
+      else spark.read.schema(BloomSchema).parquet(dir.toString)
+        .filter(col("file").isInCollection(fs))
+        .collect().map(r => r.getString(0) -> r.getSeq[Int](1)).toMap
+    val missing = fs.filterNot(known.contains)
+    val built = if (missing.isEmpty) Map.empty[String, Seq[Int]]
+      else bloomIndex(spark, schema, missing, column)
+    if (built.nonEmpty)
+      spark.createDataFrame(built.toSeq.map { case (f, ps) => Row(f, ps) }.asJava, BloomSchema)
+        .coalesce(1).write.mode(SaveMode.Append).parquet(dir.toString)
+    val entries = known ++ built
+    fs.filter(f => probe.forall(entries(f).contains))
+  }
+
+  /** Equality read with file skipping: the live rows of the latest
+    * version where `column = value`, scanning only the files that may
+    * hold it. Result is identical to `read(...).filter(col === value)`;
+    * only files touched differ. Returns (rows, filesRead, filesTotal).
     *
-    * The per-file "filter" is stored as the sorted distinct position
-    * set (≤ [[BloomBits]] ints — the sparse representation of the
-    * bitmap, exact for the membership test and cheaper to build with a
+    * Two stages: the recorded min/max first (from the log, no job), then,
+    * when two or more files are left, their Bloom sidecar entries. The
+    * per-file "filter" is stored as the sorted distinct position set
+    * (≤ [[BloomBits]] ints — the sparse representation of the bitmap,
+    * exact for the membership test and cheaper to build with a
     * distinct-aggregate than a bitmap OR). Probe positions are computed
     * driver-side from the identical md5 formula the build runs in the
     * engine, over the column's string cast — supported for string and
@@ -767,74 +843,44 @@ object VersionedTable {
     */
   def readWhereEquals(spark: SparkSession, path: String, column: String,
       value: Any): (DataFrame, Long, Long) = {
-    def index(src: DataFrame): DataFrame = {
-      val fileList = src.select(col("_metadata.file_path").as("uri")).distinct()
-      val none = array().cast("array<int>")
-      // every scanned file gets an entry: a file whose values are all
-      // NULL for the column (a file that predates the column, or a
-      // genuinely all-null file) contributes no position rows, and its
-      // sound entry is the EMPTY set — an equality probe excludes null
-      val posExprs = (0 until BloomK).map { i =>
-        (graft.expressions.Md5Prefix.md5Prefix(
-          concat(lit(s"bloom-v1|$i|"), col("v")), 12) % BloomBits)
-          .cast("int")
-      }
-      val sets = src
-        .select(col("_metadata.file_path").as("uri"),
-          col(column).cast("string").as("v"))
-        .filter(col("v").isNotNull)
-        .select(col("uri"), explode(array(posExprs: _*)).as("pos"))
-        .groupBy("uri")
-        .agg(sort_array(collect_set(col("pos"))).as("pos_set"))
-      fileList.join(sets, Seq("uri"), "left")
-        .select(col("uri"), coalesce(col("pos_set"), none).as("pos_set"))
-    }
-    val probe: Seq[Int] = (0 until BloomK).map { i =>
-      (java.lang.Long.parseLong(
-        bloomHashHex(i, String.valueOf(value)).substring(0, 12), 16)
-        % BloomBits).toInt
-    }
-    skippingRead(spark, path, bloomDir(path, column), _ => BloomSchema, index,
-      keep = probe.distinct.map(p => array_contains(col("pos_set"), p)).reduce(_ && _),
-      cond = col(column) === lit(value))
+    val (m, schema) = head(spark, path, column)
+    if (m.files.isEmpty) return (spark.emptyDataFrame, 0L, 0L)
+    val ranged = minMaxCandidates(spark, m, schema, column, value, value)
+    val fs =
+      if (ranged.size < 2) ranged
+      else bloomCandidates(spark, path, schema, ranged, column, value)
+    (scan(spark, m, schema, fs, col(column) === lit(value)), fs.size.toLong,
+      m.files.size.toLong)
   }
 
-  /** Drop data-skipping sidecar rows whose file is referenced by NO
-    * retained manifest — the stats analog of [[vacuum]] (dead rows are
-    * inert for correctness but accumulate forever on a churning table).
-    * Bounded by file count end to end: each column's sidecar collects
-    * to the driver (same order as a manifest read) and is rewritten
-    * from memory, which also sidesteps Spark's self-overwrite
-    * restriction. Run when no concurrent [[readWhere]] is appending —
-    * a lost concurrent append only costs that reader a lazy recompute,
-    * never a wrong result. Returns the number of rows dropped.
+  /** Drop Bloom sidecar rows whose file is referenced by NO retained
+    * manifest — the sidecar analog of [[vacuum]] (dead rows are inert
+    * for correctness but accumulate forever on a churning table) — and
+    * delete the `_graft_stats/` min/max sidecars older versions built at
+    * read time, which the log's stats replace. The sidecar rows stay
+    * distributed: a left-semi join against the broadcast live-file list
+    * (driver-sized, from the manifests) keeps the live ones, and a
+    * column's sidecar is rewritten only when it drops rows. Run when no
+    * concurrent [[readWhereEquals]] is appending — a lost concurrent
+    * append only costs that reader a lazy recompute, never a wrong
+    * result. Returns the number of Bloom rows dropped.
     */
   def vacuumStats(spark: SparkSession, path: String): Long = {
-    // the Bloom sidecar shares the (file, …) keying — same cleanup
-    val roots = Seq("_graft_stats", "_graft_bloom")
-      .map(Paths.get(path, _)).filter(Files.exists(_))
-    if (roots.isEmpty) return 0L
-    // live-file keys come from the metadata plane (manifest lists —
-    // driver-sized by definition); the sidecar ROWS stay distributed:
-    // a left-semi join against the broadcast key table replaces the
-    // old collect-and-filter, which at millions of indexed files would
-    // pull whole stats sidecars into the driver
+    val retired = Paths.get(path, "_graft_stats")
+    if (Files.exists(retired)) {
+      val walk = Files.walk(retired)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      finally walk.close()
+    }
+    val root = Paths.get(path, "_graft_bloom")
+    if (!Files.exists(root)) return 0L
     val live: Set[String] =
       versions(path).flatMap(v => files(path, v)).toSet
     import spark.implicits._
     val liveDf = live.toSeq.sorted.toDF("file")
-    // the sidecars' declared schemas; a stats sidecar of a column the
-    // table no longer has is read by footer inference
-    val table = schemaOf(spark, readManifest(path, latestOrFail(path)))
-    def sidecar(colDir: Path): Option[StructType] =
-      if (colDir.getParent.getFileName.toString == "_graft_bloom") Some(BloomSchema)
-      else table.find(_.name == colDir.getFileName.toString)
-        .map(f => statsSchema(f.dataType))
     var dropped = 0L
-    roots.flatMap(r => listDir(r)(_.toSeq)).filter(Files.isDirectory(_))
-      .foreach { colDir =>
-      val df = sidecar(colDir).fold(spark.read)(s => spark.read.schema(s))
-        .parquet(colDir.toString)
+    listDir(root)(_.toSeq).filter(Files.isDirectory(_)).foreach { colDir =>
+      val df = spark.read.schema(BloomSchema).parquet(colDir.toString)
       val total = df.count()
       val kept = df.join(broadcast(liveDf), Seq("file"), "left_semi")
       val keptN = kept.count()
@@ -941,8 +987,8 @@ object VersionedTable {
     * is bit-identical (pure file-layout change), old versions still
     * time-travel, and the superseded small files become vacuumable.
     *
-    * Scale shape: the driver touches only file METADATA (one size stat
-    * per live file — what Delta reads from its log); the data move is a
+    * Scale shape: the driver touches only file METADATA (the sizes the
+    * log records, as Delta reads them from its log); the data move is a
     * distributed scan + repartition of just the small files, never the
     * whole table. Rewriting mixed-schema files materializes the table
     * schema with NULLs — exactly what the declared-schema read surfaces,
@@ -960,16 +1006,16 @@ object VersionedTable {
       targetBytes: Long = 128L << 20): Option[Long] =
     commitLoop(path, "compact", requireBase = true) { base =>
       val schema = schemaOf(spark, base)
-      val small = base.files.filter(f => Files.size(Paths.get(f)) < targetBytes)
+      val size = statsOf(base, schema).view.mapValues(_.size)
+      val small = base.files.filter(size(_) < targetBytes)
       if (small.size < 2) None
       else {
-        val total = small.map(f => Files.size(Paths.get(f))).sum
+        val total = small.map(size).sum
         val nOut = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
         // DV-masked rows must NOT resurrect in the rewrite: compact the
         // LIVE rows of the small files (their DV entries then go inert);
         // kept files retain their DV subtraction through the carried list
-        val compacted = liveWithPos(spark, schema, small, base.dv)
-          .drop(FileCol, PosCol).repartition(nOut)
+        val compacted = liveRows(spark, schema, small, base.dv).repartition(nOut)
         val (dataDir, newFiles) = writeData(compacted, path)
         Some(Attempt(base.files.filterNot(small.toSet) ++ newFiles, Some(schema),
           base.dv, Seq(dataDir)))

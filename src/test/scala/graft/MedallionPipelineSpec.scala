@@ -24,7 +24,7 @@ class MedallionPipelineSpec extends SparkSpec {
     StructField("service_date", DateType)))
 
   test("csv -> bronze -> silver -> gold conserves rows and referential integrity") {
-    val root = Files.createTempDirectory("medallion")
+    val root = tempDir("medallion")
     Files.writeString(root.resolve("claims.csv"),
       """claim_id,member_id,amount,service_date
         |C1,M1,10.5,2024-01-02

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.graftspark.drainListenerBus
@@ -22,7 +21,7 @@ class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshPaths(): Pipeline.LayerPaths =
-    Pipeline.LayerPaths(Files.createTempDirectory("medallion_run").toString)
+    Pipeline.LayerPaths(tempDir("medallion_run").toString)
 
   /** Batch `b` (1-9) through all three layers; returns runSilver's count. */
   private def loadBatch(paths: Pipeline.LayerPaths, raw: DataFrame, b: Int): Long = {
@@ -52,7 +51,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("two incremental batches then a no-op re-run: counts conserved, idempotent") {
-    val paths = Pipeline.LayerPaths(Files.createTempDirectory("medallion_run").toString)
+    val paths = Pipeline.LayerPaths(tempDir("medallion_run").toString)
     val li = Tables.lineitem(spark, sf)
     val batch1 = li.filter($"l_orderkey" % 2 === 0)
     val batch2 = li.filter($"l_orderkey" % 2 =!= 0)

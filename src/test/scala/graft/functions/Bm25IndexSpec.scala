@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -40,7 +38,7 @@ class Bm25IndexSpec extends SparkSpec {
   }
 
   test("persisted index reproduces the in-query q250 ranking bit-for-bit") {
-    val dir = Files.createTempDirectory("bm25idx").toString
+    val dir = tempDir("bm25idx").toString
     Bm25.buildBm25Index(graft.Tables.documents(spark, sf), "text", "doc_id", dir)
     val inQuery = graft.LlmQueries.bm25Retrieval(spark, sf)
       .collect().map(_.toString).sorted
@@ -56,7 +54,7 @@ class Bm25IndexSpec extends SparkSpec {
   }
 
   test("postings scan prunes to the probed term buckets (PartitionFilters)") {
-    val dir = Files.createTempDirectory("bm25idx2").toString
+    val dir = tempDir("bm25idx2").toString
     Bm25.buildBm25Index(graft.Tables.documents(spark, sf), "text", "doc_id", dir)
     val out = Bm25.queryBm25Index(spark, dir, qt.limit(3), k = 5)
     out.collect()
@@ -68,7 +66,7 @@ class Bm25IndexSpec extends SparkSpec {
 
   test("query terms absent from the index score nothing and do not fail") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("bm25abs").toString
+    val dir = tempDir("bm25abs").toString
     Bm25.buildBm25Index(graft.Tables.documents(spark, sf), "text", "doc_id", dir)
     // one real query whose terms are all unindexed nonsense, one mixed
     val ghost = Seq((900001L, "zzqx9"), (900001L, "vvqk7")).toDF("query_id", "term")
@@ -86,12 +84,12 @@ class Bm25IndexSpec extends SparkSpec {
     // stats/, never caller-supplied — a mismatched count silently
     // pruned valid postings before r10)
     val dd = graft.Tables.documents(spark, sf)
-    val dirOdd = Files.createTempDirectory("bm25odd").toString
+    val dirOdd = tempDir("bm25odd").toString
     Bm25.buildBm25Index(dd.filter(col("doc_id") % 3 =!= 0), "text",
       "doc_id", dirOdd, buckets = 7)
     Bm25.appendToBm25Index(dd.filter(col("doc_id") % 3 === 0), "text",
       "doc_id", dirOdd)
-    val dirDef = Files.createTempDirectory("bm25def").toString
+    val dirDef = tempDir("bm25def").toString
     Bm25.buildBm25Index(dd, "text", "doc_id", dirDef)
     val odd = Bm25.queryBm25Index(spark, dirOdd, qt, k = 5, excludeSelf = true)
       .collect().map(_.toString).sorted
@@ -106,10 +104,10 @@ class Bm25IndexSpec extends SparkSpec {
     val dd = graft.Tables.documents(spark, sf)
     val first = dd.filter(col("doc_id") % 3 =!= 0)
     val batch = dd.filter(col("doc_id") % 3 === 0)
-    val dirInc = Files.createTempDirectory("bm25inc").toString
+    val dirInc = tempDir("bm25inc").toString
     Bm25.buildBm25Index(first, "text", "doc_id", dirInc)
     Bm25.appendToBm25Index(batch, "text", "doc_id", dirInc)
-    val dirFull = Files.createTempDirectory("bm25full").toString
+    val dirFull = tempDir("bm25full").toString
     Bm25.buildBm25Index(dd, "text", "doc_id", dirFull)
     val inc = Bm25.queryBm25Index(spark, dirInc, qt, k = 5, excludeSelf = true)
       .collect().map(_.toString).sorted
@@ -125,7 +123,7 @@ class Bm25IndexSpec extends SparkSpec {
     // (documented hazard through r15); the gate runs BEFORE any write,
     // so a rejected batch must leave every index table byte-stable
     val dd = graft.Tables.documents(spark, sf)
-    val dir = Files.createTempDirectory("bm25dup").toString
+    val dir = tempDir("bm25dup").toString
     Bm25.buildBm25Index(dd.filter(col("doc_id") % 3 =!= 0), "text",
       "doc_id", dir)
     val before = Bm25.queryBm25Index(spark, dir, qt, k = 5,

@@ -517,7 +517,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("persisted IVF index: identical results to in-memory IVF, pruned scan") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_idx").toString
+    val dir = tempDir("ivf_idx").toString
     val e = emb.select($"vec_id", $"embedding")
     SimilarityOps.buildIvfIndex(e, dir, k = 8, iters = 1)
     val q = emb.filter($"vec_id" % 200 === 0)
@@ -535,7 +535,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("persisted IVF-PQ index: bit-exact vs in-memory composite, pruned codes scan") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_idx").toString
+    val dir = tempDir("ivfpq_idx").toString
     val e = emb.select($"vec_id", $"embedding")
     SimilarityOps.buildIvfPqIndex(e, dir, kCoarse = 4, m = 8, subDim = 8,
       kCodes = 16)
@@ -610,7 +610,7 @@ class LlmOpsSpec extends SparkSpec {
     val planted = (0L until 20L).map(i => (i, "alpha beta " * 50))
       .toDF("doc_id", "text")
     // run the same pipeline over a self-contained corpus
-    val dir = java.nio.file.Files.createTempDirectory("lmdocs").toString
+    val dir = tempDir("lmdocs").toString
     planted.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val scored = graft.LlmQueries.bigramLmScore(spark, dir)
     assert(scored.filter($"lm_score" < 0.9).count() == 0,

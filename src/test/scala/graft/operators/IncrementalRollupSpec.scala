@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -24,7 +22,7 @@ class IncrementalRollupSpec extends SparkSpec {
       .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
 
   test("maintained aggregate tracks append, delete, and merge commits exactly") {
-    val path = Files.createTempDirectory("ivm").resolve("t").toString
+    val path = tempDir("ivm").resolve("t").toString
     val seed = Seq(("a", 10L), ("a", 20L), ("b", 5L), ("c", 7L)).toDF("grp", "v")
     val v0 = VersionedTable.write(seed.coalesce(1), path, SaveMode.Overwrite)
     var maintained = agg(VersionedTable.readVersion(spark, path, v0))

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
@@ -16,7 +14,7 @@ class IncrementalViewSpec extends SparkSpec {
       .as[(String, Long, Double)].collect().toSet
 
   test("change-feed maintenance ≡ recompute across append, delete, and DV merge") {
-    val path = Files.createTempDirectory("ivw").resolve("t").toString
+    val path = tempDir("ivw").resolve("t").toString
     val keys = Seq("k")
     VersionedTable.write(
       Seq(("a", 1L, 10.0), ("a", 2L, 20.0), ("b", 3L, 30.0))

@@ -4,17 +4,18 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Bloom-sidecar equality skipping: min/max stats cannot prune a point
-  * lookup on a column the table is not clustered by (every file's range
-  * spans the probe); the Bloom sidecar must. Soundness bar: identical
-  * rows to read+filter under lazy builds, deletion vectors, schema
-  * evolution, and sidecar vacuum.
+/** Equality skipping: the log's min/max stats first, then the Bloom
+  * sidecar for the files they keep — min/max cannot prune a point lookup
+  * on a column the table is not clustered by (every file's range spans
+  * the probe); the Bloom sidecar must. Soundness bar: identical rows to
+  * read+filter under lazy builds, deletion vectors, schema evolution, and
+  * sidecar vacuum.
   */
 class BloomSkipSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Four appends keyed by disjoint user sets but OVERLAPPING k ranges —
-    * min/max on `user` prunes nothing ranges can't, the Bloom set does.
+  /** Four appends keyed by disjoint user sets (disjoint `user` ranges,
+    * so min/max alone prunes a user probe) but OVERLAPPING k ranges.
     */
   private def userTable(): String = {
     val path = tempDir("vt_bloom").resolve("t").toString
@@ -90,7 +91,8 @@ class BloomSkipSpec extends SparkSpec {
 
   test("vacuumStats drops bloom rows for unreferenced files") {
     val path = userTable()
-    VersionedTable.readWhereEquals(spark, path, "user", "u0_0") // build 4 rows
+    // every file's k range spans 7, so min/max keeps all 4: build 4 rows
+    VersionedTable.readWhereEquals(spark, path, "k", 7L)
     // overwrite obsoletes the old files, vacuum drops their manifests
     VersionedTable.write(Seq((1L, "only", 0L)).toDF("k", "user", "commit")
       .coalesce(1), path, SaveMode.Overwrite)
@@ -99,5 +101,18 @@ class BloomSkipSpec extends SparkSpec {
     assert(dropped >= 4, s"expected >=4 dead bloom rows dropped, got $dropped")
     val (df, _, _) = VersionedTable.readWhereEquals(spark, path, "user", "only")
     assert(df.count() == 1)
+  }
+
+  test("the Bloom stage prunes the files whose min/max spans the probe") {
+    val path = tempDir("vt_bloom_mm").resolve("t").toString
+    // every file spans users a..z; each holds its own m<c> in between
+    (0 until 4).foreach { c =>
+      VersionedTable.write(Seq((c * 3L, "a"), (c * 3L + 1, s"m$c"), (c * 3L + 2, "z"))
+        .toDF("k", "user").coalesce(1), path, if (c == 0) SaveMode.Overwrite else SaveMode.Append)
+    }
+    val (df, read, total) = VersionedTable.readWhereEquals(spark, path, "user", "m2")
+    assert(total == 4 && read < total, s"bloom must skip some of $total files, read $read")
+    assert(df.select("k").as[Long].collect().toSeq == Seq(7L))
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_graft_bloom", "user")))
   }
 }

@@ -1,14 +1,12 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 
 class ClusteringStatsSpec extends SparkSpec {
   import spark.implicits._
 
-  lazy val root: String = Files.createTempDirectory("cluster").toString
+  lazy val root: String = tempDir("cluster").toString
 
   /** Sum over files of per-file bounding-box area in (days × suppkey)
     * space — small when files are spatially local.
@@ -31,68 +29,6 @@ class ClusteringStatsSpec extends SparkSpec {
       s"z-ordered files must cover far smaller bounding boxes: z=$z unclustered=$u")
     // clustering preserves the data
     assert(spark.read.parquet(s"$root/zorder").count() == li.count())
-  }
-
-  test("stats index prunes files and preserves query results") {
-    val li = Tables.lineitem(spark, sf)
-    Clustering.writeZOrdered(
-      li.withColumn("days", datediff(to_date($"l_shipdate"), lit("1992-01-01"))),
-      s"$root/bydate", $"days", $"l_suppkey", 16)
-    StatsIndex.writeStats(spark, s"$root/bydate", Seq("days", "l_suppkey"))
-    // a two-month slice in the middle of the data's actual day range
-    val (pruned, read, total) = StatsIndex.prunedRead(
-      spark, s"$root/bydate", "days", 2000, 2060)
-    assert(read < total, s"narrow range must skip files (read $read of $total)")
-    val full = spark.read.parquet(s"$root/bydate")
-      .filter($"days" >= 2000 && $"days" <= 2060)
-    assert(full.count() > 0)
-    assert(pruned.count() == full.count() && pruned.exceptAll(full).isEmpty,
-      "pruned read must return exactly the full-scan result")
-    // a range entirely outside the data prunes everything, returns empty
-    val (empty, read0, _) = StatsIndex.prunedRead(spark, s"$root/bydate", "days", 0, 10)
-    assert(read0 == 0 && empty.count() == 0)
-  }
-
-  test("stats index prunedRead reconstructs hive partition columns (basePath)") {
-    // stats are built over the whole table (partition discovery on);
-    // a pruned read of leaf files WITHOUT basePath dropped the
-    // partition column — crashing partition-column predicates and
-    // breaking the documented full-scan equivalence
-    val df = Seq((1L, 10L, "a"), (2L, 20L, "a"), (3L, 30L, "b"),
-      (4L, 40L, "b")).toDF("k", "v", "ds")
-    df.write.mode("overwrite").partitionBy("ds").parquet(s"$root/part")
-    StatsIndex.writeStats(spark, s"$root/part", Seq("v"))
-    val (pruned, read, total) = StatsIndex.prunedRead(
-      spark, s"$root/part", "v", 10L, 20L)
-    assert(read <= total)
-    assert(pruned.columns.contains("ds"),
-      "partition column must survive the pruned read")
-    val full = spark.read.parquet(s"$root/part")
-      .filter($"v" >= 10L && $"v" <= 20L)
-    assert(pruned.exceptAll(full).isEmpty && full.exceptAll(pruned).isEmpty)
-  }
-
-  test("prunedRead rejects STALE stats LOUDLY (append after writeStats)") {
-    // r16 sweep find: a pruned read over stats written before an APPEND
-    // silently dropped every row of the appended files (an overwrite at
-    // least fails loudly on vanished file names) — the staleness gate
-    // compares the manifest's file set to the table's current files
-    val df = Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
-    df.write.mode("overwrite").parquet(s"$root/stale")
-    StatsIndex.writeStats(spark, s"$root/stale", Seq("v"))
-    // fresh stats: the read works and equals the full scan
-    val (ok, _, _) = StatsIndex.prunedRead(spark, s"$root/stale", "v", 0L, 99L)
-    assert(ok.count() == 2)
-    Seq((3L, 30L)).toDF("k", "v").write.mode("append")
-      .parquet(s"$root/stale")
-    val e = intercept[IllegalArgumentException] {
-      StatsIndex.prunedRead(spark, s"$root/stale", "v", 0L, 99L)
-    }
-    assert(e.getMessage.contains("STALE"), e.getMessage)
-    // rebuilt stats clear the gate and see the appended row
-    StatsIndex.writeStats(spark, s"$root/stale", Seq("v"))
-    val (fresh, _, _) = StatsIndex.prunedRead(spark, s"$root/stale", "v", 0L, 99L)
-    assert(fresh.count() == 3)
   }
 
   test("ZOrder clustering of an EMPTY input is the identity, not an NPE") {

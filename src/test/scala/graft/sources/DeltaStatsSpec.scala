@@ -156,6 +156,42 @@ class DeltaStatsSpec extends SparkSpec {
     assert(pruned == (10L to 19L).filter(_ % 2 == 1))
   }
 
+  test("add.stats come from the parquet footers: NaN, ±0.0, decimals, dates, all-null") {
+    def stats(df: org.apache.spark.sql.DataFrame): String = {
+      val path = tmpTable()
+      // the write job alone: the footers are read on the driver
+      assert(jobsStartedBy(DeltaInterop.write(df.coalesce(1), path, SaveMode.Overwrite)) == 1)
+      val st = DeltaInterop.snapshot(spark, path).files.flatMap(_.stats)
+      assert(st.size == 1)
+      st.head
+    }
+    // parquet widens a zero bound to both signs, and keeps no bounds for
+    // a chunk holding NaN: the column is omitted, not wrongly bounded
+    assert(stats(Seq((1L, 0.0), (2L, 0.0)).toDF("k", "d")) ==
+      """{"numRecords":2,"minValues":{"k":1,"d":-0.0},"maxValues":{"k":2,"d":0.0},""" +
+        """"nullCount":{"k":0,"d":0}}""")
+    assert(stats(Seq((1L, Double.NaN), (2L, 1.5), (3L, Double.NegativeInfinity)).toDF("k", "d")) ==
+      """{"numRecords":3,"minValues":{"k":1},"maxValues":{"k":3},"nullCount":{"k":0,"d":0}}""")
+    assert(stats(Seq((1L, Double.NegativeInfinity), (2L, 2.5)).toDF("k", "d")) ==
+      """{"numRecords":2,"minValues":{"k":1},"maxValues":{"k":2,"d":2.5},""" +
+        """"nullCount":{"k":0,"d":0}}""")
+    assert(stats(spark.sql("select id k, cast(id * 1.25 - 3 as decimal(10,2)) d1, " +
+        "cast(id * 123456789.0123456789 as decimal(38,10)) d2, cast(-id as decimal(5,0)) d3 " +
+        "from range(5)")) ==
+      """{"numRecords":5,"minValues":{"k":0,"d1":-3.00,"d2":0.0000000000,"d3":-4},""" +
+        """"maxValues":{"k":4,"d1":2.00,"d2":493827156.0493827200,"d3":0},""" +
+        """"nullCount":{"k":0,"d1":0,"d2":0,"d3":0}}""")
+    assert(stats(spark.sql("select id k, date_add(date'2020-02-27', cast(id as int)) dt, " +
+        "date'0001-01-01' old from range(4)")) ==
+      """{"numRecords":4,"minValues":{"k":0,"dt":"2020-02-27","old":"0001-01-01"},""" +
+        """"maxValues":{"k":3,"dt":"2020-03-01","old":"0001-01-01"},""" +
+        """"nullCount":{"k":0,"dt":0,"old":0}}""")
+    assert(stats(spark.sql("select id k, cast(null as int) n, cast(null as string) s " +
+        "from range(3)")) ==
+      """{"numRecords":3,"minValues":{"k":0},"maxValues":{"k":2},""" +
+        """"nullCount":{"k":0,"n":3,"s":3}}""")
+  }
+
   private def withListDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
     val s = Files.list(dir)
     try s.iterator().asScala.toSeq finally s.close()

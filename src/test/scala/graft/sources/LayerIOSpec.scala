@@ -15,7 +15,7 @@ class LayerIOSpec extends SparkSpec {
     StructField("service_date", DateType)))
 
   test("PERMISSIVE csv read captures corrupt rows instead of failing") {
-    val dir = Files.createTempDirectory("csv_in")
+    val dir = tempDir("csv_in")
     Files.writeString(dir.resolve("claims.csv"),
       "claim_id,amount,service_date\nC1,10.5,2024-01-02\nC2,notanumber,2024-01-03\nC3,7.25,2024-01-04\n")
     // cache first: Spark disallows querying only _corrupt_record on raw CSV
@@ -26,7 +26,7 @@ class LayerIOSpec extends SparkSpec {
   }
 
   test("inferSchema csv read types clean columns and nulls bad cells") {
-    val dir = Files.createTempDirectory("csv_inf")
+    val dir = tempDir("csv_inf")
     Files.writeString(dir.resolve("claims.csv"),
       "claim_id,amount,service_date\nC1,10.5,2024-01-02\nC2,notanumber,2024-01-03\nC3,7.25,2024-01-04\n")
     val df = LayerIO.readCsvInferred(spark, dir.toString).cache()
@@ -38,7 +38,7 @@ class LayerIOSpec extends SparkSpec {
     assert(df.schema("claim_id").dataType == StringType)
     assert(df.schema("amount").dataType == StringType)
     // a clean numeric column infers to a numeric type on its own file
-    val dir2 = Files.createTempDirectory("csv_inf2")
+    val dir2 = tempDir("csv_inf2")
     Files.writeString(dir2.resolve("claims.csv"),
       "claim_id,amount\nC1,10.5\nC3,7.25\n")
     val df2 = LayerIO.readCsvInferred(spark, dir2.toString)
@@ -48,7 +48,7 @@ class LayerIOSpec extends SparkSpec {
   }
 
   test("PERMISSIVE jsonl read captures corrupt lines; writeJsonl round-trips") {
-    val dir = Files.createTempDirectory("jsonl_in")
+    val dir = tempDir("jsonl_in")
     Files.writeString(dir.resolve("claims.json"),
       """{"claim_id":"C1","amount":10.5}
         |{"claim_id":"C2","amount":"notanumber"}
@@ -64,7 +64,7 @@ class LayerIOSpec extends SparkSpec {
       .select("claim_id", "amount").as[(String, Double)].collect().toSet
     assert(good == Set(("C1", 10.5), ("C3", 7.25)))
     // sink round trip
-    val out = Files.createTempDirectory("jsonl_out").resolve("t").toString
+    val out = tempDir("jsonl_out").resolve("t").toString
     LayerIO.writeJsonl(good.toSeq.toDF("claim_id", "amount"), out)
     val back = LayerIO.readJsonl(spark, out, schema)
       .select("claim_id", "amount").as[(String, Double)].collect().toSet
@@ -73,7 +73,7 @@ class LayerIOSpec extends SparkSpec {
   }
 
   test("ORC round trip preserves rows and pushes filters to the scan") {
-    val out = Files.createTempDirectory("orc_out").resolve("t").toString
+    val out = tempDir("orc_out").resolve("t").toString
     val src = (1L to 1000L).map(i => (i, s"n$i", i * 1.5)).toDF("k", "name", "v")
     LayerIO.writeOrc(src, out)
     val back = LayerIO.readOrc(spark, out)
@@ -86,7 +86,7 @@ class LayerIOSpec extends SparkSpec {
   }
 
   test("compact merges a fragmented layout into few files, same rows") {
-    val path = Files.createTempDirectory("compact").resolve("t").toString
+    val path = tempDir("compact").resolve("t").toString
     val frag = spark.range(10000).select($"id", ($"id" % 7).as("v"))
       .repartition(64) // 64 tiny input partitions
     LayerIO.compact(frag, path)
@@ -100,7 +100,7 @@ class LayerIOSpec extends SparkSpec {
   }
 
   test("appendOrCreate: partitioned create, then append; partition pruning works") {
-    val path = Files.createTempDirectory("layer").resolve("bronze").toString
+    val path = tempDir("layer").resolve("bronze").toString
     val day1 = Seq(("C1", 10.0, "2024-01-01"), ("C2", 20.0, "2024-01-02"))
       .toDF("claim_id", "amount", "d").withColumn("ingestion_date", to_date($"d")).drop("d")
     assert(!LayerIO.layerExists(spark, path))
@@ -120,7 +120,7 @@ class LayerIOSpec extends SparkSpec {
   }
 
   test("appendEvolved: widened batch appends; merge-on-read surfaces old rows with NULLs") {
-    val path = Files.createTempDirectory("layer").resolve("evolved").toString
+    val path = tempDir("layer").resolve("evolved").toString
     LayerIO.appendEvolved(spark,
       Seq(("C1", 10.0)).toDF("claim_id", "amount"), path)
     // the feed widens: a new source starts shipping `channel`
@@ -135,7 +135,7 @@ class LayerIOSpec extends SparkSpec {
   }
 
   test("appendEvolved rejects type changes (evolution adds columns, never retypes)") {
-    val path = Files.createTempDirectory("layer").resolve("retype").toString
+    val path = tempDir("layer").resolve("retype").toString
     LayerIO.appendEvolved(spark, Seq(("C1", 10.0)).toDF("claim_id", "amount"), path)
     val err = intercept[IllegalArgumentException] {
       LayerIO.appendEvolved(spark,
@@ -145,7 +145,7 @@ class LayerIOSpec extends SparkSpec {
   }
 
   test("overwriteViaStaging replaces a table the new plan reads from") {
-    val path = Files.createTempDirectory("layer").resolve("swap").toString
+    val path = tempDir("layer").resolve("swap").toString
     Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v").write.parquet(path)
     // the replacement plan READS the current table — the in-place
     // overwrite hazard this API exists to remove
@@ -160,7 +160,7 @@ class LayerIOSpec extends SparkSpec {
   }
 
   test("registerTable makes the layer SQL-addressable") {
-    val path = Files.createTempDirectory("layer").resolve("gold").toString
+    val path = tempDir("layer").resolve("gold").toString
     Seq((1L, "a")).toDF("k", "v").write.parquet(path)
     LayerIO.registerTable(spark, "gold_test", path)
     assert(spark.sql("SELECT count(*) FROM gold_test").as[Long].collect()(0) == 1L)

@@ -566,7 +566,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.versions(path).foreach { v =>
       val f = logDir.resolve(f"v$v%08d.json")
       Files.writeString(f, VersionedTable.render(
-        VersionedTable.parse(Files.readString(f)).copy(schema = None)))
+        VersionedTable.parse(Files.readString(f)).copy(schema = None, stats = Map.empty)))
     }
     assert(reads() == before)
     // such a version costs one footer-inference job on top of the query
@@ -583,18 +583,82 @@ class VersionedTableSpec extends SparkSpec {
   // the schema, every scan inferred it with footer jobs: one per data
   // scan and one per DV or sidecar read. Those counts were readVersion 4,
   // readWhere 6, readWhereEquals 6, changes 7 and deleteWhere 4; each
-  // budget below is that count minus its discovery jobs.
+  // budget below is that count minus its discovery jobs. readWhere then
+  // spent 3, one of them on its min/max sidecar; the log's stats retire it.
   test("job budget: reads, the change feed and a delete start only their query's jobs") {
     val path = evolvedTable("vt_jobs")
     // data scan + DV broadcast
     assert(jobsStartedBy(VersionedTable.readVersion(spark, path, 2L).collect()) == 2)
-    // sidecar verdicts + data scan + DV broadcast
-    assert(jobsStartedBy(VersionedTable.readWhere(spark, path, "k", 10L, 20L)._1.collect()) == 3)
+    assert(jobsStartedBy(VersionedTable.readWhere(spark, path, "k", 10L, 20L)._1.collect()) == 2)
+    // both v0 files span k = 12: Bloom verdicts + data scan + DV broadcast
     assert(jobsStartedBy(
       VersionedTable.readWhereEquals(spark, path, "k", 12L)._1.collect()) == 3)
     // the union of inserts and DV-matched deletes + the DV broadcast
     assert(jobsStartedBy(VersionedTable.changes(spark, path, 0L, 2L).collect()) == 2)
     // DV broadcast + the DV write
     assert(jobsStartedBy(VersionedTable.deleteWhere(spark, path, $"k" === 3L)) == 2)
+  }
+
+  // The pruning reads only the log, so a fresh append costs no index job.
+  test("readWhere on a DV table starts only the scan and the DV broadcast, also after an append") {
+    val path = evolvedTable("vt_jobs_append")
+    def probe(): (Long, Long, Int) = {
+      var r: (org.apache.spark.sql.DataFrame, Long, Long) = null
+      val jobs = jobsStartedBy {
+        r = VersionedTable.readWhere(spark, path, "k", 55L, 70L)
+        r._1.collect()
+      }
+      (r._2, r._3, jobs)
+    }
+    val (read, total, jobs) = probe()
+    assert(read < total && jobs == 2)
+    VersionedTable.write((61L to 70L).map(i => (i, s"r$i", i * 0.5)).toDF("k", "v", "score")
+      .coalesce(1), path, SaveMode.Append)
+    // the append recorded its file's stats: no index job for it
+    assert(probe() == (read + 1, total + 1, 2))
+    assert(VersionedTable.readWhere(spark, path, "k", 55L, 70L)._1.count() ==
+      VersionedTable.read(spark, path).filter($"k".between(55L, 70L)).count())
+  }
+
+  test("readWhereEquals starts no sidecar job when min/max leaves at most one file") {
+    val path = tempDir("vt_eq_jobs").resolve("t").toString
+    (0 until 3).foreach { c =>
+      VersionedTable.write((c * 100L until c * 100L + 50L).map(i => (i, s"r$i")).toDF("k", "v")
+        .coalesce(1), path, if (c == 0) SaveMode.Overwrite else SaveMode.Append)
+    }
+    VersionedTable.deleteWhere(spark, path, $"k" === 120L)
+    var r: (org.apache.spark.sql.DataFrame, Long, Long) = null
+    // data scan + DV broadcast
+    assert(jobsStartedBy {
+      r = VersionedTable.readWhereEquals(spark, path, "k", 130L)
+      r._1.collect()
+    } == 2)
+    assert(r._2 == 1L && r._3 == 3L && r._1.count() == 1)
+    assert(jobsStartedBy(VersionedTable.readWhereEquals(spark, path, "k", 75L)._1.collect()) == 0)
+    assert(!Files.exists(java.nio.file.Paths.get(path, "_graft_bloom")))
+  }
+
+  test("commits record each file's footer stats in the log; the manifest round-trips") {
+    val path = evolvedTable("vt_stats")
+    val logDir = java.nio.file.Paths.get(path, "_graft_log")
+    val head = VersionedTable.latestVersion(path).get
+    val text = Files.readString(logDir.resolve(f"v$head%08d.json"))
+    val m = VersionedTable.parse(text)
+    assert(VersionedTable.render(m) == text)
+    val files = VersionedTable.files(path, head)
+    assert(m.stats.keySet == files.toSet)
+    files.foreach { f =>
+      val st = m.stats(f)
+      val rows = spark.read.parquet(f)
+      assert(st.size == Files.size(java.nio.file.Paths.get(f)))
+      assert(st.numRecords == rows.count())
+      val (mn, mx) = rows.agg(min("k"), max("k")).as[(Long, Long)].head()
+      assert(st.minValues("k") == mn && st.maxValues("k") == mx)
+      assert(st.nullCount("k") == 0L)
+    }
+    // v0's files predate `score`: the widening append records it all-null there
+    VersionedTable.files(path, 0L).foreach(f =>
+      assert(m.stats(f).nullCount("score") == m.stats(f).numRecords &&
+        !m.stats(f).minValues.contains("score")))
   }
 }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 
@@ -136,7 +134,7 @@ class ZOrderSpec extends SparkSpec {
         datediff($"o_orderdate".cast("date"), lit("1970-01-01").cast("date"))
           .cast("bigint").bitwiseAND(lit(0xFFFFL)).as("day"))
     val n = 16
-    val dir = Files.createTempDirectory("hilbert").toString
+    val dir = tempDir("hilbert").toString
     ZOrder.hilbertClusterWrite(orders, dir, "day", "ck", n)
     val total = ZOrder.fileStats(spark, dir, "ck").count()
     for (c <- Seq("ck", "day")) {
@@ -155,8 +153,8 @@ class ZOrderSpec extends SparkSpec {
         datediff($"o_orderdate".cast("date"), lit("1970-01-01").cast("date"))
           .cast("bigint").bitwiseAND(lit(0xFFFFL)).as("day"))
     val n = 16
-    val zDir = Files.createTempDirectory("zorder").toString
-    val linDir = Files.createTempDirectory("linear").toString
+    val zDir = tempDir("zorder").toString
+    val linDir = tempDir("linear").toString
     ZOrder.clusterWrite(orders, zDir, "day", "ck", n)
     // the linear baseline: clustered on day alone (the usual time layout)
     orders.repartitionByRange(n, $"day").sortWithinPartitions("day")
@@ -192,7 +190,7 @@ class ZOrderSpec extends SparkSpec {
         datediff($"o_orderdate".cast("date"), lit("1970-01-01").cast("date"))
           .cast("bigint").as("day"))
     val n = 27 // 3 z-bits per dimension at the top of the interleave
-    val dir = Files.createTempDirectory("zorder3").toString
+    val dir = tempDir("zorder3").toString
     ZOrder.clusterWrite3(li, dir, "ck", "sk", "day", n)
     val total = ZOrder.fileStats(spark, dir, "ck").count()
     for (c <- Seq("ck", "sk", "day")) {

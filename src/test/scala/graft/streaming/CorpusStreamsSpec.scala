@@ -11,15 +11,15 @@ class CorpusStreamsSpec extends SparkSpec {
   import spark.implicits._
 
   test("dedup-on-ingest admits each distinct fingerprint once across batches") {
-    val feedDir = Files.createTempDirectory("docs_feed")
-    val table = Files.createTempDirectory("corpus_vt").resolve("docs").toString
+    val feedDir = tempDir("docs_feed")
+    val table = tempDir("corpus_vt").resolve("docs").toString
 
     // batch 1: the corpus itself
     Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
       feedDir.resolve("a.parquet"))
     val q = CorpusStreams.ingestDeduped(
       CorpusStreams.readDocuments(spark, feedDir.toString), table,
-      Files.createTempDirectory("ckpt_corpus").toString)
+      tempDir("ckpt_corpus").toString)
     q.processAllAvailable()
 
     val distinctFps = Tables.documents(spark, sf)
@@ -54,8 +54,8 @@ class CorpusStreamsSpec extends SparkSpec {
     // md5(NULL) is NULL, and a NULL fp bypasses the left_anti dedup
     // (NULL never matches NULL in a plain join): every batch carrying a
     // null-text doc would admit one more duplicate forever
-    val feedDir = Files.createTempDirectory("docs_null_feed")
-    val table = Files.createTempDirectory("corpus_null").resolve("docs").toString
+    val feedDir = tempDir("docs_null_feed")
+    val table = tempDir("corpus_null").resolve("docs").toString
     def batchOf(ids: Seq[Long]): Unit =
       ids.map(i => (i, Option.empty[String], "en", "s", 0L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -63,7 +63,7 @@ class CorpusStreamsSpec extends SparkSpec {
     batchOf(Seq(1L))
     val q = CorpusStreams.ingestDeduped(
       CorpusStreams.readDocuments(spark, feedDir.toString), table,
-      Files.createTempDirectory("ckpt_null").toString)
+      tempDir("ckpt_null").toString)
     q.processAllAvailable()
     batchOf(Seq(2L)) // a second null-text doc in a later batch
     q.processAllAvailable()
@@ -78,15 +78,15 @@ class CorpusStreamsSpec extends SparkSpec {
   test("appId namespaces batch tags: two queries into one table cannot collide") {
     // without the namespace, query B's batch 0 carried the same tag as
     // query A's batch 0 and B's data was silently dropped
-    val table = Files.createTempDirectory("corpus_ns").resolve("docs").toString
+    val table = tempDir("corpus_ns").resolve("docs").toString
     def run(app: String, id: Long, text: String): Unit = {
-      val feed = Files.createTempDirectory(s"feed_$app")
+      val feed = tempDir(s"feed_$app")
       Seq((id, text, "en", "s", text.length.toLong))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("append").parquet(feed.toString)
       val q = CorpusStreams.ingestDeduped(
         CorpusStreams.readDocuments(spark, feed.toString), table,
-        Files.createTempDirectory(s"ckpt_$app").toString, appId = app)
+        tempDir(s"ckpt_$app").toString, appId = app)
       q.processAllAvailable(); q.stop()
     }
     run("appA", 1L, "first query's document")
@@ -101,7 +101,7 @@ class CorpusStreamsSpec extends SparkSpec {
     // exact-deterministic (unlike order-dependent Misra–Gries), the
     // final streamed sketch must be BIT-IDENTICAL to the batch one,
     // however the input was split into batches
-    val feedDir = Files.createTempDirectory("docs_feed_cms")
+    val feedDir = tempDir("docs_feed_cms")
     val half = Tables.documents(spark, sf)
     half.filter($"doc_id" % 2 === 0).coalesce(1)
       .write.mode("append").parquet(feedDir.toString)
@@ -127,9 +127,9 @@ class CorpusStreamsSpec extends SparkSpec {
   }
 
   test("restart recovery: a new query on the same checkpoint stays exactly-once") {
-    val feedDir = Files.createTempDirectory("docs_feed_rr")
-    val table = Files.createTempDirectory("corpus_vt_rr").resolve("docs").toString
-    val ckpt = Files.createTempDirectory("ckpt_rr").toString
+    val feedDir = tempDir("docs_feed_rr")
+    val table = tempDir("corpus_vt_rr").resolve("docs").toString
+    val ckpt = tempDir("ckpt_rr").toString
 
     Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
       feedDir.resolve("a.parquet"))

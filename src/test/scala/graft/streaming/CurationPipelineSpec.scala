@@ -18,8 +18,8 @@ class CurationPipelineSpec extends SparkSpec {
   import spark.implicits._
 
   test("gate -> dedup ingest -> versioned commits -> incremental view ≡ recompute") {
-    val feedDir = Files.createTempDirectory("cur_feed")
-    val table = Files.createTempDirectory("cur_vt").resolve("docs").toString
+    val feedDir = tempDir("cur_feed")
+    val table = tempDir("cur_vt").resolve("docs").toString
     val gateMinTokens = 5
 
     // ---- phase 1: first crawl batch (the fixture corpus)
@@ -28,7 +28,7 @@ class CurationPipelineSpec extends SparkSpec {
     val gated = CorpusStreams.readDocuments(spark, feedDir.toString)
       .filter(size(TextAnalysis.tokens($"text")) >= gateMinTokens)
     val q = CorpusStreams.ingestDeduped(gated, table,
-      Files.createTempDirectory("cur_ckpt").toString)
+      tempDir("cur_ckpt").toString)
     q.processAllAvailable()
     val v1 = VersionedTable.latestVersion(table).get
 

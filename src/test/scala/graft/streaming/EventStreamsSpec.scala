@@ -17,7 +17,7 @@ class EventStreamsSpec extends SparkSpec {
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory(s"ckpt_$name").toString)
+        tempDir(s"ckpt_$name").toString)
       .start()
     q.processAllAvailable()
     q.stop()
@@ -26,7 +26,7 @@ class EventStreamsSpec extends SparkSpec {
 
   // the file stream source needs a directory; stage the fixture file in one
   lazy val eventsDir: String = {
-    val dir = Files.createTempDirectory("events_stream")
+    val dir = tempDir("events_stream")
     Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
     dir.toString
@@ -60,10 +60,10 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("streaming sink commits micro-batches as atomic versions, replay-safe") {
-    val table = Files.createTempDirectory("vt_sink").resolve("events").toString
+    val table = tempDir("vt_sink").resolve("events").toString
     val q = EventStreams.sinkToVersionedTable(
       EventStreams.readEvents(spark, eventsDir), table,
-      Files.createTempDirectory("ckpt_sink").toString)
+      tempDir("ckpt_sink").toString)
     q.processAllAvailable(); q.stop()
     val committed = graft.sources.VersionedTable.read(spark, table)
     assert(committed.count() == Tables.events(spark, sf).count())
@@ -71,7 +71,7 @@ class EventStreamsSpec extends SparkSpec {
     val before = graft.sources.VersionedTable.latestVersion(table)
     val q2 = EventStreams.sinkToVersionedTable(
       EventStreams.readEvents(spark, eventsDir), table,
-      Files.createTempDirectory("ckpt_sink2").toString) // fresh checkpoint ⇒ redelivery
+      tempDir("ckpt_sink2").toString) // fresh checkpoint ⇒ redelivery
     q2.processAllAvailable(); q2.stop()
     assert(graft.sources.VersionedTable.latestVersion(table) == before,
       "re-delivered batch ids must not create new versions")
@@ -79,10 +79,10 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("Delta streaming sink: exactly-once via SetTransaction, replay-safe") {
-    val table = Files.createTempDirectory("delta_sink").resolve("events").toString
+    val table = tempDir("delta_sink").resolve("events").toString
     val q = EventStreams.sinkToDelta(
       EventStreams.readEvents(spark, eventsDir), table,
-      Files.createTempDirectory("ckpt_dsink").toString, appId = "events-q")
+      tempDir("ckpt_dsink").toString, appId = "events-q")
     q.processAllAvailable(); q.stop()
     val committed = graft.sources.DeltaInterop.read(spark, table)
     assert(committed.count() == Tables.events(spark, sf).count())
@@ -94,7 +94,7 @@ class EventStreamsSpec extends SparkSpec {
     val before = snap.version
     val q2 = EventStreams.sinkToDelta(
       EventStreams.readEvents(spark, eventsDir), table,
-      Files.createTempDirectory("ckpt_dsink2").toString, appId = "events-q")
+      tempDir("ckpt_dsink2").toString, appId = "events-q")
     q2.processAllAvailable(); q2.stop()
     assert(graft.sources.DeltaInterop.snapshot(spark, table).version == before,
       "re-delivered batch ids must not create new Delta versions")
@@ -119,7 +119,7 @@ class EventStreamsSpec extends SparkSpec {
 
   test("dropDuplicatesWithinWatermark removes at-least-once replays") {
     // stage the feed twice: every event delivered two times
-    val dir = Files.createTempDirectory("events_dup")
+    val dir = tempDir("events_dup")
     Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"), dir.resolve("a.parquet"))
     Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"), dir.resolve("b.parquet"))
     val stream = runStream("deduped",
@@ -153,7 +153,7 @@ class EventStreamsSpec extends SparkSpec {
       .writeStream.format("memory").queryName("sess_late")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt_sess_late").toString)
+        tempDir("ckpt_sess_late").toString)
       .start()
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     // batch 1: 12:00 and 12:35 — two OPEN sessions (gap 30m). The old
