@@ -927,17 +927,17 @@ object CoreQueries {
       |GROUP BY CUBE (l_returnflag, l_linestatus)
       |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin
 
-  /** q63 — Z-order clustering keys ([[graft.sources.Clustering.zorder2]]):
-    * the bit-interleaved value that `writeZOrdered` range-partitions and
-    * sorts by so parquet min/max stats prune on EITHER dimension. The
+  /** q63 — Z-order clustering keys ([[graft.sources.ZOrder.zValue]], with
+    * `l_partkey` on the odd bits): the bit-interleaved value that
+    * `ZOrder.clustered` range-partitions and sorts by so parquet min/max
+    * stats prune on EITHER dimension. The
     * oracle re-derives the interleave with plain bit arithmetic,
     * verifying the clustering math an OPTIMIZE ZORDER depends on.
     */
   def zorderKeys(s: SparkSession, d: String): DataFrame =
     t(s, d, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"),
-        graft.sources.Clustering.zorder2(col("l_partkey"), col("l_suppkey"))
-          .as("z_value"))
+        graft.sources.ZOrder.zValue(col("l_suppkey"), col("l_partkey")).as("z_value"))
       .orderBy("l_orderkey", "l_linenumber", "z_value")
 
   val zorderKeysOracle: String = {

@@ -44,7 +44,7 @@ object Merge {
     *   - inserted rows NULL-fill target-only columns;
     *   - untouched target rows NULL-fill the new source-only columns.
     * Shared columns must agree in type — evolution adds columns, never
-    * retypes (same contract as LayerIO.appendEvolved).
+    * retypes (same contract as VersionedTable's widening append).
     *
     * Scale shape: the target-only columns reach matched rows through a
     * key-projection left join (column-pruned to keys + kept columns);

@@ -12,7 +12,10 @@ import com.fasterxml.jackson.databind.util.RawValue
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.mergeSchemas
 import org.apache.spark.sql.types._
+
+import TableCore.{Layout, LiveFile, Planned, listDir, walk}
 
 /** Interop with the Delta Lake transaction-log wire format — the on-disk
   * layout the reference's loaders write with `format("delta")`
@@ -53,13 +56,22 @@ import org.apache.spark.sql.types._
   * its remove byte-for-byte, and decoding happens only when resolving a
   * file for a data read.
   *
+  * This object is the `_delta_log` codec of [[TableCore]], the engine it
+  * shares with [[VersionedTable]]: it replays the log into a snapshot
+  * (live files with partition values, DV descriptors and add.stats),
+  * supplies the deleted positions from per-file roaring bitmaps decoded
+  * on the driver, and renders each planned commit as actions. The commit
+  * loop, scan, min/max pruning, DV delete, vacuum sweep and change-feed
+  * union are the core's. Rules of this format stay here: the action
+  * codec, replay, checkpoints, column mapping, `txn`, [[compact]]'s
+  * partition-group rule and the change feed's `cdc` files.
+  *
   * Scale shape: the log is file-count-bounded (one action per line), so
   * snapshot resolution reads it on the driver through one Jackson action
   * codec — a JSON-only log replays with no Spark job; only checkpoint
   * parquet goes through Spark, read back with `toJSON` into the same
-  * parser. Every commit goes through one optimistic loop: it replays the
-  * log, plans, and links `<version>.json` put-if-absent (staged beside
-  * the log, then `createLink` — the [[VersionedTable]] primitive), so a
+  * parser. Every commit goes through the core's optimistic loop: it
+  * replays the log, plans, and links `<version>.json` put-if-absent, so a
   * version file appears whole or not at all, and a lost race re-plans
   * against the new snapshot. Data reads group adds by partition tuple
   * and scan each group with the declared schema, so partition values
@@ -105,15 +117,6 @@ object DeltaInterop {
   private val CommitName = """(\d{20})\.json""".r
   private val PhysicalNameKey = "delta.columnMapping.physicalName"
   private val ColumnIdKey = "delta.columnMapping.id"
-
-  /** `Files.walk` returns a stream backed by open directory handles —
-    * consume within the callback and CLOSE, or a long-lived driver leaks
-    * handles until "too many open files".
-    */
-  private def withWalk[A](dir: Path)(f: Iterator[Path] => A): A = {
-    val s = Files.walk(dir)
-    try f(s.iterator().asScala) finally s.close()
-  }
 
   // ------------------------------------------------------- action codec
   //
@@ -268,7 +271,7 @@ object DeltaInterop {
   private def replay(spark: SparkSession, path: String, asOf: Option[Long]): Replayed = {
     val logDir = Paths.get(path, "_delta_log")
     require(Files.isDirectory(logDir), s"not a Delta table: no _delta_log under $path")
-    val names = VersionedTable.listDir(logDir)(_.map(_.getFileName.toString).toSeq)
+    val names = listDir(logDir)(_.map(_.getFileName.toString).toSeq)
     val commits = names.collect { case CommitName(v) => v.toLong }.sorted
     // a checkpointed table may have ZERO json commits after log cleanup
     val lastCp = Some(logDir.resolve("_last_checkpoint")).filter(Files.exists(_))
@@ -430,12 +433,12 @@ object DeltaInterop {
   /** Where a raw add path (or a remove's) lives under the table root. */
   private def resolve(root: Path, raw: String): Path = root.resolve(decodePath(raw))
 
-  /** The value [[readFiles]]' `__dv_file` column takes for a file: the
-    * URI-encoded absolute path Spark reports as `_metadata.file_path`
-    * (Hadoop's encoding — a space or a literal `%` in a partition
-    * directory is percent-encoded there, so a plain path would miss).
+  /** The `_metadata.file_path` Spark reports for a file: its absolute
+    * path as a `file:` URI in Hadoop's encoding (a space or a literal `%`
+    * in a partition directory is percent-encoded there, so a plain path
+    * would miss).
     */
-  private def scanKey(root: Path, raw: String): String =
+  private def scanKey(root: Path, raw: String): String = "file:" +
     new org.apache.hadoop.fs.Path(resolve(root, raw).toAbsolutePath.toString).toUri.getRawPath
 
   /** Physical column name under name-mode column mapping (falls back to
@@ -631,29 +634,24 @@ object DeltaInterop {
     * (cleanup can leave a checkpoint with zero json commits).
     */
   private def tableExists(logDir: Path): Boolean =
-    Files.isDirectory(logDir) && VersionedTable.listDir(logDir)(_.map(_.getFileName.toString)
+    Files.isDirectory(logDir) && listDir(logDir)(_.map(_.getFileName.toString)
       .exists(n => CommitName.matches(n) || n == "_last_checkpoint"))
 
-  /** The optimistic commit loop every log write goes through. Each
-    * attempt replays the log afresh (`None` when no table exists yet,
-    * allowed only with `mayCreate`), asks `plan` for the next version's
-    * actions and links them put-if-absent as `<version>.json`: the file
-    * appears whole or not at all, and losing the race re-plans against
-    * the new latest version, so no commit lands on a stale snapshot.
-    * `plan` returning None ends the loop without a commit.
+  /** Every log write goes through the core's [[TableCore.commitLoop]]:
+    * each attempt replays the log afresh (`None` when no table exists
+    * yet, allowed only with `mayCreate`), and the planned actions link
+    * put-if-absent as `<version>.json`, so the file appears whole or not
+    * at all.
     */
-  @annotation.tailrec
   private def commitLoop(spark: SparkSession, path: String, mayCreate: Boolean = false)(
-      plan: Option[Replayed] => Option[Seq[Action]]): Option[Long] = {
+      plan: Option[Replayed] => Option[Planned[Seq[Action]]]): Option[Long] = {
     val logDir = Paths.get(path, "_delta_log")
-    val cur = if (mayCreate && !tableExists(logDir)) None else Some(replay(spark, path, None))
-    plan(cur) match {
-      case None => None
-      case Some(actions) =>
+    TableCore.commitLoop(() =>
+      if (mayCreate && !tableExists(logDir)) None else Some(replay(spark, path, None)))(plan) {
+      (cur, actions) =>
         val v = cur.fold(0L)(_.snap.version + 1)
-        if (VersionedTable.putIfAbsent(logDir.resolve(f"$v%020d.json"),
-            actions.map(render).mkString("", "\n", "\n"))) Some(v)
-        else commitLoop(spark, path, mayCreate)(plan)
+        Some(v).filter(_ => TableCore.putIfAbsent(logDir.resolve(f"$v%020d.json"),
+          actions.map(render).mkString("", "\n", "\n")))
     }
   }
 
@@ -662,8 +660,7 @@ object DeltaInterop {
     */
   private def withStaging[A](prefix: String)(f: Path => A): A = {
     val tmp = Files.createTempDirectory(prefix)
-    try f(tmp)
-    finally if (Files.exists(tmp)) withWalk(tmp)(_.toSeq).reverse.foreach(Files.deleteIfExists)
+    try f(tmp) finally TableCore.deleteTree(tmp)
   }
 
   /** Replace `target` by a rename: readers see the old bytes or the new. */
@@ -689,42 +686,31 @@ object DeltaInterop {
   /** Each staged file's protocol-shaped stats JSON:
     * `{"numRecords":N,"minValues":{..},"maxValues":{..},"nullCount":{..}}`
     * keyed by staged-relative path, read from the files' parquet footers
-    * on the driver (no Spark job). Min/max render through the engine's
-    * cast to string, evaluated over a local DataFrame of the footer
-    * values. A column the footer gives no bounds for (all-null, a float
-    * column holding NaN, a string past parquet's stats size limit) is
-    * omitted from minValues/maxValues, matching the protocol's "may
-    * omit" rule.
+    * on the driver (no Spark job). Min/max render as the engine's cast to
+    * string renders them: numbers and booleans bare, decimals plain,
+    * strings and dates quoted. A column the footer gives no bounds for
+    * (all-null, a float column holding NaN, a string past parquet's stats
+    * size limit) is omitted from minValues/maxValues, matching the
+    * protocol's "may omit" rule; so is an infinite bound, which is no
+    * legal bare JSON token.
     */
-  private def stagedStats(spark: SparkSession, dir: Path, files: Seq[Path],
-      schema: StructType, partCols: Seq[String]): Map[String, String] = {
-    val tracked = schema.fields.toSeq
-      .filterNot(f => partCols.contains(f.name))
-      .filter(f => statsTrackable(f.dataType))
-    def bare(f: StructField) = f.dataType.isInstanceOf[NumericType] || f.dataType == BooleanType
-    val stats = files.map(p => FileStats.read(p.toString, StructType(tracked)))
-    // columns c0 (min) and c1 (max) of each tracked field, in field order
-    val cells = StructType(tracked.zipWithIndex.flatMap { case (f, i) =>
-      Seq(StructField(s"c${2 * i}", f.dataType), StructField(s"c${2 * i + 1}", f.dataType)) })
-    val rendered = spark.createDataFrame(stats.map(s => Row.fromSeq(tracked.flatMap(f =>
-        Seq(s.minValues.get(f.name).orNull, s.maxValues.get(f.name).orNull)))).asJava, cells)
-      .select(cells.fieldNames.toSeq.map(col(_).cast("string")): _*)
-      .collect()
-    files.zip(stats).zip(rendered).map { case ((p, st), r) =>
+  private def stagedStats(dir: Path, files: Seq[Path], schema: StructType,
+      partCols: Seq[String]): Map[String, String] = {
+    val tracked = StructType(schema.fields.filter(f =>
+      !partCols.contains(f.name) && statsTrackable(f.dataType)))
+    files.map { p =>
+      val st = FileStats.read(p.toString, tracked)
       val o = mapper.createObjectNode().put("numRecords", st.numRecords)
-      Seq("minValues" -> 0, "maxValues" -> 1).foreach { case (field, offset) =>
-        val m = o.putObject(field)
-        tracked.zipWithIndex.foreach { case (f, i) =>
-          val j = 2 * i + offset
-          // NaN/Infinity are not legal bare JSON tokens: emitting one
-          // unquoted would corrupt add.stats for every later reader.
-          // Delta stats are per-column OPTIONAL — omit the entry instead.
-          if (!r.isNullAt(j)) r.getString(j) match {
-            case v if !bare(f) => m.put(f.name, v)
-            case "NaN" | "Infinity" | "-Infinity" => ()
-            case v => m.putRawValue(f.name, new RawValue(v))
-          }
-        }
+      Seq("minValues" -> st.minValues, "maxValues" -> st.maxValues).foreach { case (k, vs) =>
+        val m = o.putObject(k)
+        tracked.foreach(f => vs.get(f.name).foreach {
+          case d: Double if d.isNaN || d.isInfinite => ()
+          case d: Float if d.isNaN || d.isInfinite => ()
+          case d: java.math.BigDecimal => m.putRawValue(f.name, new RawValue(d.toPlainString))
+          case v: String => m.put(f.name, v)
+          case v: java.time.LocalDate => m.put(f.name, v.toString)
+          case v => m.putRawValue(f.name, new RawValue(v.toString))
+        })
       }
       val nc = o.putObject("nullCount")
       tracked.foreach(f => st.nullCount.get(f.name).foreach(nc.put(f.name, _)))
@@ -741,11 +727,8 @@ object DeltaInterop {
     */
   private def stageAdds(df: DataFrame, root: Path, tmp: Path,
       partitionBy: Seq[String], dataChange: Boolean = true): Seq[Add] = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmp.toString)
-    val staged = withWalk(tmp)(_.filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
-      .sortBy(_.toString)
-    val stats = stagedStats(df.sparkSession, tmp, staged, df.schema, partitionBy)
+    val staged = TableCore.writeFiles(df, tmp, partitionBy)
+    val stats = stagedStats(tmp, staged, df.schema, partitionBy)
     staged.map { p =>
       val rel = tmp.relativize(p)
       val target = root.resolve(rel)
@@ -913,11 +896,15 @@ object DeltaInterop {
           require(s.partitionColumns == effPartitionBy,
             s"table partitioning changed concurrently: staged ${effPartitionBy.mkString(",")} " +
               s"vs table ${s.partitionColumns.mkString(",")}")
+          // the Parquet mergeSchema rule: a column the append retypes
+          // fails the commit; new columns widen the declared schema
+          mergeSchemas(s.schema, df.schema)
           val merged = StructType(s.schema.fields ++
             df.schema.fields.filterNot(f => s.schema.fieldNames.contains(f.name)))
           if (merged.length == s.schema.length) Nil
           else Seq(r.meta.copy(schemaString = merged.json))
         } ++ txn.map { case (app, ver) => Txn(app, ver, System.currentTimeMillis()) } ++ adds)
+          .map(Planned(_))
       }.getOrElse(snapshot(spark, path).version)
     }
   }
@@ -945,8 +932,8 @@ object DeltaInterop {
         "deleteWhere on a column-mapped table unsupported")
       // live rows only: a row already masked by an existing DV must not
       // be re-deleted (and must not resurrect)
-      val victims = readFiles(spark, path, snap, snap.files, positions = true)
-        .filter(cond).select("__dv_file", "__dv_pos")
+      val victims = TableCore.positionsOf(
+          readFiles(spark, path, snap, snap.files, positions = true).filter(cond))
         .as[(String, Long)](Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
         .collect().toSeq.groupMap(_._1)(_._2)
       val touched = snap.files.flatMap(f => victims.get(scanKey(root, f.path)).map(rows =>
@@ -956,12 +943,13 @@ object DeltaInterop {
         // one packed DV file for the whole commit (the real-writer layout)
         val dvs = writeDvFile(root, touched.map(_._2))
         def withDv(fs: Option[Seq[String]]) = Some((fs.getOrElse(Nil) :+ "deletionVectors").distinct)
-        Some(Protocol(3, 7, withDv(protocol.readerFeatures), withDv(protocol.writerFeatures)) +:
+        Some(Planned(
+          Protocol(3, 7, withDv(protocol.readerFeatures), withDv(protocol.writerFeatures)) +:
           touched.zip(dvs).flatMap { case ((f, _), dv) =>
             // stats stay valid over the undeleted subset (a DV only
             // removes rows), so carry them — skipping keeps working
             Seq(Remove(f.path, f.dv), Add(f.copy(dv = Some(dv))))
-          })
+          }, dvFile(root, dvs.head).toSeq)) // a lost race deletes this DV file
       }
     }
   }
@@ -997,8 +985,10 @@ object DeltaInterop {
           val pcs = snap.partitionColumns
           val live = readFiles(spark, path, snap, victims)
           val grouped = if (pcs.isEmpty) live.coalesce(1) else live.repartition(pcs.map(col): _*)
-          Some(victims.map(f => Remove(f.path, f.dv, dataChange = false)) ++
-            stageAdds(grouped, root, tmp, pcs, dataChange = false))
+          val adds = stageAdds(grouped, root, tmp, pcs, dataChange = false)
+          // a lost race deletes this attempt's rewritten files
+          Some(Planned(victims.map(f => Remove(f.path, f.dv, dataChange = false)) ++ adds,
+            adds.map(a => resolve(root, a.file.path))))
         }
       }
     }
@@ -1027,13 +1017,14 @@ object DeltaInterop {
         def key(f: DeltaFile) = (f.path, f.dv)
         val nowKeys = now.files.map(key).toSet
         val tgtKeys = tgt.files.map(key).toSet
-        Some(now.files.filterNot(f => tgtKeys.contains(key(f))).map(f => Remove(f.path, f.dv)) ++
+        Some(Planned(
+          now.files.filterNot(f => tgtKeys.contains(key(f))).map(f => Remove(f.path, f.dv)) ++
           tgt.files.filterNot(f => nowKeys.contains(key(f))).map { f =>
             val target = resolve(root, f.path)
             require(Files.exists(target), s"restore target file vacuumed: ${f.path}")
             Add(f.copy(size = Files.size(target),
               modificationTime = Files.getLastModifiedTime(target).toMillis))
-          })
+          }))
       }
     }.getOrElse(toVersion)
   }
@@ -1083,20 +1074,11 @@ object DeltaInterop {
     val live = (snap.files.map(f => resolve(root, f.path)) ++
       snap.files.flatMap(_.dv).flatMap(dvFile(root, _)))
       .map(_.toAbsolutePath.normalize).toSet
-    val cutoff = System.currentTimeMillis() - retainMs
-    val doomed = withWalk(root) { it =>
-      it.filter(Files.isRegularFile(_))
-        .filter(p => !p.startsWith(root.resolve("_delta_log")))
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.endsWith(".parquet") || n.startsWith("deletion_vector_")
-        }
-        .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
-        .filterNot(p => live.contains(p.toAbsolutePath.normalize))
-        .toSeq // materialize before deleting (the walk holds the dir handle)
-    }
-    doomed.foreach(Files.delete)
-    doomed.size.toLong
+    TableCore.sweep(Seq(root), live, System.currentTimeMillis() - retainMs, { p =>
+      val n = p.getFileName.toString
+      !p.startsWith(root.resolve("_delta_log")) &&
+        (n.endsWith(".parquet") || n.startsWith("deletion_vector_"))
+    }, dropDirs = false).toLong
   }
 
   // -------------------------------------------------------- checkpoints
@@ -1125,7 +1107,7 @@ object DeltaInterop {
     spark.read.schema(CheckpointSchema)
       .json(spark.createDataset(actions.map(render))(Encoders.STRING))
       .coalesce(1).write.parquet(dir.toString)
-    val part = VersionedTable.listDir(dir)(_.find(_.getFileName.toString.endsWith(".parquet"))).get
+    val part = listDir(dir)(_.find(_.getFileName.toString.endsWith(".parquet"))).get
     Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
     ()
   }
@@ -1235,57 +1217,27 @@ object DeltaInterop {
     readFiles(spark, path, snap, snap.files)
   }
 
-  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-
   /** The one scan under every read: `files` (a subset of the live set,
-    * or a change feed's added/removed/cdc files) read with `snap`'s
-    * declared schema, physical names renamed to logical, partition
-    * values restored as literals per partition tuple, and DV-masked rows
-    * dropped. DV masks are restricted to the files actually scanned.
-    * With `positions`, the output keeps each row's file (`__dv_file`,
-    * see [[scanKey]]) and row index (`__dv_pos`).
+    * or a change feed's added/removed/cdc files) through the core's
+    * [[TableCore.scan]] under `snap`'s declared schema, partition columns
+    * (values keyed by PHYSICAL name under column mapping; a null value
+    * serializes as JSON null or is absent) and physical names. The
+    * deleted rows are the scanned files' DV positions, decoded on the
+    * driver (bounded by total DV cardinality) and broadcast, so the mask
+    * never shuffles the data side. With `positions`, the rows keep the
+    * core's file ([[scanKey]]) and row-index columns.
     */
   private def readFiles(spark: SparkSession, path: String, snap: DeltaSnapshot,
       files: Seq[DeltaFile], positions: Boolean = false): DataFrame = {
     val root = Paths.get(path)
-    val mapping = snap.columnMappingMode
-    val partSet = snap.partitionColumns.toSet
-    val dataFields = snap.schema.filterNot(f => partSet.contains(f.name))
-    val posFields = Seq(StructField("__dv_file", StringType), StructField("__dv_pos", LongType))
-    val out = StructType(snap.schema.fields ++ (if (positions) posFields else Nil))
-    if (files.isEmpty) return emptyFrame(spark, out)
-    // the parquet files carry PHYSICAL names; read with those, rename to
-    // logical on the way out
-    val physDataSchema = StructType(dataFields.map(f =>
-      StructField(physicalName(f, mapping), f.dataType, f.nullable)))
-    val masked = files.exists(_.dv.isDefined)
-    val scanned = files.groupBy(_.partitionValues).map { case (pv, fs) =>
-      val dataCols = dataFields.map(f => col(s"`${physicalName(f, mapping)}`").as(f.name))
-      // partitionValues are keyed by PHYSICAL name under column mapping;
-      // a null partition value serializes as JSON null / absent
-      val partCols = snap.partitionColumns.map { pc =>
-        val f = snap.schema(pc)
-        lit(pv.getOrElse(physicalName(f, mapping), null)).cast(f.dataType).as(pc)
-      }
-      val posCols =
-        if (!positions && !masked) Nil
-        else Seq(regexp_replace(col("_metadata.file_path"), "^file:/+", "/").as("__dv_file"),
-          col("_metadata.row_index").as("__dv_pos"))
-      spark.read.schema(physDataSchema).parquet(fs.map(f => resolve(root, f.path).toString): _*)
-        .select(dataCols ++ partCols ++ posCols: _*)
-    }.reduce(_.unionByName(_))
-    val live =
-      if (!masked) scanned
-      else {
-        // deleted (file, position) pairs: bounded by total DV cardinality,
-        // broadcast so the mask never shuffles the data side
-        val dead = files.flatMap(f => f.dv.toSeq.flatMap(d =>
-          dvRowIndexes(root, d).map(i => Row(scanKey(root, f.path), i))))
-        scanned.join(broadcast(spark.createDataFrame(dead.asJava, StructType(posFields))),
-          posFields.map(_.name), "left_anti")
-      }
-    live.select(out.fieldNames.toSeq.map(col): _*)
+    val dead = files.flatMap(f => f.dv.toSeq.flatMap(d =>
+      dvRowIndexes(root, d).map(i => Row(scanKey(root, f.path), i))))
+    TableCore.scan(spark,
+      Layout(snap.schema, snap.partitionColumns, physicalName(_, snap.columnMappingMode)),
+      files.map(f => LiveFile(resolve(root, f.path).toString, f.partitionValues)),
+      if (!files.exists(_.dv.isDefined)) None
+      else Some(broadcast(spark.createDataFrame(dead.asJava, TableCore.DeadSchema))),
+      positions)
   }
 
   /** Files that can contain a row with `column` in [lo, hi], decided
@@ -1302,51 +1254,32 @@ object DeltaInterop {
   def statsCandidateFiles(spark: SparkSession, path: String, column: String,
       lo: Any, hi: Any, asOf: Option[Long] = None): (Seq[DeltaFile], Int) = {
     val snap = snapshot(spark, path, asOf)
-    (pruneByStats(snap, column, lo, hi), snap.files.size)
+    (pruneByStats(spark, snap, column, lo, hi), snap.files.size)
   }
 
-  private def pruneByStats(snap: DeltaSnapshot, column: String,
+  /** The core's [[TableCore.minMaxCandidates]] over add.stats, or over
+    * partitionValues for a partition column (a null value never matches
+    * a range). Stats and partition values are keyed by PHYSICAL names
+    * under column mapping. Bounds of a column outside
+    * [[statsTrackable]]'s types are not used; its file is skipped only
+    * when nullCount shows every row null.
+    */
+  private def pruneByStats(spark: SparkSession, snap: DeltaSnapshot, column: String,
       lo: Any, hi: Any): Seq[DeltaFile] = {
     val field = snap.schema.find(_.name == column).getOrElse(
       throw new IllegalArgumentException(s"no column $column in table schema"))
-    // numbers compare numerically, strings/ISO-dates lexically — the
-    // same convention the stats were serialized with. Booleans are NOT
-    // numeric here: their stats serialize as bare true/false, which
-    // BigDecimal rejects — and "false" < "true" lexically, matching
-    // the boolean order, so the string branch is already correct
-    val numeric = field.dataType.isInstanceOf[NumericType]
-    def cmp(a: String, b: String): Int =
-      if (numeric) BigDecimal(a).compare(BigDecimal(b)) else a.compareTo(b)
-    val (loS, hiS) = (String.valueOf(lo), String.valueOf(hi))
-    // stats and partition values are keyed by PHYSICAL names when column
-    // mapping is on (the protocol's rule — our writer and real writers
-    // agree)
     val key = physicalName(field, snap.columnMappingMode)
+    val typed =
+      if (statsTrackable(field.dataType)) new StructType().add(key, field.dataType)
+      else new StructType()
+    val statsReader = mapper.reader().`with`(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
     if (snap.partitionColumns.contains(column))
-      snap.files.filter { f =>
-        f.partitionValues.get(key) match {
-          case Some(v) if v != null => cmp(v, loS) >= 0 && cmp(v, hiS) <= 0
-          case _ => false // null partition value never matches a range
-        }
-      }
+      TableCore.minMaxCandidates(spark, snap.files, (f: DeltaFile) =>
+        Some(f.partitionValues.get(key).orNull).map(v => (v, v)), StringType, field.dataType, lo, hi)
     else
-      snap.files.filter { f =>
-        f.stats match {
-          case None => true // no stats: cannot exclude
-          case Some(sj) =>
-            val node = mapper.readTree(sj)
-            val mn = node.path("minValues").path(key)
-            val mx = node.path("maxValues").path(key)
-            if (mn.isMissingNode || mx.isMissingNode) {
-              // column untracked or all-null; all-null is provable from
-              // nullCount == numRecords and excludes the file
-              val nc = node.path("nullCount").path(key)
-              val nr = node.path("numRecords")
-              !(nc.isNumber && nr.isNumber && nc.asLong == nr.asLong)
-            } else
-              cmp(mx.asText, loS) >= 0 && cmp(mn.asText, hiS) <= 0
-        }
-      }
+      TableCore.minMaxCandidates(spark, snap.files, (f: DeltaFile) =>
+        f.stats.flatMap(s => FileStats.fromJson(statsReader.readTree(s), typed).bounds(key)),
+        field.dataType, field.dataType, lo, hi)
   }
 
   /** Range read with Delta-native data skipping: prune live files via
@@ -1359,7 +1292,7 @@ object DeltaInterop {
   def readWhere(spark: SparkSession, path: String, column: String,
       lo: Any, hi: Any, asOf: Option[Long] = None): DataFrame = {
     val snap = snapshot(spark, path, asOf)
-    readFiles(spark, path, snap, pruneByStats(snap, column, lo, hi))
+    readFiles(spark, path, snap, pruneByStats(spark, snap, column, lo, hi))
       .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
   }
 
@@ -1393,16 +1326,16 @@ object DeltaInterop {
     require(snap.columnMappingMode == "none",
       "CDF read of a column-mapped table unsupported")
     val changeType = StructField("_change_type", StringType)
-    val parts: Seq[DataFrame] = (fromVersion to toVersion).flatMap { v =>
+    val parts = (fromVersion to toVersion).flatMap { v =>
       val p = logDir.resolve(f"$v%020d.json")
       require(Files.exists(p),
         s"commit $v missing from _delta_log — CDF needs every JSON commit in range")
       val acts = readActions(p, s"commit $v of $path")
       val cdcs = acts.collect { case Cdc(cp, pv) => DeltaFile(cp, pv, None) }
-      val frames =
-        if (cdcs.nonEmpty)
-          Seq(readFiles(spark, path, snap.copy(schema = StructType(snap.schema :+ changeType)), cdcs))
-        else {
+      if (cdcs.nonEmpty)
+        Seq((v, null, readFiles(spark, path,
+          snap.copy(schema = StructType(snap.schema :+ changeType)), cdcs)))
+      else {
           val adds = acts.collect { case a: Add => a }
           require(!adds.exists(_.file.dv.nonEmpty),
             s"commit $v adds a deletion vector without cdc actions — " +
@@ -1413,12 +1346,10 @@ object DeltaInterop {
           lazy val pre = snapshot(spark, path, Some(v - 1)).files.map(f => f.path -> f).toMap
           val deletes = removes.map(r => pre.getOrElse(r.path, DeltaFile(r.path, Map.empty, r.dv)))
           Seq(inserts -> "insert", deletes -> "delete").collect { case (fs, t) if fs.nonEmpty =>
-            readFiles(spark, path, snap, fs).withColumn("_change_type", lit(t))
+            (v, t, readFiles(spark, path, snap, fs))
           }
         }
-      frames.map(_.withColumn("_commit_version", lit(v)))
     }
-    parts.reduceOption(_.unionByName(_)).getOrElse(emptyFrame(spark,
-      StructType(snap.schema :+ changeType :+ StructField("_commit_version", LongType))))
+    TableCore.changeFeed(spark, snap.schema, parts)
   }
 }

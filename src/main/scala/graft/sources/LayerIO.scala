@@ -103,34 +103,6 @@ object LayerIO {
   def appendLayer(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Append).parquet(path)
 
-  /** S4 with schema evolution — the mergeSchema analog of the
-    * reference's `option("mergeSchema", "true")` append
-    * (bronze_rx_claims_load.py:61, readme.md:64-66). A widened feed
-    * (new columns) appends as-is; reads go through [[readLayerEvolved]],
-    * which unions the file schemas so pre-widening files surface NULL
-    * for the new columns. Type CHANGES are not evolution — they fail
-    * fast here instead of producing an unreadable mixed-type table.
-    */
-  def appendEvolved(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    if (layerExists(spark, path)) {
-      val existing = readLayer(spark, path).schema
-      val conflicts = df.schema.filter(f =>
-        existing.exists(e => e.name == f.name && e.dataType != f.dataType))
-      require(conflicts.isEmpty,
-        s"schema evolution adds columns, never retypes them; conflicting: " +
-          conflicts.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", "))
-    }
-    df.write.mode(SaveMode.Append).parquet(path)
-  }
-
-  /** Merge-on-read for evolved layers: union of all file schemas, NULL
-    * where a file predates a column. (Plain [[readLayer]] picks one
-    * footer's schema — fine for homogeneous tables, silently drops the
-    * new columns after an evolved append.)
-    */
-  def readLayerEvolved(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
   /** Overwrite `path` via staging + swap: the full result is written to a
     * sibling staging directory FIRST, then swapped in with two renames.
     * Overwriting a path in-place while the plan still reads from it
@@ -192,26 +164,5 @@ object LayerIO {
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
     (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
       .saveAsTable(table)
-  }
-
-  /** Compaction to the 128–256 MB files the reference's OPTIMIZE guidance
-    * targets (/root/reference/bronze_silver_gold/readme.md:96,107).
-    * REBALANCE + AQE sizes partitions from RUNTIME statistics in the same
-    * job — no pre-count scan (the old two-pass count-then-coalesce shape)
-    * and no fixed row-byte guess: AQE merges small shuffle outputs and
-    * splits skewed ones toward the advisory size, so one hot partition
-    * can't produce one giant file.
-    */
-  def compact(df: DataFrame, path: String,
-      targetFileBytes: Long = 192L << 20): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, targetFileBytes.toString)
-    try df.hint("rebalance").write.mode(SaveMode.Overwrite).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 }

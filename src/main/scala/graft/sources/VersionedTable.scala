@@ -12,10 +12,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.mergeSchemas
 import org.apache.spark.sql.types._
 
+import TableCore.{FileCol, LiveFile, Layout, Planned, PosCol, listDir, putIfAbsent}
+
 /** Minimal versioned table format — the Delta-style transaction-log
   * semantics the reference leans on (ACID commits, versioning, time
   * travel, /root/reference/README.md:36-40) rebuilt natively for plain
-  * parquet:
+  * parquet. It is the `_graft_log` codec of [[TableCore]], the engine it
+  * shares with [[DeltaInterop]]: it reads a manifest into the core's
+  * snapshot (live files, recorded schema and stats), supplies the deleted
+  * positions from table-level parquet DV files, and renders each planned
+  * commit as the next manifest. The commit loop, scan, min/max pruning,
+  * DV delete, compaction, vacuum sweep and change-feed union are the
+  * core's. Rules of this format stay here: the Bloom sidecar, op-tag
+  * checkpoints and [[writeOnce]], [[compact]]'s choice of small files,
+  * [[vacuum]]'s `retainLast`, and [[changes]]' refusal of rewrite commits.
   *
   * - data files are immutable, written once under `data/<uuid>/`;
   * - each commit is a JSON manifest `_graft_log/v{N}.json` listing the
@@ -24,7 +34,7 @@ import org.apache.spark.sql.types._
   *   atomically linked into the log — readers see either the old or the
   *   new version, never a partial table;
   * - concurrent writers race on the version number; every commit goes
-  *   through the one optimistic-concurrency loop (`commitLoop`): the
+  *   through the core's optimistic-concurrency loop: the
   *   loser's link fails and it retries against the next version, as
   *   Delta does.
   *   Read-modify-write transactions ([[deleteWhere]], [[mergeCommitDV]],
@@ -60,16 +70,6 @@ object VersionedTable {
 
   private def manifestPath(path: String, v: Long): Path =
     logDir(path).resolve(f"v$v%08d.json")
-
-  /** Run `f` over a directory listing, closing the stream afterwards
-    * (Files.list leaks an open fd until closed; versions() runs per
-    * commit retry and per micro-batch, so leaks accumulate fast). Shared
-    * with [[DeltaInterop]].
-    */
-  private[sources] def listDir[A](dir: Path)(f: Iterator[Path] => A): A = {
-    val s = Files.list(dir)
-    try f(s.iterator().asScala) finally s.close()
-  }
 
   /** Versions of the log files named `<prefix><8 digits>.json`, ascending. */
   private def logFiles(path: String, prefix: String): Seq[Long] = {
@@ -168,27 +168,6 @@ object VersionedTable {
   private def statsOf(m: Manifest, schema: StructType): Map[String, FileStats] =
     m.files.map(f => f -> m.stats.getOrElse(f, FileStats.read(f, schema))).toMap
 
-  /** Stage `content` beside `target` and link it into place; false if
-    * `target` already exists (lost the race). put-if-absent must FAIL
-    * when the target exists. ATOMIC_MOVE is the wrong primitive (POSIX
-    * rename silently replaces the target, letting a racing writer
-    * overwrite a committed manifest); createLink is atomic AND errors on
-    * an existing target. [[DeltaInterop]] commits through it too.
-    */
-  private[sources] def putIfAbsent(target: Path, content: String): Boolean = {
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling(s".tmp-${UUID.randomUUID()}")
-    Files.writeString(tmp, content)
-    try {
-      Files.createLink(target, tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    } finally {
-      Files.deleteIfExists(tmp); ()
-    }
-  }
-
   // ------------------------------------------------- log checkpoints
   //
   // Delta compacts its JSON log into a checkpoint every 10 commits so
@@ -235,12 +214,10 @@ object VersionedTable {
   // ------------------------------------------------- the commit loop
 
   /** One commit attempt: the new version's files, schema and deletion
-    * vectors, plus the directories staged for it alone (deleted if it
-    * loses) and any file stats it already knows.
+    * vectors, and any file stats it already knows.
     */
   private final case class Attempt(files: Seq[String], schema: Option[StructType],
-      dv: Seq[String] = Seq.empty, staged: Seq[Path] = Seq.empty,
-      stats: Map[String, FileStats] = Map.empty)
+      dv: Seq[String] = Seq.empty, stats: Map[String, FileStats] = Map.empty)
 
   /** The file stats a commit of `a` on `base` records: the attempt's
     * own, else the base's (with every column the commit adds to the
@@ -259,58 +236,36 @@ object VersionedTable {
         .getOrElse(FileStats.read(f, schema))).toMap
     }
 
-  /** The optimistic-concurrency loop every commit goes through. Captures
-    * the latest manifest as the base (an empty table is an empty base at
-    * version -1, unless `requireBase`), asks `plan` for the commit and
-    * links it, with its files' stats, put-if-absent at base+1. Losing
-    * the race deletes the attempt's staged directories and re-plans
-    * against the new latest version, so a read-modify-write commit never
-    * lands on a stale snapshot; blind writes stage nothing per attempt
-    * and keep their data across retries. `plan` returning None ends the loop without a
-    * commit. A landed commit writes the checkpoint when one is due.
+  /** Every commit goes through the core's [[TableCore.commitLoop]]: the
+    * base is the latest manifest (an empty table is an empty base at
+    * version -1, unless `requireBase`), and the plan is linked, with its
+    * files' stats, as the manifest of base+1. Blind writes stage nothing
+    * per attempt and keep their data across retries. A landed commit
+    * writes the checkpoint when one is due.
     */
   private def commitLoop(path: String, op: String, requireBase: Boolean)(
-      plan: Manifest => Option[Attempt]): Option[Long] = {
-    var result: Option[Option[Long]] = None
-    while (result.isEmpty) {
+      plan: Manifest => Option[Planned[Attempt]]): Option[Long] =
+    TableCore.commitLoop { () =>
       val latest = if (requireBase) Some(latestOrFail(path)) else latestVersion(path)
-      val base = latest.fold(Manifest(-1L, "", Seq.empty))(readManifest(path, _))
-      val next = latest.fold(0L)(_ + 1)
-      plan(base) match {
-        case None => result = Some(None)
-        case Some(a) =>
-          if (putIfAbsent(manifestPath(path, next),
-              render(Manifest(next, op, a.files, a.dv, a.schema, statsFor(base, a))))) {
-            maybeCheckpoint(path, next)
-            result = Some(Some(next))
-          } else a.staged.foreach(discardData)
+      latest.fold(Manifest(-1L, "", Seq.empty))(readManifest(path, _))
+    }(plan) { (base, a) =>
+      val next = base.version + 1
+      if (!putIfAbsent(manifestPath(path, next),
+          render(Manifest(next, op, a.files, a.dv, a.schema, statsFor(base, a))))) None
+      else {
+        maybeCheckpoint(path, next)
+        Some(next)
       }
     }
-    result.get
-  }
 
-  /** Write the batch's data files (immutable, never visible until a
-    * manifest references them). Returns (dataDir, file list).
+  /** Write the batch's data files under `<path>/<sub>/<uuid>/` (never
+    * visible until a manifest references them). Returns (dir, files).
     */
   private def writeData(df: DataFrame, path: String,
       sub: String = "data"): (Path, Seq[String]) = {
-    val dataDir = Paths.get(s"$path/$sub/${UUID.randomUUID()}")
-    df.write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
-    val newFiles = listDir(dataDir)(
-      _.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted)
-    (dataDir, newFiles)
+    val dir = Paths.get(s"$path/$sub/${UUID.randomUUID()}")
+    (dir, TableCore.writeFiles(df, dir).map(_.toString))
   }
-
-  /** Remove a data dir whose commit lost its race — the files were never
-    * referenced by any manifest, so this is garbage collection, not
-    * deletion of table state.
-    */
-  private def discardData(dataDir: Path): Unit =
-    if (Files.exists(dataDir)) {
-      listDir(dataDir)(_.toSeq).foreach(Files.deleteIfExists(_))
-      Files.deleteIfExists(dataDir)
-      ()
-    }
 
   /** Blind-write plan for `df`, already written as `newFiles`: append
     * carries the base's files AND deletion vectors forward (dropping the
@@ -318,11 +273,11 @@ object VersionedTable {
     * base's, failing on a type conflict; overwrite replaces all three.
     */
   private def blindPlan(mode: SaveMode, df: DataFrame, newFiles: Seq[String],
-      base: Manifest): Attempt =
+      base: Manifest): Planned[Attempt] = Planned(
     if (mode == SaveMode.Append)
       Attempt(base.files ++ newFiles,
         Some(mergeSchemas(schemaOf(df.sparkSession, base), df.schema)), base.dv)
-    else Attempt(newFiles, Some(mergeSchemas(new StructType(), df.schema)))
+    else Attempt(newFiles, Some(mergeSchemas(new StructType(), df.schema))))
 
   /** Write `df` as a new commit. Append mode unions the previous
     * version's files with the new ones; overwrite replaces them. Returns
@@ -407,7 +362,7 @@ object VersionedTable {
       if (versions(path).exists(v => !start.contains(v) && opOf(path, v) == op)) {
         // a concurrent replay of this very batch won the race: our data
         // files must not become a duplicate commit
-        discardData(dataDir)
+        TableCore.deleteTree(dataDir)
         None
       } else Some(blindPlan(mode, df, newFiles, base))
     }
@@ -446,8 +401,6 @@ object VersionedTable {
   // rewrites (compaction, pruned merge) simply drop rows from the DV's
   // effective domain without editing DV files — immutability everywhere.
 
-  private val FileCol = "_vt_file"
-  private val PosCol = "_vt_pos"
   /** Above this total DV size the read-side anti-join stops broadcasting. */
   private val dvBroadcastBytes: Long = 64L << 20
 
@@ -455,50 +408,24 @@ object VersionedTable {
   def dvFiles(path: String, version: Long): Seq[String] =
     readManifest(path, version).dv
 
-  /** A DV file's rows: the data file's `_metadata.file_path` and the
-    * deleted row's `_metadata.row_index`.
+  /** The rows DV files `dvs` delete, as the core's (`file`, `pos`) frame
+    * (a DV file's rows are the data file's `_metadata.file_path` and the
+    * deleted row's `_metadata.row_index`), broadcast while their on-disk
+    * size (a driver-side stat, no extra job) is small.
     */
-  private val DvSchema = new StructType().add("file", StringType).add("pos", LongType)
+  private def dvRows(spark: SparkSession, dvs: Seq[String]): DataFrame = {
+    val dv = spark.read.schema(TableCore.DeadSchema).parquet(dvs: _*)
+    if (dvs.map(f => Files.size(Paths.get(f))).sum <= dvBroadcastBytes) broadcast(dv) else dv
+  }
 
-  /** Scan `fs` under the table `schema` with the file/position metadata
-    * columns attached (no footer inference; a file lacking a column reads
-    * it as NULL).
-    */
-  private def withPos(spark: SparkSession, schema: StructType,
-      fs: Seq[String]): DataFrame =
-    spark.read.schema(schema).parquet(fs: _*)
-      .withColumn(FileCol, col("_metadata.file_path"))
-      .withColumn(PosCol, col("_metadata.row_index"))
-
-  /** Subtract DV positions from a [[withPos]] scan. Broadcast is gated on
-    * the DVs' on-disk size (a driver-side stat, no extra job).
-    */
-  private def subtractDv(spark: SparkSession, scan: DataFrame,
-      dvs: Seq[String]): DataFrame =
-    if (dvs.isEmpty) scan
-    else {
-      val dv = spark.read.schema(DvSchema).parquet(dvs: _*)
-      val bytes = dvs.map(f => Files.size(Paths.get(f))).sum
-      val probe = if (bytes <= dvBroadcastBytes) broadcast(dv) else dv
-      scan.join(probe,
-        scan(FileCol) === probe("file") && scan(PosCol) === probe("pos"),
-        "left_anti")
-    }
-
-  /** The live rows of `fs` under `schema` and `dvs`, position columns
-    * attached (the common read under every DV-aware operation).
-    */
-  private def liveWithPos(spark: SparkSession, schema: StructType,
-      fs: Seq[String], dvs: Seq[String]): DataFrame =
-    subtractDv(spark, withPos(spark, schema, fs), dvs)
-
-  /** The live rows of `fs` under `schema` and `dvs`: the plain scan when
-    * there are no deletion vectors (zero overhead).
+  /** The live rows of `fs` under `schema` and DV files `dvs`, through
+    * the core's scan: the plain scan when there are no DVs. With
+    * `positions`, the rows keep the core's file and position columns.
     */
   private def liveRows(spark: SparkSession, schema: StructType, fs: Seq[String],
-      dvs: Seq[String]): DataFrame =
-    if (dvs.isEmpty) spark.read.schema(schema).parquet(fs: _*)
-    else liveWithPos(spark, schema, fs, dvs).drop(FileCol, PosCol)
+      dvs: Seq[String], positions: Boolean = false): DataFrame =
+    TableCore.scan(spark, Layout(schema), fs.map(LiveFile(_)),
+      if (dvs.isEmpty) None else Some(dvRows(spark, dvs)), positions)
 
   /** `_metadata.file_path` is a URI (`file:///…`); manifests store plain
     * paths. Driver-side mapping for pruned-merge's touched-file list.
@@ -514,10 +441,10 @@ object VersionedTable {
   def deleteWhere(spark: SparkSession, path: String, cond: Column): Long =
     commitLoop(path, "delete", requireBase = true) { base =>
       val schema = schemaOf(spark, base)
-      val hits = liveWithPos(spark, schema, base.files, base.dv).filter(cond)
-        .select(col(FileCol).as("file"), col(PosCol).as("pos"))
+      val hits = TableCore.positionsOf(
+        liveRows(spark, schema, base.files, base.dv, positions = true).filter(cond))
       val (dvDir, newDv) = writeData(hits, path, "dv")
-      Some(Attempt(base.files, Some(schema), base.dv ++ newDv, Seq(dvDir)))
+      Some(Planned(Attempt(base.files, Some(schema), base.dv ++ newDv), Seq(dvDir)))
     }.get
 
   /** MERGE via deletion vectors: matched target rows are DV-masked and
@@ -532,12 +459,12 @@ object VersionedTable {
     commitLoop(path, "merge-dv", requireBase = true) { base =>
       val schema = schemaOf(spark, base)
       val widened = mergeSchemas(schema, source.schema)
-      val matched = liveWithPos(spark, schema, base.files, base.dv)
-        .join(source.select(keys.map(col): _*), keys, "left_semi")
-        .select(col(FileCol).as("file"), col(PosCol).as("pos"))
+      val matched = TableCore.positionsOf(
+        liveRows(spark, schema, base.files, base.dv, positions = true)
+          .join(source.select(keys.map(col): _*), keys, "left_semi"))
       val (dvDir, newDv) = writeData(matched, path, "dv")
       val (dataDir, newFiles) = writeData(source, path)
-      Some(Attempt(base.files ++ newFiles, Some(widened), base.dv ++ newDv,
+      Some(Planned(Attempt(base.files ++ newFiles, Some(widened), base.dv ++ newDv),
         Seq(dvDir, dataDir)))
     }.get
 
@@ -558,7 +485,7 @@ object VersionedTable {
       keys: Seq[String]): Long =
     commitLoop(path, "merge-pruned", requireBase = true) { base =>
       val schema = schemaOf(spark, base)
-      val live = liveWithPos(spark, schema, base.files, base.dv)
+      val live = liveRows(spark, schema, base.files, base.dv, positions = true)
       // bounded driver traffic: one row per TOUCHED FILE, never per data row
       val touched = live
         .join(source.select(keys.map(col): _*), keys, "left_semi")
@@ -571,8 +498,8 @@ object VersionedTable {
       val merged = graft.operators.Merge.upsert(targetSlice, source, keys)
       val (dataDir, newFiles) = writeData(merged, path)
       // DV entries for rewritten files go inert with the files themselves
-      Some(Attempt(untouched ++ newFiles, Some(mergeSchemas(schema, merged.schema)),
-        base.dv, Seq(dataDir)))
+      Some(Planned(Attempt(untouched ++ newFiles, Some(mergeSchemas(schema, merged.schema)),
+        base.dv), Seq(dataDir)))
     }.get
 
   // ---------------------------------------------------- change data feed
@@ -608,28 +535,21 @@ object VersionedTable {
         val addedDv = cur.dv.filterNot(prev.dv.toSet)
         val inserts =
           if (addedFiles.isEmpty) Seq.empty
-          else Seq(spark.read.schema(schemaOf(spark, cur)).parquet(addedFiles: _*)
-            .withColumn("_change_type", lit("insert"))
-            .withColumn("_commit_version", lit(v)))
+          else Seq((v, "insert", liveRows(spark, schemaOf(spark, cur), addedFiles, Nil)))
         val deletes =
           if (addedDv.isEmpty) Seq.empty
           else {
-            val dv = spark.read.schema(DvSchema).parquet(addedDv: _*)
-            val scan = withPos(spark, schemaOf(spark, prev), prev.files)
-            Seq(scan.join(broadcast(dv),
-                scan(FileCol) === dv("file") && scan(PosCol) === dv("pos"),
-                "left_semi")
-              .drop(FileCol, PosCol)
-              .withColumn("_change_type", lit("delete"))
-              .withColumn("_commit_version", lit(v)))
+            // the rows at the new DV positions: a semi-join, not the mask
+            val dv = spark.read.schema(TableCore.DeadSchema).parquet(addedDv: _*)
+            val scan = liveRows(spark, schemaOf(spark, prev), prev.files, Nil, positions = true)
+            Seq((v, "delete", scan.join(broadcast(dv),
+                scan(FileCol) === dv("file") && scan(PosCol) === dv("pos"), "left_semi")
+              .drop(FileCol, PosCol)))
           }
         inserts ++ deletes
       }
     }
-    val empty = readVersion(spark, path, toVersion).limit(0)
-      .withColumn("_change_type", lit(""))
-      .withColumn("_commit_version", lit(0L))
-    deltas.foldLeft(empty)(_.unionByName(_, allowMissingColumns = true))
+    TableCore.changeFeed(spark, schemaOf(spark, readManifest(path, toVersion)), deltas)
   }
 
   /** Read the table as of `version` (time travel). The scan declares the
@@ -662,7 +582,7 @@ object VersionedTable {
       s"cannot restore to version $version: manifest vacuumed or absent")
     val target = readManifest(path, version)
     commitLoop(path, s"restore($version)", requireBase = true)(_ =>
-      Some(Attempt(target.files, target.schema, target.dv, stats = target.stats))).get
+      Some(Planned(Attempt(target.files, target.schema, target.dv, target.stats)))).get
   }
 
   /** Read the latest version. */
@@ -683,12 +603,6 @@ object VersionedTable {
   // recorded stats stay sound bounds — a fully deleted range costs one
   // false-positive file read, never a wrong result.
 
-  /** The schema of a min/max stats row: a data file and its min/max of a
-    * column of type `t`.
-    */
-  private def statsSchema(t: DataType): StructType =
-    new StructType().add("file", StringType).add("mn", t).add("mx", t)
-
   /** The latest manifest with its table schema, after checking that
     * `column` is in it.
     */
@@ -702,28 +616,19 @@ object VersionedTable {
     (m, schema)
   }
 
-  /** The files of `m` whose stats allow a `column` value in [lo, hi]: the
-    * stats of those with bounds go through a local DataFrame filter
-    * (no Spark job); files whose `column` is all NULL (written before
-    * the column existed, or genuinely all-null) are skipped, since a
-    * range excludes NULL; files without usable stats are kept.
+  /** The files of `m` whose stats allow a `column` value in [lo, hi],
+    * through the core's [[TableCore.minMaxCandidates]]: files whose
+    * `column` is all NULL (written before the column existed, or
+    * genuinely all-null) are skipped, since a range excludes NULL; files
+    * without usable stats are kept.
     */
   private def minMaxCandidates(spark: SparkSession, m: Manifest, schema: StructType,
       column: String, lo: Any, hi: Any): Seq[String] = {
     val stats = statsOf(m, schema)
-    val bounded = m.files.flatMap(f => stats(f).bounds(column).map { case (mn, mx) =>
-      Row(f, mn, mx) })
-    val kept = spark.createDataFrame(bounded.asJava, statsSchema(schema(column).dataType))
-      .filter(coalesce(col("mx") >= lit(lo) && col("mn") <= lit(hi), lit(false)))
-      .select("file").collect().map(_.getString(0)).toSet
-    m.files.filter(f => kept(f) || stats(f).bounds(column).isEmpty)
+    val t = schema(column).dataType
+    TableCore.minMaxCandidates(spark, m.files, (f: String) => stats(f).bounds(column), t, t,
+      lo, hi)
   }
-
-  /** The live rows of `fs` (files of `m`) matching `cond`. */
-  private def scan(spark: SparkSession, m: Manifest, schema: StructType,
-      fs: Seq[String], cond: Column): DataFrame =
-    if (fs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema).filter(cond)
-    else liveRows(spark, schema, fs, m.dv).filter(cond)
 
   /** Range read with file skipping: the rows of the latest version
     * satisfying `lo <= column <= hi`, scanning only files whose recorded
@@ -740,7 +645,7 @@ object VersionedTable {
     val (m, schema) = head(spark, path, column)
     if (m.files.isEmpty) return (spark.emptyDataFrame, 0L, 0L)
     val fs = minMaxCandidates(spark, m, schema, column, lo, hi)
-    (scan(spark, m, schema, fs, col(column) >= lit(lo) && col(column) <= lit(hi)),
+    (liveRows(spark, schema, fs, m.dv).filter(col(column) >= lit(lo) && col(column) <= lit(hi)),
       fs.size.toLong, m.files.size.toLong)
   }
 
@@ -849,7 +754,7 @@ object VersionedTable {
     val fs =
       if (ranged.size < 2) ranged
       else bloomCandidates(spark, path, schema, ranged, column, value)
-    (scan(spark, m, schema, fs, col(column) === lit(value)), fs.size.toLong,
+    (liveRows(spark, schema, fs, m.dv).filter(col(column) === lit(value)), fs.size.toLong,
       m.files.size.toLong)
   }
 
@@ -866,12 +771,7 @@ object VersionedTable {
     * result. Returns the number of Bloom rows dropped.
     */
   def vacuumStats(spark: SparkSession, path: String): Long = {
-    val retired = Paths.get(path, "_graft_stats")
-    if (Files.exists(retired)) {
-      val walk = Files.walk(retired)
-      try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally walk.close()
-    }
+    TableCore.deleteTree(Paths.get(path, "_graft_stats"))
     val root = Paths.get(path, "_graft_bloom")
     if (!Files.exists(root)) return 0L
     val live: Set[String] =
@@ -942,7 +842,7 @@ object VersionedTable {
     val live = retained.flatMap { v =>
       val m = readManifest(path, v)
       m.files ++ m.dv
-    }.toSet
+    }.map(Paths.get(_).toAbsolutePath.normalize).toSet
     vs.dropRight(retainLast).foreach { v =>
       Files.deleteIfExists(manifestPath(path, v)); ()
     }
@@ -951,31 +851,10 @@ object VersionedTable {
     checkpoints(path).dropRight(1).foreach { v =>
       Files.deleteIfExists(checkpointPath(path, v)); ()
     }
-    val horizon = System.currentTimeMillis() - minAgeMs
-    def expired(p: Path): Boolean =
-      Files.getLastModifiedTime(p).toMillis <= horizon
-    var deleted = 0
-    Seq(s"$path/data", s"$path/dv").map(Paths.get(_))
-      .filter(Files.exists(_)).foreach { root =>
-      val subs = listDir(root)(_.filter(Files.isDirectory(_)).toSeq)
-      subs.foreach { sub =>
-        val entries = listDir(sub)(_.toSeq)
-        val parqs = entries.filter(_.toString.endsWith(".parquet"))
-        val dead = parqs.filter(p => !live.contains(p.toString) && expired(p))
-        dead.foreach { p => Files.deleteIfExists(p); deleted += 1 }
-        if (!parqs.exists(p => live.contains(p.toString)) &&
-            dead.size == parqs.size) {
-          // no retained version reaches into this commit dir and every
-          // data file is confirmed dead: remove the leftover markers
-          // (_SUCCESS etc.) and the dir itself
-          entries.filterNot(_.toString.endsWith(".parquet"))
-            .foreach(Files.deleteIfExists(_))
-          Files.deleteIfExists(sub)
-          ()
-        }
-      }
-    }
-    deleted
+    // a commit dir that no retained version reaches into, once every
+    // data file is confirmed dead, goes with its markers (_SUCCESS etc.)
+    TableCore.sweep(Seq(Paths.get(path, "data"), Paths.get(path, "dv")), live,
+      System.currentTimeMillis() - minAgeMs, _.toString.endsWith(".parquet"), dropDirs = true)
   }
 
   /** OPTIMIZE-style file compaction — the reference's "OPTIMIZE command
@@ -1015,10 +894,10 @@ object VersionedTable {
         // DV-masked rows must NOT resurrect in the rewrite: compact the
         // LIVE rows of the small files (their DV entries then go inert);
         // kept files retain their DV subtraction through the carried list
-        val compacted = liveRows(spark, schema, small, base.dv).repartition(nOut)
-        val (dataDir, newFiles) = writeData(compacted, path)
-        Some(Attempt(base.files.filterNot(small.toSet) ++ newFiles, Some(schema),
-          base.dv, Seq(dataDir)))
+        val (dataDir, newFiles) =
+          writeData(liveRows(spark, schema, small, base.dv).repartition(nOut), path)
+        Some(Planned(Attempt(base.files.filterNot(small.toSet) ++ newFiles, Some(schema),
+          base.dv), Seq(dataDir)))
       }
     }
 }

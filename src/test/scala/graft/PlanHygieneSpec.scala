@@ -118,4 +118,20 @@ class PlanHygieneSpec extends SparkSpec {
     }
     assert(offenders.isEmpty, offenders.mkString(", "))
   }
+
+  test("joinKeyedWindows exempts only the bucket-partitioned window over a join") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number, sum}
+    val a = spark.range(100).select(col("id").as("k"), (col("id") * 2).as("v"))
+    val b = spark.range(100).select(col("id").as("k"), (col("id") % 3).as("w"))
+    val df = a.join(b, "k").withColumn("__ps_bucket", col("k") % 4)
+      .withColumn("rn", row_number().over(Window.partitionBy("__ps_bucket").orderBy("v")))
+      .withColumn("s", sum("w").over(Window.partitionBy("w").orderBy("v")))
+    val plan = df.queryExecution.optimizedPlan
+    val windows = plan.collect { case w: logical.Window => w }
+    assert(windows.size == 2, plan.treeString)
+    val flagged = tools.PlanAudit.joinKeyedWindows(plan)
+    assert(flagged.map(_.partitionSpec.flatMap(_.references.map(_.name))) == Seq(Seq("w")),
+      plan.treeString)
+  }
 }

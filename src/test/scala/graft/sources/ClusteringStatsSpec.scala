@@ -22,7 +22,7 @@ class ClusteringStatsSpec extends SparkSpec {
   test("z-order clustering localizes files in both dimensions") {
     val li = Tables.lineitem(spark, sf)
       .withColumn("days", datediff(to_date($"l_shipdate"), lit("1992-01-01")))
-    Clustering.writeZOrdered(li, s"$root/zorder", $"days", $"l_suppkey", 8)
+    ZOrder.clusterWrite(li, s"$root/zorder", "days", "l_suppkey", 8)
     li.repartition(8).write.mode("overwrite").parquet(s"$root/unclustered")
     val (z, u) = (boxArea(s"$root/zorder"), boxArea(s"$root/unclustered"))
     assert(z < u / 2,

@@ -113,6 +113,17 @@ class DeltaWriteSpec extends SparkSpec {
     assert(back.filter($"k" === 2 && $"score" === 5.0).count() == 1)
   }
 
+  test("an append that retypes a column fails before it commits; the table stays readable") {
+    val path = tmpTable()
+    DeltaInterop.write(Seq((1L, "a")).toDF("k", "v"), path, SaveMode.Overwrite)
+    val e = intercept[Exception] {
+      DeltaInterop.write(Seq(("x", "b")).toDF("k", "v"), path, SaveMode.Append)
+    }
+    assert(e.getMessage.contains("CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE"), e.getMessage)
+    assert(DeltaInterop.snapshot(spark, path).version == 0L)
+    assert(DeltaInterop.read(spark, path).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+  }
+
   test("checkpoint lets pre-checkpoint commits be cleaned; reads survive") {
     val path = tmpTable()
     DeltaInterop.write(Seq((1L, "a", "x")).toDF("k", "v", "ds"), path,

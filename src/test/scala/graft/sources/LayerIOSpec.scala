@@ -85,20 +85,6 @@ class LayerIOSpec extends SparkSpec {
       s"ORC scan must receive the pushed filter:\n$scan")
   }
 
-  test("compact merges a fragmented layout into few files, same rows") {
-    val path = tempDir("compact").resolve("t").toString
-    val frag = spark.range(10000).select($"id", ($"id" % 7).as("v"))
-      .repartition(64) // 64 tiny input partitions
-    LayerIO.compact(frag, path)
-    val back = spark.read.parquet(path)
-    assert(back.count() == 10000)
-    assert(back.agg(sum($"v")).as[Long].collect()(0) ==
-      frag.agg(sum($"v")).as[Long].collect()(0))
-    val files = new java.io.File(path).listFiles
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(files < 8, s"AQE rebalance should merge 64 fragments, wrote $files")
-  }
-
   test("appendOrCreate: partitioned create, then append; partition pruning works") {
     val path = tempDir("layer").resolve("bronze").toString
     val day1 = Seq(("C1", 10.0, "2024-01-01"), ("C2", 20.0, "2024-01-02"))
@@ -117,31 +103,6 @@ class LayerIOSpec extends SparkSpec {
     assert(pruned.count() == 1)
     assert(!scan.contains("2024-01-01") || scan.contains("PartitionFilters"),
       "partition filter must be pushed to the scan")
-  }
-
-  test("appendEvolved: widened batch appends; merge-on-read surfaces old rows with NULLs") {
-    val path = tempDir("layer").resolve("evolved").toString
-    LayerIO.appendEvolved(spark,
-      Seq(("C1", 10.0)).toDF("claim_id", "amount"), path)
-    // the feed widens: a new source starts shipping `channel`
-    LayerIO.appendEvolved(spark,
-      Seq(("C2", 20.0, "web")).toDF("claim_id", "amount", "channel"), path)
-    val back = LayerIO.readLayerEvolved(spark, path)
-    assert(back.columns.sorted.toSeq == Seq("amount", "channel", "claim_id"))
-    val rows = back.orderBy("claim_id")
-      .select("claim_id", "channel").as[(String, Option[String])].collect().toSeq
-    assert(rows == Seq(("C1", None), ("C2", Some("web"))),
-      "pre-widening rows must read back with NULL for the new column")
-  }
-
-  test("appendEvolved rejects type changes (evolution adds columns, never retypes)") {
-    val path = tempDir("layer").resolve("retype").toString
-    LayerIO.appendEvolved(spark, Seq(("C1", 10.0)).toDF("claim_id", "amount"), path)
-    val err = intercept[IllegalArgumentException] {
-      LayerIO.appendEvolved(spark,
-        Seq(("C2", "twenty")).toDF("claim_id", "amount"), path)
-    }
-    assert(err.getMessage.contains("amount"))
   }
 
   test("overwriteViaStaging replaces a table the new plan reads from") {
