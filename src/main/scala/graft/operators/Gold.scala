@@ -65,11 +65,22 @@ object Gold {
     PrefixSum.exclusiveRunningTotal(df, naturalOrder, lit(1L), keyName, buckets)
       .withColumn(keyName, col(keyName) + lit(1L))
 
-  /** D10: SCD Type-1 member dimension from `customer` (full-refresh
-    * projection + surrogate key, gold:84-117).
+  /** A surrogate-keyed dimension in its two steps: `columns`, the lazy
+    * pre-key projection, and [[keyed]], which adds `keyName` by
+    * [[withSurrogateKey]] over `naturalOrder`. Building `columns` starts
+    * no job, so a caller can decide from it whether the dimension needs
+    * building at all before [[keyed]] runs the key step's jobs.
     */
-  def dimMember(customer: DataFrame): DataFrame =
-    withSurrogateKey(
+  final case class KeyedDim(columns: DataFrame, keyName: String, naturalOrder: Seq[Column]) {
+    /** `columns` with its surrogate key; starts [[PrefixSum]]'s jobs. */
+    def keyed: DataFrame = withSurrogateKey(columns, keyName, naturalOrder)
+  }
+
+  /** D10: SCD Type-1 member dimension from `customer` (full-refresh
+    * projection + surrogate key, gold:84-117), unbuilt.
+    */
+  def memberDim(customer: DataFrame): KeyedDim =
+    KeyedDim(
       customer.select(
         col("c_custkey").as("member_id"),
         upper(trim(col("c_name"))).as("member_name"),
@@ -78,15 +89,23 @@ object Gold {
         col("c_mktsegment").as("segment")),
       "member_sk", Seq(col("member_id")))
 
-  /** D10: SCD Type-1 provider dimension from `supplier` (gold:120-151). */
-  def dimProvider(supplier: DataFrame): DataFrame =
-    withSurrogateKey(
+  /** D10: the member dimension, built. */
+  def dimMember(customer: DataFrame): DataFrame = memberDim(customer).keyed
+
+  /** D10: SCD Type-1 provider dimension from `supplier` (gold:120-151),
+    * unbuilt.
+    */
+  def providerDim(supplier: DataFrame): KeyedDim =
+    KeyedDim(
       supplier.select(
         col("s_suppkey").as("provider_id"),
         upper(trim(col("s_name"))).as("provider_name"),
         col("s_nationkey").as("nation_key"),
         col("s_acctbal").cast(DecimalType(18, 2)).as("account_balance")),
       "provider_sk", Seq(col("provider_id")))
+
+  /** D10: the provider dimension, built. */
+  def dimProvider(supplier: DataFrame): DataFrame = providerDim(supplier).keyed
 
   /** The fact build's dimension inputs reduced to what it actually joins
     * on: (natural key → surrogate key) for member AND provider, computed

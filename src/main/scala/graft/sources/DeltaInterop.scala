@@ -64,7 +64,8 @@ import TableCore.{Layout, LiveFile, Planned, listDir, walk}
   * loop, scan, min/max pruning, DV delete, vacuum sweep and change-feed
   * union are the core's. Rules of this format stay here: the action
   * codec, replay, checkpoints, column mapping, `txn`, [[compact]]'s
-  * partition-group rule and the change feed's `cdc` files.
+  * partition-group rule and the change feed's `cdc` files, which
+  * [[deleteWhere]] writes for the rows it deletes.
   *
   * Scale shape: the log is file-count-bounded (one action per line), so
   * snapshot resolution reads it on the driver through one Jackson action
@@ -131,7 +132,7 @@ object DeltaInterop {
   private final case class Remove(path: String, dv: Option[DvDescriptor],
       dataChange: Boolean = true) extends Action
   private final case class Cdc(path: String,
-      partitionValues: Map[String, String]) extends Action
+      partitionValues: Map[String, String], size: Long) extends Action
   private final case class Meta(id: String, schemaString: String,
       partitionColumns: Seq[String], configuration: Map[String, String],
       createdTime: Long) extends Action
@@ -175,7 +176,8 @@ object DeltaInterop {
           a.path("dataChange").asBoolean(true)))
         case "remove" =>
           Some(Remove(text(a, "path"), dv(a), a.path("dataChange").asBoolean(true)))
-        case "cdc" => Some(Cdc(text(a, "path"), strMap(a.path("partitionValues"))))
+        case "cdc" => Some(Cdc(text(a, "path"), strMap(a.path("partitionValues")),
+          a.path("size").asLong(0L)))
         case "metaData" => Some(Meta(text(a, "id"), text(a, "schemaString"),
           strs(a.get("partitionColumns")).getOrElse(Nil),
           strMap(a.path("configuration")), a.path("createdTime").asLong))
@@ -218,10 +220,10 @@ object DeltaInterop {
         dv(root.putObject("remove").put("path", path)
           .put("deletionTimestamp", System.currentTimeMillis())
           .put("dataChange", dataChange), d)
-      case Cdc(path, pv) =>
+      case Cdc(path, pv, size) =>
         val o = root.putObject("cdc").put("path", path)
         strMap(o, "partitionValues", pv)
-        o.put("size", 0L).put("dataChange", false)
+        o.put("size", size).put("dataChange", false)
       case Meta(id, schemaString, partCols, conf, created) =>
         val o = root.putObject("metaData").put("id", id)
         o.putObject("format").put("provider", "parquet").putObject("options")
@@ -915,12 +917,17 @@ object DeltaInterop {
     * protocol's remove + re-add-with-DV action pair, with the protocol
     * upgraded to reader 3 / writer 7 + the `deletionVectors` feature on
     * the first DV commit — exactly what a modern Delta writer emits, so
-    * external readers apply the mask. No data file is rewritten.
+    * external readers apply the mask. No data file is rewritten. The
+    * deleted rows are written as `cdc` files under `_change_data/` with
+    * `_change_type = 'delete'`, as the protocol asks of a DV commit: its
+    * row delta cannot be derived from the log alone, so [[readChanges]]
+    * reads it from them.
     *
     * Scale shape: the scan that finds victims is an ordinary
-    * distributed filter over `_metadata.row_index`; only the matching
-    * (file, position) pairs collect to the driver — bounded by the
-    * delete's cardinality, the same bytes any DV writer must serialize.
+    * distributed filter over `_metadata.row_index`, persisted for the
+    * change-data write; only the matching (file, position) pairs collect
+    * to the driver — bounded by the delete's cardinality, the same bytes
+    * any DV writer must serialize.
     * Returns the committed version (None when nothing matched).
     */
   def deleteWhere(spark: SparkSession, path: String,
@@ -932,25 +939,35 @@ object DeltaInterop {
         "deleteWhere on a column-mapped table unsupported")
       // live rows only: a row already masked by an existing DV must not
       // be re-deleted (and must not resurrect)
-      val victims = TableCore.positionsOf(
-          readFiles(spark, path, snap, snap.files, positions = true).filter(cond))
-        .as[(String, Long)](Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
-        .collect().toSeq.groupMap(_._1)(_._2)
-      val touched = snap.files.flatMap(f => victims.get(scanKey(root, f.path)).map(rows =>
-        f -> (f.dv.toSeq.flatMap(dvRowIndexes(root, _)) ++ rows).distinct.sorted))
-      if (touched.isEmpty) None
-      else {
-        // one packed DV file for the whole commit (the real-writer layout)
-        val dvs = writeDvFile(root, touched.map(_._2))
-        def withDv(fs: Option[Seq[String]]) = Some((fs.getOrElse(Nil) :+ "deletionVectors").distinct)
-        Some(Planned(
-          Protocol(3, 7, withDv(protocol.readerFeatures), withDv(protocol.writerFeatures)) +:
-          touched.zip(dvs).flatMap { case ((f, _), dv) =>
-            // stats stay valid over the undeleted subset (a DV only
-            // removes rows), so carry them — skipping keeps working
-            Seq(Remove(f.path, f.dv), Add(f.copy(dv = Some(dv))))
-          }, dvFile(root, dvs.head).toSeq)) // a lost race deletes this DV file
-      }
+      val deleted = readFiles(spark, path, snap, snap.files, positions = true).filter(cond)
+        .persist()
+      try {
+        val victims = TableCore.positionsOf(deleted)
+          .as[(String, Long)](Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+          .collect().toSeq.groupMap(_._1)(_._2)
+        val touched = snap.files.flatMap(f => victims.get(scanKey(root, f.path)).map(rows =>
+          f -> (f.dv.toSeq.flatMap(dvRowIndexes(root, _)) ++ rows).distinct.sorted))
+        if (touched.isEmpty) None
+        else {
+          // one packed DV file for the whole commit (the real-writer layout)
+          val dvs = writeDvFile(root, touched.map(_._2))
+          val cdcs = withStaging("delta_cdc")(tmp =>
+            stageAdds(deleted.drop(TableCore.FileCol, TableCore.PosCol)
+                .withColumn("_change_type", lit("delete")),
+              root.resolve("_change_data"), tmp, snap.partitionColumns)
+          ).map(a => Cdc("_change_data/" + a.file.path, a.file.partitionValues, a.file.size))
+          def withDv(fs: Option[Seq[String]]) = Some((fs.getOrElse(Nil) :+ "deletionVectors").distinct)
+          Some(Planned(
+            Protocol(3, 7, withDv(protocol.readerFeatures), withDv(protocol.writerFeatures)) +:
+            (touched.zip(dvs).flatMap { case ((f, _), dv) =>
+              // stats stay valid over the undeleted subset (a DV only
+              // removes rows), so carry them — skipping keeps working
+              Seq(Remove(f.path, f.dv), Add(f.copy(dv = Some(dv))))
+            } ++ cdcs),
+            // a lost race deletes this attempt's DV and change-data files
+            dvFile(root, dvs.head).toSeq ++ cdcs.map(c => resolve(root, c.path))))
+        }
+      } finally deleted.unpersist()
     }
   }
 
@@ -1311,8 +1328,9 @@ object DeltaInterop {
     * removes (their content read from the still-present files, with
     * partition values and deletion vectors restored from the pre-state
     * snapshot, so rows an earlier DV already deleted are not deleted
-    * twice). A DV-carrying add without cdc actions is refused — its
-    * deleted-row delta is not representable from the log alone.
+    * twice). A DV-carrying add without cdc actions (an external writer
+    * that left them out; [[deleteWhere]] always writes them) is refused —
+    * its deleted-row delta is not representable from the log alone.
     *
     * Scale: driver traffic is action-count bounded; file contents move
     * through ordinary parquet scans unioned per partition-value group.
@@ -1331,7 +1349,7 @@ object DeltaInterop {
       require(Files.exists(p),
         s"commit $v missing from _delta_log — CDF needs every JSON commit in range")
       val acts = readActions(p, s"commit $v of $path")
-      val cdcs = acts.collect { case Cdc(cp, pv) => DeltaFile(cp, pv, None) }
+      val cdcs = acts.collect { case Cdc(cp, pv, _) => DeltaFile(cp, pv, None) }
       if (cdcs.nonEmpty)
         Seq((v, null, readFiles(spark, path,
           snap.copy(schema = StructType(snap.schema :+ changeType)), cdcs)))

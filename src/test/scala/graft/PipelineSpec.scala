@@ -1,21 +1,23 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.graftspark.drainListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.LayerIO
+import graft.operators.Gold
+import graft.sources.{LayerIO, VersionedTable}
 
 /** Incremental + idempotency contract of the medallion entry points:
   * batch 1 loads half the feed, batch 2 the rest; a third run with no new
   * data must change nothing anywhere (the reference docs' "Idempotent
   * Processing" declaration, bronze_silver_gold/readme.md:68-70). Also:
   * re-delivered keys update in place, a batch failing DQ on every row,
-  * and the Spark-job budget of one incremental batch.
+  * the Spark-job budget of one incremental batch, and Gold's rule that a
+  * dim is rebuilt only when its source changed.
   */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -23,32 +25,56 @@ class PipelineSpec extends SparkSpec {
   private def freshPaths(): Pipeline.LayerPaths =
     Pipeline.LayerPaths(tempDir("medallion_run").toString)
 
-  /** Batch `b` (1-9) through all three layers; returns runSilver's count. */
-  private def loadBatch(paths: Pipeline.LayerPaths, raw: DataFrame, b: Int): Long = {
+  /** Batch `b` (1-9) through all three layers, Gold built from the
+    * fixtures in `fixtures`; returns runSilver's count.
+    */
+  private def loadBatch(paths: Pipeline.LayerPaths, raw: DataFrame, b: Int,
+      fixtures: String = sf): Long = {
     Pipeline.runBronze(spark, raw, paths, s"load_$b", s"2026-01-0$b 00:00:00")
     val n = Pipeline.runSilver(spark, paths)
-    Pipeline.runGold(spark, paths, sf)
+    Pipeline.runGold(spark, paths, fixtures)
     n
   }
 
   private def rowsPerKey(df: DataFrame, keys: String*): Set[Long] =
     df.groupBy(keys.map(col): _*).count().select("count").as[Long].collect().toSet
 
-  /** Spark jobs started while `body` runs, counted once every event has
-    * reached the listener.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try { body; drainListenerBus(sc) }
-    finally sc.removeSparkListener(listener)
-    jobs.get
+  private val dimNames = Seq("dim_member", "dim_provider", "dim_date")
+
+  private def dimPaths(paths: Pipeline.LayerPaths): Seq[String] =
+    Seq(paths.dimMember, paths.dimProvider, paths.dimDate)
+
+  private def dimVersions(paths: Pipeline.LayerPaths): Seq[Option[Long]] =
+    dimPaths(paths).map(VersionedTable.latestVersion)
+
+  /** A copy of the fixture tables `runGold` reads, in a fresh directory. */
+  private def fixtureCopy(): String = {
+    val dir = tempDir("medallion_fixtures")
+    Seq("customer", "supplier", "orders").foreach(t =>
+      Files.copy(Paths.get(sf, s"$t.parquet"), dir.resolve(s"$t.parquet")))
+    dir.toString
   }
+
+  /** Replace the copied `customer` table in `dir` by `change` of it, as one
+    * new file, and drop the memoized fixture relations so the next load
+    * lists it afresh.
+    */
+  private def rewriteCustomer(dir: String)(change: DataFrame => DataFrame): Unit = {
+    val table = Paths.get(dir, "customer.parquet")
+    val changed = change(spark.read.parquet(table.toString))
+    val rows = changed.collect()
+    val staged = tempDir("customer_rewrite")
+    spark.createDataFrame(java.util.List.of(rows: _*), changed.schema).coalesce(1)
+      .write.mode("overwrite").parquet(staged.toString)
+    val part = Files.list(staged).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.move(part, table, StandardCopyOption.REPLACE_EXISTING)
+    Tables.invalidate()
+  }
+
+  private def memberName(paths: Pipeline.LayerPaths, id: Long): String =
+    VersionedTable.read(spark, paths.dimMember).filter($"member_id" === id)
+      .select("member_name").as[String].head()
 
   test("two incremental batches then a no-op re-run: counts conserved, idempotent") {
     val paths = Pipeline.LayerPaths(tempDir("medallion_run").toString)
@@ -159,14 +185,101 @@ class PipelineSpec extends SparkSpec {
     loadBatch(paths, li.filter($"l_orderkey" % 2 === 0), 1)
     Pipeline.runBronze(spark, li.filter($"l_orderkey" % 2 =!= 0), paths,
       "load_2", "2026-01-02 00:00:00")
-    val jobs = jobsDuring {
+    val jobs = jobsStartedBy {
       Pipeline.runSilver(spark, paths)
       Pipeline.runGold(spark, paths, sf)
     }
-    // 37 measured on local[4]; it was 56 while Silver re-ran a broadcast
-    // watermark join in three plans and scanned Bronze again for the new
-    // mark, Gold merge-upserted the fact into the previous one, and every
-    // read-back of a just-written table inferred its schema in a job
-    assert(jobs <= 37, s"$jobs Spark jobs for one batch")
+    // 23 measured on local[4]; it was 37 while Gold rebuilt and rewrote
+    // every dim each batch and Silver inferred the watermark table's schema
+    // in a job, and 56 while Silver re-ran a broadcast watermark join in
+    // three plans and scanned Bronze again for the new mark, Gold
+    // merge-upserted the fact into the previous one, and every read-back
+    // of a just-written table inferred its schema in a job
+    assert(jobs <= 23, s"$jobs Spark jobs for one batch")
+  }
+
+  test("a second runGold over unchanged sources starts no dim job and commits no dim version") {
+    val paths = freshPaths()
+    Pipeline.runBronze(spark, Tables.lineitem(spark, sf), paths, "load_1", "2026-01-01 00:00:00")
+    Pipeline.runSilver(spark, paths)
+    val first = jobDescriptionsStartedBy(Pipeline.runGold(spark, paths, sf))
+    // the probe sees each dim's refresh jobs when there are some
+    assert(dimNames.map("refresh " + _).toSet.subsetOf(first.toSet), first)
+    assert(dimVersions(paths) == Seq(Some(0L), Some(0L), Some(0L)))
+    val second = jobDescriptionsStartedBy(Pipeline.runGold(spark, paths, sf))
+    assert(!second.exists(_.startsWith("refresh ")), second)
+    assert(dimVersions(paths) == Seq(Some(0L), Some(0L), Some(0L)))
+    assert(second.size < first.size)
+    assert(LayerIO.readLayer(spark, paths.fact).count() ==
+      LayerIO.readLayer(spark, paths.silver).count())
+  }
+
+  test("a changed customer row refreshes dim_member alone, with the new name") {
+    val fixtures = fixtureCopy()
+    val paths = freshPaths()
+    val li = Tables.lineitem(spark, sf)
+    loadBatch(paths, li.filter($"l_orderkey" % 2 === 0), 1, fixtures)
+    val id = spark.read.parquet(s"$fixtures/customer.parquet")
+      .agg(min($"c_custkey")).as[Long].head()
+    val before = memberName(paths, id)
+    rewriteCustomer(fixtures)(_.withColumn("c_name",
+      when($"c_custkey" === id, lit("  renamed member ")).otherwise($"c_name")))
+    Pipeline.runGold(spark, paths, fixtures)
+    assert(dimVersions(paths) == Seq(Some(1L), Some(0L), Some(0L)))
+    assert(before != "RENAMED MEMBER" && memberName(paths, id) == "RENAMED MEMBER")
+    // the refreshed dim still holds every customer, keyed as a full build
+    assert(VersionedTable.read(spark, paths.dimMember).count() ==
+      spark.read.parquet(s"$fixtures/customer.parquet").count())
+    val fact = LayerIO.readLayer(spark, paths.fact)
+    assert(fact.filter($"member_sk".isNull).isEmpty)
+  }
+
+  test("a dim build that throws leaves the previous version readable; the next run refreshes") {
+    val fixtures = fixtureCopy()
+    val paths = freshPaths()
+    val li = Tables.lineitem(spark, sf)
+    loadBatch(paths, li.filter($"l_orderkey" % 2 === 0), 1, fixtures)
+    val members = VersionedTable.read(spark, paths.dimMember).collect().toSet
+    val id = spark.read.parquet(s"$fixtures/customer.parquet")
+      .agg(min($"c_custkey")).as[Long].head()
+    // a balance outside DECIMAL(18, 2): the build's cast throws
+    rewriteCustomer(fixtures)(_.withColumn("c_acctbal",
+      when($"c_custkey" === id, lit(1e20)).otherwise($"c_acctbal")))
+    intercept[Exception](Pipeline.runGold(spark, paths, fixtures))
+    assert(dimVersions(paths) == Seq(Some(0L), Some(0L), Some(0L)))
+    assert(VersionedTable.read(spark, paths.dimMember).collect().toSet == members)
+
+    rewriteCustomer(fixtures)(_.withColumn("c_acctbal",
+        when($"c_custkey" === id, lit(0.0)).otherwise($"c_acctbal"))
+      .withColumn("c_name", when($"c_custkey" === id, lit("mended")).otherwise($"c_name")))
+    Pipeline.runGold(spark, paths, fixtures)
+    assert(dimVersions(paths) == Seq(Some(1L), Some(0L), Some(0L)))
+    assert(memberName(paths, id) == "MENDED")
+  }
+
+  test("plain-parquet dims from before the versioned dims are refreshed on the first runGold") {
+    val paths = freshPaths()
+    Pipeline.runBronze(spark, Tables.lineitem(spark, sf), paths, "load_1", "2026-01-01 00:00:00")
+    Pipeline.runSilver(spark, paths)
+    // the dims as an earlier runGold left them: overwritten parquet, no log
+    val member = Gold.dimMember(Tables.customer(spark, sf))
+    val provider = Gold.dimProvider(Tables.supplier(spark, sf))
+    val date = Gold.dimDate(spark, "1992-01-01", "2002-12-31")
+    dimPaths(paths).zip(Seq(member, provider, date)).foreach { case (p, d) =>
+      d.write.mode("overwrite").parquet(p)
+    }
+    Pipeline.runGold(spark, paths, sf)
+    dimPaths(paths).zip(Seq(member, provider, date)).foreach { case (p, d) =>
+      assert(VersionedTable.versions(p) == Seq(0L), p)
+      assert(VersionedTable.opOf(p, 0L).startsWith("refresh:"))
+      assert(VersionedTable.read(spark, p).collect().toSet == d.collect().toSet, p)
+    }
+    // the earlier part files stay where they were, unread
+    assert(Files.list(Paths.get(paths.dimMember)).iterator().asScala
+      .exists(_.getFileName.toString.startsWith("part-")))
+    val fact = LayerIO.readLayer(spark, paths.fact)
+    assert(fact.count() == LayerIO.readLayer(spark, paths.silver).count())
+    assert(fact.filter($"member_sk".isNull || $"provider_sk".isNull ||
+      $"service_date_key".isNull).isEmpty)
   }
 }

@@ -36,15 +36,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * with a thread-local property, so other suites sharing the session
     * are not counted.
     */
-  def jobsStartedBy(body: => Unit): Int = {
+  def jobsStartedBy(body: => Unit): Int = jobDescriptionsStartedBy(body).size
+
+  /** The `spark.job.description` of each Spark job that `body` starts on
+    * the calling thread ("" when the job has none), as [[jobsStartedBy]]
+    * counts them.
+    */
+  def jobDescriptionsStartedBy(body: => Unit): Seq[String] = {
     val probe = s"job-probe-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val sentinel = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("graft.job.probe")) match {
-          case Some(`probe`) => jobs.incrementAndGet(); ()
-          case Some(p) if p == probe + "-end" => sentinel.countDown()
+        Option(e.properties).map(p => (p.getProperty("graft.job.probe"), p)) match {
+          case Some((`probe`, p)) => jobs.add(p.getProperty("spark.job.description", "")); ()
+          case Some((t, _)) if t == probe + "-end" => sentinel.countDown()
           case _ => ()
         }
     }
@@ -61,7 +67,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       sc.setLocalProperty("graft.job.probe", null)
       sc.removeSparkListener(listener)
     }
-    jobs.get
+    jobs.toArray(Array.empty[String]).toSeq
   }
 }
 

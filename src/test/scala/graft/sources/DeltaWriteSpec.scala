@@ -359,11 +359,15 @@ class DeltaWriteSpec extends SparkSpec {
     // and the post-state read reflects the update
     assert(DeltaInterop.read(spark, path).as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (2L, "B2")))
-    // DV delete without cdc: its row delta is not derivable — refused
+    // DV delete without cdc, as an external writer may commit it: its row
+    // delta is not derivable — refused
     val path2 = tmpTable()
     DeltaInterop.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"),
       path2, SaveMode.Overwrite)
     DeltaInterop.deleteWhere(spark, path2, org.apache.spark.sql.functions.col("k") === 2L)
+    val commit1 = Paths.get(path2, "_delta_log", f"${1L}%020d.json")
+    Files.writeString(commit1, Files.readAllLines(commit1).asScala
+      .filterNot(_.startsWith("{\"cdc\"")).mkString("", "\n", "\n"))
     val e = intercept[IllegalArgumentException] {
       DeltaInterop.readChanges(spark, path2, 1L, 1L).collect()
     }
@@ -397,6 +401,29 @@ class DeltaWriteSpec extends SparkSpec {
     Seq(0L, 1L, 2L).foreach(i =>
       Files.delete(Paths.get(path, "_delta_log", f"$i%020d.json")))
     assert(DeltaInterop.read(spark, path).count() == 4)
+  }
+
+  test("deleteWhere writes its deleted rows as cdc files; the change feed reads them") {
+    val path = tmpTable()
+    DeltaInterop.write((1L to 8L).map(i => (i, s"r$i", if (i % 2 == 0) "even" else "odd"))
+      .toDF("k", "v", "p"), path, SaveMode.Overwrite, partitionBy = Seq("p"))
+    assert(DeltaInterop.deleteWhere(spark, path, col("k") > 5L).contains(1L))
+    val log = Files.readAllLines(Paths.get(path, "_delta_log", f"${1L}%020d.json")).asScala
+    val cdc = log.filter(_.startsWith("{\"cdc\""))
+    // one or more files per partition of the deleted rows, each sized
+    assert(Set("even", "odd").forall(p => cdc.exists(_.contains(s"\"path\":\"_change_data/p=$p/"))) &&
+      cdc.forall(l => l.contains("\"path\":\"_change_data/p=") && !l.contains("\"size\":0,")), cdc)
+    val feed = DeltaInterop.readChanges(spark, path, 1L, 1L)
+      .select("k", "v", "p", "_change_type", "_commit_version")
+      .as[(Long, String, String, String, Long)].collect().toSet
+    assert(feed == Set((6L, "r6", "even", "delete", 1L), (7L, "r7", "odd", "delete", 1L),
+      (8L, "r8", "even", "delete", 1L)))
+    // a second delete on the same files records only its own rows
+    assert(DeltaInterop.deleteWhere(spark, path, col("k") === 1L).contains(2L))
+    assert(DeltaInterop.readChanges(spark, path, 1L, 2L).filter(col("_commit_version") === 2L)
+      .select("k").as[Long].collect().toSeq == Seq(1L))
+    assert(DeltaInterop.read(spark, path).select("k").as[Long].collect().sorted.toSeq ==
+      (2L to 5L))
   }
 
   test("one delete across many files packs every DV into a single file at offsets") {

@@ -49,14 +49,14 @@ class TableParitySpec extends SparkSpec {
     val vtAppend = VersionedTable.changes(spark, vt, 0L, 1L)
     assert(rows(vtAppend) == rows(DeltaInterop.readChanges(spark, dl, 1L, 1L)))
     assert(rows(vtAppend).size == 10)
-    // the delete version: the rows VersionedTable's feed deletes are the
-    // rows the version removed from Delta's snapshot. Delta's own feed
-    // refuses a DV commit that carries no cdc files, as its protocol says.
-    val vtDelete = VersionedTable.changes(spark, vt, 1L, 2L).drop("_change_type", "_commit_version")
-    assert(rows(vtDelete) ==
+    // the delete version: both feeds delete the same rows, the rows the
+    // version removed from Delta's snapshot
+    val vtDelete = VersionedTable.changes(spark, vt, 1L, 2L)
+    assert(rows(vtDelete) == rows(DeltaInterop.readChanges(spark, dl, 2L, 2L)))
+    assert(rows(vtDelete.drop("_change_type", "_commit_version")) ==
       rows(DeltaInterop.read(spark, dl, Some(1L)).except(DeltaInterop.read(spark, dl, Some(2L)))))
     assert(rows(vtDelete).size == 10)
-    intercept[IllegalArgumentException](DeltaInterop.readChanges(spark, dl, 2L, 2L))
+    assert(vtDelete.filter(col("_change_type") =!= "delete").isEmpty)
 
     // vacuum with a zero age keeps the latest version readable on both
     val latest = rows(VersionedTable.read(spark, vt))
