@@ -30,13 +30,35 @@ import org.apache.spark.storage.StorageLevel
   */
 object CacheScope {
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
+  // what the calling thread registers inside [[released]], when it is in one
+  private val scoped = new ThreadLocal[List[Dataset[_]]]()
 
   /** Persist `ds` at `level` and register it for the next [[drain]]. */
   def persisted[T](ds: Dataset[T],
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] = {
     ds.persist(level)
     live.add(ds)
+    Option(scoped.get).foreach(held => scoped.set(ds :: held))
     ds
+  }
+
+  /** Run `body`, then unpersist the datasets this thread registered while
+    * it ran, and only those: a caller that consumed an operator's result
+    * (wrote it, say) releases that operator's caches without [[drain]]'s
+    * session-wide `clearCache`, and other threads' caches stay. Operators
+    * register from the thread that plans them, so an operator running
+    * inside `body` is covered. Spark's cache matches plans, so another
+    * thread's dataset with the same plan loses its cache entry too.
+    */
+  def released[T](body: => T): T = {
+    val outer = scoped.get
+    scoped.set(Nil)
+    try body
+    finally {
+      val held = scoped.get
+      scoped.set(outer)
+      held.foreach { ds => if (live.remove(ds)) ds.unpersist(blocking = true) }
+    }
   }
 
   /** Free the storage blocks of a `localCheckpoint`ed Dataset NOW.

@@ -2,12 +2,13 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
+import java.time.Instant
+import java.time.temporal.ChronoUnit
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType, TimestampType}
 
 import graft.operators.{Bronze, Gold, Merge, Silver}
 import graft.sources.{LayerIO, VersionedTable}
@@ -26,15 +27,30 @@ import graft.sources.{LayerIO, VersionedTable}
   * the "Idempotent Processing" contract the reference docs declare
   * (bronze_silver_gold/readme.md:68-70).
   *
-  * The three Gold dims are [[VersionedTable]]s; every other layer table
-  * is plain parquet. Each dim commit is tagged with a fingerprint of its
-  * source (see [[runGold]]), so an unchanged source costs a manifest read
-  * instead of a rebuild.
+  * Bronze is plain parquet. Every later table — Silver, its quarantine,
+  * the three dims, the fact and the rollup — is a [[VersionedTable]], so
+  * each write is one atomic commit and a crash leaves the previous
+  * version live. Silver's watermark is a `txn` entry of Silver's log,
+  * committed with the merge it covers; the quarantine records the mark
+  * of its own latest append the same way, so a retried batch appends each
+  * FAIL row once.
+  * Each dim commit is tagged with a fingerprint of its source (see
+  * [[runGold]]), so an unchanged source costs a manifest read instead of
+  * a rebuild. A root written before these tables were versioned has no
+  * Silver log, hence no mark: its next batch rebuilds Silver and the
+  * quarantine from all of Bronze, and the old part files stay unread.
+  * Each [[runGold]] ends by vacuuming the tables Silver and Gold
+  * overwrite (every versioned table but the append-only quarantine):
+  * their older manifests go, and their unreferenced data files once a day
+  * old ([[VersionedTable.vacuum]]'s horizon, which covers in-flight
+  * readers and writers). A table therefore holds its latest version plus
+  * what the last 24 hours wrote, instead of one copy per batch.
   *
   * Each layer evaluates each piece of its work once per batch: every
   * Spark job here carries fixed planning/scheduling cost whatever the
-  * batch size, so a repeated scan or a schema-inference read costs as
-  * much as the work itself on an incremental batch.
+  * batch size, so a repeated scan, a count the log already holds or a
+  * schema-inference read costs as much as the work itself on an
+  * incremental batch.
   */
 object Pipeline {
 
@@ -42,13 +58,17 @@ object Pipeline {
     val bronze = s"$root/bronze/claims"
     val silver = s"$root/silver/claims"
     val quarantine = s"$root/silver/claims_dq_failures"
-    val watermarks = s"$root/control/watermarks"
     val dimMember = s"$root/gold/dim_member"
     val dimProvider = s"$root/gold/dim_provider"
     val dimDate = s"$root/gold/dim_date"
     val fact = s"$root/gold/fact_claim"
     val rollup = s"$root/gold/agg_monthly"
   }
+
+  /** The `txn` app id under which Silver's commits record its watermark:
+    * the newest Bronze `ingestion_timestamp` merged, as an ISO-8601 instant.
+    */
+  val SilverMark = "silver_claims"
 
   /** Bronze: raw feed → lineage-stamped append, partitioned by ingestion
     * date (B3 fix). `asOf` stamps the batch deterministically.
@@ -61,73 +81,91 @@ object Pipeline {
     LayerIO.appendOrCreate(stamped, spark, paths.bronze, "ingestion_date")
   }
 
-  private val WatermarkSchema = new StructType()
-    .add("table_name", StringType).add("last_processed_timestamp", TimestampType)
-
-  /** The watermark table under its fixed schema, so no footer is read to
-    * infer it; empty before the first Silver commit.
-    */
-  private def readWatermarks(spark: SparkSession, paths: LayerPaths): DataFrame =
-    if (LayerIO.layerExists(spark, paths.watermarks))
-      LayerIO.readLayer(spark, paths.watermarks, WatermarkSchema)
-    else spark.createDataFrame(java.util.List.of[Row](), WatermarkSchema)
-
   /** Silver: watermark-incremental read of Bronze → cleanse → DQ gate
     * (FAIL rows appended to the quarantine table) → business-key dedup →
-    * merge into Silver → watermark commit. Returns Silver's row count
-    * after the merge, or 0 when Bronze holds nothing above the watermark
-    * (nothing is written then).
+    * merge into Silver, committed with the new watermark. Returns
+    * Silver's row count after the merge, or 0 when Bronze holds nothing
+    * above the watermark (nothing is written then).
     *
-    * The mark is a literal in the Bronze scan's pushed filters, and one
-    * aggregate over the persisted DQ-tagged batch yields its row count,
-    * its FAIL count and its new high-water mark, so the batch is read
-    * from Bronze once.
+    * The mark is read from Silver's latest manifest and is a literal in
+    * the Bronze scan's pushed filters; one aggregate over the persisted
+    * DQ-tagged batch yields its row count, its FAIL counts and its new
+    * mark, so the batch is read from Bronze once. The quarantine records
+    * the same mark in its own log with each append
+    * ([[VersionedTable.appendWithTxn]]) and appends only FAIL rows above
+    * it (above Silver's mark while it has none): a batch that crashed
+    * after the quarantine's commit and before Silver's is read again from
+    * Silver's mark, with whatever Bronze gained since, and its quarantined
+    * rows are not appended twice. The merge is a
+    * read-modify-write commit ([[VersionedTable.rewrite]]): it commits the
+    * merged table and the new mark together, or, after a lost race,
+    * merges again against the winner. A batch without PASS rows commits
+    * the mark alone. The returned count is the row count the commit
+    * recorded.
     */
-  def runSilver(spark: SparkSession, paths: LayerPaths): Long = {
-    val incr = Silver.incrementalAfterLiteral(LayerIO.readLayer(spark, paths.bronze),
-      readWatermarks(spark, paths), "silver_claims", "ingestion_timestamp")
+  def runSilver(spark: SparkSession, paths: LayerPaths): Long = runSilver(spark, paths, _ => ())
+
+  /** [[runSilver]] calling `afterCommit` with "quarantine" and "silver"
+    * after each commit: a seam for crash tests.
+    */
+  private[graft] def runSilver(spark: SparkSession, paths: LayerPaths,
+      afterCommit: String => Unit): Long = {
+    val mark = VersionedTable.txn(paths.silver, SilverMark)
+    // The batch's rows above the quarantine's mark `from`. That mark is
+    // ahead of Silver's only after a crash between the two commits; every
+    // batch row is above Silver's, so any other mark adds no filter (a
+    // timestamp literal is compiled into the plan's generated code).
+    def newerThan(from: Option[String]): Column =
+      above(from.filter(f => mark.forall(m => Instant.parse(f).isAfter(Instant.parse(m)))))
+    val incr = LayerIO.readLayer(spark, paths.bronze).filter(above(mark))
     val tagged = Silver.applyDqRules(Silver.cleanseLineitem(incr)).persist()
     try {
-      val stats = tagged.agg(count(lit(1)),
-        count(when(col("dq_status") === "FAIL", 1)),
-        max(col("ingestion_timestamp"))).head()
+      val failed = col("dq_status") === "FAIL"
+      val stats = tagged.agg(count(lit(1)), count(when(failed, 1)),
+        count(when(failed && newerThan(VersionedTable.txn(paths.quarantine, SilverMark)), 1)),
+        unix_micros(max(col("ingestion_timestamp")))).head()
       if (stats.getLong(0) == 0L) 0L
       else {
+        val newMark = Instant.EPOCH.plus(stats.getLong(3), ChronoUnit.MICROS).toString
         val (pass, fail) = Silver.quarantineSplit(tagged)
-        if (stats.getLong(1) > 0L)
-          LayerIO.appendLayer(fail.withColumn("dq_failure_reasons",
-            col("dq_reasons_csv")).drop("dq_reasons_csv"), paths.quarantine)
+        if (stats.getLong(2) > 0L) {
+          val failRows = fail.withColumn("dq_failure_reasons", col("dq_reasons_csv"))
+            .drop("dq_reasons_csv")
+          VersionedTable.appendWithTxn(paths.quarantine, "quarantine",
+              Map(SilverMark -> newMark)) { txn =>
+            failRows.filter(newerThan(txn.get(SilverMark)))
+          }
+          afterCommit("quarantine")
+        }
+        val keys = Seq("l_orderkey", "l_linenumber")
         val deduped = Silver.dedupLatest(
-          pass.drop("dq_status", "dq_failure_reasons", "dq_reasons_csv"),
-          Seq("l_orderkey", "l_linenumber"),
+          pass.drop("dq_status", "dq_failure_reasons", "dq_reasons_csv"), keys,
           Seq(col("ingestion_timestamp").desc, col("ship_date").desc,
             col("l_extendedprice").desc))
-        val merged =
-          if (LayerIO.layerExists(spark, paths.silver))
-            Merge.upsert(LayerIO.readLayer(spark, paths.silver), deduped,
-              Seq("l_orderkey", "l_linenumber"))
-          else deduped
-        // staging + swap: the merge plan READS paths.silver, so an in-place
-        // overwrite (even behind cache+count) recomputes from deleted files
-        // if partitions evict mid-write — the staged write keeps the source
-        // table live until the new one is complete
-        LayerIO.overwriteViaStaging(spark, merged, paths.silver)
-        val n = LayerIO.readLayer(spark, paths.silver, merged.schema).count()
-        spark.range(1).select(lit("silver_claims").as("table_name"),
-            lit(stats.get(2)).cast("timestamp").as("last_processed_timestamp"))
-          .write.mode(SaveMode.Append).parquet(paths.watermarks)
-        n
+        val allFailed = stats.getLong(1) == stats.getLong(0)
+        val v = VersionedTable.rewrite(spark, paths.silver, "merge", Map(SilverMark -> newMark)) {
+          case Some(_) if allFailed => None
+          case current => Some(current.fold(deduped)(Merge.upsert(_, deduped, keys, Some(pass))))
+        }
+        afterCommit("silver")
+        VersionedTable.numRecords(spark, paths.silver, v)
       }
     } finally tagged.unpersist()
   }
+
+  /** Rows whose `ingestion_timestamp` is above `mark`; every row without one. */
+  private def above(mark: Option[String]): Column =
+    mark.fold(lit(true))(m => col("ingestion_timestamp") > lit(Instant.parse(m)))
 
   /** Gold: each SCD1 dim refreshed when its source changed, then the
     * fact rebuilt from the full Silver table with surrogate-key
     * resolution, then the monthly rollup refresh. The fact is written as
     * built, not merged into the previous fact: its keys are Silver's
     * keys, and Silver never drops a key, so a merge-upsert against the old
-    * fact could add no row. Tables this call has just written are read
-    * back with the schema it wrote.
+    * fact could add no row. The fact and the rollup are each one
+    * [[VersionedTable]] overwrite commit, so readers see the previous
+    * version until the new one is whole. Vacuuming those tables (see
+    * the header) comes last and starts no Spark job.
     *
     * `dim_member`, `dim_provider` and `dim_date` are [[VersionedTable]]s
     * whose refresh commits carry the op tag `refresh:<fingerprint>` (see
@@ -139,12 +177,19 @@ object Pipeline {
     * a differing tag builds and overwrites it. A crashed refresh commits
     * nothing, so the previous version stays live and the next run tries
     * again. The key step's code is not fingerprinted (see
-    * [[sourceFingerprint]]). A dim directory written as plain parquet (no
-    * `_graft_log`) counts as changed; its old part files are left in
+    * [[sourceFingerprint]]). A table directory written as plain parquet
+    * (no `_graft_log`) counts as changed; its old part files are left in
     * place and never read.
     */
-  def runGold(spark: SparkSession, paths: LayerPaths, fixturesDir: String): Unit = {
-    val silver = LayerIO.readLayer(spark, paths.silver)
+  def runGold(spark: SparkSession, paths: LayerPaths, fixturesDir: String): Unit =
+    runGold(spark, paths, fixturesDir, _ => ())
+
+  /** [[runGold]] calling `afterCommit` with "fact" and "rollup" after
+    * each commit: a seam for crash tests.
+    */
+  private[graft] def runGold(spark: SparkSession, paths: LayerPaths, fixturesDir: String,
+      afterCommit: String => Unit): Unit = {
+    val silver = VersionedTable.read(spark, paths.silver)
     val member = Gold.memberDim(Tables.customer(spark, fixturesDir))
     val provider = Gold.providerDim(Tables.supplier(spark, fixturesDir))
     // calendar covers the full ship-date tail (through 2001)
@@ -153,14 +198,16 @@ object Pipeline {
     refreshDim(spark, paths.dimProvider, "dim_provider", keySpec(provider),
       provider.columns)(provider.keyed)
     refreshDim(spark, paths.dimDate, "dim_date", Nil, date)(date)
-    val fact = Gold.factLines(silver, Tables.orders(spark, fixturesDir),
+    VersionedTable.write(Gold.factLines(silver, Tables.orders(spark, fixturesDir),
       VersionedTable.read(spark, paths.dimMember),
       VersionedTable.read(spark, paths.dimProvider),
-      VersionedTable.read(spark, paths.dimDate))
-    // staged so the previous fact stays readable until the new one is whole
-    LayerIO.overwriteViaStaging(spark, fact, paths.fact)
-    Gold.monthlyRollup(LayerIO.readLayer(spark, paths.fact, fact.schema))
-      .write.mode(SaveMode.Overwrite).parquet(paths.rollup)
+      VersionedTable.read(spark, paths.dimDate)), paths.fact, SaveMode.Overwrite)
+    afterCommit("fact")
+    VersionedTable.write(Gold.monthlyRollup(VersionedTable.read(spark, paths.fact)),
+      paths.rollup, SaveMode.Overwrite)
+    afterCommit("rollup")
+    Seq(paths.silver, paths.dimMember, paths.dimProvider, paths.dimDate, paths.fact,
+      paths.rollup).foreach(VersionedTable.vacuum(_))
   }
 
   private def keySpec(d: Gold.KeyedDim): Seq[String] =
@@ -171,6 +218,8 @@ object Pipeline {
     * `columns`). The check reads one manifest on the driver and starts no
     * job; `build` runs only on a refresh, whose jobs carry the description
     * `refresh <name>`. Two racing refreshes commit the same content.
+    * Once the refresh has committed, what its key step registered with
+    * [[CacheScope]] is released.
     */
   private def refreshDim(spark: SparkSession, path: String, name: String, keySpec: Seq[String],
       columns: DataFrame)(build: => DataFrame): Unit = {
@@ -182,7 +231,7 @@ object Pipeline {
       val sc = spark.sparkContext
       val described = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(s"refresh $name")
-      try VersionedTable.write(build, path, SaveMode.Overwrite, tag)
+      try CacheScope.released(VersionedTable.write(build, path, SaveMode.Overwrite, tag))
       finally sc.setJobDescription(described)
     }
   }

@@ -170,6 +170,9 @@ object Gold {
     val discC = graft.functions.Cents.cents(col("l_discount"))
     val taxC = graft.functions.Cents.cents(col("l_tax"))
     val li = lineitem.withColumn("ship_date", to_date(col("l_shipdate")))
+    // both date roles join one broadcast frame under two aliases, so the
+    // plan broadcasts dim_date once and reuses that exchange
+    val dates = broadcast(dimDate.select(col("date_value"), col("date_key")))
     li.join(orders.select(col("o_orderkey"), col("o_custkey"),
         to_date(col("o_orderdate")).as("order_date"), col("o_orderstatus")),
         col("l_orderkey") === col("o_orderkey"), "left")
@@ -177,17 +180,14 @@ object Gold {
         col("o_custkey") === col("member_id"), "left")
       .join(broadcast(dimProvider.select(col("provider_id"), col("provider_sk"))),
         col("l_suppkey") === col("provider_id"), "left")
-      .join(broadcast(dimDate.select(col("date_value"), col("date_key"))),
-        col("ship_date") === col("date_value"), "left")
-      .join(broadcast(dimDate.select(col("date_value").as("order_date_value"),
-        col("date_key").as("order_date_key"))),
-        col("order_date") === col("order_date_value"), "left")
+      .join(dates.as("service_dd"), col("ship_date") === col("service_dd.date_value"), "left")
+      .join(dates.as("order_dd"), col("order_date") === col("order_dd.date_value"), "left")
       .select(
         col("l_orderkey").as("claim_id"),
         col("l_linenumber").as("claim_line_number"),
         col("member_sk"), col("provider_sk"),
-        col("date_key").as("service_date_key"),
-        col("order_date_key"),
+        col("service_dd.date_key").as("service_date_key"),
+        col("order_dd.date_key").as("order_date_key"),
         col("order_date"), col("o_orderstatus").as("order_status"),
         col("l_quantity").as("quantity"),
         graft.functions.Cents.fromUnscaled(priceC, 2, 18).as("billed_amount"),

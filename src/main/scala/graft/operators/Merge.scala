@@ -26,10 +26,16 @@ object Merge {
   /** Upsert `source` into `target` on `keys`. Precondition (same as Delta
     * merge): `source` has at most one row per key — callers dedup first
     * (Silver.dedupLatest), exactly as the reference pipeline does.
+    * `sourceKeys`, when given, holds exactly the key values of `source`
+    * (repeats allowed) and is cheaper to evaluate than `source` — the
+    * input of its dedup, say — so the anti-join side does not run the
+    * dedup a second time.
     */
-  def upsert(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
+  def upsert(target: DataFrame, source: DataFrame, keys: Seq[String],
+      sourceKeys: Option[DataFrame] = None): DataFrame = {
     val src = source.select(target.columns.map(col).toSeq: _*)
-    val untouched = Joins.anti(target, source.select(keys.map(col): _*), keys)
+    val untouched = Joins.anti(target,
+      sourceKeys.getOrElse(source).select(keys.map(col): _*), keys)
     src.unionByName(untouched)
   }
 

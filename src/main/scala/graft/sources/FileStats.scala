@@ -2,7 +2,7 @@ package graft.sources
 
 import java.math.{BigDecimal => JBigDecimal, BigInteger}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.time.LocalDate
 
 import scala.collection.immutable.ListMap
@@ -13,11 +13,15 @@ import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.io.LocalInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation._
 import org.apache.parquet.schema.PrimitiveType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** One data file's statistics as Delta keeps them on its `add` action:
@@ -124,10 +128,7 @@ private[sources] object FileStats {
     */
   def read(file: String, schema: StructType): FileStats = {
     val path = Paths.get(file)
-    val input = new LocalInputFile(path)
-    val stream = input.newStream()
-    val footer = try ParquetFileReader.readFooter(input, readOptions, stream)
-      finally stream.close()
+    val footer = readFooter(path)
     val blocks = footer.getBlocks.asScala.toSeq
     val numRecords = blocks.map(_.getRowCount).sum
     val legacyCalendar = footer.getFileMetaData.getKeyValueMetaData.asScala.keySet
@@ -157,6 +158,25 @@ private[sources] object FileStats {
     }
     FileStats(Files.size(path), Files.getLastModifiedTime(path).toMillis, numRecords,
       mins.result(), maxs.result(), nulls.result())
+  }
+
+  private def readFooter(path: Path): ParquetMetadata = {
+    val input = new LocalInputFile(path)
+    val stream = input.newStream()
+    try ParquetFileReader.readFooter(input, readOptions, stream) finally stream.close()
+  }
+
+  /** The schema Spark's parquet inference reads from `file`'s footer, on
+    * the driver: the Spark schema its writer stored in the key-value
+    * metadata, else the parquet schema converted under the session's
+    * settings.
+    */
+  def sparkSchema(file: Path): StructType = {
+    val meta = readFooter(file).getFileMetaData
+    Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(s => scala.util.Try(DataType.fromJson(s)).toOption)
+      .collect { case st: StructType => st }
+      .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
   }
 
   /** The column chunk's min and max over all row groups, in the column's

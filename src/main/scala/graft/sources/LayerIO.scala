@@ -1,8 +1,9 @@
 package graft.sources
 
+import java.nio.file.{Files, Path => JPath, Paths}
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Layered-table sources and sinks (SURVEY.md §2.1 S1–S9): schema-declared
@@ -11,11 +12,13 @@ import org.apache.spark.sql.types.StructType
   * partition by day, never by raw timestamp), catalog registration, and
   * existence probes.
   *
-  * The environment ships no Delta jars, so the table format is parquet;
-  * every write shape (append + overwrite + partitionBy + saveAsTable) has
-  * identical call-site semantics, and a Delta build only changes
-  * `.format(...)`. Reference: /root/reference/bronze/bronze_rx_claims_load.py:37-77,
-  * /root/reference/gold/gold_rx_claims_load.py:74-79,226-232.
+  * The environment ships no Delta jars. Bronze is plain parquet, appended
+  * per batch; every later medallion table is a [[VersionedTable]], which
+  * commits through its log, so no layer write here swaps directories.
+  * [[readLayer]] is the one read for both kinds: it reads a table's log
+  * when it has one. Reference: the reference's
+  * bronze/bronze_rx_claims_load.py:37-77 and
+  * gold/gold_rx_claims_load.py:74-79,226-232.
   */
 object LayerIO {
 
@@ -51,16 +54,36 @@ object LayerIO {
       .option("mode", "PERMISSIVE")
       .csv(path)
 
-  /** S2: layer table read by path. */
-  def readLayer(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** S2 with the schema known, for reading back a table the caller has
-    * just written: no footer read to infer the schema, which [[readLayer]]
-    * runs as a one-task Spark job before any query starts.
+  /** S2: layer table read by path, the one read entry point for every
+    * layer. A [[VersionedTable]] (a `<path>/_graft_log` with a version)
+    * reads its latest version through the log: only live files, deleted
+    * rows masked, the recorded schema declared. A plain parquet directory
+    * reads under the schema of one of its files, read from that file's
+    * footer on the driver (see [[firstDataFile]]) instead of by an
+    * inference job; partition columns are still discovered from the
+    * directory names.
     */
-  def readLayer(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(path)
+  def readLayer(spark: SparkSession, path: String): DataFrame =
+    VersionedTable.latestVersion(path) match {
+      case Some(v) => VersionedTable.readVersion(spark, path, v)
+      case None => firstDataFile(Paths.get(path))
+        .fold(spark.read.parquet(path))(f => spark.read.schema(FileStats.sparkSchema(f)).parquet(path))
+    }
+
+  /** The first data file under `dir`, walking it in sorted name order and skipping
+    * hidden names (a leading `_` or `.`: `_SUCCESS`, checksums, a log).
+    * Its footer stands for the directory's schema, as every file of a
+    * layer this library writes plainly shares its writer's schema. None
+    * when `dir` holds no such file.
+    */
+  private def firstDataFile(dir: JPath): Option[JPath] = {
+    def visible(p: JPath): Boolean = !Seq("_", ".").exists(p.getFileName.toString.startsWith)
+    def first(p: JPath): Option[JPath] =
+      if (!Files.isDirectory(p)) Some(p)
+      else TableCore.listDir(p)(_.filter(visible).toSeq.sortBy(_.toString))
+        .iterator.flatMap(first).nextOption()
+    if (Files.exists(dir)) first(dir) else None
+  }
 
   /** JSON-lines ingest with the same PERMISSIVE/corrupt-capture contract
     * as [[readCsv]] — the landing format of most event feeds. Schema
@@ -102,31 +125,6 @@ object LayerIO {
   /** S4: append write (first write creates). */
   def appendLayer(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Append).parquet(path)
-
-  /** Overwrite `path` via staging + swap: the full result is written to a
-    * sibling staging directory FIRST, then swapped in with two renames.
-    * Overwriting a path in-place while the plan still reads from it
-    * (even behind a cache) recomputes from deleted files if partitions
-    * evict or an executor dies mid-write — this makes the source files
-    * live until the new table is complete. The swap window is two
-    * metadata renames, and the previous table survives as `.old` until
-    * the swap succeeds.
-    */
-  def overwriteViaStaging(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(path + ".staging-" + java.util.UUID.randomUUID())
-    val old = new Path(path + ".old-" + java.util.UUID.randomUUID())
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val target = new Path(path)
-    if (fs.exists(target) && !fs.rename(target, old))
-      throw new java.io.IOException(s"cannot stage out current table at $path")
-    if (!fs.rename(staging, target)) {
-      fs.rename(old, target) // restore; staging remains for inspection
-      throw new java.io.IOException(s"cannot swap staged table into $path")
-    }
-    fs.delete(old, true)
-    ()
-  }
 
   /** S5: overwrite write partitioned by a DATE column (B3 fix). Callers
     * derive `partitionCol` with to_date — one directory per day, the

@@ -58,6 +58,13 @@ import TableCore.{FileCol, LiveFile, Layout, Planned, PosCol, listDir, putIfAbse
   *   [[compact]] plans from the recorded sizes. A manifest from before
   *   stats were recorded gets them from a driver-side footer read; the
   *   next commit records them;
+  * - each manifest carries the table's `txn` map, appId → value (Delta's
+  *   SetTransaction): a writer records its progress (a watermark, a
+  *   batch id) in the same atomic commit as the data it covers, every
+  *   later commit carries the map forward, and [[txn]] reads it back from
+  *   the latest manifest on the driver. [[rewrite]] commits an entry with
+  *   a read-modify-write overwrite, [[appendWithTxn]] with an append whose
+  *   rows are chosen from the entries the append is based on;
   * - `readVersion` time-travels by reading an old manifest — old data
   *   files are never mutated.
   *
@@ -95,9 +102,11 @@ object VersionedTable {
   // Jackson parse/render pair. A commit manifest is
   // `{"version":N,"op":…,"files":[…]}` plus `"dv":[…]` only when the
   // version has deletion vectors, `"schema":"…"` (the table schema as
-  // Spark's DataType JSON) only when one was recorded and `"stats":{…}`
+  // Spark's DataType JSON) only when one was recorded, `"stats":{…}`
   // (each live file's [[FileStats]], keyed by path, in `files` order)
-  // only when stats were recorded, so older manifests keep their bytes;
+  // only when stats were recorded and `"txn":{…}` (appId → value, in key
+  // order) only when some writer recorded one, so older manifests keep
+  // their bytes;
   // a checkpoint is `{"version":N,"ops":[[v,op],…]}`. Strings are
   // JSON-escaped, control characters included. Reading tolerates the raw
   // control characters older writers left unescaped in op tags.
@@ -107,7 +116,8 @@ object VersionedTable {
       files: Seq[String], dv: Seq[String] = Seq.empty,
       schema: Option[StructType] = None,
       stats: Map[String, FileStats] = Map.empty,
-      ops: Option[Seq[(Long, String)]] = None)
+      ops: Option[Seq[(Long, String)]] = None,
+      txn: Map[String, String] = Map.empty)
 
   private val mapper = JsonMapper.builder()
     .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
@@ -123,7 +133,8 @@ object VersionedTable {
       n.path("stats").properties().asScala.map(e =>
         e.getKey -> FileStats.fromJson(e.getValue, schema.getOrElse(new StructType()))).toMap,
       Option(n.get("ops")).map(_.elements().asScala
-        .map(e => (e.get(0).asLong, e.get(1).asText)).toSeq))
+        .map(e => (e.get(0).asLong, e.get(1).asText)).toSeq),
+      n.path("txn").properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap)
   }
 
   private[sources] def render(m: Manifest): String = {
@@ -144,6 +155,10 @@ object VersionedTable {
         if (m.stats.nonEmpty) {
           val st = o.putObject("stats")
           m.files.foreach(f => m.stats.get(f).foreach(_.toJson(st.putObject(f))))
+        }
+        if (m.txn.nonEmpty) {
+          val t = o.putObject("txn")
+          m.txn.toSeq.sorted.foreach { case (app, value) => t.put(app, value) }
         }
     }
     mapper.writeValueAsString(o)
@@ -214,10 +229,12 @@ object VersionedTable {
   // ------------------------------------------------- the commit loop
 
   /** One commit attempt: the new version's files, schema and deletion
-    * vectors, and any file stats it already knows.
+    * vectors, any file stats it already knows, and the `txn` entries it
+    * sets.
     */
   private final case class Attempt(files: Seq[String], schema: Option[StructType],
-      dv: Seq[String] = Seq.empty, stats: Map[String, FileStats] = Map.empty)
+      dv: Seq[String] = Seq.empty, stats: Map[String, FileStats] = Map.empty,
+      txn: Map[String, String] = Map.empty)
 
   /** The file stats a commit of `a` on `base` records: the attempt's
     * own, else the base's (with every column the commit adds to the
@@ -239,7 +256,8 @@ object VersionedTable {
   /** Every commit goes through the core's [[TableCore.commitLoop]]: the
     * base is the latest manifest (an empty table is an empty base at
     * version -1, unless `requireBase`), and the plan is linked, with its
-    * files' stats, as the manifest of base+1. Blind writes stage nothing
+    * files' stats and the base's `txn` map updated by the plan's entries,
+    * as the manifest of base+1. Blind writes stage nothing
     * per attempt and keep their data across retries. A landed commit
     * writes the checkpoint when one is due.
     */
@@ -251,7 +269,8 @@ object VersionedTable {
     }(plan) { (base, a) =>
       val next = base.version + 1
       if (!putIfAbsent(manifestPath(path, next),
-          render(Manifest(next, op, a.files, a.dv, a.schema, statsFor(base, a))))) None
+          render(Manifest(next, op, a.files, a.dv, a.schema, statsFor(base, a),
+            txn = base.txn ++ a.txn)))) None
       else {
         maybeCheckpoint(path, next)
         Some(next)
@@ -502,6 +521,66 @@ object VersionedTable {
         base.dv), Seq(dataDir)))
     }.get
 
+  /** Read-modify-write overwrite that records `txn` entries in the same
+    * commit. `build` maps the latest version's live rows (None while the
+    * table has no version) to the table's new content, or to None to keep
+    * the base's files and commit only `txn`. The content depends on the
+    * base it read, so, as in [[mergeCommitPruned]], a lost race discards
+    * the attempt's files and builds again against the new latest version:
+    * a stale result never commits. The base's files stay on disk for its
+    * readers and time travel until [[vacuum]]. Returns the committed
+    * version.
+    */
+  def rewrite(spark: SparkSession, path: String, op: String, txn: Map[String, String])(
+      build: Option[DataFrame] => Option[DataFrame]): Long =
+    commitLoop(path, op, requireBase = false) { base =>
+      val schema = if (base.version < 0) None else Some(schemaOf(spark, base))
+      build(schema.map(liveRows(spark, _, base.files, base.dv))) match {
+        case None => Some(Planned(Attempt(base.files, schema, base.dv, txn = txn)))
+        case Some(df) =>
+          val (dataDir, newFiles) = writeData(df, path)
+          Some(Planned(Attempt(newFiles, Some(mergeSchemas(new StructType(), df.schema)),
+            txn = txn), Seq(dataDir)))
+      }
+    }.get
+
+  /** Append that records `txn` entries in the same commit, for a writer
+    * whose rows depend on the progress it recorded before: `rows` maps the
+    * latest version's `txn` map (empty while the table has no version) to
+    * the rows to append. As in [[rewrite]], a lost race discards the
+    * attempt's files and asks `rows` again against the winner's map, so
+    * two writers that both resume from one recorded mark append each row
+    * once. Returns the committed version.
+    */
+  def appendWithTxn(path: String, op: String, txn: Map[String, String])(
+      rows: Map[String, String] => DataFrame): Long =
+    commitLoop(path, op, requireBase = false) { base =>
+      val df = rows(base.txn)
+      val (dataDir, newFiles) = writeData(df, path)
+      val planned = blindPlan(SaveMode.Append, df, newFiles, base)
+      Some(Planned(planned.commit.copy(txn = txn), Seq(dataDir)))
+    }.get
+
+  /** The `txn` value `appId` recorded, as of the latest version: read from
+    * one manifest on the driver, no Spark job. None when the table has no
+    * version or no commit recorded `appId`.
+    */
+  def txn(path: String, appId: String): Option[String] =
+    latestVersion(path).flatMap(readManifest(path, _).txn.get(appId))
+
+  /** The row count of `version` from the log: the sum of its files'
+    * recorded `numRecords` (a footer read on the driver for a file whose
+    * manifest recorded none), with no Spark job. A version with deletion
+    * vectors is counted by a scan instead, since its DV files may also
+    * list rows of files it no longer holds.
+    */
+  def numRecords(spark: SparkSession, path: String, version: Long): Long = {
+    val m = readManifest(path, version)
+    if (m.dv.nonEmpty) readVersion(spark, path, version).count()
+    else m.files.map(f => m.stats.get(f).fold(
+      FileStats.read(f, new StructType()).numRecords)(_.numRecords)).sum
+  }
+
   // ---------------------------------------------------- change data feed
 
   /** Row-level change feed for `(fromVersion, toVersion]` — Delta CDF's
@@ -561,8 +640,7 @@ object VersionedTable {
     */
   def readVersion(spark: SparkSession, path: String, version: Long): DataFrame = {
     val m = readManifest(path, version)
-    if (m.files.isEmpty) spark.emptyDataFrame
-    else liveRows(spark, schemaOf(spark, m), m.files, m.dv)
+    liveRows(spark, schemaOf(spark, m), m.files, m.dv)
   }
 
   /** RESTORE `version` as a NEW commit: the table's head becomes a

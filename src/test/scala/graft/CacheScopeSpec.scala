@@ -122,4 +122,27 @@ class CacheScopeSpec extends SparkSpec {
     CacheScope.drain(spark)
     assert(a == b)
   }
+
+  test("released frees what its own thread registered, not another thread's registrations") {
+    import spark.implicits._
+    val inside = (1L to 100L).toDF("n")
+    val beside = (1L to 200L).toDF("m")
+    val registered = new java.util.concurrent.CountDownLatch(1)
+    val other = new Thread(() => {
+      CacheScope.persisted(beside).count()
+      registered.countDown()
+    })
+    val out = CacheScope.released {
+      CacheScope.persisted(inside).count()
+      other.start()
+      registered.await()
+      "done"
+    }
+    other.join()
+    assert(out == "done")
+    assert(!inside.storageLevel.isValid, "the body's registration stays cached")
+    assert(beside.storageLevel.useMemory, "another thread's registration was released")
+    CacheScope.drain(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
@@ -105,19 +106,30 @@ class LayerIOSpec extends SparkSpec {
       "partition filter must be pushed to the scan")
   }
 
-  test("overwriteViaStaging replaces a table the new plan reads from") {
-    val path = tempDir("layer").resolve("swap").toString
-    Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v").write.parquet(path)
-    // the replacement plan READS the current table — the in-place
-    // overwrite hazard this API exists to remove
-    val doubled = LayerIO.readLayer(spark, path).withColumn("v", $"v" * 2)
-    LayerIO.overwriteViaStaging(spark, doubled, path)
-    val back = LayerIO.readLayer(spark, path).orderBy("k")
-      .as[(Long, Double)].collect().toSeq
-    assert(back == Seq((1L, 2.0), (2L, 4.0)))
-    // no staging/old residue left beside the table
-    val parent = new java.io.File(path).getParentFile.list().toSeq
-    assert(parent == Seq("swap"), s"residue: $parent")
+  test("readLayer of a VersionedTable reads its latest live rows: no superseded file, no dv/ row") {
+    val path = tempDir("layer").resolve("silver").toString
+    VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, SaveMode.Overwrite)
+    VersionedTable.write(Seq((3L, "c"), (4L, "d"), (5L, "e")).toDF("k", "v"), path,
+      SaveMode.Overwrite)
+    VersionedTable.deleteWhere(spark, path, $"k" === 4L)
+    // the directory holds v0's superseded files and the DV file as well
+    assert(Files.list(java.nio.file.Paths.get(path, "dv")).count() > 0)
+    val back = LayerIO.readLayer(spark, path)
+    assert(back.schema == VersionedTable.read(spark, path).schema)
+    assert(back.as[(Long, String)].collect().toSet == Set((3L, "c"), (5L, "e")))
+  }
+
+  test("a partitioned plain read keeps its partition column and starts no job") {
+    val path = tempDir("layer").resolve("bronze").toString
+    Seq(("C1", 10.0, "2024-01-01"), ("C2", 20.0, "2024-01-02")).toDF("claim_id", "amount", "d")
+      .withColumn("ingestion_date", to_date($"d")).drop("d")
+      .write.partitionBy("ingestion_date").parquet(path)
+    var back: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { back = LayerIO.readLayer(spark, path) } == 0)
+    val inferred = spark.read.parquet(path)
+    assert(back.schema == inferred.schema)
+    assert(back.schema("ingestion_date").dataType == DateType)
+    assert(back.collect().toSet == inferred.collect().toSet)
   }
 
   test("registerTable makes the layer SQL-addressable") {

@@ -661,4 +661,95 @@ class VersionedTableSpec extends SparkSpec {
       assert(m.stats(f).nullCount("score") == m.stats(f).numRecords &&
         !m.stats(f).minValues.contains("score")))
   }
+
+  test("rewrite: an overwrite built from the table's own rows commits with its txn entry; " +
+      "a lost race builds again on the winner") {
+    val path = tempDir("vt_rewrite").resolve("t").toString
+    VersionedTable.write(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), path, SaveMode.Overwrite)
+    def doubled(current: Option[org.apache.spark.sql.DataFrame]) =
+      Some(current.get.withColumn("v", $"v" * 2))
+    // the new version's plan reads the version it replaces
+    assert(VersionedTable.rewrite(spark, path, "double", Map("app" -> "1"))(doubled) == 1L)
+    assert(VersionedTable.read(spark, path).as[(Long, Long)].collect().toSet ==
+      Set((1L, 20L), (2L, 40L)))
+    assert(VersionedTable.readVersion(spark, path, 0L).as[(Long, Long)].collect().toSet ==
+      Set((1L, 10L), (2L, 20L)))
+    assert(VersionedTable.txn(path, "app").contains("1"))
+    assert(VersionedTable.numRecords(spark, path, 1L) == 2L)
+    // every later commit carries the entry forward
+    VersionedTable.write(Seq((3L, 30L)).toDF("k", "v"), path, SaveMode.Append)
+    assert(VersionedTable.txn(path, "app").contains("1") && VersionedTable.txn(path, "x").isEmpty)
+
+    // a writer commits while the rewrite is building: the first attempt
+    // loses its race, and the second builds on the winner's version
+    var builds = 0
+    val v = VersionedTable.rewrite(spark, path, "double", Map("app" -> "2")) { current =>
+      builds += 1
+      if (builds == 1) VersionedTable.write(Seq((4L, 40L)).toDF("k", "v"), path, SaveMode.Append)
+      doubled(current)
+    }
+    assert(builds == 2 && v == 4L)
+    assert(VersionedTable.read(spark, path).as[(Long, Long)].collect().toSet ==
+      Set((1L, 40L), (2L, 80L), (3L, 60L), (4L, 80L)))
+    // the lost attempt's files are gone; the superseded versions' stay
+    assert(Files.list(java.nio.file.Paths.get(path, "data")).count() == 5L)
+
+    // None keeps the files and commits the entry alone
+    val files = VersionedTable.files(path, v)
+    assert(VersionedTable.rewrite(spark, path, "mark", Map("app" -> "3"))(_ => None) == 5L)
+    assert(VersionedTable.files(path, 5L) == files)
+    assert(VersionedTable.txn(path, "app").contains("3"))
+    assert(VersionedTable.numRecords(spark, path, 5L) == 4L)
+    // a table with no version gets the content as its version 0
+    val fresh = tempDir("vt_rewrite").resolve("t").toString
+    assert(VersionedTable.txn(fresh, "app").isEmpty)
+    assert(VersionedTable.rewrite(spark, fresh, "first", Map("app" -> "a")) { current =>
+      assert(current.isEmpty)
+      Some(Seq((1L, 1L)).toDF("k", "v"))
+    } == 0L)
+    assert(VersionedTable.txn(fresh, "app").contains("a"))
+  }
+
+  test("manifest codec: a txn map round-trips byte-identical, in key order") {
+    val line = """{"version":4,"op":"merge","files":["/t/data/a/p0.parquet"],""" +
+      """"txn":{"a":"2026-01-01T00:01:00Z","b":"7"}}"""
+    val m = VersionedTable.parse(line)
+    assert(m.txn == Map("a" -> "2026-01-01T00:01:00Z", "b" -> "7"))
+    assert(VersionedTable.render(m) == line)
+    assert(VersionedTable.render(m.copy(txn = Map("b" -> "7", "a" -> "2026-01-01T00:01:00Z"))) ==
+      line)
+  }
+
+  test("appendWithTxn: the rows follow the mark the append is based on; a lost race asks again") {
+    val path = tempDir("vt_append_txn").resolve("q").toString
+    val rows = Seq(1L, 2L, 3L, 4L).toDF("ts")
+    def above(txn: Map[String, String]) =
+      rows.filter($"ts" > txn.get("mark").fold(0L)(_.toLong))
+    // no version yet: an empty map
+    assert(VersionedTable.appendWithTxn(path, "q", Map("mark" -> "2")) { txn =>
+      assert(txn.isEmpty)
+      above(txn).filter($"ts" <= 2L)
+    } == 0L)
+    assert(VersionedTable.txn(path, "mark").contains("2"))
+    // a run that reads all the source rows again appends only those above the mark
+    assert(VersionedTable.appendWithTxn(path, "q", Map("mark" -> "4"))(above) == 1L)
+    assert(VersionedTable.read(spark, path).as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 4L))
+
+    // a concurrent writer moves the mark while this append stages its files:
+    // the append asks again against the winner's map, and its first files go
+    val other = tempDir("vt_append_txn").resolve("q").toString
+    VersionedTable.appendWithTxn(other, "q", Map("mark" -> "1"))(_ => rows.filter($"ts" <= 1L))
+    val seen = scala.collection.mutable.Buffer[Option[String]]()
+    val v = VersionedTable.appendWithTxn(other, "q", Map("mark" -> "4")) { txn =>
+      seen += txn.get("mark")
+      if (seen.size == 1)
+        VersionedTable.appendWithTxn(other, "q", Map("mark" -> "3"))(_ => rows.filter($"ts" > 1L && $"ts" <= 3L))
+      above(txn)
+    }
+    assert(seen.toSeq == Seq(Some("1"), Some("3")) && v == 2L)
+    assert(VersionedTable.read(spark, other).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
+    assert(Files.list(java.nio.file.Paths.get(other, "data")).count() == 3L)
+    assert(VersionedTable.txn(other, "mark").contains("4"))
+  }
 }
