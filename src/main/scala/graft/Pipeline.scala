@@ -51,6 +51,16 @@ import graft.sources.{LayerIO, VersionedTable}
   * batch size, so a repeated scan, a count the log already holds or a
   * schema-inference read costs as much as the work itself on an
   * incremental batch.
+  *
+  * Every frame a layer commits is first coalesced to one partition per
+  * `spark.sql.files.maxPartitionBytes` of the files its plan reads (see
+  * [[sized]]), so a commit writes about as many files as a scan of its
+  * input splits into, not one per shuffle or scan partition of the plan
+  * that built it. A later scan packs a table's files into splits charging
+  * each file `spark.sql.files.openCostInBytes` (4 MB), so a table of many
+  * small files scans as many small tasks, and each task carries a fixed
+  * scheduling and setup cost: an incremental batch of a few hundred KB
+  * writes one file per table.
   */
 object Pipeline {
 
@@ -78,7 +88,7 @@ object Pipeline {
     val stamped = Bronze.stampLineage(raw, "tpch_feed", loadId,
       ingestionTs = lit(asOf).cast("timestamp"),
       sourceFile = lit(s"$loadId.parquet"))
-    LayerIO.appendOrCreate(stamped, spark, paths.bronze, "ingestion_date")
+    LayerIO.appendOrCreate(sized(stamped), spark, paths.bronze, "ingestion_date")
   }
 
   /** Silver: watermark-incremental read of Bronze → cleanse → DQ gate
@@ -133,7 +143,7 @@ object Pipeline {
             .drop("dq_reasons_csv")
           VersionedTable.appendWithTxn(paths.quarantine, "quarantine",
               Map(SilverMark -> newMark)) { txn =>
-            failRows.filter(newerThan(txn.get(SilverMark)))
+            sized(failRows.filter(newerThan(txn.get(SilverMark))))
           }
           afterCommit("quarantine")
         }
@@ -145,7 +155,8 @@ object Pipeline {
         val allFailed = stats.getLong(1) == stats.getLong(0)
         val v = VersionedTable.rewrite(spark, paths.silver, "merge", Map(SilverMark -> newMark)) {
           case Some(_) if allFailed => None
-          case current => Some(current.fold(deduped)(Merge.upsert(_, deduped, keys, Some(pass))))
+          case current =>
+            Some(sized(current.fold(deduped)(Merge.upsert(_, deduped, keys, Some(pass)))))
         }
         afterCommit("silver")
         VersionedTable.numRecords(spark, paths.silver, v)
@@ -198,12 +209,12 @@ object Pipeline {
     refreshDim(spark, paths.dimProvider, "dim_provider", keySpec(provider),
       provider.columns)(provider.keyed)
     refreshDim(spark, paths.dimDate, "dim_date", Nil, date)(date)
-    VersionedTable.write(Gold.factLines(silver, Tables.orders(spark, fixturesDir),
+    VersionedTable.write(sized(Gold.factLines(silver, Tables.orders(spark, fixturesDir),
       VersionedTable.read(spark, paths.dimMember),
       VersionedTable.read(spark, paths.dimProvider),
-      VersionedTable.read(spark, paths.dimDate)), paths.fact, SaveMode.Overwrite)
+      VersionedTable.read(spark, paths.dimDate))), paths.fact, SaveMode.Overwrite)
     afterCommit("fact")
-    VersionedTable.write(Gold.monthlyRollup(VersionedTable.read(spark, paths.fact)),
+    VersionedTable.write(sized(Gold.monthlyRollup(VersionedTable.read(spark, paths.fact))),
       paths.rollup, SaveMode.Overwrite)
     afterCommit("rollup")
     Seq(paths.silver, paths.dimMember, paths.dimProvider, paths.dimDate, paths.fact,
@@ -231,9 +242,22 @@ object Pipeline {
       val sc = spark.sparkContext
       val described = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(s"refresh $name")
-      try CacheScope.released(VersionedTable.write(build, path, SaveMode.Overwrite, tag))
+      try CacheScope.released(VersionedTable.write(sized(build), path, SaveMode.Overwrite, tag))
       finally sc.setJobDescription(described)
     }
+  }
+
+  /** `df` coalesced to `ceil(inputBytes / spark.sql.files.maxPartitionBytes)`
+    * partitions, at least one, where `inputBytes` sums the size estimates
+    * of its analyzed plan's leaves: the file sizes its file indexes or logs
+    * already hold, so this starts no job. `coalesce` adds no shuffle and
+    * only ever lowers the partition count: a frame with fewer partitions
+    * keeps them.
+    */
+  private def sized(df: DataFrame): DataFrame = {
+    val bytes = df.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes).sum
+    val limit = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    df.coalesce(((bytes + limit - 1) / limit).max(1).min(Int.MaxValue).toInt)
   }
 
   /** The root paths of the file relations `df` reads. */

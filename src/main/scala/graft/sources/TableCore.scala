@@ -207,9 +207,11 @@ private[sources] object TableCore {
 
   /** Vacuum: delete the data files under `roots` (those `isData` accepts)
     * that no retained version references (`live`, as absolute normalized
-    * paths) and whose modification time is at or before `horizon`. With
-    * `dropDirs`, a directory that is left with no data file loses its
-    * leftover markers and goes too. Returns the number of files deleted.
+    * paths) and whose modification time is at or before `horizon`, each
+    * with its `.<name>.crc` checksum sibling when it has one. With
+    * `dropDirs`, a directory below a root whose data files all went loses
+    * its leftover markers and goes too. Returns the number of data files
+    * deleted.
     */
   def sweep(roots: Seq[Path], live: Set[Path], horizon: Long, isData: Path => Boolean,
       dropDirs: Boolean): Int =
@@ -219,8 +221,11 @@ private[sources] object TableCore {
           val data = entries.filter(isData)
           val dead = data.filter(p => !live(p.toAbsolutePath.normalize) &&
             Files.getLastModifiedTime(p).toMillis <= horizon)
-          dead.foreach(Files.delete)
-          if (dropDirs && dead.size == data.size && dir != root) {
+          dead.foreach { p =>
+            Files.delete(p)
+            Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+          }
+          if (dropDirs && data.nonEmpty && dead.size == data.size && dir != root) {
             entries.filterNot(isData).foreach(Files.deleteIfExists)
             Files.deleteIfExists(dir)
           }

@@ -893,11 +893,15 @@ object VersionedTable {
     * auto-delete old files" (/root/reference/bronze_silver_gold/
     * readme.md:117), Delta's VACUUM analog: drop every manifest older
     * than the newest `retainLast` versions, then delete data files no
-    * retained manifest references. Time travel to a vacuumed version
-    * fails by design (its manifest is gone); readers of RETAINED versions
-    * are untouched because their files are, too. Manifests go first so an
-    * expired version disappears atomically before any of its exclusive
-    * files do. Returns the number of data files deleted.
+    * retained manifest references. As Delta's VACUUM does, the sweep
+    * covers the whole table directory except the entries whose name
+    * starts with `_` or `.` (the log, the Bloom sidecar, markers): a
+    * parquet file the table's writes never made — a part file of a
+    * plain-parquet table the log replaced — goes like a superseded one.
+    * Time travel to a vacuumed version fails by design (its manifest is
+    * gone); readers of RETAINED versions are untouched because their
+    * files are, too. Manifests go first so an expired version disappears
+    * atomically before any of its exclusive files do. Returns the number of data files deleted.
     *
     * `minAgeMs` guards the in-flight-commit window: a concurrent writer
     * stages data files BEFORE its manifest lands, and a zero-horizon
@@ -931,8 +935,10 @@ object VersionedTable {
     }
     // a commit dir that no retained version reaches into, once every
     // data file is confirmed dead, goes with its markers (_SUCCESS etc.)
-    TableCore.sweep(Seq(Paths.get(path, "data"), Paths.get(path, "dv")), live,
-      System.currentTimeMillis() - minAgeMs, _.toString.endsWith(".parquet"), dropDirs = true)
+    val root = Paths.get(path).toAbsolutePath.normalize
+    def visible(p: Path): Boolean = !"_.".contains(root.relativize(p).getName(0).toString.head)
+    TableCore.sweep(Seq(root), live, System.currentTimeMillis() - minAgeMs,
+      p => visible(p) && p.toString.endsWith(".parquet"), dropDirs = true)
   }
 
   /** OPTIMIZE-style file compaction — the reference's "OPTIMIZE command

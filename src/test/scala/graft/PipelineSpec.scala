@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.time.{Instant, LocalDateTime, ZoneId}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -17,7 +18,8 @@ import graft.sources.{LayerIO, VersionedTable}
   * data must change nothing anywhere (the reference docs' "Idempotent
   * Processing" declaration, bronze_silver_gold/readme.md:68-70). Also:
   * re-delivered keys update in place, a batch failing DQ on every row,
-  * the Spark-job budget of one incremental batch, Gold's rule that a
+  * the Spark-job and task budgets of one incremental batch, the file
+  * count of a commit at a small `maxPartitionBytes`, Gold's rule that a
   * dim is rebuilt only when its source changed, a re-run after a crash
   * following each commit, and a root in the plain-parquet layout.
   */
@@ -202,6 +204,48 @@ class PipelineSpec extends SparkSpec {
     assert(jobs <= 13, s"$jobs Spark jobs for one batch")
   }
 
+  test("task budget: one incremental batch through Silver and Gold") {
+    val paths = freshPaths()
+    val li = Tables.lineitem(spark, sf)
+    loadBatch(paths, li.filter($"l_orderkey" % 2 === 0), 1)
+    Pipeline.runBronze(spark, li.filter($"l_orderkey" % 2 =!= 0), paths,
+      "load_2", "2026-01-02 00:00:00")
+    val tasks = tasksStartedBy {
+      Pipeline.runSilver(spark, paths)
+      Pipeline.runGold(spark, paths, sf)
+    }
+    // 17 measured on local[4]; 21 while each commit wrote one file per
+    // partition of the plan that built it, so every later scan of the
+    // table started one task per file
+    assert(tasks <= 17, s"$tasks Spark tasks for one batch")
+  }
+
+  test("at a small maxPartitionBytes Silver is written as several files, as few as its input " +
+      "allows, holding the rows of a run at the default") {
+    val li = Tables.lineitem(spark, sf)
+    val fresh = freshPaths()
+    loadBatch(fresh, li, 1)
+    val small = freshPaths()
+    val limit = 8L << 10
+    // without adaptive partition coalescing, as the benchmark runs, so
+    // Silver's plan ends in one partition per shuffle partition
+    val conf = Map("spark.sql.files.maxPartitionBytes" -> limit.toString,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = conf.keys.map(k => k -> spark.conf.getOption(k))
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try loadBatch(small, li, 1)
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    // Silver's first batch reads Bronze alone
+    val inputBytes = Using.resource(Files.walk(Paths.get(small.bronze)))(_.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).map(Files.size).sum)
+    val v = VersionedTable.latestVersion(small.silver).get
+    val files = VersionedTable.files(small.silver, v).size
+    assert(files > 1 && files <= (inputBytes + limit - 1) / limit, s"$files files, $inputBytes bytes")
+    assert(rows(small.silver) == rows(fresh.silver))
+    assert(VersionedTable.files(fresh.silver, VersionedTable.latestVersion(fresh.silver).get)
+      .size == 1)
+  }
+
   test("a second runGold over unchanged sources starts no dim job and commits no dim version") {
     val paths = freshPaths()
     Pipeline.runBronze(spark, Tables.lineitem(spark, sf), paths, "load_1", "2026-01-01 00:00:00")
@@ -362,8 +406,16 @@ class PipelineSpec extends SparkSpec {
 
     Seq(fresh, old).foreach(loadBatch(_, li.filter($"l_orderkey" % 2 =!= 0), 2))
     tables.foreach(t => assert(rows(t(old)) == rows(t(fresh)), t(old)))
-    // the plain part files stay where they were, unread
-    assert(Files.list(Paths.get(old.silver)).iterator().asScala
-      .exists(_.getFileName.toString.startsWith("part-")))
+    // the plain part files stay where they were, unread, until they pass
+    // vacuum's horizon
+    def partFiles(path: String): Int = Files.list(Paths.get(path)).iterator().asScala
+      .count(_.getFileName.toString.startsWith("part-"))
+    tables.foreach(t => assert(partFiles(t(old)) > 0, t(old)))
+    tables.foreach(t => VersionedTable.vacuum(t(old), minAgeMs = 0))
+    tables.foreach { t =>
+      assert(partFiles(t(old)) == 0, t(old))
+      assert(rows(t(old)) == rows(t(fresh)), t(old))
+    }
+    assert(Files.exists(Paths.get(old.silver, "_graft_log")))
   }
 }

@@ -42,32 +42,48 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * the calling thread ("" when the job has none), as [[jobsStartedBy]]
     * counts them.
     */
-  def jobDescriptionsStartedBy(body: => Unit): Seq[String] = {
-    val probe = s"job-probe-${java.util.UUID.randomUUID()}"
+  def jobDescriptionsStartedBy(body: => Unit): Seq[String] = probe(body)._1
+
+  /** Spark tasks that `body`'s jobs start: the task count of each stage
+    * they submit (a stage skipped for its reused shuffle output starts none).
+    */
+  def tasksStartedBy(body: => Unit): Int = probe(body)._2
+
+  /** Run `body` with its jobs tagged by a thread-local property; returns
+    * the description of each job it started and the tasks of the stages
+    * those jobs submitted.
+    */
+  private def probe(body: => Unit): (Seq[String], Int) = {
+    val tag = s"job-probe-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
     val sentinel = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(e.properties).map(p => (p.getProperty("graft.job.probe"), p)) match {
-          case Some((`probe`, p)) => jobs.add(p.getProperty("spark.job.description", "")); ()
-          case Some((t, _)) if t == probe + "-end" => sentinel.countDown()
+          case Some((`tag`, p)) => jobs.add(p.getProperty("spark.job.description", "")); ()
+          case Some((t, _)) if t == tag + "-end" => sentinel.countDown()
           case _ => ()
+        }
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.job.probe") == tag)) {
+          tasks.addAndGet(e.stageInfo.numTasks); ()
         }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      sc.setLocalProperty("graft.job.probe", probe)
+      sc.setLocalProperty("graft.job.probe", tag)
       body
       // the listener bus is ordered: once this job is seen, every earlier one was
-      sc.setLocalProperty("graft.job.probe", probe + "-end")
+      sc.setLocalProperty("graft.job.probe", tag + "-end")
       spark.range(1).count()
       assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally {
       sc.setLocalProperty("graft.job.probe", null)
       sc.removeSparkListener(listener)
     }
-    jobs.toArray(Array.empty[String]).toSeq
+    (jobs.toArray(Array.empty[String]).toSeq, tasks.get)
   }
 }
 
