@@ -823,7 +823,7 @@ object DeltaInterop {
     // wins the race is also caught (its staged files are left
     // unreferenced — VACUUM's job, like any lost writer).
     def committed(r: Replayed): Boolean = txn.exists { case (app, ver) =>
-      r.snap.transactions.get(app).exists(_ >= ver)
+      TableCore.txnCommitted(r.snap.transactions.get(app), ver)
     }
     if (cur0.exists(r => mode == SaveMode.Ignore || committed(r)))
       return cur0.get.snap.version

@@ -18,6 +18,8 @@ import org.apache.spark.sql.types._
   *
   * - [[commitLoop]]: optimistic concurrency over [[putIfAbsent]], which
   *   re-plans on a lost race and discards that attempt's staged files;
+  * - [[txnCommitted]]: the SetTransaction rule that makes a write
+  *   exactly-once per (appId, batch id);
   * - [[scan]]: the declared schema, partition values restored from the
   *   log, physical names renamed to logical, deleted rows masked by one
   *   anti-join on (file, `_metadata.row_index`); a read without deleted
@@ -131,6 +133,15 @@ private[sources] object TableCore {
       }
     }
   }
+
+  /** Delta's SetTransaction rule, the one exactly-once mechanism of both
+    * codecs: a batch whose id is at or below the id its appId `recorded`
+    * has committed already, and commits nothing. A writer checks it before
+    * staging any data and again against each attempt's base, so two
+    * replays of one batch commit once between them.
+    */
+  def txnCommitted(recorded: Option[Long], batchId: Long): Boolean =
+    recorded.exists(batchId <= _)
 
   // -------------------------------------------------------------- scan
 

@@ -23,9 +23,9 @@ import TableCore.{FileCol, LiveFile, Layout, Planned, PosCol, listDir, putIfAbse
   * positions from table-level parquet DV files, and renders each planned
   * commit as the next manifest. The commit loop, scan, min/max pruning,
   * DV delete, compaction, vacuum sweep and change-feed union are the
-  * core's. Rules of this format stay here: the Bloom sidecar, op-tag
-  * checkpoints and [[writeOnce]], [[compact]]'s choice of small files,
-  * [[vacuum]]'s `retainLast`, and [[changes]]' refusal of rewrite commits.
+  * core's. Rules of this format stay here: the Bloom sidecar,
+  * [[compact]]'s choice of small files, [[vacuum]]'s `retainLast`, and
+  * [[changes]]' refusal of rewrite commits.
   *
   * - data files are immutable, written once under `data/<uuid>/`;
   * - each commit is a JSON manifest `_graft_log/v{N}.json` listing the
@@ -41,9 +41,6 @@ import TableCore.{FileCol, LiveFile, Layout, Planned, PosCol, listDir, putIfAbse
   *   [[mergeCommitPruned]], [[compact]]) re-plan against the new latest
   *   version when they lose — a blind retry would silently discard the
   *   concurrent commit;
-  * - [[writeOnce]] makes an operation tag part of the commit race, so
-  *   at-least-once re-deliveries (streaming batch replays) cannot commit
-  *   twice even from concurrent writers;
   * - each manifest records the table schema (Delta's `schemaString`),
   *   and every scan declares it, so reads and commits start no
   *   schema-discovery job. A widening append merges its schema into the
@@ -62,14 +59,15 @@ import TableCore.{FileCol, LiveFile, Layout, Planned, PosCol, listDir, putIfAbse
   *   SetTransaction): a writer records its progress (a watermark, a
   *   batch id) in the same atomic commit as the data it covers, every
   *   later commit carries the map forward, and [[txn]] reads it back from
-  *   the latest manifest on the driver. [[rewrite]] commits an entry with
-  *   a read-modify-write overwrite, [[appendWithTxn]] with an append whose
-  *   rows are chosen from the entries the append is based on;
+  *   the latest manifest on the driver. [[write]]`(txn = …)` records a
+  *   streaming batch id and commits nothing for a replayed one,
+  *   [[rewrite]] commits an entry with a read-modify-write overwrite,
+  *   [[appendWithTxn]] with an append whose rows are chosen from the
+  *   entries the append is based on;
   * - `readVersion` time-travels by reading an old manifest — old data
   *   files are never mutated.
   *
-  * Local-filesystem link is atomic here; on an object store the same
-  * protocol runs against a log store with put-if-absent.
+  * Local filesystem only; see ROADMAP item 6.
   */
 object VersionedTable {
 
@@ -106,17 +104,15 @@ object VersionedTable {
   // (each live file's [[FileStats]], keyed by path, in `files` order)
   // only when stats were recorded and `"txn":{…}` (appId → value, in key
   // order) only when some writer recorded one, so older manifests keep
-  // their bytes;
-  // a checkpoint is `{"version":N,"ops":[[v,op],…]}`. Strings are
-  // JSON-escaped, control characters included. Reading tolerates the raw
-  // control characters older writers left unescaped in op tags.
+  // their bytes. Strings are JSON-escaped, control characters included.
+  // Reading tolerates the raw control characters older writers left
+  // unescaped in op tags.
 
-  /** A log record: a commit manifest, or a checkpoint when `ops` is set. */
+  /** A commit manifest. */
   private[sources] final case class Manifest(version: Long, op: String,
       files: Seq[String], dv: Seq[String] = Seq.empty,
       schema: Option[StructType] = None,
       stats: Map[String, FileStats] = Map.empty,
-      ops: Option[Seq[(Long, String)]] = None,
       txn: Map[String, String] = Map.empty)
 
   private val mapper = JsonMapper.builder()
@@ -132,34 +128,25 @@ object VersionedTable {
       strings("dv"), schema,
       n.path("stats").properties().asScala.map(e =>
         e.getKey -> FileStats.fromJson(e.getValue, schema.getOrElse(new StructType()))).toMap,
-      Option(n.get("ops")).map(_.elements().asScala
-        .map(e => (e.get(0).asLong, e.get(1).asText)).toSeq),
       n.path("txn").properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap)
   }
 
   private[sources] def render(m: Manifest): String = {
-    val o = mapper.createObjectNode().put("version", m.version)
+    val o = mapper.createObjectNode().put("version", m.version).put("op", m.op)
     def strings(field: String, xs: Seq[String]): Unit = {
       val a = o.putArray(field)
       xs.foreach(x => a.add(x))
     }
-    m.ops match {
-      case Some(ops) =>
-        val a = o.putArray("ops")
-        ops.foreach { case (v, op) => a.addArray().add(v).add(op) }
-      case None =>
-        o.put("op", m.op)
-        strings("files", m.files)
-        if (m.dv.nonEmpty) strings("dv", m.dv)
-        m.schema.foreach(s => o.put("schema", s.json))
-        if (m.stats.nonEmpty) {
-          val st = o.putObject("stats")
-          m.files.foreach(f => m.stats.get(f).foreach(_.toJson(st.putObject(f))))
-        }
-        if (m.txn.nonEmpty) {
-          val t = o.putObject("txn")
-          m.txn.toSeq.sorted.foreach { case (app, value) => t.put(app, value) }
-        }
+    strings("files", m.files)
+    if (m.dv.nonEmpty) strings("dv", m.dv)
+    m.schema.foreach(s => o.put("schema", s.json))
+    if (m.stats.nonEmpty) {
+      val st = o.putObject("stats")
+      m.files.foreach(f => m.stats.get(f).foreach(_.toJson(st.putObject(f))))
+    }
+    if (m.txn.nonEmpty) {
+      val t = o.putObject("txn")
+      m.txn.toSeq.sorted.foreach { case (app, value) => t.put(app, value) }
     }
     mapper.writeValueAsString(o)
   }
@@ -183,48 +170,27 @@ object VersionedTable {
   private def statsOf(m: Manifest, schema: StructType): Map[String, FileStats] =
     m.files.map(f => f -> m.stats.getOrElse(f, FileStats.read(f, schema))).toMap
 
-  // ------------------------------------------------- log checkpoints
+  // ------------------------------------------------- legacy batch tags
   //
-  // Delta compacts its JSON log into a checkpoint every 10 commits so
-  // that log replay reads one checkpoint + a bounded tail instead of
-  // every manifest since table creation. Same here: every
-  // `checkpointInterval`-th commit folds the cumulative (version, op)
-  // history into `chk-v{N}.json`; [[committedOps]] (the exactly-once
-  // hot path, consulted per micro-batch) then costs O(interval), not
-  // O(versions) — at 10⁵ commits that is the difference between 10
-  // driver-side file reads and 100,000. Checkpoints are committed with
-  // the same put-if-absent link as manifests, so racing writers cannot
-  // corrupt one, and they survive [[vacuum]] (which keeps the newest),
-  // preserving the op-dedup history of vacuumed versions.
+  // Before the `txn` map, a streaming sink tagged each commit
+  // `<appId>-batch-<id>`, and every 10th commit folded the (version, op)
+  // history into a checkpoint `chk-v{N}.json`,
+  // `{"version":N,"ops":[[v,op],…]}`, the newest of which vacuum kept. An
+  // appId with no `txn` entry takes its mark from those tags, read as that
+  // history was: the newest checkpoint plus the manifests after it.
+  // Nothing writes checkpoints any more.
 
-  /** Every N-th commit writes a log checkpoint. */
-  val checkpointInterval: Int = 10
-
-  private def checkpointPath(path: String, v: Long): Path =
-    logDir(path).resolve(f"chk-v$v%08d.json")
-
-  private def checkpoints(path: String): Seq[Long] = logFiles(path, "chk-v")
-
-  /** (version, op) pairs committed through `upTo`: the newest
-    * checkpoint at or below `upTo`, plus the manifest tail after it —
-    * O(interval) manifest reads once checkpoints exist.
-    */
-  private def opsThrough(path: String, upTo: Long): Seq[(Long, String)] = {
-    val cp = checkpoints(path).filter(_ <= upTo).lastOption
-    val base = cp.flatMap(v =>
-      parse(Files.readString(checkpointPath(path, v))).ops).getOrElse(Seq.empty)
-    val from = cp.getOrElse(-1L)
-    base ++ versions(path).filter(v => v > from && v <= upTo)
-      .map(v => (v, opOf(path, v)))
+  /** The largest batch id among `appId`'s legacy tags in the log at `path`. */
+  private[sources] def legacyBatchMark(path: String, appId: String): Option[Long] = {
+    val chk = logFiles(path, "chk-v").lastOption
+    val ops = chk.toSeq.flatMap(v =>
+      mapper.readTree(Files.readString(logDir(path).resolve(f"chk-v$v%08d.json")))
+        .path("ops").elements().asScala.map(_.get(1).asText)) ++
+      versions(path).filter(v => chk.forall(v > _)).map(opOf(path, _))
+    val tag = s"$appId-batch-"
+    ops.flatMap(op => if (op.startsWith(tag)) op.stripPrefix(tag).toLongOption else None)
+      .maxOption
   }
-
-  private def maybeCheckpoint(path: String, version: Long): Unit =
-    if (version > 0 && version % checkpointInterval == 0 &&
-        !Files.exists(checkpointPath(path, version))) {
-      putIfAbsent(checkpointPath(path, version), render(
-        Manifest(version, "", Seq.empty, ops = Some(opsThrough(path, version)))))
-      ()
-    }
 
   // ------------------------------------------------- the commit loop
 
@@ -258,8 +224,7 @@ object VersionedTable {
     * version -1, unless `requireBase`), and the plan is linked, with its
     * files' stats and the base's `txn` map updated by the plan's entries,
     * as the manifest of base+1. Blind writes stage nothing
-    * per attempt and keep their data across retries. A landed commit
-    * writes the checkpoint when one is due.
+    * per attempt and keep their data across retries.
     */
   private def commitLoop(path: String, op: String, requireBase: Boolean)(
       plan: Manifest => Option[Planned[Attempt]]): Option[Long] =
@@ -268,13 +233,9 @@ object VersionedTable {
       latest.fold(Manifest(-1L, "", Seq.empty))(readManifest(path, _))
     }(plan) { (base, a) =>
       val next = base.version + 1
-      if (!putIfAbsent(manifestPath(path, next),
-          render(Manifest(next, op, a.files, a.dv, a.schema, statsFor(base, a),
-            txn = base.txn ++ a.txn)))) None
-      else {
-        maybeCheckpoint(path, next)
-        Some(next)
-      }
+      Some(next).filter(_ => putIfAbsent(manifestPath(path, next),
+        render(Manifest(next, op, a.files, a.dv, a.schema, statsFor(base, a),
+          txn = base.txn ++ a.txn))))
     }
 
   /** Write the batch's data files under `<path>/<sub>/<uuid>/` (never
@@ -286,19 +247,21 @@ object VersionedTable {
     (dir, TableCore.writeFiles(df, dir).map(_.toString))
   }
 
-  /** Blind-write plan for `df`, already written as `newFiles`: append
-    * carries the base's files AND deletion vectors forward (dropping the
-    * DVs would resurrect deleted rows) and merges `df`'s schema into the
-    * base's, failing on a type conflict; overwrite replaces all three.
+  /** Blind-write commit of `df`, already written as `newFiles`, setting
+    * `txn`: append carries the base's files AND deletion vectors forward
+    * (dropping the DVs would resurrect deleted rows) and merges `df`'s
+    * schema into the base's, failing on a type conflict; overwrite
+    * replaces all three.
     */
-  private def blindPlan(mode: SaveMode, df: DataFrame, newFiles: Seq[String],
-      base: Manifest): Planned[Attempt] = Planned(
+  private def blindAttempt(mode: SaveMode, df: DataFrame, newFiles: Seq[String],
+      base: Manifest, txn: Map[String, String]): Attempt =
     if (mode == SaveMode.Append)
       Attempt(base.files ++ newFiles,
-        Some(mergeSchemas(schemaOf(df.sparkSession, base), df.schema)), base.dv)
-    else Attempt(newFiles, Some(mergeSchemas(new StructType(), df.schema))))
+        Some(mergeSchemas(schemaOf(df.sparkSession, base), df.schema)), base.dv, txn = txn)
+    else Attempt(newFiles, Some(mergeSchemas(new StructType(), df.schema)), txn = txn)
 
-  /** Write `df` as a new commit. Append mode unions the previous
+  /** Write `df` as a new commit tagged `op` in the history (by default
+    * the mode: `append` or `overwrite`). Append mode unions the previous
     * version's files with the new ones; overwrite replaces them. Returns
     * the committed version.
     *
@@ -308,18 +271,35 @@ object VersionedTable {
     * read of the table must go through a read-modify-write commit
     * ([[mergeCommitDV]], [[mergeCommitPruned]], [[deleteWhere]]), which
     * re-plans on a lost race instead of retrying a stale snapshot.
+    *
+    * `txn = Some((appId, batchId))` makes the write exactly-once under
+    * [[TableCore.txnCommitted]]: the commit records `batchId` as
+    * `appId`'s `txn` entry, and a batch at or below the recorded id
+    * commits nothing and returns the latest version. The rule is checked
+    * before any data is staged, so a replay writes no file, and again
+    * against each attempt's base, so of two racing replays the loser
+    * deletes its staged files. An appId with no entry takes its mark from
+    * its legacy tags ([[legacyBatchMark]]), one read of the log's op
+    * history until its first commit records the entry.
     */
-  def write(df: DataFrame, path: String, mode: SaveMode): Long =
-    write(df, path, mode,
-      if (mode == SaveMode.Append) "append" else "overwrite")
-
-  /** As [[write]] with an explicit operation tag (used by the streaming
-    * sink for exactly-once batch bookkeeping).
-    */
-  def write(df: DataFrame, path: String, mode: SaveMode, op: String): Long = {
-    val (_, newFiles) = writeData(df, path)
-    commitLoop(path, op, requireBase = false)(base =>
-      Some(blindPlan(mode, df, newFiles, base))).get
+  def write(df: DataFrame, path: String, mode: SaveMode, op: String = "",
+      txn: Option[(String, Long)] = None): Long = {
+    lazy val legacy = txn.flatMap { case (app, _) => legacyBatchMark(path, app) }
+    def committed(m: Manifest): Boolean = txn.exists { case (app, id) =>
+      TableCore.txnCommitted(m.txn.get(app).map(_.toLong).orElse(legacy), id)
+    }
+    val tag = if (op.nonEmpty) op else if (mode == SaveMode.Append) "append" else "overwrite"
+    val entry = txn.map { case (app, id) => app -> id.toString }.toMap
+    txn.flatMap(_ => latestVersion(path)).filter(v => committed(readManifest(path, v)))
+      .getOrElse {
+        val (dataDir, newFiles) = writeData(df, path)
+        commitLoop(path, tag, requireBase = false) { base =>
+          if (committed(base)) {
+            TableCore.deleteTree(dataDir)
+            None
+          } else Some(Planned(blindAttempt(mode, df, newFiles, base, entry)))
+        }.getOrElse(latestOrFail(path))
+      }
   }
 
   /** Write `df` z-clustered on (`colA`, `colB`) as a new commit — the
@@ -356,49 +336,10 @@ object VersionedTable {
     write(ZOrder.clustered(read(spark, path), colA, colB, numFiles), path,
       SaveMode.Overwrite, s"optimize-zorder($colA,$colB)")
 
-  /** Exactly-once tagged commit: commit `df` under `op` unless a
-    * manifest already carries that tag. The tag check is part of the
-    * commit RACE, not a separate check-then-write: losing a version race
-    * re-checks only the manifests that appeared since, so two concurrent
-    * replays of the same batch commit exactly one version between them.
-    * Returns the committed version, or None when the tag already won.
-    */
-  def writeOnce(df: DataFrame, path: String, mode: SaveMode,
-      op: String): Option[Long] = {
-    val start = versions(path).toSet
-    // checkpointed read: O(interval), not O(versions) — this check runs
-    // per micro-batch in the streaming sink
-    if (opsThrough(path, Long.MaxValue).exists(_._2 == op)) return None
-    val (dataDir, newFiles) = writeData(df, path)
-    commitLoop(path, op, requireBase = false) { base =>
-      // the tag re-check runs BEFORE every attempt, not only after a
-      // lost version race: a concurrent replay that committed while
-      // THIS replay was still staging parquet (writeData above takes
-      // seconds) leaves the next version number free, so an
-      // after-failure-only check never fires and the batch double
-      // commits — the DeltaInterop.write discipline (re-check txn
-      // inside the loop ahead of each attempt)
-      if (versions(path).exists(v => !start.contains(v) && opOf(path, v) == op)) {
-        // a concurrent replay of this very batch won the race: our data
-        // files must not become a duplicate commit
-        TableCore.deleteTree(dataDir)
-        None
-      } else Some(blindPlan(mode, df, newFiles, base))
-    }
-  }
-
   /** The operation tag of a committed version, parsed straight off the
     * manifest (cheap driver-side read — no Spark job per lookup).
     */
   def opOf(path: String, version: Long): String = readManifest(path, version).op
-
-  /** Operation tags already committed (for idempotent re-delivery).
-    * Driver-side file reads bounded by the checkpoint interval — the
-    * newest checkpoint plus the manifest tail, never the whole log.
-    * Includes ops of vacuumed versions when a checkpoint covers them.
-    */
-  def committedOps(spark: SparkSession, path: String): Set[String] =
-    opsThrough(path, Long.MaxValue).map(_._2).toSet
 
   /** The live files of `version`, parsed driver-side from its manifest. */
   def files(path: String, version: Long): Seq[String] =
@@ -557,8 +498,7 @@ object VersionedTable {
     commitLoop(path, op, requireBase = false) { base =>
       val df = rows(base.txn)
       val (dataDir, newFiles) = writeData(df, path)
-      val planned = blindPlan(SaveMode.Append, df, newFiles, base)
-      Some(Planned(planned.commit.copy(txn = txn), Seq(dataDir)))
+      Some(Planned(blindAttempt(SaveMode.Append, df, newFiles, base, txn), Seq(dataDir)))
     }.get
 
   /** The `txn` value `appId` recorded, as of the latest version: read from
@@ -587,7 +527,7 @@ object VersionedTable {
     * shape: the table columns plus `_change_type` (`insert` | `delete`;
     * a merge's update surfaces as delete-of-preimage + insert-of-
     * postimage) and `_commit_version`. Exact for commits that only add
-    * files and/or DV entries (append, [[writeOnce]], [[deleteWhere]],
+    * files and/or DV entries (append, [[deleteWhere]],
     * [[mergeCommitDV]]); `compact` commits are pure layout and yield no
     * changes; rewrite commits (overwrite, [[mergeCommitPruned]]) destroy
     * row identity and raise — a CDF consumer pins the table to DV-based
@@ -927,11 +867,6 @@ object VersionedTable {
     }.map(Paths.get(_).toAbsolutePath.normalize).toSet
     vs.dropRight(retainLast).foreach { v =>
       Files.deleteIfExists(manifestPath(path, v)); ()
-    }
-    // superseded checkpoints go with them; the NEWEST survives so the
-    // op-dedup history of vacuumed versions remains consultable
-    checkpoints(path).dropRight(1).foreach { v =>
-      Files.deleteIfExists(checkpointPath(path, v)); ()
     }
     // a commit dir that no retained version reaches into, once every
     // data file is confirmed dead, goes with its markers (_SUCCESS etc.)

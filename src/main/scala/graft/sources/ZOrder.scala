@@ -99,7 +99,7 @@ object ZOrder {
     * the helper column dropped before the write. Each output file then
     * covers a contiguous z-range — a tight min/max box in both
     * dimensions — which is what makes footer-stats skipping (see
-    * [[ZOrder.candidateFiles]]) effective on either column.
+    * [[TableCore.minMaxCandidates]]) effective on either column.
     *
     * Both dimensions are min-max normalized to the full 16-bit range
     * before interleaving. Without this, the wider column's high bits
@@ -271,20 +271,4 @@ object ZOrder {
       .drop("__h")
       .write.mode("overwrite").parquet(path)
   }
-
-  /** Per-file [min, max] stats of `column` over a parquet directory —
-    * the skipping index a scan planner consults. One metadata-cheap
-    * aggregation over `_metadata.file_path`; rows = files, never data.
-    */
-  def fileStats(spark: org.apache.spark.sql.SparkSession, path: String,
-      column: String): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(min(col(column)).as("lo"), max(col(column)).as("hi"))
-
-  /** Files whose [lo, hi] range intersects [from, to] — the files a
-    * stats-pruned scan of `column BETWEEN from AND to` must read.
-    */
-  def candidateFiles(stats: DataFrame, from: Long, to: Long): Long =
-    stats.filter(col("lo") <= to && col("hi") >= from).count()
 }

@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
+
+import graft.sources.{DeltaInterop, VersionedTable}
 
 /** Structured Streaming ingestion over the `events` fixture: the
   * Spark-native realization of the reference's "incremental processing"
@@ -115,41 +117,46 @@ object EventStreams {
         col("view_id"), col("view_ts"))
   }
 
-  /** Streaming sink into a [[graft.sources.VersionedTable]]: the shared
-    * [[IdempotentSink]] shape — each micro-batch commits as one atomic
-    * version tagged `"<appId>-batch-<id>"`, re-delivered batches are
-    * skipped, and the appId namespaces the tags so a SECOND query
-    * sinking to the same table (or a restart with a fresh checkpoint
-    * dir, which resets batch ids) cannot collide with this query's
-    * batch numbers and silently drop data. Contract, per Delta's
-    * SetTransaction: one appId per checkpoint lineage.
+  /** The exactly-once `foreachBatch` sink of both table codecs: each
+    * micro-batch commits as one version through the codec's `write`
+    * (which may transform the batch first) with the SetTransaction
+    * `(appId, batchId)`, and the table commits nothing for a batch at or
+    * below the id `appId` recorded (restart replay, zombie retries) — the
+    * decision lives in the table log, so any number of concurrent
+    * replaying writers commit each batch once.
+    *
+    * The `appId` namespaces the recorded id: a second query sinking to
+    * the same table needs its own, or its batch ids fall under the first
+    * query's mark and its data is silently dropped. Contract, same as
+    * Delta's txn appId: an appId is bound to ONE checkpoint lineage —
+    * starting over with a FRESH checkpoint dir (batch ids reset to 0)
+    * requires a NEW appId, or the old mark skips the restarted query's
+    * early batches.
     */
-  def sinkToVersionedTable(df: DataFrame, path: String,
-      checkpointDir: String, appId: String = "stream")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    IdempotentSink.start(df, path, checkpointDir, appId)(identity)
-
-  /** Streaming sink into a REAL Delta-format table: each micro-batch
-    * commits as one Delta version carrying a SetTransaction (appId,
-    * batchId), so replayed batches (restart recovery, zombie retries)
-    * are skipped by the table's own txn high-water mark — exactly-once
-    * Delta commits on the at-least-once foreachBatch contract, the same
-    * idempotence scheme production Delta streaming writers use. Unlike
-    * [[sinkToVersionedTable]]'s driver-side tag cache, the skip decision
-    * here lives entirely IN the table log (DeltaInterop.write's txn
-    * pre-check + in-commit-loop recheck), so any number of concurrent
-    * replaying writers converge on one commit per batch.
-    */
-  def sinkToDelta(df: DataFrame, path: String, checkpointDir: String,
-      appId: String): org.apache.spark.sql.streaming.StreamingQuery =
+  private[streaming] def txnSink(df: DataFrame, checkpointDir: String, appId: String)(
+      write: (DataFrame, (String, Long)) => Unit): StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.sources.DeltaInterop.write(batch.toDF(), path,
-          org.apache.spark.sql.SaveMode.Append, txn = Some((appId, batchId)))
-        ()
-      }
+      .foreachBatch((batch: Dataset[Row], batchId: Long) => write(batch.toDF(), (appId, batchId)))
       .start()
+
+  /** Streaming sink into a [[graft.sources.VersionedTable]] through
+    * [[txnSink]]: the batch id rides in the manifest's `txn` map.
+    */
+  def sinkToVersionedTable(df: DataFrame, path: String,
+      checkpointDir: String, appId: String = "stream"): StreamingQuery =
+    txnSink(df, checkpointDir, appId)((batch, txn) =>
+      VersionedTable.write(batch, path, SaveMode.Append, txn = Some(txn)))
+
+  /** Streaming sink into a REAL Delta-format table through [[txnSink]]:
+    * each micro-batch commits as one Delta version carrying a `txn`
+    * action, the idempotence scheme production Delta streaming writers
+    * use.
+    */
+  def sinkToDelta(df: DataFrame, path: String, checkpointDir: String,
+      appId: String): StreamingQuery =
+    txnSink(df, checkpointDir, appId)((batch, txn) =>
+      DeltaInterop.write(batch, path, SaveMode.Append, txn = Some(txn)))
 
   final case class Event(event_id: Long, ts: java.time.Instant, user_id: Long,
       event_type: String, value: Double)

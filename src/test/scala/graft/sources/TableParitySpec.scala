@@ -65,4 +65,28 @@ class TableParitySpec extends SparkSpec {
     assert(rows(VersionedTable.read(spark, vt)) == latest)
     assert(rows(DeltaInterop.read(spark, dl)) == latest)
   }
+
+  test("a batch replayed by 4 concurrent writers commits once on both codecs") {
+    val vt = tempDir("parity_txn_vt").resolve("t").toString
+    val dl = tempDir("parity_txn_delta").resolve("t").toString
+    val seed = Seq((0L, "seed")).toDF("k", "v")
+    val batch = Seq((5L, "batch 5")).toDF("k", "v")
+    VersionedTable.write(seed, vt, SaveMode.Overwrite)
+    DeltaInterop.write(seed, dl, SaveMode.Overwrite)
+    val codecs: Seq[(() => Long, () => Long, () => DataFrame)] = Seq(
+      (() => VersionedTable.write(batch, vt, SaveMode.Append, txn = Some(("app", 5L))),
+        () => VersionedTable.latestVersion(vt).get, () => VersionedTable.read(spark, vt)),
+      (() => DeltaInterop.write(batch, dl, SaveMode.Append, txn = Some(("app", 5L))),
+        () => DeltaInterop.snapshot(spark, dl).version, () => DeltaInterop.read(spark, dl)))
+    codecs.foreach { case (replay, version, read) =>
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = (1 to 4).map(_ => new Thread(() =>
+        try { replay(); () } catch { case t: Throwable => errors.add(t); () }))
+      threads.foreach(_.start()); threads.foreach(_.join())
+      assert(errors.isEmpty, s"replay failed: ${Option(errors.peek())}")
+      assert(version() == 1L, "exactly one replay may commit")
+      assert(rows(read()) == rows(seed.union(batch)))
+      assert(replay() == 1L)
+    }
+  }
 }

@@ -90,28 +90,28 @@ class VersionedTableSpec extends SparkSpec {
     assert(rows.select("writer", "i").distinct().count() == 21)
   }
 
-  test("writeOnce: same tag commits exactly once, even from concurrent writers") {
+  test("write(txn) commits a batch once, even from concurrent writers") {
     val path = tempDir("vt4").resolve("t").toString
     VersionedTable.write(Seq((0L, 0L)).toDF("w", "i"), path, SaveMode.Overwrite)
-    // serial re-delivery: second call is a no-op
-    assert(VersionedTable.writeOnce(Seq((1L, 1L)).toDF("w", "i"), path,
-      SaveMode.Append, "batch-7").contains(1L))
-    assert(VersionedTable.writeOnce(Seq((9L, 9L)).toDF("w", "i"), path,
-      SaveMode.Append, "batch-7").isEmpty)
-    // concurrent replays of one batch: exactly one commit between them
-    val results = new java.util.concurrent.ConcurrentLinkedQueue[Option[Long]]()
-    val threads = (1 to 4).map { w =>
-      new Thread(() => {
-        results.add(VersionedTable.writeOnce(
-          Seq((w.toLong, 8L)).toDF("w", "i"), path, SaveMode.Append, "batch-8"))
-        ()
-      })
-    }
+    def once(w: Long, batch: Long): Long = VersionedTable.write(Seq((w, batch)).toDF("w", "i"),
+      path, SaveMode.Append, txn = Some(("app", batch)))
+    // serial re-delivery: the second call commits nothing and writes no file
+    assert(once(1L, 7L) == 1L)
+    assert(once(9L, 7L) == 1L && once(9L, 6L) == 1L)
+    assert(VersionedTable.txn(path, "app").contains("7"))
+    assert(Files.list(java.nio.file.Paths.get(path, "data")).count() == 2L)
+    // concurrent replays of one batch: exactly one commit between them,
+    // and the losers' staged files are gone
+    val threads = (1 to 4).map(w => new Thread(() => { once(w.toLong, 8L); () }))
     threads.foreach(_.start()); threads.foreach(_.join())
-    import scala.jdk.CollectionConverters._
-    assert(results.asScala.count(_.isDefined) == 1,
-      s"exactly one replica may commit: ${results.asScala.toSeq}")
+    assert(VersionedTable.versions(path) == (0L to 2L))
     assert(VersionedTable.read(spark, path).filter($"i" === 8L).count() == 1)
+    assert(Files.list(java.nio.file.Paths.get(path, "data")).count() == 3L)
+    // the mark is per appId; other writers carry it forward
+    assert(VersionedTable.write(Seq((5L, 7L)).toDF("w", "i"), path, SaveMode.Append,
+      txn = Some(("other", 7L))) == 3L)
+    VersionedTable.write(Seq((6L, 0L)).toDF("w", "i"), path, SaveMode.Append)
+    assert(VersionedTable.txn(path, "app").contains("8") && VersionedTable.txn(path, "other").contains("7"))
   }
 
   // Each read-modify-write path under 4 concurrent writers: a retry on a
@@ -169,38 +169,33 @@ class VersionedTableSpec extends SparkSpec {
       Seq("k", "v"))
   }
 
-  test("log checkpoints: committedOps reads checkpoint + tail, survives manifest loss") {
+  test("legacy batch tags seed the txn mark, also from a checkpoint") {
+    // a table written before the txn map: commits tagged <appId>-batch-<id>
+    // (two of a second query, then app's 0..12), and a checkpoint of the
+    // op history at every 10th commit
     val path = tempDir("vt7").resolve("t").toString
-    val n = 23 // crosses two checkpoint boundaries (v10, v20)
-    (0 until n).foreach { i =>
-      VersionedTable.writeOnce(Seq((i.toLong, i.toLong)).toDF("k", "v"), path,
-        SaveMode.Append, s"batch-$i")
+    val tags = Seq("other-batch-0", "other-batch-1") ++ (0 to 12).map(i => s"app-batch-$i")
+    tags.zipWithIndex.foreach { case (tag, i) =>
+      VersionedTable.write(Seq((i.toLong, i.toLong)).toDF("k", "v"), path, SaveMode.Append, tag)
     }
     val logDir = java.nio.file.Paths.get(path, "_graft_log")
-    assert(Files.exists(logDir.resolve("chk-v00000010.json")) &&
-      Files.exists(logDir.resolve("chk-v00000020.json")),
-      "every 10th commit must write a log checkpoint")
-    val expected = (0 until n).map(i => s"batch-$i").toSet
-    assert(VersionedTable.committedOps(spark, path) == expected)
-    // delete the manifests a checkpoint covers (what vacuum does at a
-    // deeper retention): the op history must come from the checkpoint,
-    // proving committedOps does NOT replay every manifest
-    (0L to 9L).foreach { v =>
-      Files.delete(logDir.resolve(f"v$v%08d.json"))
-    }
-    assert(VersionedTable.committedOps(spark, path) == expected,
-      "ops of checkpointed versions must survive manifest removal")
-    // exactly-once dedup still holds for a tag that now lives only in
-    // the checkpoint
-    assert(VersionedTable.writeOnce(Seq((99L, 99L)).toDF("k", "v"), path,
-      SaveMode.Append, "batch-3").isEmpty)
-    // vacuum keeps the newest checkpoint only
-    VersionedTable.vacuum(path, retainLast = 2, minAgeMs = 0)
-    assert(!Files.exists(logDir.resolve("chk-v00000010.json")) &&
-      Files.exists(logDir.resolve("chk-v00000020.json")),
-      "vacuum must drop superseded checkpoints and retain the newest")
-    assert(VersionedTable.committedOps(spark, path).contains("batch-3"),
-      "checkpointed op history must survive vacuum")
+    Files.writeString(logDir.resolve("chk-v00000010.json"), (0 to 10)
+      .map(v => s"""[$v,"${tags(v)}"]""").mkString("""{"version":10,"ops":[""", ",", "]}"))
+    // vacuum kept the checkpoint; the tags of v0..v10 live only there
+    (0L to 10L).foreach(v => Files.delete(logDir.resolve(f"v$v%08d.json")))
+    def batch(app: String, id: Long): Long = VersionedTable.write(
+      Seq((100L + id, id)).toDF("k", "v"), path, SaveMode.Append, txn = Some((app, id)))
+    assert(batch("app", 3L) == 14L)
+    assert(batch("app", 12L) == 14L)
+    assert(batch("other", 1L) == 14L, "a batch tagged only in the checkpoint must be skipped")
+    assert(VersionedTable.txn(path, "app").isEmpty)
+    assert(batch("app", 13L) == 15L)
+    assert(VersionedTable.txn(path, "app").contains("13"))
+    assert(batch("app", 12L) == 15L)
+    assert(batch("other", 2L) == 16L)
+    assert(VersionedTable.read(spark, path).count() == 17L)
+    // a third appId has no legacy tags
+    assert(batch("app2", 0L) == 17L)
   }
 
   test("compact: bin-packs small files, content identical, old files vacuumable") {
@@ -440,28 +435,34 @@ class VersionedTableSpec extends SparkSpec {
 
   test("op tags with control characters round-trip through manifests and checkpoints") {
     val path = tempDir("vt_esc").resolve("t").toString
-    val op = "a\tb\n\"c\\d"
-    val n = 12 // crosses the v10 checkpoint
+    val app = "a\tb\n\"c\\d"
+    val n = 12
     (0 until n).foreach { i =>
       VersionedTable.write(Seq((i.toLong, s"r$i")).toDF("k", "v"), path,
-        SaveMode.Append, op)
+        SaveMode.Append, s"$app-batch-$i")
     }
     val logDir = java.nio.file.Paths.get(path, "_graft_log")
-    val chk = logDir.resolve("chk-v00000010.json")
-    assert(Files.exists(chk))
-    // escaped on disk: every log file stays one valid JSON line
-    assert(!Files.readString(chk).exists(_ < ' '))
-    assert(VersionedTable.versions(path).forall(v => VersionedTable.opOf(path, v) == op))
+    assert(!Files.exists(logDir.resolve("chk-v00000010.json")), "no commit writes a checkpoint")
+    // escaped on disk: every manifest stays one valid JSON line
+    assert(VersionedTable.versions(path).forall(v =>
+      !Files.readString(logDir.resolve(f"v$v%08d.json")).exists(_ < ' ')))
+    assert(VersionedTable.versions(path).forall(v =>
+      VersionedTable.opOf(path, v) == s"$app-batch-$v"))
     assert(VersionedTable.files(path, n - 1L).distinct.size >= n)
     assert(VersionedTable.read(spark, path).count() == n)
     assert(VersionedTable.history(spark, path).as[(Long, String, Int)].collect()
-      .map(h => (h._1, h._2)).toSeq == (0 until n).map(v => (v.toLong, op)))
-    assert(VersionedTable.committedOps(spark, path) == Set(op))
-    // ops of the versions the checkpoint covers come from the checkpoint
-    (0L to 9L).foreach(v => Files.delete(logDir.resolve(f"v$v%08d.json")))
-    assert(VersionedTable.committedOps(spark, path) == Set(op))
-    assert(VersionedTable.writeOnce(Seq((99L, "x")).toDF("k", "v"), path,
-      SaveMode.Append, op).isEmpty)
+      .map(h => (h._1, h._2)).toSeq == (0 until n).map(v => (v.toLong, s"$app-batch-$v")))
+    assert(VersionedTable.legacyBatchMark(path, app).contains(n - 1L))
+    // a legacy checkpoint's tags parse JSON-escaped, and with the raw
+    // control characters older writers left in them
+    val escaped = raw"""a\tb\n\"c\\d"""
+    val rawControl = "a\tb\n\\\"c\\\\d"
+    Files.writeString(logDir.resolve("chk-v00000020.json"),
+      s"""{"version":20,"ops":[[20,"$escaped-batch-20"]]}""")
+    assert(VersionedTable.legacyBatchMark(path, app).contains(20L))
+    Files.writeString(logDir.resolve("chk-v00000021.json"),
+      s"""{"version":21,"ops":[[21,"$rawControl-batch-21"]]}""")
+    assert(VersionedTable.legacyBatchMark(path, app).contains(21L))
   }
 
   test("manifest codec: the log format reads back and renders byte-identical") {
@@ -473,9 +474,6 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.render(m) == withDv)
     val dvFree = """{"version":0,"op":"overwrite","files":[]}"""
     assert(VersionedTable.render(VersionedTable.parse(dvFree)) == dvFree)
-    val checkpoint = """{"version":10,"ops":[[0,"batch-0"],[1,"say \"hi\""]]}"""
-    assert(VersionedTable.parse(checkpoint).ops.contains(Seq((0L, "batch-0"), (1L, "say \"hi\""))))
-    assert(VersionedTable.render(VersionedTable.parse(checkpoint)) == checkpoint)
     // a manifest committed by an older writer is served unchanged
     val path = tempDir("vt_codec").resolve("t").toString
     VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), path, SaveMode.Overwrite)
@@ -484,6 +482,10 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.files(path, 1L) == m.files)
     assert(VersionedTable.dvFiles(path, 1L) == m.dv)
     assert(VersionedTable.opOf(path, 1L) == m.op)
+    // a legacy op-history checkpoint still parses, for the txn seed
+    Files.writeString(logDir.resolve("chk-v00000010.json"),
+      """{"version":10,"ops":[[0,"q-batch-0"],[1,"say \"hi\""],[2,"q-batch-2"]]}""")
+    assert(VersionedTable.legacyBatchMark(path, "q").contains(2L))
   }
 
   test("metadata-only calls start no Spark job") {
@@ -491,16 +493,23 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path, SaveMode.Overwrite)
     VersionedTable.write(Seq((3L, "c")).toDF("k", "v"), path, SaveMode.Append)
     VersionedTable.deleteWhere(spark, path, $"k" === 1L)
+    VersionedTable.write(Seq((4L, "d")).toDF("k", "v"), path, SaveMode.Append,
+      txn = Some(("app", 1L)))
+    val dataDirs = Files.list(java.nio.file.Paths.get(path, "data")).count()
     val jobs = jobsStartedBy {
       val latest = VersionedTable.latestVersion(path).get
       VersionedTable.files(path, latest)
       VersionedTable.dvFiles(path, latest)
       VersionedTable.opOf(path, latest)
-      VersionedTable.committedOps(spark, path)
+      assert(VersionedTable.txn(path, "app").contains("1"))
+      // a replayed batch: no job, no data directory, no commit
+      assert(VersionedTable.write(Seq((5L, "e")).toDF("k", "v"), path, SaveMode.Append,
+        txn = Some(("app", 1L))) == latest)
       val rv = VersionedTable.restore(path, 0L)
       assert(VersionedTable.files(path, rv) == VersionedTable.files(path, 0L))
     }
     assert(jobs == 0, s"$jobs Spark jobs from metadata-only calls")
+    assert(Files.list(java.nio.file.Paths.get(path, "data")).count() == dataDirs)
   }
 
   /** v0: 40 rows in two files; v1: a widening append; v2: a DV delete —

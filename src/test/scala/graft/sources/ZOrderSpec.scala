@@ -1,10 +1,35 @@
 package graft.sources
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.{SparkSpec, Tables}
 
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The stats of the parquet directory `dir`'s files that hold rows,
+    * read from their footers by [[FileStats.read]] as a versioned table's
+    * commit records them, and the directory's schema.
+    */
+  private def footerStats(dir: String): (Seq[FileStats], StructType) = {
+    val files = TableCore.walk(java.nio.file.Paths.get(dir))(
+      _.filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
+    val schema = FileStats.sparkSchema(files.head)
+    (files.map(f => FileStats.read(f.toString, schema)).filter(_.numRecords > 0), schema)
+  }
+
+  /** How many files of `dir` may hold a `column` value in [from, to]:
+    * those that [[TableCore.minMaxCandidates]], the engine's pruning,
+    * keeps on their footer bounds.
+    */
+  private def candidates(dir: String, column: String, from: Long, to: Long): Long = {
+    val (stats, schema) = footerStats(dir)
+    val t = schema(column).dataType
+    TableCore.minMaxCandidates(spark, stats, (st: FileStats) => st.bounds(column), t, t,
+      from, to).size.toLong
+  }
+
+  private def fileCount(dir: String): Long = footerStats(dir)._1.size.toLong
 
   test("zValue interleaves bits: known vectors") {
     val rows = Seq((0xFFFFL, 0L), (0L, 0xFFFFL), (3L, 1L), (0L, 0L))
@@ -136,12 +161,11 @@ class ZOrderSpec extends SparkSpec {
     val n = 16
     val dir = tempDir("hilbert").toString
     ZOrder.hilbertClusterWrite(orders, dir, "day", "ck", n)
-    val total = ZOrder.fileStats(spark, dir, "ck").count()
+    val total = fileCount(dir)
     for (c <- Seq("ck", "day")) {
       val (lo, hi) = orders.agg(min(col(c)), max(col(c))).as[(Long, Long)].head()
       val mid = (lo + hi) / 2
-      val cand = ZOrder.candidateFiles(ZOrder.fileStats(spark, dir, c),
-        mid, mid + ((hi - lo) / 16 max 1L))
+      val cand = candidates(dir, c, mid, mid + ((hi - lo) / 16 max 1L))
       assert(cand < total / 2, s"hilbert layout must skip on $c: $cand of $total")
     }
   }
@@ -164,12 +188,10 @@ class ZOrderSpec extends SparkSpec {
     val mid = (ckLo + ckHi) / 2
     val span = (ckHi - ckLo) / 16 max 1L
     // predicate on the SECOND dimension: a 1/16 slice of the key range
-    val zCand = ZOrder.candidateFiles(
-      ZOrder.fileStats(spark, zDir, "ck"), mid, mid + span)
-    val linCand = ZOrder.candidateFiles(
-      ZOrder.fileStats(spark, linDir, "ck"), mid, mid + span)
-    val zFiles = ZOrder.fileStats(spark, zDir, "ck").count()
-    val linFiles = ZOrder.fileStats(spark, linDir, "ck").count()
+    val zCand = candidates(zDir, "ck", mid, mid + span)
+    val linCand = candidates(linDir, "ck", mid, mid + span)
+    val zFiles = fileCount(zDir)
+    val linFiles = fileCount(linDir)
     assert(linCand == linFiles,
       s"day-sorted layout cannot skip on ck: $linCand of $linFiles")
     assert(zCand < zFiles / 2,
@@ -177,8 +199,7 @@ class ZOrderSpec extends SparkSpec {
     // and the FIRST dimension still skips under z (coarser than linear)
     val (dLo, dHi) = orders.agg(min("day"), max("day")).as[(Long, Long)].head()
     val dMid = (dLo + dHi) / 2
-    val zDay = ZOrder.candidateFiles(
-      ZOrder.fileStats(spark, zDir, "day"), dMid, dMid + ((dHi - dLo) / 16 max 1L))
+    val zDay = candidates(zDir, "day", dMid, dMid + ((dHi - dLo) / 16 max 1L))
     assert(zDay < zFiles, s"z-layout must still skip on day: $zDay of $zFiles")
   }
 
@@ -192,13 +213,12 @@ class ZOrderSpec extends SparkSpec {
     val n = 27 // 3 z-bits per dimension at the top of the interleave
     val dir = tempDir("zorder3").toString
     ZOrder.clusterWrite3(li, dir, "ck", "sk", "day", n)
-    val total = ZOrder.fileStats(spark, dir, "ck").count()
+    val total = fileCount(dir)
     for (c <- Seq("ck", "sk", "day")) {
-      val stats = ZOrder.fileStats(spark, dir, c)
       val (lo, hi) = li.agg(min(col(c)).cast("long"), max(col(c)).cast("long"))
         .as[(Long, Long)].head()
       val mid = (lo + hi) / 2
-      val cand = ZOrder.candidateFiles(stats, mid, mid + ((hi - lo) / 27 max 1L))
+      val cand = candidates(dir, c, mid, mid + ((hi - lo) / 27 max 1L))
       assert(cand < total, s"3-D layout must skip on $c: $cand of $total")
     }
   }
