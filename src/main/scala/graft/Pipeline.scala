@@ -2,16 +2,14 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
-import java.time.Instant
-import java.time.temporal.ChronoUnit
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Bronze, Gold, Merge, Silver}
-import graft.sources.{LayerIO, VersionedTable}
+import graft.sources.{DeltaInterop, VersionedTable}
 
 /** The medallion entry points — the engine's equivalent of the
   * reference's three layer-load scripts
@@ -20,31 +18,36 @@ import graft.sources.{LayerIO, VersionedTable}
   * over the lineitem/orders fixtures as the claims feed.
   *
   * Each run is INCREMENTAL and IDEMPOTENT: Bronze appends with lineage,
-  * Silver consumes only rows above its watermark and merges by business
-  * key, Gold refreshes a dim (SCD1 full refresh, as the reference does)
-  * only when what it is built from changed, and rebuilds the fact from
-  * the full Silver table. Re-running with no new data changes nothing —
-  * the "Idempotent Processing" contract the reference docs declare
-  * (bronze_silver_gold/readme.md:68-70).
+  * Silver consumes only the Bronze versions after its watermark and
+  * merges by business key, Gold refreshes a dim (SCD1 full refresh, as
+  * the reference does) only when what it is built from changed, and
+  * rebuilds the fact from the full Silver table. Re-running with no new
+  * data changes nothing — the "Idempotent Processing" contract the
+  * reference docs declare (bronze_silver_gold/readme.md:68-70).
   *
-  * Bronze is plain parquet. Every later table — Silver, its quarantine,
-  * the three dims, the fact and the rollup — is a [[VersionedTable]], so
-  * each write is one atomic commit and a crash leaves the previous
-  * version live. Silver's watermark is a `txn` entry of Silver's log,
-  * committed with the merge it covers; the quarantine records the mark
-  * of its own latest append the same way, so a retried batch appends each
-  * FAIL row once.
+  * Every table is on a log, so each write is one atomic commit and a
+  * crash leaves the previous version live. Bronze is a `_delta_log`
+  * table ([[DeltaInterop]]), as the reference's Bronze is a Delta table,
+  * and each load commits once per load id. Silver, its quarantine, the
+  * three dims, the fact and the rollup are [[VersionedTable]]s. Silver's
+  * watermark is the Bronze version it has merged, a `txn` entry of
+  * Silver's log committed with the merge it covers, as a Delta streaming
+  * source's offset is a table version; the quarantine records the Bronze
+  * version of its own latest append the same way, so a retried batch
+  * appends each FAIL row once.
   * Each dim commit is tagged with a fingerprint of its source (see
   * [[runGold]]), so an unchanged source costs a manifest read instead of
-  * a rebuild. A root written before these tables were versioned has no
-  * Silver log, hence no mark: its next batch rebuilds Silver and the
-  * quarantine from all of Bronze, and the old part files stay unread.
-  * Each [[runGold]] ends by vacuuming the tables Silver and Gold
-  * overwrite (every versioned table but the append-only quarantine):
-  * their older manifests go, and their unreferenced data files once a day
-  * old ([[VersionedTable.vacuum]]'s horizon, which covers in-flight
-  * readers and writers). A table therefore holds its latest version plus
-  * what the last 24 hours wrote, instead of one copy per batch.
+  * a rebuild. A root written by earlier versions migrates on its next
+  * batch: a plain-parquet Bronze's files become Delta version 0 in
+  * place, and a Silver without a log or with a timestamp mark has no
+  * mark, so that batch rebuilds Silver and the quarantine from all of
+  * Bronze; the old part files of the later tables stay unread.
+  * Each [[runGold]] ends by vacuuming every table but Bronze: older
+  * manifests go, and unreferenced data files once a day old
+  * ([[VersionedTable.vacuum]]'s horizon, which covers in-flight readers
+  * and writers). A table therefore holds its latest version plus what
+  * the last 24 hours wrote, instead of one copy per batch; the
+  * append-only quarantine keeps every file, and its log one manifest.
   *
   * Each layer evaluates each piece of its work once per batch: every
   * Spark job here carries fixed planning/scheduling cost whatever the
@@ -75,43 +78,74 @@ object Pipeline {
     val rollup = s"$root/gold/agg_monthly"
   }
 
-  /** The `txn` app id under which Silver's commits record its watermark:
-    * the newest Bronze `ingestion_timestamp` merged, as an ISO-8601 instant.
+  /** The `txn` app id under which Silver's commits record its watermark,
+    * and the quarantine's record its own: the newest Bronze version merged,
+    * as a decimal string.
     */
   val SilverMark = "silver_claims"
 
-  /** Bronze: raw feed → lineage-stamped append, partitioned by ingestion
-    * date (B3 fix). `asOf` stamps the batch deterministically.
+  /** Bronze: raw feed → lineage-stamped append to a `_delta_log` table
+    * partitioned by ingestion date (B3 fix), created by the first batch.
+    * `asOf` stamps the batch deterministically. The commit carries the
+    * `txn` entry `bronze:<loadId>`, so a retried load commits nothing, and
+    * a load that crashes before its commit leaves no file any reader
+    * sees. A Bronze in the plain-parquet layout of earlier versions is
+    * first converted in place (see [[bronzeTable]]).
     */
   def runBronze(spark: SparkSession, raw: DataFrame, paths: LayerPaths,
       loadId: String, asOf: String): Unit = {
     val stamped = Bronze.stampLineage(raw, "tpch_feed", loadId,
       ingestionTs = lit(asOf).cast("timestamp"),
       sourceFile = lit(s"$loadId.parquet"))
-    LayerIO.appendOrCreate(sized(stamped), spark, paths.bronze, "ingestion_date")
+    DeltaInterop.write(sized(stamped), bronzeTable(spark, paths), SaveMode.Append,
+      Seq("ingestion_date"), Some(("bronze:" + loadId, 0L)))
   }
 
-  /** Silver: watermark-incremental read of Bronze → cleanse → DQ gate
+  /** `paths.bronze`, after a Bronze directory without `_delta_log`, the
+    * plain-parquet layout of earlier versions, has had its files committed
+    * in place as Delta version 0 ([[DeltaInterop.convert]]: one rename,
+    * no data file copied, so a crash converts nothing). The converted
+    * table keeps the column order those versions read it in, the
+    * partition column last; later loads append by column name.
+    */
+  private def bronzeTable(spark: SparkSession, paths: LayerPaths): String = {
+    DeltaInterop.convert(spark, paths.bronze, Seq("ingestion_date"))
+    paths.bronze
+  }
+
+  /** Silver: the Bronze versions after the watermark → cleanse → DQ gate
     * (FAIL rows appended to the quarantine table) → business-key dedup →
     * merge into Silver, committed with the new watermark. Returns
-    * Silver's row count after the merge, or 0 when Bronze holds nothing
-    * above the watermark (nothing is written then).
+    * Silver's row count after the merge, or 0 when Bronze has no version
+    * after the watermark or those versions hold no row (nothing is
+    * written then). A Bronze in the plain-parquet layout of earlier
+    * versions is converted first, as [[runBronze]] converts it.
     *
-    * The mark is read from Silver's latest manifest and is a literal in
-    * the Bronze scan's pushed filters; one aggregate over the persisted
-    * DQ-tagged batch yields its row count, its FAIL counts and its new
-    * mark, so the batch is read from Bronze once. The quarantine records
-    * the same mark in its own log with each append
-    * ([[VersionedTable.appendWithTxn]]) and appends only FAIL rows above
-    * it (above Silver's mark while it has none): a batch that crashed
-    * after the quarantine's commit and before Silver's is read again from
-    * Silver's mark, with whatever Bronze gained since, and its quarantined
-    * rows are not appended twice. The merge is a
-    * read-modify-write commit ([[VersionedTable.rewrite]]): it commits the
-    * merged table and the new mark together, or, after a lost race,
-    * merges again against the winner. A batch without PASS rows commits
-    * the mark alone. The returned count is the row count the commit
-    * recorded.
+    * The mark is the Bronze version Silver has merged, read from Silver's
+    * latest manifest. The batch is the files that Bronze's versions after
+    * it added ([[DeltaInterop.readChanges]], an append-only feed): no
+    * filter, so no mark literal in the plan, and no directory walk. Each
+    * version is read once, whatever its `ingestion_timestamp`, so a batch
+    * stamped before the mark still reaches Silver. Within one read the
+    * row with the newest `ingestion_timestamp` (then `ship_date`, then
+    * price) wins a key; a later read's row replaces Silver's, so a
+    * late-stamped batch that re-delivers a key wins over the row Silver
+    * holds. Nothing cleans Bronze's log: every version after Silver's
+    * mark must stay readable. One aggregate over the persisted DQ-tagged
+    * batch yields its row and FAIL counts.
+    *
+    * The quarantine records the Bronze version its FAIL rows reach in
+    * its own log with each append ([[VersionedTable.appendWithTxn]]): a
+    * batch that crashed after the quarantine's commit and before Silver's
+    * is read again from Silver's mark, with whatever Bronze gained since,
+    * and only the versions after the quarantine's mark are appended. A
+    * mark that is no version (an ISO instant an earlier version wrote)
+    * counts as none: that batch reads all of Bronze and rebuilds the
+    * quarantine. The merge is a read-modify-write commit
+    * ([[VersionedTable.rewrite]]): it commits the merged table and the
+    * new mark together, or, after a lost race, merges again against the
+    * winner. A batch without PASS rows commits the mark alone. The
+    * returned count is the row count the commit recorded.
     */
   def runSilver(spark: SparkSession, paths: LayerPaths): Long = runSilver(spark, paths, _ => ())
 
@@ -120,40 +154,46 @@ object Pipeline {
     */
   private[graft] def runSilver(spark: SparkSession, paths: LayerPaths,
       afterCommit: String => Unit): Long = {
-    val mark = VersionedTable.txn(paths.silver, SilverMark)
-    // The batch's rows above the quarantine's mark `from`. That mark is
-    // ahead of Silver's only after a crash between the two commits; every
-    // batch row is above Silver's, so any other mark adds no filter (a
-    // timestamp literal is compiled into the plan's generated code).
-    def newerThan(from: Option[String]): Column =
-      above(from.filter(f => mark.forall(m => Instant.parse(f).isAfter(Instant.parse(m)))))
-    val incr = LayerIO.readLayer(spark, paths.bronze).filter(above(mark))
-    val tagged = Silver.applyDqRules(Silver.cleanseLineitem(incr)).persist()
+    // a mark that is no version (an earlier layout's instant) counts as none
+    def version(mark: Option[String]): Option[Long] = mark.flatMap(_.toLongOption)
+    val merged = version(VersionedTable.txn(paths.silver, SilverMark))
+    // -1: no mark, or no Bronze version
+    val latest = DeltaInterop.latestVersion(bronzeTable(spark, paths)).getOrElse(-1L)
+    if (merged.getOrElse(-1L) >= latest) return 0L
+    // the DQ-tagged rows of the Bronze versions after `from` (all without one)
+    def after(from: Option[Long]): DataFrame = Silver.applyDqRules(Silver.cleanseLineitem(
+      DeltaInterop.readChanges(spark, paths.bronze, from.fold(0L)(_ + 1), latest)
+        .drop("_change_type", "_commit_version")))
+    val tagged = after(merged).persist()
     try {
       val failed = col("dq_status") === "FAIL"
-      val stats = tagged.agg(count(lit(1)), count(when(failed, 1)),
-        count(when(failed && newerThan(VersionedTable.txn(paths.quarantine, SilverMark)), 1)),
-        unix_micros(max(col("ingestion_timestamp")))).head()
+      val stats = tagged.agg(count(lit(1)), count(when(failed, 1))).head()
       if (stats.getLong(0) == 0L) 0L
       else {
-        val newMark = Instant.EPOCH.plus(stats.getLong(3), ChronoUnit.MICROS).toString
-        val (pass, fail) = Silver.quarantineSplit(tagged)
-        if (stats.getLong(2) > 0L) {
-          val failRows = fail.withColumn("dq_failure_reasons", col("dq_reasons_csv"))
-            .drop("dq_reasons_csv")
-          VersionedTable.appendWithTxn(paths.quarantine, "quarantine",
-              Map(SilverMark -> newMark)) { txn =>
-            sized(failRows.filter(newerThan(txn.get(SilverMark))))
+        val txn = Map(SilverMark -> latest.toString)
+        def failRows(t: DataFrame): DataFrame = sized(Silver.quarantineSplit(t)._2
+          .withColumn("dq_failure_reasons", col("dq_reasons_csv")).drop("dq_reasons_csv"))
+        // without a mark Silver rebuilds from all of Bronze, and so does the quarantine
+        if (stats.getLong(1) > 0L && (merged.isEmpty ||
+            version(VersionedTable.txn(paths.quarantine, SilverMark)).forall(_ < latest))) {
+          if (merged.isEmpty)
+            VersionedTable.rewrite(spark, paths.quarantine, "quarantine", txn)(_ =>
+              Some(failRows(tagged)))
+          else VersionedTable.appendWithTxn(paths.quarantine, "quarantine", txn) { base =>
+            // ahead of Silver's mark only after a crash between the two commits
+            val from = (version(base.get(SilverMark)) ++ merged).max
+            failRows(if (merged.contains(from)) tagged else after(Some(from)))
           }
           afterCommit("quarantine")
         }
+        val (pass, _) = Silver.quarantineSplit(tagged)
         val keys = Seq("l_orderkey", "l_linenumber")
         val deduped = Silver.dedupLatest(
           pass.drop("dq_status", "dq_failure_reasons", "dq_reasons_csv"), keys,
           Seq(col("ingestion_timestamp").desc, col("ship_date").desc,
             col("l_extendedprice").desc))
         val allFailed = stats.getLong(1) == stats.getLong(0)
-        val v = VersionedTable.rewrite(spark, paths.silver, "merge", Map(SilverMark -> newMark)) {
+        val v = VersionedTable.rewrite(spark, paths.silver, "merge", txn) {
           case Some(_) if allFailed => None
           case current =>
             Some(sized(current.fold(deduped)(Merge.upsert(_, deduped, keys, Some(pass)))))
@@ -163,10 +203,6 @@ object Pipeline {
       }
     } finally tagged.unpersist()
   }
-
-  /** Rows whose `ingestion_timestamp` is above `mark`; every row without one. */
-  private def above(mark: Option[String]): Column =
-    mark.fold(lit(true))(m => col("ingestion_timestamp") > lit(Instant.parse(m)))
 
   /** Gold: each SCD1 dim refreshed when its source changed, then the
     * fact rebuilt from the full Silver table with surrogate-key
@@ -217,8 +253,8 @@ object Pipeline {
     VersionedTable.write(sized(Gold.monthlyRollup(VersionedTable.read(spark, paths.fact))),
       paths.rollup, SaveMode.Overwrite)
     afterCommit("rollup")
-    Seq(paths.silver, paths.dimMember, paths.dimProvider, paths.dimDate, paths.fact,
-      paths.rollup).foreach(VersionedTable.vacuum(_))
+    Seq(paths.silver, paths.quarantine, paths.dimMember, paths.dimProvider, paths.dimDate,
+      paths.fact, paths.rollup).foreach(VersionedTable.vacuum(_))
   }
 
   private def keySpec(d: Gold.KeyedDim): Seq[String] =

@@ -270,17 +270,31 @@ object DeltaInterop {
   def snapshot(spark: SparkSession, path: String,
       asOf: Option[Long] = None): DeltaSnapshot = replay(spark, path, asOf).snap
 
-  private def replay(spark: SparkSession, path: String, asOf: Option[Long]): Replayed = {
-    val logDir = Paths.get(path, "_delta_log")
-    require(Files.isDirectory(logDir), s"not a Delta table: no _delta_log under $path")
+  /** The newest version of the table at `path`, from its log's listing
+    * and `_last_checkpoint` alone: no commit is read. None when the log
+    * holds neither a commit nor a checkpoint, or there is no log.
+    */
+  def latestVersion(path: String): Option[Long] =
+    Some(Paths.get(path, "_delta_log")).filter(Files.isDirectory(_)).flatMap(listLog(_)._4)
+
+  /** The log's file names, its JSON commit versions in order, the
+    * `_last_checkpoint` pointer and the newest version either names.
+    */
+  private def listLog(logDir: Path): (Seq[String], Seq[Long], Option[JsonNode], Option[Long]) = {
     val names = listDir(logDir)(_.map(_.getFileName.toString).toSeq)
     val commits = names.collect { case CommitName(v) => v.toLong }.sorted
     // a checkpointed table may have ZERO json commits after log cleanup
     val lastCp = Some(logDir.resolve("_last_checkpoint")).filter(Files.exists(_))
       .flatMap(p => scala.util.Try(mapper.readTree(Files.readString(p))).toOption)
       .filter(n => n != null && n.has("version"))
-    val latest = (commits ++ lastCp.map(_.get("version").asLong)).maxOption
-      .getOrElse(throw new IllegalArgumentException(s"empty _delta_log at $path"))
+    (names, commits, lastCp, (commits ++ lastCp.map(_.get("version").asLong)).maxOption)
+  }
+
+  private def replay(spark: SparkSession, path: String, asOf: Option[Long]): Replayed = {
+    val logDir = Paths.get(path, "_delta_log")
+    require(Files.isDirectory(logDir), s"not a Delta table: no _delta_log under $path")
+    val (names, commits, lastCp, newest) = listLog(logDir)
+    val latest = newest.getOrElse(throw new IllegalArgumentException(s"empty _delta_log at $path"))
     val upTo = asOf.getOrElse(latest)
     // bootstrap from the checkpoint only when it does not overshoot asOf
     val cp = lastCp.filter(_.get("version").asLong <= upTo)
@@ -685,9 +699,9 @@ object DeltaInterop {
     case _ => false
   }
 
-  /** Each staged file's protocol-shaped stats JSON:
+  /** Each file's protocol-shaped stats JSON:
     * `{"numRecords":N,"minValues":{..},"maxValues":{..},"nullCount":{..}}`
-    * keyed by staged-relative path, read from the files' parquet footers
+    * keyed by its path relative to `dir`, read from the files' parquet footers
     * on the driver (no Spark job). Min/max render as the engine's cast to
     * string renders them: numbers and booleans bare, decimals plain,
     * strings and dates quoted. A column the footer gives no bounds for
@@ -721,21 +735,30 @@ object DeltaInterop {
   }
 
   /** Stage `df` with Spark's parquet writer under `tmp` (hive-style
-    * partition dirs, which Delta also uses), take per-file stats from
-    * the staged files' footers, move the files under the table root, and
-    * return their add actions. Under column mapping the staged schema IS
+    * partition dirs, which Delta also uses), move the files under the
+    * table root, and return their add actions, with per-file stats from
+    * their footers. Under column mapping the staged schema IS
     * the physical one, so stats are keyed by physical names — exactly
     * what the reader resolves.
     */
   private def stageAdds(df: DataFrame, root: Path, tmp: Path,
       partitionBy: Seq[String], dataChange: Boolean = true): Seq[Add] = {
-    val staged = TableCore.writeFiles(df, tmp, partitionBy)
-    val stats = stagedStats(tmp, staged, df.schema, partitionBy)
-    staged.map { p =>
-      val rel = tmp.relativize(p)
-      val target = root.resolve(rel)
+    val moved = TableCore.writeFiles(df, tmp, partitionBy).map { p =>
+      val target = root.resolve(tmp.relativize(p))
       Files.createDirectories(target.getParent)
       Files.move(p, target)
+    }
+    addsOf(root, moved, df.schema, partitionBy, dataChange)
+  }
+
+  /** The add actions of `files`, parquet files of `schema` under `root`
+    * in hive-style partition dirs, with their stats read from the footers.
+    */
+  private def addsOf(root: Path, files: Seq[Path], schema: StructType,
+      partitionBy: Seq[String], dataChange: Boolean): Seq[Add] = {
+    val stats = stagedStats(root, files, schema, partitionBy)
+    files.map { target =>
+      val rel = root.relativize(target)
       val pv = rel.iterator().asScala.toSeq.dropRight(1).map(_.toString)
         .filter(_.contains("=")).map { seg =>
           val Array(k, v) = seg.split("=", 2)
@@ -1063,6 +1086,32 @@ object DeltaInterop {
   def toVersioned(spark: SparkSession, deltaPath: String,
       versionedPath: String): Long =
     VersionedTable.write(read(spark, deltaPath), versionedPath, SaveMode.Overwrite)
+
+  /** CONVERT TO DELTA, in place: the parquet files Spark reads under
+    * `path`, a plain directory (hive-style dirs for `partitionBy`), become
+    * version 0 of a Delta table with the schema Spark infers for them. No
+    * data file is moved or rewritten. The log directory appears by one
+    * rename, with version 0 in it, so a crash leaves the directory plain
+    * and a retry converts the same files. A path that is no directory, or
+    * has `_delta_log` already, is left as it is: parquet files outside a
+    * log are a crashed writer's, never the table's. Returns whether it
+    * converted.
+    */
+  def convert(spark: SparkSession, path: String, partitionBy: Seq[String]): Boolean = {
+    val root = Paths.get(path).toAbsolutePath
+    Files.isDirectory(root) && !Files.exists(root.resolve("_delta_log")) && {
+      val plain = spark.read.parquet(path)
+      val files = plain.inputFiles.toSeq.map(f => Paths.get(new java.net.URI(f))).sorted
+      val staged = Files.createDirectories(root.resolve(s".delta_log-${UUID.randomUUID()}"))
+      Files.writeString(staged.resolve("0" * 20 + ".json"), (Seq(Protocol(1, 2),
+        Meta(UUID.nameUUIDFromBytes(path.getBytes(UTF_8)).toString, plain.schema.json,
+          partitionBy, Map.empty, System.currentTimeMillis())) ++
+        addsOf(root, files, plain.schema, partitionBy, dataChange = true)).map(render)
+        .mkString("", "\n", "\n"))
+      scala.util.Try(Files.move(staged, root.resolve("_delta_log"), StandardCopyOption.ATOMIC_MOVE))
+        .map(_ => true).getOrElse { TableCore.deleteTree(staged); false }
+    }
+  }
 
   /** VACUUM: delete data and deletion-vector files under the table root
     * that the CURRENT snapshot does not reference and whose modification

@@ -19,9 +19,6 @@ import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation._
 import org.apache.parquet.schema.PrimitiveType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
-  ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** One data file's statistics as Delta keeps them on its `add` action:
@@ -164,19 +161,6 @@ private[sources] object FileStats {
     val input = new LocalInputFile(path)
     val stream = input.newStream()
     try ParquetFileReader.readFooter(input, readOptions, stream) finally stream.close()
-  }
-
-  /** The schema Spark's parquet inference reads from `file`'s footer, on
-    * the driver: the Spark schema its writer stored in the key-value
-    * metadata, else the parquet schema converted under the session's
-    * settings.
-    */
-  def sparkSchema(file: Path): StructType = {
-    val meta = readFooter(file).getFileMetaData
-    Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
-      .flatMap(s => scala.util.Try(DataType.fromJson(s)).toOption)
-      .collect { case st: StructType => st }
-      .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
   }
 
   /** The column chunk's min and max over all row groups, in the column's

@@ -2,11 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.{Bronze, Gold, Merge, Silver}
-import graft.sources.LayerIO
+import graft.sources.{DeltaInterop, LayerIO}
 
 /** End-to-end medallion run (SURVEY.md §5.4): synthetic claims CSV →
   * Bronze (lineage, corrupt capture) → Silver (cleanse, DQ gate, dedup) →
@@ -41,7 +42,7 @@ class MedallionPipelineSpec extends SparkSpec {
     val bronze = Bronze.stampLineage(raw, "claims_feed", "load_1",
       ingestionTs = lit("2024-02-01 00:00:00").cast("timestamp"),
       sourceFile = lit("claims.csv"))
-    LayerIO.appendOrCreate(bronze, spark, bronzePath, "ingestion_date")
+    DeltaInterop.write(bronze, bronzePath, SaveMode.Append, Seq("ingestion_date"))
     val bronzeBack = LayerIO.readLayer(spark, bronzePath).cache()
     assert(bronzeBack.count() == 6, "bronze keeps every raw row incl. corrupt")
     val stats = Bronze.validationStats(bronzeBack, Seq("claim_id", "member_id")).collect()(0)

@@ -1,17 +1,23 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.time.{Instant, LocalDateTime, ZoneId}
+import java.time.Instant
 
 import scala.jdk.CollectionConverters._
-import scala.util.Using
+import scala.util.{Try, Using}
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType, TimestampType}
+import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.operators.Gold
-import graft.sources.{LayerIO, VersionedTable}
+import graft.operators.{Bronze, Gold, Silver}
+import graft.sources.{DeltaInterop, LayerIO, VersionedTable}
 
 /** Incremental + idempotency contract of the medallion entry points:
   * batch 1 loads half the feed, batch 2 the rest; a third run with no new
@@ -21,7 +27,10 @@ import graft.sources.{LayerIO, VersionedTable}
   * the Spark-job and task budgets of one incremental batch, the file
   * count of a commit at a small `maxPartitionBytes`, Gold's rule that a
   * dim is rebuilt only when its source changed, a re-run after a crash
-  * following each commit, and a root in the plain-parquet layout.
+  * following each commit, Bronze read by version (a retried load, a
+  * late stamp, files a crashed load left, no mark literal in Silver's
+  * plans, Silver's tasks flat in the batch count), the quarantine's
+  * retention, and roots in the layouts of earlier versions.
   */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -39,6 +48,23 @@ class PipelineSpec extends SparkSpec {
     Pipeline.runGold(spark, paths, fixtures)
     n
   }
+
+  /** `df` with `l_discount` out of range, so failing DQ, on every `every`-th order. */
+  private def failing(df: DataFrame, every: Int): DataFrame = df.withColumn("l_discount",
+    when($"l_orderkey" % every === 0, lit(2.0)).otherwise($"l_discount"))
+
+  /** The rows of `df` that Silver's DQ gate fails. */
+  private def dqFailures(df: DataFrame): DataFrame =
+    Silver.quarantineSplit(Silver.applyDqRules(Silver.cleanseLineitem(df)))._2
+
+  /** Batch `b`'s files in Bronze's layout and no commit: what a load
+    * that crashed inside `runBronze` leaves.
+    */
+  private def strandedLoad(paths: Pipeline.LayerPaths, raw: DataFrame, b: Int): Unit =
+    Bronze.stampLineage(raw, "tpch_feed", s"load_$b",
+        ingestionTs = lit(s"2026-01-0$b 00:00:00").cast("timestamp"),
+        sourceFile = lit(s"load_$b.parquet"))
+      .write.mode("append").partitionBy("ingestion_date").parquet(paths.bronze)
 
   private def rowsPerKey(df: DataFrame, keys: String*): Set[Long] =
     df.groupBy(keys.map(col): _*).count().select("count").as[Long].collect().toSet
@@ -172,10 +198,8 @@ class PipelineSpec extends SparkSpec {
     assert(Pipeline.runSilver(spark, paths) == silverBefore.size)
     assert(LayerIO.readLayer(spark, paths.silver).collect().toSet == silverBefore)
     assert(quarantined() == quarantinedBefore + bad.count())
-    val batch2Mark = LocalDateTime.parse("2026-01-02T00:00:00")
-      .atZone(ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))).toInstant
-    assert(VersionedTable.txn(paths.silver, Pipeline.SilverMark).map(Instant.parse)
-      .contains(batch2Mark))
+    // the mark is the Bronze version batch 2 committed
+    assert(VersionedTable.txn(paths.silver, Pipeline.SilverMark).contains("1"))
 
     // nothing above the new mark: the re-run quarantines nothing again
     assert(Pipeline.runSilver(spark, paths) == 0L)
@@ -214,10 +238,12 @@ class PipelineSpec extends SparkSpec {
       Pipeline.runSilver(spark, paths)
       Pipeline.runGold(spark, paths, sf)
     }
-    // 17 measured on local[4]; 21 while each commit wrote one file per
-    // partition of the plan that built it, so every later scan of the
-    // table started one task per file
-    assert(tasks <= 17, s"$tasks Spark tasks for one batch")
+    // 13 measured on local[4]; 17 while Silver read every Bronze file,
+    // whatever its mark, instead of the files of the Bronze versions after
+    // it; 21 while each commit wrote one file per partition of the plan
+    // that built it, so every later scan of the table started one task per
+    // file
+    assert(tasks <= 13, s"$tasks Spark tasks for one batch")
   }
 
   test("at a small maxPartitionBytes Silver is written as several files, as few as its input " +
@@ -354,39 +380,89 @@ class PipelineSpec extends SparkSpec {
       "every table as an uninterrupted run") {
     val li = Tables.lineitem(spark, sf)
     // part of batches 2 and 3 fails DQ, so each appends to the quarantine
-    def failing(df: DataFrame, every: Int): DataFrame = df.withColumn("l_discount",
-      when($"l_orderkey" % every === 0, lit(2.0)).otherwise($"l_discount"))
     val batch1 = li.filter($"l_orderkey" % 3 === 0)
     val batch2 = failing(li.filter($"l_orderkey" % 3 === 1), 4)
     val batch3 = failing(li.filter($"l_orderkey" % 3 === 2), 5)
-    val tables = Seq[Pipeline.LayerPaths => String](_.quarantine, _.silver, _.fact, _.rollup)
-    /** Three batches, batch 2 crashing after the commit named `crashAfter`:
-      * the next run lands batch 3 in Bronze before Silver and Gold resume.
+    val tables =
+      Seq[Pipeline.LayerPaths => String](_.bronze, _.quarantine, _.silver, _.fact, _.rollup)
+    /** Three batches, batch 2 crashing after the commit named `crashAfter`,
+      * or, for "bronze", inside its load before the commit: the next run
+      * retries batch 2's load, which commits nothing once committed, and
+      * lands batch 3 in Bronze before Silver and Gold resume.
       */
     def run(crashAfter: Option[String]): Seq[Map[Row, Int]] = {
       val paths = freshPaths()
       loadBatch(paths, batch1, 1)
       crashAfter match {
         case None => loadBatch(paths, batch2, 2)
+        case Some("bronze") => strandedLoad(paths, batch2, 2)
         case Some(table) =>
-          Pipeline.runBronze(spark, batch2, paths, "load_2", "2026-01-02 00:00:00")
           val crash: String => Unit =
             t => if (t == table) throw new IllegalStateException(s"crash after $t")
           val e = intercept[IllegalStateException] {
+            Pipeline.runBronze(spark, batch2, paths, "load_2", "2026-01-02 00:00:00")
             Pipeline.runSilver(spark, paths, crash)
             Pipeline.runGold(spark, paths, sf, crash)
           }
           assert(e.getMessage == s"crash after $table")
       }
+      if (crashAfter.nonEmpty)
+        Pipeline.runBronze(spark, batch2, paths, "load_2", "2026-01-02 00:00:00")
       loadBatch(paths, batch3, 3)
       tables.map(t => rows(t(paths)))
     }
     val uninterrupted = run(None)
     assert(uninterrupted.forall(_.nonEmpty))
-    assert(uninterrupted.head.values.forall(_ == 1), "a quarantined row appears twice")
-    Seq("quarantine", "silver", "fact", "rollup").foreach { t =>
+    assert(uninterrupted(1).values.forall(_ == 1), "a quarantined row appears twice")
+    Seq("bronze", "quarantine", "silver", "fact", "rollup").foreach { t =>
       assert(run(Some(t)) == uninterrupted, s"crash after $t")
     }
+  }
+
+  /** `fresh`'s Bronze rows written to `old` as a plain-parquet Bronze
+    * partitioned by `ingestion_date`, as earlier versions appended it.
+    */
+  private def plainBronze(fresh: Pipeline.LayerPaths, old: Pipeline.LayerPaths): Unit =
+    LayerIO.readLayer(spark, fresh.bronze).write.partitionBy("ingestion_date").parquet(old.bronze)
+
+  /** [[rows]] with the columns in name order: a converted Bronze keeps its
+    * partition column last, where the plain layout's reads put it, and the
+    * tables a migrated root builds from it keep that order.
+    */
+  private def rowsByName(path: String): Map[Row, Int] = {
+    val df = LayerIO.readLayer(spark, path)
+    df.select(df.columns.sorted.map(col): _*).collect().groupBy(identity).view
+      .mapValues(_.length).toMap
+  }
+
+  /** A root in the previous layout: a plain-parquet Bronze holding
+    * `bronzeOf`'s Bronze rows, and the later tables versioned, holding
+    * `rest`'s, with Silver's and the quarantine's marks the newest
+    * `ingestion_timestamp` merged, as an ISO-8601 instant.
+    */
+  private def parentLayout(bronzeOf: Pipeline.LayerPaths,
+      rest: Pipeline.LayerPaths): Pipeline.LayerPaths = {
+    val old = freshPaths()
+    plainBronze(bronzeOf, old)
+    val isoMark = Map(Pipeline.SilverMark -> "2026-01-01T00:00:00Z")
+    Seq[Pipeline.LayerPaths => String](_.silver, _.quarantine).foreach { t =>
+      VersionedTable.rewrite(spark, t(old), "merge", isoMark)(_ =>
+        Some(LayerIO.readLayer(spark, t(rest))))
+    }
+    Seq[Pipeline.LayerPaths => String](_.fact, _.rollup).foreach { t =>
+      VersionedTable.write(LayerIO.readLayer(spark, t(rest)), t(old), SaveMode.Overwrite)
+    }
+    old
+  }
+
+  /** Bronze, the quarantine and Silver of `old` hold `fresh`'s rows, and
+    * its fact and rollup equal `fresh`'s.
+    */
+  private def assertSameTables(old: Pipeline.LayerPaths, fresh: Pipeline.LayerPaths): Unit = {
+    Seq[Pipeline.LayerPaths => String](_.bronze, _.quarantine, _.silver)
+      .foreach(t => assert(rowsByName(t(old)) == rowsByName(t(fresh)), t(old)))
+    Seq[Pipeline.LayerPaths => String](_.fact, _.rollup)
+      .foreach(t => assert(rows(t(old)) == rows(t(fresh)), t(old)))
   }
 
   test("a root in the plain-parquet layout: one batch leaves Silver, fact and rollup as a fresh root's") {
@@ -394,10 +470,11 @@ class PipelineSpec extends SparkSpec {
     val batch1 = li.filter($"l_orderkey" % 2 === 0)
     val fresh = freshPaths()
     loadBatch(fresh, batch1, 1)
-    // batch 1 as the plain-parquet layout left it: Silver, fact and rollup
-    // written as parquet directories, the mark in control/watermarks
+    // batch 1 as the plain-parquet layout left it: Bronze, Silver, fact
+    // and rollup written as parquet directories, the mark in
+    // control/watermarks
     val old = freshPaths()
-    Pipeline.runBronze(spark, batch1, old, "load_1", "2026-01-01 00:00:00")
+    plainBronze(fresh, old)
     val tables = Seq[Pipeline.LayerPaths => String](_.silver, _.fact, _.rollup)
     tables.foreach(t => LayerIO.readLayer(spark, t(fresh)).write.parquet(t(old)))
     Seq(("silver_claims", "2026-01-01 00:00:00")).toDF("table_name", "ts")
@@ -405,7 +482,12 @@ class PipelineSpec extends SparkSpec {
       .write.parquet(s"${old.root}/control/watermarks")
 
     Seq(fresh, old).foreach(loadBatch(_, li.filter($"l_orderkey" % 2 =!= 0), 2))
-    tables.foreach(t => assert(rows(t(old)) == rows(t(fresh)), t(old)))
+    Seq(old.bronze -> fresh.bronze, old.silver -> fresh.silver).foreach { case (o, f) =>
+      assert(rowsByName(o) == rowsByName(f), o)
+    }
+    Seq(old.fact -> fresh.fact, old.rollup -> fresh.rollup).foreach { case (o, f) =>
+      assert(rows(o) == rows(f), o)
+    }
     // the plain part files stay where they were, unread, until they pass
     // vacuum's horizon
     def partFiles(path: String): Int = Files.list(Paths.get(path)).iterator().asScala
@@ -414,8 +496,185 @@ class PipelineSpec extends SparkSpec {
     tables.foreach(t => VersionedTable.vacuum(t(old), minAgeMs = 0))
     tables.foreach { t =>
       assert(partFiles(t(old)) == 0, t(old))
-      assert(rows(t(old)) == rows(t(fresh)), t(old))
+      assert(rowsByName(t(old)) == rowsByName(t(fresh)), t(old))
     }
+    assert(rows(old.fact) == rows(fresh.fact))
     assert(Files.exists(Paths.get(old.silver, "_graft_log")))
+  }
+
+  test("a root with a plain-parquet Bronze and timestamp marks: one batch leaves Bronze, " +
+      "the quarantine, Silver, fact and rollup as a fresh root's") {
+    val li = Tables.lineitem(spark, sf)
+    val fresh = freshPaths()
+    loadBatch(fresh, failing(li.filter($"l_orderkey" % 2 === 0), 4), 1)
+    val old = parentLayout(fresh, fresh)
+    Seq(fresh, old).foreach(loadBatch(_, failing(li.filter($"l_orderkey" % 2 =!= 0), 5), 2))
+    assertSameTables(old, fresh)
+    assert(Files.exists(Paths.get(old.bronze, "_delta_log")))
+    Seq[Pipeline.LayerPaths => String](_.silver, _.quarantine).foreach(t =>
+      assert(VersionedTable.txn(t(old), Pipeline.SilverMark).contains("1"), t(old)))
+  }
+
+  test("a plain-parquet Bronze converts once: a crash inside the conversion or before the " +
+      "next load's commit, and a runSilver with no runBronze, each end as a fresh root") {
+    val li = Tables.lineitem(spark, sf)
+    val batch1 = failing(li.filter($"l_orderkey" % 2 === 0), 4)
+    val batch2 = failing(li.filter($"l_orderkey" % 2 =!= 0), 5)
+    val fresh1 = freshPaths()
+    loadBatch(fresh1, batch1, 1)
+    val fresh2 = freshPaths()
+    Seq(1 -> batch1, 2 -> batch2).foreach { case (b, raw) => loadBatch(fresh2, raw, b) }
+
+    // the conversion crashed before its rename: its staged log, half written
+    val inConvert = parentLayout(fresh1, fresh1)
+    val staged = Files.createDirectories(Paths.get(inConvert.bronze, ".delta_log-crashed"))
+    Files.writeString(staged.resolve("0" * 20 + ".json"), "{\"protocol\":")
+    loadBatch(inConvert, batch2, 2)
+    // converted, then batch 2's load crashed before its commit
+    val inLoad = parentLayout(fresh1, fresh1)
+    assert(DeltaInterop.convert(spark, inLoad.bronze, Seq("ingestion_date")))
+    assert(!DeltaInterop.convert(spark, inLoad.bronze, Seq("ingestion_date")))
+    strandedLoad(inLoad, batch2, 2)
+    loadBatch(inLoad, batch2, 2)
+    // batch 2 reached the plain Bronze, and the run crashed before Silver
+    val beforeSilver = parentLayout(fresh2, fresh1)
+    assert(Pipeline.runSilver(spark, beforeSilver) > 0L)
+    Pipeline.runGold(spark, beforeSilver, sf)
+    Seq(inConvert, inLoad, beforeSilver).foreach(assertSameTables(_, fresh2))
+  }
+
+  test("a runBronze retried with its load id commits the batch once, and the quarantine " +
+      "holds its FAIL rows once") {
+    val paths = freshPaths()
+    val batch = failing(Tables.lineitem(spark, sf).filter($"l_orderkey" % 2 === 0), 4)
+    Seq(1, 2).foreach(_ =>
+      Pipeline.runBronze(spark, batch, paths, "load_1", "2026-01-01 00:00:00"))
+    Pipeline.runSilver(spark, paths)
+    assert(LayerIO.readLayer(spark, paths.bronze).count() == batch.count())
+    val failed = dqFailures(batch).count()
+    assert(failed > 0 && LayerIO.readLayer(spark, paths.quarantine).count() == failed)
+  }
+
+  test("a batch stamped before Silver's mark reaches Silver, and its re-delivered keys win") {
+    val paths = freshPaths()
+    val li = Tables.lineitem(spark, sf)
+    val keys = Seq("l_orderkey", "l_linenumber")
+    val batch1 = li.filter($"l_orderkey" % 2 === 0)
+    loadBatch(paths, batch1, 2)
+    // the keys Silver lacks, and a quarter of the feed again at a new price
+    // (keys the feed holds once), stamped a day before Silver's mark
+    val unique = li.groupBy(keys.map(col): _*).count().filter($"count" === 1)
+    val redelivered = li.filter($"l_orderkey" % 4 === 0).join(unique, keys, "left_semi")
+      .withColumn("l_extendedprice", round($"l_extendedprice" + 1.0, 2))
+    val late = li.filter($"l_orderkey" % 2 =!= 0).unionByName(redelivered)
+    Pipeline.runBronze(spark, late, paths, "load_late", "2026-01-01 00:00:00")
+    assert(Pipeline.runSilver(spark, paths) > 0L)
+
+    val silver = LayerIO.readLayer(spark, paths.silver)
+    val passKeys = Silver.quarantineSplit(Silver.applyDqRules(Silver.cleanseLineitem(li)))._1
+      .select(keys.map(col): _*).distinct()
+    assert(silver.select(keys.map(col): _*).collect().toSet == passKeys.collect().toSet)
+    val prices = silver.join(redelivered.select($"l_orderkey", $"l_linenumber",
+      $"l_extendedprice".as("late_price")), keys)
+    assert(prices.count() > 0)
+    assert(prices.filter($"l_extendedprice" =!= $"late_price").isEmpty)
+  }
+
+  test("parquet files a crashed runBronze left under Bronze are not read by Silver, and " +
+      "the load's re-run lands the batch once") {
+    val li = Tables.lineitem(spark, sf)
+    val batch1 = li.filter($"l_orderkey" % 2 === 0)
+    val batch2 = failing(li.filter($"l_orderkey" % 2 =!= 0), 3)
+    val fresh = freshPaths()
+    loadBatch(fresh, batch1, 1)
+    loadBatch(fresh, batch2, 2)
+    val paths = freshPaths()
+    loadBatch(paths, batch1, 1)
+    strandedLoad(paths, batch2, 2)
+    val silver1 = rows(paths.silver)
+    assert(Pipeline.runSilver(spark, paths) == 0L)
+    assert(rows(paths.silver) == silver1)
+
+    loadBatch(paths, batch2, 2)
+    Seq[Pipeline.LayerPaths => String](_.bronze, _.quarantine, _.silver, _.fact).foreach(t =>
+      assert(rows(t(paths)) == rows(t(fresh)), t(paths)))
+  }
+
+  test("Silver's tasks do not grow with the number of Bronze batches") {
+    val paths = freshPaths()
+    val li = Tables.lineitem(spark, sf)
+    val tasks = (1 to 4).map { b =>
+      Pipeline.runBronze(spark, li.filter($"l_orderkey" % 4 === b - 1), paths, s"load_$b",
+        s"2026-01-0$b 00:00:00")
+      tasksStartedBy(Pipeline.runSilver(spark, paths))
+    }
+    assert(tasks(3) <= tasks(1), s"Silver's tasks per batch: $tasks")
+  }
+
+  /** The literals of `plan`, of the plans it wraps (adaptive stages, the
+    * plan a cached relation was built by, a command's plan) and of its
+    * subqueries.
+    */
+  private def literals(plan: SparkPlan): Seq[Literal] = {
+    val wrapped = plan match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+      case _ => Nil
+    }
+    plan.expressions.flatMap(_.collect { case l: Literal => l }) ++
+      (plan.children ++ plan.subqueries ++ wrapped).flatMap(literals)
+  }
+
+  test("no plan runSilver executes holds a literal of Silver's mark") {
+    val paths = freshPaths()
+    val li = Tables.lineitem(spark, sf)
+    (1 to 2).foreach(b => loadBatch(paths, li.filter($"l_orderkey" % 3 === b - 1), b))
+    Pipeline.runBronze(spark, li.filter($"l_orderkey" % 3 === 2), paths, "load_3",
+      "2026-01-03 00:00:00")
+    val mark = VersionedTable.txn(paths.silver, Pipeline.SilverMark).get
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(Pipeline.runSilver(spark, paths) > 0L)
+      org.apache.spark.graftspark.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // the mark as a plan would compare with it: a Bronze version, or the
+    // microseconds of an instant
+    val values = (Try(mark.toLong).toOption ++
+      Try(DateTimeUtils.instantToMicros(Instant.parse(mark))).toOption).toSet[Any]
+    val found = plans.asScala.toSeq.flatMap(literals).filter(l =>
+      (l.dataType == LongType || l.dataType == TimestampType) && values(l.value))
+    assert(!plans.isEmpty)
+    assert(found.isEmpty, s"mark $mark in the plans as ${found.distinct}")
+  }
+
+  test("runGold vacuums the quarantine: its log keeps one manifest, and its rows, mark and " +
+      "data files stay") {
+    val paths = freshPaths()
+    val li = Tables.lineitem(spark, sf)
+    (1 to 2).foreach(b =>
+      loadBatch(paths, failing(li.filter($"l_orderkey" % 3 === b - 1), 3 + b), b))
+    Pipeline.runBronze(spark, failing(li.filter($"l_orderkey" % 3 === 2), 7), paths, "load_3",
+      "2026-01-03 00:00:00")
+    Pipeline.runSilver(spark, paths)
+    def dataFiles(): Set[String] = Using.resource(Files.walk(Paths.get(paths.quarantine)))(
+      _.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet)
+    val before = (rows(paths.quarantine), VersionedTable.txn(paths.quarantine,
+      Pipeline.SilverMark), dataFiles())
+    assert(VersionedTable.versions(paths.quarantine).size > 1)
+    Pipeline.runGold(spark, paths, sf)
+    assert(VersionedTable.versions(paths.quarantine) == Seq(2L))
+    assert(Using.resource(Files.list(Paths.get(paths.quarantine, "_graft_log")))(_.count()) == 1L)
+    assert((rows(paths.quarantine), VersionedTable.txn(paths.quarantine, Pipeline.SilverMark),
+      dataFiles()) == before)
+    assert(before._2.contains("2"))
   }
 }

@@ -47,6 +47,31 @@ class DeltaWriteSpec extends SparkSpec {
     assert(back == Seq((1L, "a:b"), (2L, "2020/01"), (3L, "plain")))
   }
 
+  test("convert commits a plain partitioned directory in place as version 0, once") {
+    val path = tmpTable()
+    val rows = Seq((1L, "a:b"), (2L, "x"), (3L, "x"))
+    rows.toDF("k", "ds").write.partitionBy("ds").parquet(path)
+    def dataFiles(): Set[String] = walkFiles(path).filter(_.endsWith(".parquet"))
+    val before = dataFiles()
+    assert(DeltaInterop.convert(spark, path, Seq("ds")))
+    assert(!DeltaInterop.convert(spark, path, Seq("ds")))
+    // no data file moved or written; the log names each file once
+    assert(dataFiles() == before)
+    val snap = DeltaInterop.snapshot(spark, path)
+    assert(snap.version == 0L && snap.partitionColumns == Seq("ds"))
+    assert(snap.files.size == before.size && snap.files.forall(_.stats.nonEmpty))
+    assert(DeltaInterop.latestVersion(path).contains(0L))
+    // the partition column last, as the plain read orders it
+    val back = DeltaInterop.read(spark, path)
+    assert(back.columns.toSeq == Seq("k", "ds"))
+    assert(back.as[(Long, String)].collect().sortBy(_._1).toSeq == rows)
+    assert(DeltaInterop.readWhere(spark, path, "ds", "x", "x").count() == 2L)
+  }
+
+  private def walkFiles(path: String): Set[String] =
+    scala.util.Using.resource(Files.walk(Paths.get(path)))(
+      _.iterator().asScala.filter(Files.isRegularFile(_)).map(_.toString).toSet)
+
   test("NaN/Infinity doubles never corrupt add.stats (entries omitted)") {
     val path = tmpTable()
     DeltaInterop.write(

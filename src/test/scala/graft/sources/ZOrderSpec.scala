@@ -14,7 +14,7 @@ class ZOrderSpec extends SparkSpec {
   private def footerStats(dir: String): (Seq[FileStats], StructType) = {
     val files = TableCore.walk(java.nio.file.Paths.get(dir))(
       _.filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
-    val schema = FileStats.sparkSchema(files.head)
+    val schema = spark.read.parquet(dir).schema
     (files.map(f => FileStats.read(f.toString, schema)).filter(_.numRecords > 0), schema)
   }
 
